@@ -14,8 +14,10 @@ regression fit by **additive sufficient statistics**:
   ONE pass, not k (the reference scatters k copies: tuners.py:129-135).
 - λ enters only at the (d+1)×(d+1) driver-side solve, so an entire
   hyperparameter grid reuses the same pass.
-- Prediction is a pure `zip_with` dot-product expression — JVM-side,
-  codegen, no Python in the scoring path.
+- Prediction is a pure `zip_with` dot-product expression against the
+  coefficient table, which is built as a JVM LocalRelation
+  (:func:`session.local_frame`) and broadcast-joined — JVM-side,
+  codegen, no Python worker anywhere in the scoring path.
 
 At 100 TB: the data pass shuffles k·(d+1)² doubles, the solve is
 milliseconds, scoring is a broadcast join + expression. Nothing scales
@@ -33,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from .functions import corr_safe
+from .session import local_frame
 from .sources import load_table
 
 DIM = 64  # embeddings feature width
@@ -352,19 +355,17 @@ def fit_gbt_fold_models(
     bit-identical (same histograms — see _gbt_hist_mapper_arrow — and
     the shared stump chooser)."""
     mn, mx = feature_bounds(df, dim)
-    # pinned: the bin projection never changes across rounds, and the
-    # 65-element zip_with/cast chain is the expensive part of the
+    # persisted: the bin projection never changes across rounds, and
+    # the 65-element zip_with/cast chain is the expensive part of the
     # round scan — compute it once, let rounds 2..T read the ~80 B/row
-    # cache (sequential actions, so no AQE cache race here)
-    from .caching import pin
-
-    fit_in = pin(
-        df.select(
-            F.col("fold").cast("int").alias("fold"),
-            F.col("y").cast("double").alias("y"),
-            _gbt_bins_expr(mn, mx, n_bins).alias("bins"),
-        )
-    )
+    # cache (sequential actions, so no AQE cache race here). The rounds
+    # consume it fully before return, so it is unpersisted at exit
+    # rather than pinned (caching.py's convention).
+    fit_in = df.select(
+        F.col("fold").cast("int").alias("fold"),
+        F.col("y").cast("double").alias("y"),
+        _gbt_bins_expr(mn, mx, n_bins).alias("bins"),
+    ).persist()
     models: dict[int, list] = {m: [] for m in range(k)}
     bin_models: dict[int, list] = {m: [] for m in range(k)}
     # Partial-combine placement (guide §2.4 remove shuffles / §5 keep
@@ -379,28 +380,31 @@ def fit_gbt_fold_models(
     # k·d·B rows. The switch derives from the actual partition count,
     # not a local constant — same pattern as sources.spread_scan.
     collect_partials = fit_in.rdd.getNumPartitions() <= 256
-    for _ in range(n_rounds):
-        rows = fit_in.mapInArrow(
-            _gbt_hist_mapper_arrow(bin_models, n_bins, dim),
-            schema="fold int, feature int, bin int, sr double, cnt double",
-        )
-        if not collect_partials:
-            rows = rows.groupBy("fold", "feature", "bin").agg(
-                F.sum("sr").alias("sr"), F.sum("cnt").alias("cnt")
+    try:
+        for _ in range(n_rounds):
+            rows = fit_in.mapInArrow(
+                _gbt_hist_mapper_arrow(bin_models, n_bins, dim),
+                schema="fold int, feature int, bin int, sr double, cnt double",
             )
-        pdf = rows.toPandas()
-        for m in models:
-            sub = pdf[pdf["fold"] == m]
-            hist = np.zeros((dim, n_bins))
-            counts = np.zeros((dim, n_bins))
-            # accumulate (duplicates arrive per task on the partials
-            # path; the groupBy path has pre-merged them) in collect
-            # order — deterministic: partitions come back in order
-            np.add.at(hist, (sub["feature"].to_numpy(), sub["bin"].to_numpy()), sub["sr"].to_numpy())
-            np.add.at(counts, (sub["feature"].to_numpy(), sub["bin"].to_numpy()), sub["cnt"].to_numpy())
-            f, b, thr, vl, vr = _best_stump_with_bin(hist, counts, mn, mx, lr)
-            models[m].append((f, thr, vl, vr))
-            bin_models[m].append((f, b, vl, vr))
+            if not collect_partials:
+                rows = rows.groupBy("fold", "feature", "bin").agg(
+                    F.sum("sr").alias("sr"), F.sum("cnt").alias("cnt")
+                )
+            pdf = rows.toPandas()
+            for m in models:
+                sub = pdf[pdf["fold"] == m]
+                hist = np.zeros((dim, n_bins))
+                counts = np.zeros((dim, n_bins))
+                # accumulate (duplicates arrive per task on the partials
+                # path; the groupBy path has pre-merged them) in collect
+                # order — deterministic: partitions come back in order
+                np.add.at(hist, (sub["feature"].to_numpy(), sub["bin"].to_numpy()), sub["sr"].to_numpy())
+                np.add.at(counts, (sub["feature"].to_numpy(), sub["bin"].to_numpy()), sub["cnt"].to_numpy())
+                f, b, thr, vl, vr = _best_stump_with_bin(hist, counts, mn, mx, lr)
+                models[m].append((f, thr, vl, vr))
+                bin_models[m].append((f, b, vl, vr))
+    finally:
+        fit_in.unpersist()
     return models
 
 
@@ -416,7 +420,8 @@ def stump_frame(spark: SparkSession, models: dict[int, list]) -> DataFrame:
         )
         for m, st in models.items()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "fold int, s_f array<int>, s_thr array<double>, s_vl array<double>, s_vr array<double>"
     )
 
@@ -445,7 +450,7 @@ def with_gbt_prediction(df: DataFrame, stumps: DataFrame) -> DataFrame:
 def coef_frame(spark: SparkSession, models: dict[int, np.ndarray], key: str = "fold") -> DataFrame:
     """Small (key, intercept, weights array) frame for broadcast join."""
     rows = [(int(g), float(c[0]), [float(w) for w in c[1:]]) for g, c in models.items()]
-    return spark.createDataFrame(rows, f"{key} int, intercept double, weights array<double>")
+    return local_frame(spark, rows, f"{key} int, intercept double, weights array<double>")
 
 
 def dot_expr(features: Column, weights: Column) -> Column:

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from ..functions import ERA_EVENTS_SQL, era_events, md5i, md5i_sql, phash, phash_sql
 from ..registry import query
+from ..session import local_frame
 from ..sources import load_table
 
 
@@ -62,7 +63,7 @@ def kfold_era(
     schema = T.StructType(
         [df.schema[era_col], T.StructField("fold", T.IntegerType(), False)]
     )
-    folds = df.sparkSession.createDataFrame(rows, schema)
+    folds = local_frame(df.sparkSession, rows, schema)
     return df.join(F.broadcast(folds), era_col)
 
 
@@ -162,7 +163,7 @@ def lhs_param_table(spark: SparkSession, grid: dict[str, list], num_samples: int
         rows.append(row)
     cols = ["param_id", *names]
     data = [tuple(r[c] for c in cols) for r in rows]
-    return spark.createDataFrame(data, cols)
+    return local_frame(spark, data, cols)
 
 
 _DEFAULT_GRID = {
@@ -198,5 +199,5 @@ def cross_folds(params: DataFrame, k: int) -> DataFrame:
     """J3 zip-join replacement: explicit (param_id × fold_id) task table
     (tuners.py:88-94 pairs futures positionally; we use keys)."""
     spark = params.sparkSession
-    folds = spark.createDataFrame([(i,) for i in range(k)], "fold int")
+    folds = local_frame(spark, [(i,) for i in range(k)], "fold int")
     return params.crossJoin(folds)

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions import PRED_EVENTS_SQL, corr_safe, pred_events
 from ..registry import query
+from ..session import local_frame
 from ..sources import load_table
 
 N_BINS = 5
@@ -773,7 +774,7 @@ def d5_optimal_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i + 1, int(l), kernel, float(param), round(float(score), 6))
         for i, l in enumerate(labels)
     ]
-    return spark.createDataFrame(rows, "fid int, label int, kernel string, param double, silhouette double")
+    return local_frame(spark, rows, "fid int, label int, kernel string, param double, silhouette double")
 
 
 @query(
@@ -802,6 +803,7 @@ def d5b_cluster_sweep_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for kernel, param, score, labels in _cluster_sweep(D)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "kernel string, param double, silhouette double, n_clusters int, n_noise int"
     )

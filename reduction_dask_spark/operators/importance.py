@@ -44,6 +44,7 @@ from ..ml import (
 )
 from ..caching import barrier
 from ..registry import query
+from ..session import local_frame
 from .cv import kfold_era
 
 K_FOLDS = 5
@@ -233,7 +234,8 @@ def linear_shap_scores(
         "vec_id", F.posexplode("features").alias("feature", "val")
     )
     means = melted.groupBy("feature").agg(F.avg("val").alias("mu"))
-    weights = spark.createDataFrame(
+    weights = local_frame(
+        spark,
         [(j, float(coef[1 + j])) for j in range(DIM)], "feature int, w double"
     )
     return (
@@ -311,7 +313,8 @@ def tree_shap_scores(
     melted = sample.select(
         "vec_id", "fold", F.posexplode("features").alias("feature", "val")
     )
-    st = spark.createDataFrame(
+    st = local_frame(
+        spark,
         [
             (int(m), ti, int(f), float(thr), float(vl), float(vr))
             for m, stumps in models.items()
@@ -345,7 +348,7 @@ def tree_shap_scores(
     )
     # features never split on: SHAP ≡ 0 (explicit rows keep the table
     # schema-stable against x4's 64-feature output)
-    domain = spark.createDataFrame([(j,) for j in range(DIM)], "feature int")
+    domain = local_frame(spark, [(j,) for j in range(DIM)], "feature int")
     return (
         domain.join(scores, "feature", "left")
         .select("feature", F.coalesce("mean_abs_shap", F.lit(0.0)).alias("mean_abs_shap"))
@@ -416,7 +419,7 @@ def forward_selection(
             F.round(F.avg("spearman"), 6).alias("s"), F.round(F.avg("quartic"), 6).alias("q")
         ).collect()[0]
         results.append((int(n), per["s"], per["q"]))
-    return spark.createDataFrame(results, "n_features int, spearman_mean double, quartic_mean double")
+    return local_frame(spark, results, "n_features int, spearman_mean double, quartic_mean double")
 
 
 @query(

@@ -36,41 +36,6 @@ QUALITY_TAU = 0.3
 KEEP_LANGS = ("en", "de", "fr", "es")
 
 
-def _head_hub(df: DataFrame, site: str = "") -> DataFrame:
-    """Materialization strategy for the funnel head's two reuse hubs —
-    r17 barrier-merge A/B (VERDICT item 1), priced with interleaved
-    fresh-session runs (tools/ab_fresh.py, 2 rounds, min-of-3, sf0.1):
-
-    - ``pin`` on BOTH hubs (whole head collapses into the near_ids
-      barrier's one eager job): LOSES 10-20% on every funnel query —
-      the un-truncated token-fold lineage re-executes under the AQE
-      cache race and re-enters every downstream plan build.
-    - ``pin`` on the SHINGLE hub only, flag hub stays a barrier
-      (default, baked in this round): WINS on 9/10 readings — funnel
-      sum-of-mins 28.2→24.4 s and 28.5→25.1 s (-12/-13%). The flag
-      barrier still truncates the expensive token-fold scan, while
-      the shingle index no longer pays an eager materialization job
-      of corpus-sized exploded rows: its pin fills lazily inside the
-      first consumer job and the remaining consumers (the Jaccard
-      pair join's three reads + pipe1's decontam branch) hit the
-      cache. The shingle subtree above the pin is one join + explode
-      over the already-barriered flag relation, so the residual AQE
-      double-compute risk is bounded by that shallow subtree, not
-      the whole head (the r11 race that motivated the barrier
-      predates the r12-r16 reorder that shrank this relation to
-      exact survivors).
-
-    ``SPARK_GRAFT_FUNNEL_HEAD`` overrides for re-measurement:
-    ``barrier`` restores the pre-r17 two-barrier head; ``pin`` prices
-    the full merge."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_FUNNEL_HEAD", "pin_sh")
-    if mode == "pin" or (mode == "pin_sh" and site == "sh"):
-        return pin(df)
-    return barrier(df)
-
-
 def _flags_through_near(
     spark: SparkSession, sf_dir: str, quality_gate: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -206,8 +171,11 @@ def _flags_through_near(
     # compositions paying 6-9 s of DRIVER plan-building on those
     # embedded trees, flat across sf. r16 collapsed the former
     # staged/flagged barrier pair into this one (the gram stream the
-    # first barrier isolated no longer exists).
-    flagged = _head_hub(
+    # first barrier isolated no longer exists). A lazy pin here
+    # instead (r17 A/B) lost 10-20% on every funnel query: the
+    # un-truncated token-fold lineage re-executes under the AQE cache
+    # race and re-enters every downstream plan build.
+    flagged = barrier(
         flagged.select(
             "doc_id", "lang", "q_ok", "gopher_ok", "rep_ok", "exact_ok"
         )
@@ -227,8 +195,12 @@ def _flags_through_near(
     # pinned (r17 — was barriered r11-r16): candidate generation and
     # pipe1's decontam branch both read the survivor shingle index,
     # but an EAGER materialization job of corpus-sized exploded rows
-    # cost more than the lazy pin it replaced (see _head_hub)
-    sh_surv = _head_hub(shingle_table_of(surv), site="sh")
+    # cost more than the lazy pin it replaced — interleaved sf0.1 A/B,
+    # funnel sum-of-mins 28.2→24.4 s and 28.5→25.1 s (-12/-13%). The
+    # pin fills inside the first consumer job; the subtree above it is
+    # one join + explode over the barriered flag relation, so the AQE
+    # double-compute risk is bounded by that shallow subtree.
+    sh_surv = pin(shingle_table_of(surv))
     pairs = jaccard_pairs(sh_surv, tau=JACCARD_TAU)
     drop = pairs.select(F.col("doc_b").alias("doc_id"), F.lit(True).alias("is_dup")).distinct()
     flagged = flagged.join(drop, "doc_id", "left").select(

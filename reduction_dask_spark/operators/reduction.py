@@ -34,6 +34,7 @@ from ..ml import (
     coef_frame,
 )
 from ..registry import query
+from ..session import local_frame
 from .cv import kfold_era
 from .text import QUALITY_OF_TOKS_SQL
 
@@ -753,7 +754,8 @@ def reduction_sweep(
             results.append((kernel, int(nc), row["s"], row["q"], trust, "ok"))
         except Exception as e:  # status column instead of dropped index
             results.append((kernel, int(nc), None, None, None, f"error: {type(e).__name__}"))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         results,
         "kernel string, n_components int, spearman_mean double, quartic_mean double, "
         "trust_mean double, status string",
@@ -869,7 +871,8 @@ def reduction_sweep_batched(
     )
 
     def status_only():  # every config demoted — one shape for both exits
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(kern, int(nc), None, None, None, status[i])
              for i, (kern, nc) in enumerate(configs)],
             schema_rs,
@@ -989,7 +992,8 @@ def reduction_sweep_batched(
             coef_rows.append(
                 (i, int(fold), float(c[0]), [float(w) for w in c[1:]])
             )
-    coefs = spark.createDataFrame(
+    coefs = local_frame(
+        spark,
         coef_rows, "cfg int, fold int, intercept double, weights array<double>"
     )
 
@@ -1109,7 +1113,7 @@ def reduction_sweep_batched(
         else:
             s, qv = cv.get(i, (None, None))
             results.append((kernel, int(nc), s, qv, trust.get(i), "ok"))
-    return spark.createDataFrame(results, schema_rs)
+    return local_frame(spark, results, schema_rs)
 
 
 @query(
@@ -1316,7 +1320,8 @@ def iso1_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pool means are rationals that CAN be dyadic (1/128 = 0.0078125
     # ends on an exact decimal half at 6 places), and the DuckDB
     # oracle's round() is half-away — F.round matches it there
-    return spark_.createDataFrame(
+    return local_frame(
+        spark_,
         [(i, b, p) for i, (b, p) in enumerate(zip(bounds, preds))],
         "step int, boundary double, calibrated double",
     ).select("step", "boundary", F.round("calibrated", 6).alias("calibrated"))
@@ -1361,7 +1366,8 @@ def log1_logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats, ["len_capped", "stop_ratio", "uniq_ratio"], "label"
     )
     names = ["intercept", "len_capped", "stop_ratio", "uniq_ratio"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(nm, round(float(b), 6)) for nm, b in zip(names, beta)],
         "term string, coef double",
     )

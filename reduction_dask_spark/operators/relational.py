@@ -30,6 +30,7 @@ from ..functions import (
 )
 from ..caching import pin
 from ..registry import query
+from ..session import local_frame
 from ..sources import load_table
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -329,7 +330,8 @@ def j4_star_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j5_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [(0, 0.0, 10.0), (1, 10.0, 20.0), (2, 20.0, 30.0), (3, 30.0, 40.0), (4, 40.0, 51.0)],
         "band_id int, lo double, hi double",
     )
@@ -1539,7 +1541,7 @@ def cms1_countmin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = sk if merged is None else merged.mergeInPlace(sk)
     types = [r[0] for r in ev.select("event_type").distinct().collect()]
     rows = [(t, int(merged.estimateCount(t))) for t in types]
-    return spark.createDataFrame(rows, "event_type string, est_n bigint")
+    return local_frame(spark, rows, "event_type string, est_n bigint")
 
 
 @query(
@@ -2135,7 +2137,8 @@ KANO_KS = (2, 5, 10)
 def kano1_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     g = c.groupBy("c_nationkey", "c_mktsegment").agg(F.count("*").alias("sz"))
-    ks = spark.range(0).sparkSession.createDataFrame(
+    ks = local_frame(
+        spark,
         [(k,) for k in KANO_KS], "k int"
     )
     risky = F.when(F.col("sz") < F.col("k"), F.col("sz")).otherwise(0)
@@ -2305,7 +2308,7 @@ _POW32 = "4294967296.0"  # 2^32 as a double literal, both engines
 def dp1_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     ct = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-    es = spark.createDataFrame([(s, v) for s, v in DP_EPS], "eps_s string, eps double")
+    es = local_frame(spark, [(s, v) for s, v in DP_EPS], "eps_s string, eps double")
     u = (
         (md5i(F.concat(F.col("event_type"), F.lit("|"), F.col("eps_s"))) + F.lit(0.5))
         / F.expr(_POW32)
@@ -2654,7 +2657,7 @@ def ldiv1_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("sz"),
         F.countDistinct((F.col("c_acctbal") >= 0)).alias("n_sens"),
     )
-    ls = spark.createDataFrame([(l,) for l in LDIV_LS], "l int")
+    ls = local_frame(spark, [(l,) for l in LDIV_LS], "l int")
     return (
         g.crossJoin(F.broadcast(ls))
         .groupBy("l")

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 from ..functions import md5i_sql
 from ..caching import pin
 from ..registry import query
+from ..session import local_frame
 from ..sources import load_table
 
 TOP_K = 5
@@ -787,7 +788,8 @@ def km1_kmeans_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     df = emb.select("vec_id", as_double(F.col("embedding")).alias("vv"))
     centroids = kmeans_fit(df)
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cid int, cv array<double>",
     )
@@ -949,7 +951,8 @@ def ss6_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # No global window (a constant-key window constant-folds to an
     # empty partition spec and single-partitions the node).
     cpdf = v.filter(F.col("vec_id") % PQ_MOD == 0).orderBy("vec_id").limit(PQ_K).toPandas()
-    cb = spark.createDataFrame(
+    cb = local_frame(
+        spark,
         [(int(i), [float(x) for x in vv]) for i, vv in enumerate(cpdf["vv"])],
         "c int, cw array<double>",
     )
@@ -1157,7 +1160,8 @@ def ss7_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", as_double(F.col("embedding")).alias("vv"))
     centroids = kmeans_fit(v)  # coarse quantizer, KM_K × DIM
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cid int, cv array<double>",
     )
@@ -1183,7 +1187,8 @@ def ss7_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (sx * sx).sum(axis=1)[:, None] - 2.0 * (sx @ centroids.T) + cnorm[None, :]
     ).argmin(axis=1)
     books = _train_subcodebooks(sx - centroids[sa])
-    cbm = spark.createDataFrame(
+    cbm = local_frame(
+        spark,
         [
             (int(m), int(c), [float(x) for x in books[m][c]])
             for m in range(PQ_M)

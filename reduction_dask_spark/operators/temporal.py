@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..session import local_frame
 from ..sources import load_table
 
 SESSION_GAP_MIN = 30
@@ -1788,7 +1789,8 @@ def an6_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         pc = p_conv(q2, r2, keep.index(s_i))
         rows.append((ch, base, max(0.0, 1.0 - pc / base) if base > 0 else 0.0))
     tot_re = sum(re for _, _, re in rows) or 1.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (ch, round(b, 6), round(re, 6), round(re / tot_re, 6))
             for ch, b, re in rows
@@ -1881,7 +1883,8 @@ def ts5_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(sp > CUSUM_H or sn > CUSUM_H),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "day int, daily_mean double, cusum_pos double, cusum_neg double, changepoint boolean",
     )

@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 from ..functions import md5i, md5i_sql, phash_sql
 from ..caching import barrier, pin
 from ..registry import query
+from ..session import local_frame
 from ..sources import load_table, parquet_row_count, spread_scan
 
 STOPWORDS = ("a", "the")
@@ -1472,7 +1473,7 @@ def cur1_curriculum_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (((F.col("rnk") - 1) * 10 / F.col("n")).cast("int") + 1).alias("decile"),
     )
-    rates = spark.createDataFrame(CUR_RATES, "phase string, decile int, rate double")
+    rates = local_frame(spark, CUR_RATES, "phase string, decile int, rate double")
     coin = dec.join(F.broadcast(rates), "decile").select(
         "phase",
         "decile",
@@ -1640,7 +1641,7 @@ def emb4_pmi_svd_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (w, [round(float(v), 6) for v in emb[idx[w]]]) for w in words
     ]
-    return spark.createDataFrame(rows, "token string, vector array<double>")
+    return local_frame(spark, rows, "token string, vector array<double>")
 
 
 # ---------------------------------------------------------------- rep1

@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..registry import query
+from ..session import local_frame
 from ..sources import load_table
 
 BPE_MERGES = 8
@@ -169,7 +170,8 @@ def bpe_train_full(
 def bpe1_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     merges = bpe_train(word_counts(d))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "rank int, sym_a string, sym_b string, merged string, pair_count bigint"
     )
 

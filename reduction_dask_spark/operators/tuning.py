@@ -26,6 +26,7 @@ from ..ml import (
 )
 from ..caching import barrier
 from ..registry import query
+from ..session import local_frame
 from .cv import kfold_era
 
 K_FOLDS = 5
@@ -111,7 +112,8 @@ def lhs_ridge_search(spark: SparkSession, sf_dir: str, lambdas=None, k: int = K_
     for pid, lam in enumerate(lambdas):
         for fold, coef in fit_fold_models(stats, lam).items():
             rows.append((pid, float(lam), fold, float(coef[0]), [float(w) for w in coef[1:]]))
-    coefs = spark.createDataFrame(
+    coefs = local_frame(
+        spark,
         rows, "param_id int, lam double, fold int, intercept double, weights array<double>"
     )
     scored = df.join(F.broadcast(coefs), "fold")
@@ -185,7 +187,8 @@ def hyperband(
             for cid, lam in configs:
                 for fold, coef in fit_fold_models(stats, lam).items():
                     rows.append((cid, float(lam), fold, float(coef[0]), [float(w) for w in coef[1:]]))
-            coefs = spark.createDataFrame(
+            coefs = local_frame(
+                spark,
                 rows, "param_id int, lam double, fold int, intercept double, weights array<double>"
             )
             sub = df_all.filter(phash("vec_id", 100) < ratio_pct)
@@ -208,7 +211,8 @@ def hyperband(
                 kept = any(c[0] == cid for c in ranked[:keep])
                 trace.append((s, i, ratio_pct, cid, float(lam), sp, kept))
             configs = ranked[:keep]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         trace,
         "bracket int, rung int, ratio_pct int, param_id int, lam double, spearman double, kept boolean",
     )

@@ -7,7 +7,8 @@ Used by tests/test_plans.py to lock in:
   (ReadSchema) on scans;
 - broadcast joins on dim tables (no shuffle of the fact side);
 - whole-stage codegen coverage of expression pipelines;
-- partial aggregation (map-side combine) before shuffles.
+- partial aggregation (map-side combine) before shuffles;
+- driver-built tables as LocalRelations, not Python-RDD scans.
 """
 
 from __future__ import annotations
@@ -98,3 +99,42 @@ def codegen_stages(df: DataFrame) -> int:
     out = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "codegen")
     m = re.search(r"Found (\d+) WholeStageCodegen", out)
     return int(m.group(1)) if m else out.count("WholeStageCodegen")
+
+
+def python_rdd_scans(df: DataFrame) -> int:
+    """Count optimized-plan leaves that scan a Python RDD — the
+    ``LogicalRDD``/``Scan ExistingRDD`` that ``createDataFrame`` on a list
+    builds, where every scan starts Python worker tasks. Barrier
+    (checkpoint) leaves are LogicalRDDs too but their lineage is
+    truncated, so they do not count."""
+    n = 0
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "LogicalRDD" and "PythonRDD" in node.rdd().toDebugString():
+            n += 1
+        for seq in (node.children(), node.subqueries()):
+            for i in range(seq.size()):
+                stack.append(seq.apply(i))
+    return n
+
+
+def broadcast_leaves(df: DataFrame) -> list[str]:
+    """Leaf node names under every BroadcastExchange of the physical
+    plan (AQE's initial plan), e.g. ``LocalTableScan`` for a
+    driver-built table or ``Scan ExistingRDD`` for a Python-RDD one."""
+    leaves: list[str] = []
+    stack = [(df._jdf.queryExecution().executedPlan(), False)]
+    while stack:
+        node, under = stack.pop()
+        name = node.nodeName()
+        if name.startswith("AdaptiveSparkPlan"):
+            stack.append((node.initialPlan(), under))
+            continue
+        under = under or name == "BroadcastExchange"
+        ch = node.children()
+        if under and ch.size() == 0:
+            leaves.append(name)
+        for i in range(ch.size()):
+            stack.append((ch.apply(i), under))
+    return leaves

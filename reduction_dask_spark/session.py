@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and the one constructor of driver-built
+tables (:func:`local_frame`).
 
 Local-mode defaults follow the public Spark tuning guidance: shuffle
 partitions ≈ cores (not 200), AQE on (runtime coalesce + skew-join —
@@ -12,7 +13,8 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # The driver testdata has shipped timestamps two ways across rounds:
 # parquet TIMESTAMP(NANOS) (Spark reads as nanosecond longs with
@@ -26,6 +28,16 @@ NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 
 def get_spark(app: str = "reduction_dask_spark", cpus: int | None = None) -> SparkSession:
+    """The engine's tuned local session.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static conf: it sizes
+    the JVM-wide LRU of compiled whole-stage-codegen classes. At the
+    default 100 entries a warm m1 → t2 → pipe1 loop recompiles 142
+    classes per pass because the three plans evict each other; at
+    1000 a warm pass recompiles 0-4. Being
+    static, :func:`ensure_engine_confs` cannot set it on a session the
+    caller built, so a driver-built session keeps Spark's default.
+    """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or min(os.cpu_count() or 4, 32)
     builder = (
@@ -42,6 +54,7 @@ def get_spark(app: str = "reduction_dask_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config(NANOS_CONF, "true")
         .config(NTZ_CONF, "false")
         # static conf: bucketed tables (saveAsTable) land here
@@ -91,3 +104,44 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # static on some builds; jsonl source then skips pushdown
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: str | StructType | list[str]
+) -> DataFrame:
+    """A driver-built table (model coefficients, fold maps, parameter
+    grids, small result tables) as a JVM ``LocalRelation``.
+
+    Same contract as ``spark.createDataFrame`` on a list: a DDL
+    string parses to all-nullable fields, a ``StructType`` keeps its
+    nullability, a list of column names infers types from the rows,
+    and every row passes createDataFrame's default verifier (a ``None``
+    in a non-null field or a wrong Python type raises). But classic
+    createDataFrame on a list parallelizes pickled rows, so each scan
+    of even a 5-row table starts Python worker tasks behind a
+    ``Scan ExistingRDD`` leaf; an Arrow table of the same rows becomes
+    a ``LocalRelation`` (below
+    ``spark.sql.execution.arrow.localRelationThreshold``, decoded in
+    the JVM above it), which no Python worker ever touches and which
+    ``LocalTableScanExec`` slices into ``min(rows, defaultParallelism)``
+    partitions, the same count ``parallelize`` gives.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    elif not isinstance(schema, StructType):
+        schema = spark._inferSchemaFromList(rows, names=list(schema))
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(col, type=t) for col, t in zip(cols, arrow_schema.types)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..session import ensure_engine_confs
+from ..session import ensure_engine_confs, local_frame
 from ..sources import normalize_ts
 
 
@@ -843,7 +843,8 @@ def st10_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     q.awaitTermination(timeout=300)
 
     n_total = spark.read.parquet(index_dir).select("fingerprint").distinct().count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_historical, n_total - n_historical, n_total)],
         "n_historical bigint, n_new_appended bigint, n_index_total bigint",
     )
@@ -916,7 +917,7 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(name)
         os.replace(tmp, current_ptr)
 
-    spark.createDataFrame([], "shard bigint, v double, w bigint").write.mode(
+    local_frame(spark, [], "shard bigint, v double, w bigint").write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "epoch_init"))
     _publish("epoch_init")
@@ -1160,7 +1161,7 @@ def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(name)
         os.replace(tmp, current_ptr)
 
-    spark.createDataFrame([], "event_type string, bin int, c_new bigint").write.mode(
+    local_frame(spark, [], "event_type string, bin int, c_new bigint").write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "epoch_init"))
     _publish("epoch_init")

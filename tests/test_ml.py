@@ -268,6 +268,21 @@ def test_gbt_hist_fit_matches_numpy(spark):
             np.testing.assert_allclose([gt, gl, gr], [et, el, er], rtol=1e-9)
 
 
+def test_gbt_fit_unpersists_bin_projection(spark):
+    """The boosting rounds consume the persisted bin projection before
+    fit_gbt_fold_models returns, so it leaves no pin and no cache."""
+    from reduction_dask_spark.caching import pinned_count, release_pinned
+    from reduction_dask_spark.ml import fit_gbt_fold_models
+
+    release_pinned()
+    spark.catalog.clearCache()
+    baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
+    df = kfold_era(supervised_frame(spark, SF_SMALL), "era", k=5)
+    assert len(fit_gbt_fold_models(df, k=5, n_rounds=2)) == 5
+    assert pinned_count() == 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline
+
+
 def test_gbt_cv_has_signal(spark):
     from reduction_dask_spark.operators.tuning import kfold_cv_gbt
 
