@@ -32,6 +32,7 @@ exit instead and never appear here.
 from __future__ import annotations
 
 import os
+import sys
 import threading
 
 from pyspark.sql import DataFrame
@@ -56,6 +57,8 @@ _LOCK = threading.Lock()
 #            the funnel interiors) and so "building" plans never
 #            executes them.
 _BARRIER_ENV = "SPARK_GRAFT_BARRIER"
+# the thread-local property Spark names a job's call site from
+_CALL_SITE = "callSite.short"
 
 
 def barrier_mode() -> str:
@@ -115,15 +118,28 @@ def barrier(df: DataFrame) -> DataFrame:
     mode = barrier_mode()
     if mode == "noop":
         return df
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(
-                os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/rds_checkpoints")
-            )
-        df = df.checkpoint()
-    else:
-        df = df.localCheckpoint()
+    # Name the jobs after the caller: PySpark leaves localCheckpoint's
+    # call site at "NativeMethodAccessorImpl.java:0", so every barrier
+    # of a funnel would otherwise read alike in the status store.
+    sc = df.sparkSession.sparkContext
+    caller = sys._getframe(1)
+    op = "checkpoint" if mode == "reliable" else "localCheckpoint"
+    prev = sc.getLocalProperty(_CALL_SITE)
+    sc.setLocalProperty(
+        _CALL_SITE,
+        f"{op} at {os.path.basename(caller.f_code.co_filename)}:{caller.f_lineno}",
+    )
+    try:
+        if mode == "reliable":
+            if sc._jsc.sc().getCheckpointDir().isEmpty():
+                sc.setCheckpointDir(
+                    os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/rds_checkpoints")
+                )
+            df = df.checkpoint()
+        else:
+            df = df.localCheckpoint()
+    finally:
+        sc.setLocalProperty(_CALL_SITE, prev)
     with _LOCK:
         _BARRIERED.append(df)
     return df

@@ -443,50 +443,6 @@ def doc_shingle_sets(sh: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("ss"))
 
 
-def _minhash_sigs_arrow(batches):
-    """(doc_id, ss) Arrow batches → (doc_id, sigs[32]) — the r17 form
-    of the signature build (guide §4.2: hand whole batches to
-    vectorized native code). The ragged shingle lists flatten to one
-    int64 buffer + segment starts, each seed's universal hash is one
-    vectorized expression over the flat buffer, and the per-doc min is
-    ``np.minimum.reduceat`` — no per-row Python, no (doc × seed) row
-    explosion. Arithmetic is exact int64 (hs < 2^31, ×65 < 2^38), so
-    signatures equal the JVM/DuckDB form bit-for-bit."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    for rb in batches:
-        doc_id = rb.column(0)
-        ss = rb.column(1)
-        n = len(doc_id)
-        if n == 0:
-            continue
-        lengths = pc.list_value_length(ss).to_numpy(zero_copy_only=False).astype(np.int64)
-        if (lengths <= 0).any():
-            # doc_shingle_sets groups always carry >= 1 shingle; an
-            # empty list would silently corrupt reduceat segments
-            raise ValueError("minhash over an empty shingle set")
-        flat = np.asarray(ss.flatten())
-        starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(lengths[:-1], out=starts[1:])
-        hs = flat % MERSENNE
-        sigs = np.empty((n, N_HASHES), dtype=np.int64)
-        for s in range(N_HASHES):
-            v = (hs * (s * 2 + 3) + s * 40503 + 1) % MERSENNE
-            sigs[:, s] = np.minimum.reduceat(v, starts)
-        yield pa.RecordBatch.from_arrays(
-            [
-                doc_id,
-                pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, (n + 1) * N_HASHES, N_HASHES, dtype=np.int32)),
-                    pa.array(sigs.ravel()),
-                ),
-            ],
-            names=["doc_id", "sigs"],
-        )
-
-
 def minhash_bands(doc_sets: DataFrame) -> DataFrame:
     """(doc_id, band, bkey) LSH band keys from universal-hash minhash
     over :func:`doc_shingle_sets` output.
@@ -497,45 +453,28 @@ def minhash_bands(doc_sets: DataFrame) -> DataFrame:
     explosion through a shuffle (a naive task-per-(doc,seed) plan
     moves 32× the data; the reference would scatter exactly that way).
 
-    Two value-identical signature kernels (r17, verdict item 5 — the
-    numpy/mapInArrow form was built, A/B'd and left OFF by default):
-
-    - default: one nested-HOF JVM expression (seed array → per-seed
-      array_min over the hash array) — ~1/30th the generated code of
-      32 unrolled columns (first-run codegen well under 1 s), no
-      Python worker in the plan;
-    - ``SPARK_GRAFT_MINHASH=arrow``: batch-wide numpy over the flat
-      Arrow buffer (:func:`_minhash_sigs_arrow`). An 8-pairing
-      interleaved fresh-session A/B at sf0.1 came out PAR (3 wins, 3
-      losses within ±8%, 1 host-drift spike; the isolated band-build
-      stage is par at 8 cores too — the shingle explode +
-      collect_list dominate it, not the signatures), so the
-      plan-simpler JVM form stays the default and the kernel remains
-      one env flip away, pinned value-equal by
-      tests/test_edge_cases.py::test_minhash_arrow_kernel_parity."""
-    import os
-
+    The signatures are one nested-HOF JVM expression (seed array →
+    per-seed array_min over the hash array): ~1/30th the generated
+    code of 32 unrolled columns (first-run codegen well under 1 s) and
+    no Python worker in the plan. A numpy/mapInArrow kernel of the
+    same int64 arithmetic measured par at sf0.1: the shingle explode
+    and collect_list dominate the band build, not the signatures."""
     r = N_HASHES // N_BANDS
-    if os.environ.get("SPARK_GRAFT_MINHASH") == "arrow":
-        sig = doc_sets.select("doc_id", "ss").mapInArrow(
-            _minhash_sigs_arrow, schema="doc_id bigint, sigs array<bigint>"
-        )
-    else:
-        # shingle is already a portable 60-bit hash; fold to the
-        # universal-hash domain (mod p) instead of re-hashing via md5
-        doc_hashes = doc_sets.select(
-            "doc_id", F.transform(F.col("ss"), lambda x: x % MERSENNE).alias("hs")
-        )
-        seeds = F.array(*[F.lit(s) for s in range(N_HASHES)])
-        sigs = F.transform(
-            seeds,
-            lambda s: F.array_min(
-                F.transform(
-                    F.col("hs"), lambda x: (x * (s * 2 + 3) + s * 40503 + 1) % MERSENNE
-                )
-            ),
-        )
-        sig = doc_hashes.select("doc_id", sigs.alias("sigs"))
+    # shingle is already a portable 60-bit hash; fold to the
+    # universal-hash domain (mod p) instead of re-hashing via md5
+    doc_hashes = doc_sets.select(
+        "doc_id", F.transform(F.col("ss"), lambda x: x % MERSENNE).alias("hs")
+    )
+    seeds = F.array(*[F.lit(s) for s in range(N_HASHES)])
+    sigs = F.transform(
+        seeds,
+        lambda s: F.array_min(
+            F.transform(
+                F.col("hs"), lambda x: (x * (s * 2 + 3) + s * 40503 + 1) % MERSENNE
+            )
+        ),
+    )
+    sig = doc_hashes.select("doc_id", sigs.alias("sigs"))
     # band key = the r-signature slice ITSELF (array<bigint> join key):
     # equality is identical to the oracle's joined-string key (the
     # string form is injective on int sequences) but the join hashes/

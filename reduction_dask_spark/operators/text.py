@@ -11,8 +11,6 @@ explode→agg; no driver materialization, partition-parallel at any size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -2197,7 +2195,7 @@ DSIR_SCALE = 1_000_000  # log-ratios fixed to micro-units (exact int sums)
 # Above this many docs the per-occurrence feature pin (see dsir1 body)
 # downgrades to recompute — the pin scales with token count, and at
 # large corpus sizes the extra scan is cheaper than the cache pressure.
-DSIR_PIN_MAX_DOCS = int(os.environ.get("SPARK_GRAFT_DSIR_PIN_MAX_DOCS", "10000000"))
+DSIR_PIN_MAX_DOCS = 10_000_000
 
 
 @query(
@@ -2305,7 +2303,7 @@ def dsir1_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # STORAGE, not shuffle; ×100 probe rows in SCALING.md. r13
     # ADVICE: the per-occurrence pin grows with TOKEN count, so past
     # a corpus-size threshold it would evict other caches / spill —
-    # above DSIR_PIN_MAX_DOCS docs (env SPARK_GRAFT_DSIR_PIN_MAX_DOCS)
+    # above DSIR_PIN_MAX_DOCS docs
     # the pin downgrades to recompute: both consumers re-run the
     # scan-bound explode+hash pass instead, trading one extra corpus
     # scan for zero cache pressure — the right trade exactly when the

@@ -11,8 +11,12 @@ caches).
 
 from __future__ import annotations
 
+import inspect
+
+import pytest
 from pyspark.sql import functions as F
 
+from perfbench.spans import spark_jobs
 from reduction_dask_spark.caching import barrier, pin, pinned_count, release_pinned
 
 
@@ -130,3 +134,29 @@ def test_release_pinned_deletes_reliable_checkpoint_files(spark, monkeypatch, tm
     assert not any(ckpt.rglob("part-*")), (
         "release_pinned leaked reliable checkpoint files"
     )
+
+
+@pytest.mark.parametrize("mode, op", [("local", "localCheckpoint"), ("reliable", "checkpoint")])
+def test_barrier_names_jobs_after_caller(spark, monkeypatch, tmp_path, mode, op):
+    """A barrier's jobs, its AQE stage jobs included, are named after
+    the line that called barrier(), so a profile tells a funnel's
+    barriers apart; the caller's own call site is restored after."""
+    release_pinned()
+    monkeypatch.setenv("SPARK_GRAFT_BARRIER", mode)
+    if mode == "reliable":
+        spark.sparkContext.setCheckpointDir(str(tmp_path))
+    sc = spark.sparkContext
+    group = f"test_barrier_names_{mode}"
+    sc.setLocalProperty("callSite.short", "caller site")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        line = inspect.currentframe().f_lineno + 1
+        b = barrier(spark.range(300).groupBy((F.col("id") % 3).alias("k")).count())
+        assert sc.getLocalProperty("callSite.short") == "caller site"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("callSite.short", None)
+    assert b.count() == 3
+    names = {j["name"] for j in spark_jobs(sc, group)}
+    assert names == {f"{op} at test_caching.py:{line}"}
+    release_pinned()

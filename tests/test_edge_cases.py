@@ -175,25 +175,3 @@ def test_embedding_fingerprint_null_position_distinct(spark):
     assert fps[1] == fps[3]          # identical vectors still collapse
     assert fps[1] != fps[2]          # NULL position distinguishes
     assert fps[1] != fps[4] and fps[2] != fps[4]
-
-
-def test_minhash_arrow_kernel_parity(spark, monkeypatch):
-    """r17 (verdict item 5): the numpy/mapInArrow minhash signature
-    kernel (SPARK_GRAFT_MINHASH=arrow) must produce the exact band
-    keys of the default JVM expression form — both are the same int64
-    arithmetic, so equality is bit-for-bit, not approximate."""
-    from reduction_dask_spark.operators.dedup import (
-        doc_shingle_sets,
-        minhash_bands,
-        shingle_table_of,
-    )
-    from reduction_dask_spark.sources import load_table
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    sets = doc_shingle_sets(shingle_table_of(d))
-
-    monkeypatch.delenv("SPARK_GRAFT_MINHASH", raising=False)
-    jvm_rows = sorted(map(repr, minhash_bands(sets).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_MINHASH", "arrow")
-    arrow_rows = sorted(map(repr, minhash_bands(sets).collect()))
-    assert jvm_rows == arrow_rows and len(jvm_rows) > 0

@@ -1,0 +1,35 @@
+"""Smoke test of tools/query_profile.py: a query's build and execute jobs
+come back from the status store, grouped by call site."""
+
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+from reduction_dask_spark.ml import GBT_ROUNDS
+from reduction_dask_spark.registry import REGISTRY, load_all_operators
+from tools.query_profile import by_site, report, run_query
+
+from .conftest import SF_SMALL
+
+
+def test_profile_x1c_build_and_execute(spark, capsys):
+    load_all_operators()
+    r = run_query(spark, REGISTRY["x1c_mda_importance_gbt"].fn, SF_SMALL, "test_profile")
+    rounds = sum(
+        g["jobs"]
+        for g in by_site(r["build"])
+        if g["site"].startswith("toPandas at ml.py:")
+    )
+    assert rounds >= GBT_ROUNDS
+    assert r["execute"]
+    report("x1c", 0, r)
+    out = capsys.readouterr().out
+    assert "driver-only" in out and "toPandas at ml.py:" in out
+
+
+def test_no_tool_shadows_stdlib():
+    """`python tools/X.py` puts tools/ first on sys.path, so a tool named
+    like a stdlib module (profile.py) breaks every tool's pyspark import."""
+    tools = Path(__file__).resolve().parent.parent / "tools"
+    assert not {p.stem for p in tools.glob("*.py")} & sys.stdlib_module_names

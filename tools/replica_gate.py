@@ -53,28 +53,14 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+# the FK-consistent key-shift model, shared with the ×R scale probe
+from tools.scale_probe import KEY_COLS, OFFSET  # noqa: E402
+
 ALL_TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 TPCH_TABLES = frozenset("region nation customer supplier part orders lineitem".split())
 TPCH_REPLICATED = frozenset("customer orders lineitem".split())
-
-# same FK-consistent shift model as tools/scale_probe.py (kept small
-# here: sf0.001 keys are < 10^7, OFFSET is far beyond them, and
-# OFFSET % 5 == 0 preserves the doc_id mod-5 delta split dd12/dd13 use)
-OFFSET = 1_000_000_000
-KEY_COLS = {
-    "region": (),
-    "nation": (),
-    "customer": ("c_custkey",),
-    "supplier": ("s_suppkey",),
-    "part": ("p_partkey",),
-    "orders": ("o_orderkey", "o_custkey"),
-    "lineitem": ("l_orderkey", "l_partkey", "l_suppkey"),
-    "events": ("event_id", "user_id"),
-    "documents": ("doc_id",),
-    "embeddings": ("vec_id",),
-}
 
 # floor counts: if alias-aware classification ever yields fewer
 # queries than the last audited membership, refuse to certify —

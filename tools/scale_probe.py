@@ -43,7 +43,12 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SRC = "/root/testdata/sf0.1"
-OFFSET = 1_000_000_000  # beyond every natural key range in sf0.1
+# Shared with tools/replica_gate.py. OFFSET lies beyond every natural
+# key range in sf0.1 (and far beyond sf0.001's keys, which are < 10^7);
+# OFFSET % 5 == 0 preserves the doc_id mod-5 delta split dd12/dd13 use,
+# and OFFSET % 20 == 0 preserves era = vec_id % 20 and the vec_id % 1000
+# noise term, so replica rows carry identical supervised targets.
+OFFSET = 1_000_000_000
 
 # key columns to shift, per table (FK-consistent)
 KEY_COLS = {
