@@ -62,12 +62,6 @@ def shingles_of_tokens(toks: Column, k: int = K_SHINGLE) -> Column:
     return F.array_distinct(out)
 
 
-def shingle_array(col: Column, k: int = K_SHINGLE) -> Column:
-    """Shingles straight from a text column (for single-pass consumers
-    that project the token array themselves, prefer shingles_of_tokens)."""
-    return shingles_of_tokens(F.split(col, " "), k)
-
-
 def shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) inverted-index rows over the full documents
     table — see :func:`shingle_table_of`."""
@@ -1360,34 +1354,6 @@ def er1_blocked_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAIN_TAU = 0.9
 
 
-def containment_pairs_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UN-collapsed directed containment pair set — dd2b's original
-    contract, kept as the small-scale agreement baseline only (tests
-    expand the weighted quotient against it). Not registered: under a
-    k-way duplicate load the answer itself is O(k²) per group (the ×10
-    probe measured 155 s / 28.5× — the r5 registry's slowest), so the
-    full form is a scale-killer BY CONTRACT, not by plan."""
-    sh = pin(shingle_table(spark, sf_dir))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("ninter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    cont = F.col("ninter").cast("double") / F.col("na")
-    return (
-        inter.join(sa, "doc_a")
-        .filter(cont >= CONTAIN_TAU)
-        .select("doc_a", "doc_b", F.round(cont, 6).alias("containment"))
-    )
-
-
 @query(
     "dd2b_containment_pairs",
     oracle=f"""
@@ -1439,9 +1405,10 @@ def containment_pairs_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shingled content carrying its m·(m−1) within-group "
         "containment-1.0 ordered pairs. Full information of the "
         "blown-up pair set at linear size (the uncollapsed form, "
-        "containment_pairs_full, measured 28.5× under a 10-way "
-        "duplicate load BY CONTRACT — its answer is quadratic in "
-        "group size; tests pin the exact expansion equivalence).",
+        "containment_pairs_full in tests/test_curation_ops.py, "
+        "measured 28.5× under a 10-way duplicate load BY CONTRACT — "
+        "its answer is quadratic in group size; that test pins the "
+        "exact expansion equivalence).",
     tags=("dedup",),
 )
 def dd2b_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1649,23 +1649,6 @@ REP_TOP3_PCT = 18  # fail if top 3-gram covers > 18% of tokens
 REP_DUP5_PCT = 15  # fail if duplicated 5-grams cover > 15% of positions
 
 
-def _gram_col(toks: Column, k: int) -> Column:
-    """All k-grams of a token array WITH multiplicity (dedup's
-    shingles_of_tokens minus the array_distinct — repetition rules
-    need the counts the dedup index deliberately drops). The slice
-    length clamps at 0 so docs shorter than k yield an empty array
-    instead of an ANSI negative-length error."""
-    n = F.size(toks)
-    ln = F.greatest(n - (k - 1), F.lit(0))
-    out = F.slice(toks, 1, ln)
-    for j in range(1, k):
-        out = F.zip_with(
-            out, F.slice(toks, 1 + j, ln),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return out
-
-
 def _max_run_count(sorted_hashes: Column) -> Column:
     """Largest multiplicity of any value in a SORTED array — one O(n)
     fold (0 for an empty array, NULL for a NULL array): the per-row

@@ -2,16 +2,30 @@
 scale design calls for (SURVEY.md §4 — the Catalyst freebies are only
 free if the query is written so they fire).
 
-Used by tests/test_plans.py to lock in:
+:func:`shape` is the one node counter. It walks the physical plan once
+and counts each node once:
+
+- AQE's initial plan stands in for the ``AdaptiveSparkPlan`` wrapper;
+- every subquery (scalar, IN, dynamic-pruning) is walked;
+- each distinct pinned relation's cached plan is walked once, however
+  many ``InMemoryTableScan`` nodes read it (keyed on the cached plan's
+  id). The plan STRING prints a cached plan under every scan of it, so
+  grepping it overcounts shared work.
+
+Used by tests/test_plans.py and tools/plan_audit.py to lock in:
 - parquet predicate pushdown (PushedFilters) and column pruning
   (ReadSchema) on scans;
 - broadcast joins on dim tables (no shuffle of the fact side);
 - whole-stage codegen coverage of expression pipelines;
 - partial aggregation (map-side combine) before shuffles;
+- no single-partition (empty partition spec) windows;
 - driver-built tables as LocalRelations, not Python-RDD scans.
 """
 
 from __future__ import annotations
+
+from collections import Counter
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -39,51 +53,6 @@ def read_schemas(df: DataFrame) -> list[str]:
         for line in formatted_plan(df).splitlines()
         if "ReadSchema:" in line
     ]
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
-
-
-def count_exchanges(df: DataFrame) -> int:
-    """SHUFFLE exchange count in the (pre-AQE) physical plan tree —
-    broadcast and reused exchanges excluded (a broadcast is the cheap
-    alternative to a shuffle, counting it would punish the right plan)."""
-    import re
-
-    tree = simple_plan(df)
-    shuffles = 0
-    for line in tree.splitlines():
-        if re.search(r"\bExchange (hash|range|single|SinglePartition)", line) or (
-            "Exchange" in line
-            and "BroadcastExchange" not in line
-            and "ReusedExchange" not in line
-        ):
-            shuffles += 1
-    return shuffles
-
-
-def empty_partition_windows(df: DataFrame) -> int:
-    """Count WindowExec nodes whose partition spec is EMPTY — the nodes
-    that move the entire relation to one partition (the `WindowExec: No
-    Partition Defined` warning). Note Catalyst constant-folds literal
-    partition keys away, so `partitionBy(F.lit(0))` still lands here;
-    bounded-relation global orderings must use orderBy+limit
-    (TakeOrderedAndProject), a triangular metadata join, or driver-side
-    construction instead."""
-    n = 0
-    stack = [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        name = node.nodeName()
-        if name == "Window" and node.partitionSpec().isEmpty():
-            n += 1
-        if name.startswith("AdaptiveSparkPlan"):
-            stack.append(node.initialPlan())
-        ch = node.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-    return n
 
 
 def has_partial_aggregation(df: DataFrame) -> bool:
@@ -119,11 +88,21 @@ def python_rdd_scans(df: DataFrame) -> int:
     return n
 
 
-def broadcast_leaves(df: DataFrame) -> list[str]:
-    """Leaf node names under every BroadcastExchange of the physical
-    plan (AQE's initial plan), e.g. ``LocalTableScan`` for a
-    driver-built table or ``Scan ExistingRDD`` for a Python-RDD one."""
-    leaves: list[str] = []
+# shape()'s derived key: Window nodes whose partition spec is EMPTY,
+# which move the entire relation to one partition (the `WindowExec: No
+# Partition Defined` warning). Catalyst constant-folds literal partition
+# keys away, so `partitionBy(F.lit(0))` lands here too; bounded-relation
+# global orderings must use orderBy+limit (TakeOrderedAndProject), a
+# triangular metadata join, or driver-side construction instead.
+EMPTY_PARTITION_WINDOW = "EmptyPartitionWindow"
+
+
+def _walk(df: DataFrame) -> Iterator[tuple[object, bool]]:
+    """Yield ``(node, under_broadcast)`` for each node of the physical
+    plan once, by the rule in the module docstring. ``under_broadcast``
+    says a BroadcastExchange is an ancestor in the same tree; subqueries
+    and cached plans start a new tree."""
+    seen: set[int] = set()
     stack = [(df._jdf.queryExecution().executedPlan(), False)]
     while stack:
         node, under = stack.pop()
@@ -131,10 +110,39 @@ def broadcast_leaves(df: DataFrame) -> list[str]:
         if name.startswith("AdaptiveSparkPlan"):
             stack.append((node.initialPlan(), under))
             continue
+        yield node, under
+        if name == "InMemoryTableScan":
+            cached = node.relation().cachedPlan()
+            if cached.id() not in seen:
+                seen.add(cached.id())
+                stack.append((cached, False))
         under = under or name == "BroadcastExchange"
-        ch = node.children()
-        if under and ch.size() == 0:
-            leaves.append(name)
-        for i in range(ch.size()):
-            stack.append((ch.apply(i), under))
-    return leaves
+        for seq, flag in ((node.children(), under), (node.subqueries(), False)):
+            for i in range(seq.size()):
+                stack.append((seq.apply(i), flag))
+
+
+def shape(df: DataFrame) -> Counter:
+    """Physical node counts by ``nodeName()`` — ``Exchange`` (shuffles
+    only; broadcasts are ``BroadcastExchange``), ``SortMergeJoin``,
+    ``BroadcastHashJoin``, ``BroadcastNestedLoopJoin``,
+    ``CartesianProduct``, ``Window``, ``BatchEvalPython``,
+    ``InMemoryTableScan`` … — plus :data:`EMPTY_PARTITION_WINDOW`."""
+    counts: Counter = Counter()
+    for node, _ in _walk(df):
+        name = node.nodeName()
+        counts[name] += 1
+        if name == "Window" and node.partitionSpec().isEmpty():
+            counts[EMPTY_PARTITION_WINDOW] += 1
+    return counts
+
+
+def broadcast_leaves(df: DataFrame) -> list[str]:
+    """Leaf node names under every BroadcastExchange of the physical
+    plan, e.g. ``LocalTableScan`` for a driver-built table or ``Scan
+    ExistingRDD`` for a Python-RDD one."""
+    return [
+        node.nodeName()
+        for node, under in _walk(df)
+        if under and node.children().size() == 0
+    ]

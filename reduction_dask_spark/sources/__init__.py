@@ -148,12 +148,6 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for the SQL API."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
     """S1: headered CSV scan (nb cell 4). Explicit schema preferred;
     inferSchema kept for parity with the reference's ``pd.read_csv``."""

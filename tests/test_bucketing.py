@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from reduction_dask_spark.plans import count_exchanges, simple_plan
+from reduction_dask_spark.plans import shape, simple_plan
 from reduction_dask_spark.sources import load_table
 
 from .conftest import SF_SMALL
@@ -29,7 +29,7 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
     try:
         j = li_b.join(o_b, li_b.l_orderkey == o_b.o_orderkey)
-        assert count_exchanges(j) == 0, simple_plan(j)
+        assert shape(j)["Exchange"] == 0, simple_plan(j)
         # and the result is still right
         plain = load_table(spark, SF_SMALL, "lineitem").join(
             load_table(spark, SF_SMALL, "orders"),
@@ -47,7 +47,7 @@ def test_unbucketed_join_does_shuffle(spark):
         li = load_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_quantity")
         o = load_table(spark, SF_SMALL, "orders").select("o_orderkey", "o_totalprice")
         j = li.join(o, li.l_orderkey == o.o_orderkey)
-        assert count_exchanges(j) == 2
+        assert shape(j)["Exchange"] == 2
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
@@ -73,7 +73,7 @@ def test_bucketed_fingerprint_index_antijoin_dedup(spark):
         plan = simple_plan(fresh)
         # exactly ONE exchange: the batch side; the bucketed corpus scan
         # feeds the sort-merge anti-join directly
-        assert count_exchanges(fresh) == 1, plan
+        assert shape(fresh)["Exchange"] == 1, plan
         # and semantics match the unbucketed dd9 shape
         plain = batch.join(corpus, "fingerprint", "left_anti")
         assert fresh.count() == plain.count()
@@ -123,7 +123,7 @@ def test_bucketed_shingle_index_pair_join_no_input_shuffle(spark):
             (F.col("a.shingle") == F.col("b.shingle"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        assert count_exchanges(pairs) == 0, simple_plan(pairs)
+        assert shape(pairs)["Exchange"] == 0, simple_plan(pairs)
         # same pair count as the unbucketed plan
         ua, ub = sh.alias("a"), sh.alias("b")
         upairs = ua.join(

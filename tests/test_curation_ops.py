@@ -59,9 +59,9 @@ def test_mw3_budget_respected_per_source(spark):
 
 def test_mw3_no_global_window(spark):
     """The running sum must be keyed by source (never a global window)."""
-    from reduction_dask_spark.plans import empty_partition_windows
+    from reduction_dask_spark.plans import EMPTY_PARTITION_WINDOW, shape
 
-    assert empty_partition_windows(mw3_token_budget_pack(spark, SF_SMALL)) == 0
+    assert shape(mw3_token_budget_pack(spark, SF_SMALL))[EMPTY_PARTITION_WINDOW] == 0
 
 
 def test_dd9_fresh_disjoint_from_corpus(spark):
@@ -147,6 +147,37 @@ def test_prof1_single_scan_agg(spark):
     assert q["n_distinct"] == 50
 
 
+def containment_pairs_full(spark, sf_dir):
+    """The UN-collapsed directed containment pair set — dd2b's original
+    contract, kept as the small-scale agreement baseline only. Not
+    registered: under a k-way duplicate load the answer itself is
+    O(k²) per group (the ×10 probe measured 155 s / 28.5× — the r5
+    registry's slowest), so the full form is a scale-killer BY
+    CONTRACT, not by plan."""
+    from reduction_dask_spark.caching import pin
+    from reduction_dask_spark.operators.dedup import CONTAIN_TAU, shingle_table
+
+    sh = pin(shingle_table(spark, sf_dir))
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") != F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count("*").alias("ninter"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    cont = F.col("ninter").cast("double") / F.col("na")
+    return (
+        inter.join(sa, "doc_a")
+        .filter(cont >= CONTAIN_TAU)
+        .select("doc_a", "doc_b", F.round(cont, 6).alias("containment"))
+    )
+
+
 def test_dd2b_weighted_quotient_expands_to_full_pairs(spark):
     """The weighted representative-pair contract (r6) carries full
     information of the uncollapsed directed containment pair set:
@@ -155,10 +186,7 @@ def test_dd2b_weighted_quotient_expands_to_full_pairs(spark):
     reproduces containment_pairs_full exactly."""
     from collections import defaultdict
 
-    from reduction_dask_spark.operators.dedup import (
-        containment_pairs_full,
-        dd2b_containment_pairs,
-    )
+    from reduction_dask_spark.operators.dedup import dd2b_containment_pairs
     from reduction_dask_spark.sources import load_table
 
     weighted = dd2b_containment_pairs(spark, SF_SMALL).collect()

@@ -10,12 +10,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from reduction_dask_spark.plans import (
+    EMPTY_PARTITION_WINDOW,
     codegen_stages,
-    count_exchanges,
-    has_broadcast_join,
     has_partial_aggregation,
     pushed_filters,
     read_schemas,
+    shape,
 )
 from reduction_dask_spark.sources import load_table
 
@@ -42,16 +42,16 @@ def test_star_join_broadcasts_dims(spark):
     from reduction_dask_spark.operators.relational import j4_star_broadcast
 
     q = j4_star_broadcast(spark, SF_SMALL)
-    assert has_broadcast_join(q)
+    assert shape(q)["BroadcastHashJoin"]
 
 
 def test_j1_broadcast_no_fact_shuffle(spark):
     from reduction_dask_spark.operators.relational import j1_index_align_join
 
     q = j1_index_align_join(spark, SF_SMALL)
-    assert has_broadcast_join(q)
+    assert shape(q)["BroadcastHashJoin"]
     # broadcast join ⇒ at most the broadcast exchange, no fact shuffle
-    assert count_exchanges(q) <= 1
+    assert shape(q)["Exchange"] <= 1
 
 
 def test_groupby_has_partial_aggregation(spark):
@@ -88,7 +88,7 @@ def test_flagship_single_era_shuffle(spark):
     from reduction_dask_spark.operators.metrics import m1_spearman_by_era
 
     q = m1_spearman_by_era(spark, SF_SMALL)
-    assert count_exchanges(q) <= 2  # era hash partitioning + final agg
+    assert shape(q)["Exchange"] <= 2  # era hash partitioning + final agg
 
 
 def test_global_sort_uses_range_partitioning(spark):
@@ -121,7 +121,7 @@ def test_q10_topk_is_take_ordered(spark):
 
     q = q10_returned_items(spark, SF_SMALL)
     assert "TakeOrderedAndProject" in simple_plan(q)
-    assert has_broadcast_join(q)
+    assert shape(q)["BroadcastHashJoin"]
 
 
 def test_q19_disjunction_keeps_hash_join(spark):
@@ -144,7 +144,7 @@ def test_q17_decorrelated_avg_shares_partkey_exchange(spark):
     from reduction_dask_spark.operators.tpch import q17_small_quantity_revenue
 
     q = q17_small_quantity_revenue(spark, SF_SMALL)
-    assert has_broadcast_join(q)
+    assert shape(q)["BroadcastHashJoin"]
 
 
 def test_no_empty_partition_windows_in_rank_family(spark):
@@ -156,14 +156,70 @@ def test_no_empty_partition_windows_in_rank_family(spark):
     from reduction_dask_spark.operators.importance import x3_projection_by_rank
     from reduction_dask_spark.operators.relational import w2_rank_importance
     from reduction_dask_spark.operators.similarity import ss6_pq_adc_topk
-    from reduction_dask_spark.plans import empty_partition_windows, simple_plan
+    from reduction_dask_spark.plans import simple_plan
 
     x3 = x3_projection_by_rank(spark, SF_SMALL)
-    assert empty_partition_windows(x3) == 0
+    assert shape(x3)[EMPTY_PARTITION_WINDOW] == 0
     assert "TakeOrderedAndProject" in simple_plan(x3)
 
-    assert empty_partition_windows(w2_rank_importance(spark, SF_SMALL)) == 0
-    assert empty_partition_windows(ss6_pq_adc_topk(spark, SF_SMALL)) == 0
+    assert shape(w2_rank_importance(spark, SF_SMALL))[EMPTY_PARTITION_WINDOW] == 0
+    assert shape(ss6_pq_adc_topk(spark, SF_SMALL))[EMPTY_PARTITION_WINDOW] == 0
+
+
+def test_shape_counts_a_pinned_shuffle_once(spark):
+    """A pinned relation scanned three times is ONE materialization: its
+    shuffle is counted once, not once per InMemoryTableScan (the plan
+    string prints the cached plan under every scan)."""
+    from reduction_dask_spark.caching import pin, release_pinned
+
+    agg = pin(
+        spark.range(0, 1000)
+        .groupBy((F.col("id") % 7).alias("k"))
+        .agg(F.sum("id").alias("s"))
+    )
+    try:
+        q = agg.alias("a").join(agg.alias("b"), "k").join(agg.alias("c"), "k")
+        counts = shape(q)
+        assert counts["InMemoryTableScan"] == 3
+        assert counts["Exchange"] == 1
+    finally:
+        release_pinned()
+
+
+def test_shape_sees_global_windows_in_pins_and_subqueries(spark):
+    """Single-partition windows hidden inside a pinned relation and
+    inside a scalar subquery both count toward the empty-partition key."""
+    from pyspark.sql import Window
+
+    from reduction_dask_spark.caching import pin, release_pinned
+
+    base = spark.range(0, 1000).withColumnRenamed("id", "v")
+    ranked = pin(base.withColumn("r", F.row_number().over(Window.orderBy("v"))))
+    top = base.select(
+        F.row_number().over(Window.orderBy(F.desc("v"))).alias("r2")
+    ).agg(F.max("r2"))
+    try:
+        counts = shape(ranked.select("v", "r", top.scalar().alias("top")))
+        assert counts["InMemoryTableScan"] == 1 and counts["Subquery"] == 1
+        assert counts["Window"] == 2
+        assert counts[EMPTY_PARTITION_WINDOW] == 2
+    finally:
+        release_pinned()
+
+
+def test_plan_shape_file_covers_the_registry():
+    """PLAN_SHAPE.json (written by tools/plan_audit.py --write) has one
+    entry per registered query: a new query cannot land without a
+    regenerated shape record."""
+    import json
+
+    from reduction_dask_spark.registry import REGISTRY, load_all_operators
+
+    from .conftest import REPO
+
+    load_all_operators()
+    recorded = json.loads((REPO / "PLAN_SHAPE.json").read_text())
+    assert set(recorded["queries"]) == set(REGISTRY)
 
 
 def test_runtime_bloom_filter_prunes_fact_scan(spark):

@@ -14,7 +14,9 @@ that produces the round's correctness/scale evidence —
   5. tools/replica_gate.py --family emb  (×12 embeddings+documents:
      the ANN/similarity family — fixed probe batch, ×12 searched
      corpus; closes the r11 verdict's 249/249 accounting item);
-  6. tools/plan_audit.py  (whole-registry physical-plan red flags).
+  6. tools/plan_audit.py  (whole-registry physical-plan red flags;
+     regenerates PLAN_AUDIT.md and PLAN_SHAPE.json, the per-query
+     node counts whose `git diff` is the round's plan-shape record).
 
 Each step runs as a subprocess (own Spark session, own log under
 LOGDIR) and the tool prints one PASS/FAIL summary line per step plus

@@ -1,16 +1,18 @@
 """Whole-registry physical-plan audit.
 
-Builds (does not execute) every registered query at the given sf_dir
-and greps its physical plan for the scale red flags the 100 TB design
-review cares about:
+Builds (does not execute) every registered query at the given sf_dir,
+counts its physical nodes with ``plans.shape`` (initial plan,
+subqueries, each cached plan once) and flags the scale red flags the
+100 TB design review cares about:
 
 - CartesianProduct / BroadcastNestedLoopJoin outside an allowlisted
   candidate-generation pattern (broadcast-small-side crossJoin is fine
   and appears as BroadcastNestedLoopJoin — we flag only when BOTH
   sides are unbounded relations, approximated here by an allowlist).
 - WindowExec with an empty partition spec (single-partition sort).
-- Python row-at-a-time UDFs (BatchEvalPython) — Arrow paths
-  (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) are fine.
+- Python row-at-a-time UDFs (BatchEvalPython, BatchEvalPythonUDTF) —
+  Arrow paths (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas)
+  are fine.
 
 Some queries legitimately cross-join a BROADCAST side (probe tables,
 centroid lists, k×k band matrices, 1-row aggregates); those names are
@@ -20,16 +22,22 @@ The audit runs with SPARK_GRAFT_BARRIER=noop (r11 ADVICE item): with
 the default eager barrier, every funnel hub (1) EXECUTES during what
 claims to be a build-only scan and (2) truncates the plan to a
 LogicalRDD leaf, hiding everything upstream — the funnel interiors,
-the kfold/GBT frames — from the red-flag grep. noop makes barrier()
-the identity, so plans here are the FULL untruncated trees and
-nothing materializes. release_pinned() runs per query so lazily
-registered pins don't accumulate across the 296-query session.
+the kfold/GBT frames — from the audit. noop makes barrier() the
+identity, so plans here are the FULL untruncated trees and nothing
+materializes. release_pinned() runs per query so lazily registered
+pins don't accumulate across the whole-registry session.
+
+With --write it writes PLAN_AUDIT.md and PLAN_SHAPE.json at the repo
+root. PLAN_SHAPE.json records the sf it was built at and one line per
+query with that query's node counts (sorted keys), so a `git diff` of
+it is the before/after plan-shape record of a change.
 
 Usage: python tools/plan_audit.py [sf_dir] [--write PLAN_AUDIT.md]
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -155,33 +163,32 @@ def main() -> None:
     os.environ["SPARK_GRAFT_BARRIER"] = "noop"
 
     from reduction_dask_spark.caching import release_pinned
-    from reduction_dask_spark.plans import empty_partition_windows, simple_plan
+    from reduction_dask_spark.plans import EMPTY_PARTITION_WINDOW, shape
     from reduction_dask_spark.session import get_spark
 
     import __spark_entry__ as entry
 
     spark = get_spark()
     qs = entry.queries()
-    rows, errors = [], []
+    rows, errors, shapes = [], [], {}
     for name, fn in qs.items():
         t0 = time.time()
         try:
-            df = fn(spark, sf_dir)
-            plan = simple_plan(df)
-            epw = empty_partition_windows(df)
+            counts = shape(fn(spark, sf_dir))
         except Exception:
             errors.append((name, traceback.format_exc(limit=1)))
             continue
         finally:
             release_pinned()
+        shapes[name] = counts
         flags = []
-        if "CartesianProduct" in plan:
+        if counts["CartesianProduct"]:
             flags.append("CARTESIAN")
-        if "BroadcastNestedLoopJoin" in plan and name not in CROSS_OK:
+        if counts["BroadcastNestedLoopJoin"] and name not in CROSS_OK:
             flags.append("NESTED_LOOP")
-        if epw:
-            flags.append(f"EMPTY_PARTITION_WINDOW×{epw}")
-        if "BatchEvalPython" in plan and name not in ROW_UDF_OK:
+        if counts[EMPTY_PARTITION_WINDOW]:
+            flags.append(f"EMPTY_PARTITION_WINDOW×{counts[EMPTY_PARTITION_WINDOW]}")
+        if (counts["BatchEvalPython"] or counts["BatchEvalPythonUDTF"]) and name not in ROW_UDF_OK:
             flags.append("ROW_UDF")
         rows.append((name, flags, round(time.time() - t0, 2)))
 
@@ -211,7 +218,15 @@ def main() -> None:
     out = "\n".join(lines) + "\n"
     print(out)
     if write:
-        Path(__file__).resolve().parent.parent.joinpath("PLAN_AUDIT.md").write_text(out)
+        root = Path(__file__).resolve().parent.parent
+        root.joinpath("PLAN_AUDIT.md").write_text(out)
+        body = ",\n".join(
+            f"{json.dumps(n)}: {json.dumps(c, sort_keys=True)}"
+            for n, c in sorted(shapes.items())
+        )
+        root.joinpath("PLAN_SHAPE.json").write_text(
+            f'{{"sf": {json.dumps(Path(sf_dir).name)}, "queries": {{\n{body}\n}}}}\n'
+        )
     sys.exit(1 if (flagged or errors) else 0)
 
 
