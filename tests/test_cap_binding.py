@@ -17,16 +17,11 @@ as the sf0.01 gate, pointed at cap-firing inputs:
 
 from __future__ import annotations
 
-import glob
-import os
-
-import duckdb
 import pandas as pd
 import pytest
 
-from tools.compare import canon
-
 from .conftest import SF_SMALL
+from .parity_util import assert_oracle_parity, duck_views, run_query
 
 # registered names compared on each corpus (the dedup/decontam family
 # whose semantics the caps govern)
@@ -60,27 +55,6 @@ def _write_documents(path: str, rows: list[tuple[int, str]]) -> None:
             "n_chars": pd.Series([len(r[1]) for r in rows], dtype="int64"),
         }
     ).to_parquet(f"{path}/documents.parquet", index=False)
-
-
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for p in glob.glob(f"{sf_dir}/*.parquet"):
-        con.execute(
-            f"CREATE VIEW {os.path.basename(p)[:-8]} AS "
-            f"SELECT * FROM read_parquet('{p}')"
-        )
-    return con
-
-
-def _assert_equal(name: str, spark, con, sf_dir: str) -> None:
-    from reduction_dask_spark.registry import REGISTRY
-
-    q = REGISTRY[name]
-    s = canon(q.fn(spark, sf_dir).toPandas())
-    d = canon(con.execute(q.oracle).fetchdf())
-    assert list(s.columns) == list(d.columns), name
-    assert len(s) == len(d), (name, len(s), len(d))
-    pd.testing.assert_frame_equal(s, d, check_exact=True, obj=name)
 
 
 @pytest.fixture(scope="module")
@@ -148,7 +122,7 @@ def test_caps_actually_bind(planted_dir, spark):
     )
 
     sf_dir, _ = planted_dir
-    con = _duck(sf_dir)
+    con = duck_views(sf_dir)
     n_hot_shingle = con.execute(f"""
         WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         s AS (SELECT doc_id, unnest(list_distinct(
@@ -175,7 +149,7 @@ def test_caps_actually_bind(planted_dir, spark):
 @pytest.mark.parametrize("name", PLANTED_QUERIES)
 def test_planted_cap_corpus_value_equality(planted_dir, spark, name):
     sf_dir, _ = planted_dir
-    _assert_equal(name, spark, _duck(sf_dir), sf_dir)
+    assert_oracle_parity(spark, sf_dir, name)
 
 
 def test_exempt_cap_truncation_is_deterministic(planted_dir, spark):
@@ -185,14 +159,10 @@ def test_exempt_cap_truncation_is_deterministic(planted_dir, spark):
     documented residual blind spot — the truncation is a defined
     set, not an engine accident."""
     from reduction_dask_spark.operators.dedup import ES_EXEMPT_CAP
-    from reduction_dask_spark.registry import REGISTRY
 
     sf_dir, host_ids = planted_dir
-    got = (
-        REGISTRY["dc3_span_decontam"].fn(spark, sf_dir)
-        .filter("match_len >= 20").select("doc_id").distinct().toPandas()
-    )
-    detected = set(got.doc_id) & set(host_ids)
+    got = run_query(spark, sf_dir, "dc3_span_decontam")
+    detected = set(got.doc_id[got.match_len >= 20]) & set(host_ids)
     assert detected == set(host_ids[:ES_EXEMPT_CAP])
 
 
@@ -217,7 +187,7 @@ def replica_dir(tmp_path_factory):
 def test_replica_df_cap_binds(replica_dir):
     from reduction_dask_spark.operators.dedup import DF_CAP
 
-    con = _duck(replica_dir)
+    con = duck_views(replica_dir)
     n_hot = con.execute(f"""
         WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         s AS (SELECT doc_id, unnest(list_distinct(
@@ -230,4 +200,4 @@ def test_replica_df_cap_binds(replica_dir):
 
 @pytest.mark.parametrize("name", REPLICA_QUERIES)
 def test_replica12_value_equality(replica_dir, spark, name):
-    _assert_equal(name, spark, _duck(replica_dir), replica_dir)
+    assert_oracle_parity(spark, replica_dir, name)

@@ -1,21 +1,23 @@
 """Smoke test of tools/query_profile.py: a query's build and execute jobs
-come back from the status store, grouped by call site."""
+come back from the status store, grouped by call site, and its reps end
+in one build + execute wall line."""
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
 from reduction_dask_spark.ml import GBT_ROUNDS
 from reduction_dask_spark.registry import REGISTRY, load_all_operators
-from tools.query_profile import by_site, report, run_query
+from tools.query_profile import by_site, profile
 
 from .conftest import SF_SMALL
 
 
 def test_profile_x1c_build_and_execute(spark, capsys):
     load_all_operators()
-    r = run_query(spark, REGISTRY["x1c_mda_importance_gbt"].fn, SF_SMALL, "test_profile")
+    (r,) = profile(spark, "x1c", REGISTRY["x1c_mda_importance_gbt"].fn, SF_SMALL, reps=1)
     rounds = sum(
         g["jobs"]
         for g in by_site(r["build"])
@@ -23,9 +25,12 @@ def test_profile_x1c_build_and_execute(spark, capsys):
     )
     assert rounds >= GBT_ROUNDS
     assert r["execute"]
-    report("x1c", 0, r)
     out = capsys.readouterr().out
     assert "driver-only" in out and "toPandas at ml.py:" in out
+    wall = round(r["build_s"] + r["execute_s"], 2)
+    assert re.search(
+        rf"^x1c min={wall:.2f} med={wall:.2f} all=\[{wall}\]$", out, re.MULTILINE
+    )
 
 
 def test_no_tool_shadows_stdlib():

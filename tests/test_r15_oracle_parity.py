@@ -32,34 +32,15 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tools.compare import compare
+from tests.parity_util import assert_oracle_parity
 
 
-def _run_both(spark, tmp_path, name, tables):
-    """Write `tables` (name -> Spark DF) as parquet under tmp_path,
-    run the REGISTERED query and its REGISTERED oracle on them, and
-    assert exact canon equality. Returns the Spark pandas frame."""
-    from reduction_dask_spark.caching import release_pinned
-    from reduction_dask_spark.registry import REGISTRY, load_all_operators
-
-    load_all_operators()
-
+def _write(tmp_path, tables):
+    """Write `tables` (name -> Spark DF) with plain parquet writes, so
+    Spark reads several part files as several partitions and has to
+    match DuckDB across partial aggregates and float-addition order."""
     for t, df in tables.items():
         df.write.mode("overwrite").parquet(str(tmp_path / f"{t}.parquet"))
-    try:
-        sdf = REGISTRY[name].fn(spark, str(tmp_path)).toPandas()
-    finally:
-        release_pinned()
-        spark.catalog.clearCache()
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet/*.parquet'"
-        )
-    ddf = con.execute(REGISTRY[name].oracle).fetchdf()
-    errs = compare(name, sdf, ddf)
-    assert not errs, f"{name}: {errs}"
-    return sdf
 
 
 def _docs(spark, rows):
@@ -111,9 +92,8 @@ class TestGr3OracleParity:
         for _ in range(DF_CAP + 20):
             rows.append((doc_id, hot, "en"))
             doc_id += 1
-        sdf = _run_both(
-            spark, tmp_path, "gr3_kcore", {"documents": _docs(spark, rows)}
-        )
+        _write(tmp_path, {"documents": _docs(spark, rows)})
+        sdf = assert_oracle_parity(spark, tmp_path, "gr3_kcore")
         # the mult-3 clique (deg 2) and mult-5 clique (deg 4) survive;
         # the pair, the short docs and the capped hot group do not
         assert len(sdf) == 8
@@ -150,9 +130,8 @@ class TestGr3OracleParity:
             for r in jaccard_pairs(shingle_table_of(d), JACCARD_TAU).collect()
         )
         assert got_pairs == [(0, 1), (1, 2)]  # a genuine path, no chord
-        sdf = _run_both(
-            spark, tmp_path, "gr3_kcore", {"documents": d}
-        )
+        _write(tmp_path, {"documents": d})
+        sdf = assert_oracle_parity(spark, tmp_path, "gr3_kcore")
         assert len(sdf) == 0
 
 
@@ -186,10 +165,8 @@ class TestIso1OracleParity:
             for lang in ls:
                 rows.append((doc_id, text, lang))
                 doc_id += 1
-        sdf = _run_both(
-            spark, tmp_path, "iso1_isotonic_calibration",
-            {"documents": _docs(spark, rows)},
-        )
+        _write(tmp_path, {"documents": _docs(spark, rows)})
+        sdf = assert_oracle_parity(spark, tmp_path, "iso1_isotonic_calibration")
         assert len(sdf) >= 2
         assert (sdf.calibrated.diff().dropna() >= 0).all()
 
@@ -205,10 +182,8 @@ class TestIso1OracleParity:
                 ]
             )
         ]
-        sdf = _run_both(
-            spark, tmp_path, "iso1_isotonic_calibration",
-            {"documents": _docs(spark, rows)},
-        )
+        _write(tmp_path, {"documents": _docs(spark, rows)})
+        sdf = assert_oracle_parity(spark, tmp_path, "iso1_isotonic_calibration")
         # one global pool at 1.0 -> exactly first+last boundary rows
         assert len(sdf) == 2
         assert set(sdf.calibrated) == {1.0}
@@ -221,19 +196,15 @@ class TestIso1OracleParity:
         python-side rounding."""
         rows = [(i, "alpha beta gamma delta", "en" if i == 0 else "xx")
                 for i in range(128)]
-        sdf = _run_both(
-            spark, tmp_path, "iso1_isotonic_calibration",
-            {"documents": _docs(spark, rows)},
-        )
+        _write(tmp_path, {"documents": _docs(spark, rows)})
+        sdf = assert_oracle_parity(spark, tmp_path, "iso1_isotonic_calibration")
         assert list(sdf.calibrated) == [0.007813]
 
     def test_single_distinct_score(self, spark, tmp_path):
         rows = [(0, "alpha beta gamma delta", "en"),
                 (1, "alpha beta gamma delta", "xx")]
-        sdf = _run_both(
-            spark, tmp_path, "iso1_isotonic_calibration",
-            {"documents": _docs(spark, rows)},
-        )
+        _write(tmp_path, {"documents": _docs(spark, rows)})
+        sdf = assert_oracle_parity(spark, tmp_path, "iso1_isotonic_calibration")
         assert len(sdf) == 1
         assert list(sdf.calibrated) == [0.5]
 
@@ -261,10 +232,8 @@ class TestMm3OracleParity:
             (23, "数据" * 40, "en"),              # 3-byte codepoints across frames
             (1, "not a video row " * 10, "en"),  # audio: excluded
         ]
-        sdf = _run_both(
-            spark, tmp_path, "mm3_frame_sample",
-            {"documents": _docs(spark, rows)},
-        )
+        _write(tmp_path, {"documents": _docs(spark, rows)})
+        sdf = assert_oracle_parity(spark, tmp_path, "mm3_frame_sample")
         got = {(r.doc_id, r.frame_idx): r.frame_hex for r in sdf.itertuples()}
         assert 2 not in {d for d, _ in got}          # empty payload: no rows
         assert 1 not in {d for d, _ in got}          # non-video excluded
@@ -299,10 +268,8 @@ class TestMm4OracleParity:
             (15, "é" * 100, "en"),               # 200 bytes multibyte
             (2, "not an image row " * 5, "en"),  # video: excluded
         ]
-        sdf = _run_both(
-            spark, tmp_path, "mm4_resize_thumbnail",
-            {"documents": _docs(spark, rows)},
-        )
+        _write(tmp_path, {"documents": _docs(spark, rows)})
+        sdf = assert_oracle_parity(spark, tmp_path, "mm4_resize_thumbnail")
         got = {r.doc_id: r for r in sdf.itertuples()}
         assert set(got) == {0, 3, 6, 9, 12, 15}
         assert got[0].thumb_hex == "" and got[0].thumb_bytes == 0
@@ -355,10 +322,8 @@ class TestMm2OracleParity:
             (3, "数据 管道 \U0001f600", "en"),    # 3- and 4-byte UTF-8
             (4, "\t\n !~", "en"),               # low-bin control bytes
         ]
-        sdf = _run_both(
-            spark, tmp_path, "mm2_feature_extract",
-            {"documents": _docs(spark, rows)},
-        )
+        _write(tmp_path, {"documents": _docs(spark, rows)})
+        sdf = assert_oracle_parity(spark, tmp_path, "mm2_feature_extract")
         assert len(sdf) == 5
         fcols = [f"f{i}" for i in range(16)]
         feats = {r.doc_id: [getattr(r, c) for c in fcols] for r in sdf.itertuples()}
@@ -400,10 +365,8 @@ class TestMm6OracleParity:
         emb = spark.createDataFrame(
             emb_rows, "vec_id long, embedding array<float>"
         )
-        sdf = _run_both(
-            spark, tmp_path, "mm6_crossmodal_alignment",
-            {"documents": docs, "embeddings": emb},
-        )
+        _write(tmp_path, {"documents": docs, "embeddings": emb})
+        sdf = assert_oracle_parity(spark, tmp_path, "mm6_crossmodal_alignment")
         assert len(sdf) == 7
         by_id = sdf.set_index("doc_id")
         # the empty-text doc surfaces with NULL align_z/keep (not NaN

@@ -6,8 +6,8 @@ dd13/pipe1 adjudication): dump the OPTIMIZED LOGICAL PLAN of the query
 from both checkouts, normalize expression IDs, and diff. Byte-identical
 plans mean any wall-clock delta is environment by construction — far
 stronger evidence than any timing sample, and it costs minutes instead
-of an ab_fresh.py A/B session. Only if plans DIFFER is a timing A/B
-(tools/ab_fresh.py) worth running.
+of a timing A/B session. Only if plans DIFFER is a timing A/B
+(each checkout's `tools/query_profile.py NAME --reps 5`) worth running.
 
 Usage:
   python tools/plan_identity.py REF_A REF_B NAME [NAME...] [--sf DIR]
@@ -133,7 +133,8 @@ def main() -> int:
                 else:
                     rc = 1
                     print(f"DIFFERS {name} ({len(pa)} vs {len(pb)} chars) — "
-                          "plans changed; a timing A/B (tools/ab_fresh.py) is "
+                          "plans changed; a timing A/B (tools/query_profile.py "
+                          "--reps 5 from each checkout) is "
                           "warranted. Diff head:")
                     diff = difflib.unified_diff(
                         pa.splitlines(), pb.splitlines(),

@@ -13,6 +13,14 @@ one row per (phase, call site): job count, union of the jobs' walls,
 executor run time, shuffle read/write, spill and GC. Barrier jobs are
 named after the line that called ``caching.barrier`` and eager collects
 after their caller, so each eager site of a build gets its own row.
+After a query's reps, one line gives the min, median and every value
+of build + execute wall.
+
+The script puts its own checkout first on ``sys.path`` and
+``PYTHONPATH``, so a timing A/B runs each checkout's copy in a fresh
+session, interleaved: ``python A/tools/query_profile.py NAME --reps 5``
+then the same from B. :func:`run_query` is also the timing loop of
+``tools/report.py``, ``tools/scale_probe.py`` and ``tools/sweep.py``.
 
 ``--sf`` defaults to $SPARK_GRAFT_SF_DIR; the session honours
 $SPARK_GRAFT_CPUS.
@@ -23,6 +31,7 @@ from __future__ import annotations
 import argparse
 import os
 import re
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -43,8 +52,9 @@ MB = 1 << 20
 
 def run_query(spark, fn, sf: str, tag: str) -> dict:
     """Build ``fn(spark, sf)`` under job group ``tag:build``, execute it
-    to the noop sink under ``tag:execute``, then release its caches.
-    Returns the two walls and each phase's jobs."""
+    to the noop sink under ``tag:execute``, then release its caches,
+    also when the query fails. Returns the two walls and each phase's
+    jobs."""
     sc = spark.sparkContext
     try:
         sc.setLocalProperty(_GROUP, f"{tag}:build")
@@ -56,8 +66,8 @@ def run_query(spark, fn, sf: str, tag: str) -> dict:
         t2 = time.time()
     finally:
         sc.setLocalProperty(_GROUP, None)
-    release_pinned()
-    spark.catalog.clearCache()
+        release_pinned()
+        spark.catalog.clearCache()
     return {
         "build_s": t1 - t0,
         "execute_s": t2 - t1,
@@ -103,6 +113,20 @@ def report(name: str, rep: int, r: dict) -> None:
             )
 
 
+def profile(spark, name: str, fn, sf: str, reps: int) -> list[dict]:
+    """Run and report ``reps`` reps of one query, then its wall line."""
+    runs = []
+    for rep in range(reps):
+        runs.append(run_query(spark, fn, sf, f"{name}:{rep}"))
+        report(name, rep, runs[-1])
+    walls = [r["build_s"] + r["execute_s"] for r in runs]
+    print(
+        f"{name} min={min(walls):.2f} med={statistics.median(walls):.2f} "
+        f"all={[round(t, 2) for t in walls]}"
+    )
+    return runs
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="Per-query build/execute profile.")
     ap.add_argument("names", nargs="+", metavar="NAME", help="registered query names")
@@ -121,8 +145,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("query_profile")
     spark.read.parquet(f"{a.sf}/region.parquet").count()  # warm-up, as bench.py
     for name in a.names:
-        for rep in range(a.reps):
-            report(name, rep, run_query(spark, REGISTRY[name].fn, a.sf, f"{name}:{rep}"))
+        profile(spark, name, REGISTRY[name].fn, a.sf, a.reps)
     spark.stop()
     return 0
 

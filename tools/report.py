@@ -1,7 +1,5 @@
-"""Generate SCALING.md (wall-clock vs scale factor for headline
-queries) and PLANS.md (formatted physical plans of representative
-queries, annotated with what to look for). Evidence artifacts for plan
-review without re-running the engine.
+"""Generate SCALING.md's table: build + execute wall-clock vs scale
+factor for headline queries, each timed by ``query_profile.run_query``.
 
 Usage: python tools/report.py
 """
@@ -9,7 +7,6 @@ Usage: python tools/report.py
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -38,85 +35,21 @@ SCALING_QUERIES = [
     "ss4_cosine_topk_ivf",
     "w2_rank_importance",
 ]
-PLAN_QUERIES = {
-    "m1_spearman_by_era": "flagship: era window + pooled corr — expect ONE "
-    "hash exchange on era, whole-stage codegen around the scan/projection",
-    "j4_star_broadcast": "star join — expect BroadcastHashJoin for "
-    "nation/region (forced) and for the 2-column customer projection "
-    "(AQE-chosen at this sf), shuffle only for lineitem⋈orders",
-    "q1_pricing_summary": "TPC-H Q1 — expect PushedFilters on l_shipdate and "
-    "partial_ aggregates before the exchange",
-    "s1_scan_projection": "scan — expect ReadSchema limited to 4 columns",
-    "j7_asof_join": "as-of join — expect a single exchange on user_id + "
-    "window, no nested-loop",
-    "q10_returned_items": "TPC-H Q10 top-20 — expect TakeOrderedAndProject "
-    "(per-partition heaps, no global sort) and a broadcast nation join",
-    "q17_small_quantity_revenue": "TPC-H Q17 correlated avg — expect the "
-    "decorrelated aggregate and probe to share one partkey exchange, "
-    "part side broadcast",
-    "q21_suppliers_kept_waiting": "TPC-H Q21 exists/not-exists — expect "
-    "LeftSemi + LeftAnti against the self-derived late/other relations, "
-    "pushed o_orderstatus filter, TakeOrderedAndProject top-20",
-    "q11_important_stock": "TPC-H Q11 scalar HAVING — expect the grouped "
-    "relation reused (InMemoryTableScan) under a broadcast 1-row "
-    "threshold cross-join, integer cross-multiplied compare",
-    "t6_bm25_topk": "BM25 inverted-index retrieval — expect one (doc,tok) "
-    "exchange feeding tf, broadcast joins for the query/df/stats sides, "
-    "window PARTITIONED BY tok (never a global sort)",
-    "pack1_sequence_pack": "sequence packing — expect ONE exchange on lang "
-    "feeding the running-sum window and the pack aggregate, no global window",
-    "w2_rank_importance": "distributed global rank — expect range exchange "
-    "+ per-partition row_number + broadcast triangular offset join; ZERO "
-    "empty-partition Window nodes",
-    "dd3_minhash_lsh_dedup": "MinHash-LSH — expect ONE exchange building "
-    "the per-doc shingle arrays (reused by band build AND verify via "
-    "InMemoryTableScan), band self-join, and an AQE-planned (not forced) "
-    "candidate join into the verify stage",
-    "rrf1_hybrid_retrieval": "hybrid retrieval — expect the BM25 postings "
-    "exchange + broadcast pruned query terms on the lexical side, the "
-    "broadcast query-vector scan on the vector side, and a fusion join "
-    "touching only the two top-L rank lists",
-    "ts1_gap_fill_locf": "gap fill — expect every Window keyed by user_id "
-    "(no empty partition spec), the spine explode map-side, and one join "
-    "back to the hourly grain",
-    "ts2_linear_interpolate": "bracket-join interpolation (round-5 "
-    "rewrite) — expect ONE user-keyed Window (the lead() over the SPARSE "
-    "hourly relation), the interval explode map-side above it, and NO "
-    "window or join over the densified output",
-    "dd6_dup_clusters": "collapsed connected components (round-5 rewrite) "
-    "— expect the md5 fingerprint aggregate, a left_semi restriction of "
-    "the persisted full-corpus shingle index to representatives "
-    "(InMemoryTableScan), label-propagation join rounds over rep pairs "
-    "only, and the final fingerprint-expansion join",
-    "auc1_roc_auc": "distributed midrank AUC — expect ONE range exchange "
-    "on the distinct-score relation read through InMemoryTableScan by "
-    "BOTH the local-window branch and the offset branch (the persisted "
-    "pid-consistency contract), then two 1-row broadcasts",
-}
-
-
 def main() -> None:
     import __spark_entry__ as e
-    from reduction_dask_spark.plans import formatted_plan
     from reduction_dask_spark.session import get_spark
+    from tools.query_profile import run_query
 
     spark = get_spark("report")
     qs = e.queries()
 
-    if "--plans-only" in sys.argv:
-        _write_plans(spark, qs)
-        spark.stop()
-        return
-
-    # ---- scaling table
     rows: dict[str, list[float]] = {}
-    qs["m1_spearman_by_era"](spark, SFS[0]).collect()  # warm-up
+    run_query(spark, qs["m1_spearman_by_era"], SFS[0], "warm-up")
     for name in SCALING_QUERIES:
         rows[name] = []
         for sf in SFS:
-            t0 = time.perf_counter()
-            qs[name](spark, sf).write.mode("overwrite").format("noop").save()
-            rows[name].append(time.perf_counter() - t0)
+            r = run_query(spark, qs[name], sf, f"{name}:{sf}")
+            rows[name].append(r["build_s"] + r["execute_s"])
 
     out = [
         "# SCALING — wall-clock (s) vs scale factor, local[32]",
@@ -146,21 +79,7 @@ def main() -> None:
             probe_tail = "\n" + old[old.index(marker):]
     md.write_text("\n".join(out) + "\n" + probe_tail)
     print("wrote SCALING.md")
-
-    _write_plans(spark, qs)
     spark.stop()
-
-
-def _write_plans(spark, qs) -> None:
-    from reduction_dask_spark.plans import formatted_plan
-
-    plans = ["# PLANS — formatted physical plans of representative queries", ""]
-    for name, note in PLAN_QUERIES.items():
-        plans += [f"## {name}", "", f"_{note}_", "", "```"]
-        plans.append(formatted_plan(qs[name](spark, SFS[1])).strip())
-        plans += ["```", ""]
-    Path("PLANS.md").write_text("\n".join(plans) + "\n")
-    print("wrote PLANS.md")
 
 
 if __name__ == "__main__":

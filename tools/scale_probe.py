@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -159,12 +158,13 @@ def main() -> None:
 
     import __spark_entry__ as e
     from reduction_dask_spark.session import get_spark
+    from tools.query_profile import run_query
 
     spark = get_spark("scale_probe")
     build(spark, r, dest, nodup=nodup)
 
     qs = e.queries()
-    qs["m1_spearman_by_era"](spark, SRC).collect()  # warm-up
+    run_query(spark, qs["m1_spearman_by_era"], SRC, "warm-up")
 
     if nodup:
         lines = [
@@ -198,16 +198,8 @@ def main() -> None:
     for name in probe:
         ts = []
         for sf_dir in (SRC, dest):
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-                best = min(best, time.perf_counter() - t0)
-                from reduction_dask_spark.caching import release_pinned
-                release_pinned()  # drop operator-pinned persists with the SQL caches
-
-                spark.catalog.clearCache()
-            ts.append(best)
+            runs = [run_query(spark, qs[name], sf_dir, f"{name}:{sf_dir}:{i}") for i in range(reps)]
+            ts.append(min(r["build_s"] + r["execute_s"] for r in runs))
         lines.append(f"| {name} | {ts[0]:.2f} | {ts[1]:.2f} | {ts[1]/ts[0]:.2f}× |")
         print(lines[-1], flush=True)
 

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -37,6 +36,7 @@ def main() -> None:
 
     import __spark_entry__ as e
     from reduction_dask_spark.session import get_spark
+    from tools.query_profile import run_query
 
     spark = get_spark("sweep")
     qs = e.queries()
@@ -45,20 +45,15 @@ def main() -> None:
     fails = []
     with log.open("a") as fh:
         for name in todo:
-            t0 = time.perf_counter()
             try:
-                qs[name](spark, dest).write.mode("overwrite").format("noop").save()
-                line = f"{name} {time.perf_counter() - t0:.2f}s"
+                r = run_query(spark, qs[name], dest, name)
+                line = f"{name} {r['build_s'] + r['execute_s']:.2f}s"
             except Exception as ex:  # noqa: BLE001 — log and continue
                 fails.append(name)
                 line = f"{name} FAIL {type(ex).__name__}: {ex}"
             print(line, flush=True)
             fh.write(line + "\n")
             fh.flush()
-            from reduction_dask_spark.caching import release_pinned
-            release_pinned()  # drop operator-pinned persists with the SQL caches
-
-            spark.catalog.clearCache()
     print(f"DONE {len(qs)} queries, {len(fails)} failed this pass: {fails}", flush=True)
 
 
