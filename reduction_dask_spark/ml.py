@@ -8,8 +8,9 @@ regression fit by **additive sufficient statistics**:
 
     XtX = Σ xᵀx,  Xty = Σ xᵀy   (x includes an intercept column)
 
-- ONE distributed pass (mapInPandas partial sums → groupBy-sum of
-  ~ (d+1)² floats per fold) computes the per-fold statistics.
+- ONE distributed pass (:func:`sum_partials`: each partition's
+  (d+1)²+d+2 partial sums per fold, added in partition-id order)
+  computes the per-fold statistics.
 - Train statistics for fold i are total − fold_i, so k-fold CV needs
   ONE pass, not k (the reference scatters k copies: tuners.py:129-135).
 - λ enters only at the (d+1)×(d+1) driver-side solve, so an entire
@@ -19,24 +20,30 @@ regression fit by **additive sufficient statistics**:
   (:func:`session.local_frame`) and broadcast-joined — JVM-side,
   codegen, no Python worker anywhere in the scoring path.
 
-At 100 TB: the data pass shuffles k·(d+1)² doubles, the solve is
-milliseconds, scoring is a broadcast join + expression. Nothing scales
-with rows except the two scans.
+At 100 TB: the data pass moves k·(d+1)² doubles per partition (merged
+in Spark above 256 partitions), the solve is milliseconds, scoring is
+a broadcast join + expression. Nothing scales with rows except the
+two scans.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import sys
 
 import numpy as np
-import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from .functions import corr_safe
 from .session import local_frame
 from .sources import load_table
+
+# Partials reference helpers of this module (arrow_matrix,
+# suffstat_vector); pickled by value, they run in a Python worker that
+# cannot import this package.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 DIM = 64  # embeddings feature width
 
@@ -79,59 +86,127 @@ def supervised_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------------- sufficient stats
+# ------------------------------------------------------ partial sums
 
-def _suffstat_mapper(group: str, dim: int):
-    width = (dim + 1) * (dim + 1) + (dim + 1) + 1
+SUM_PARTIALS_DRIVER_MAX = 256  # partitions; above it the sum runs in Spark
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            for g, sub in pdf.groupby(group):
-                X = np.stack(sub["features"].to_numpy()).astype(np.float64)
-                X = np.hstack([np.ones((len(sub), 1)), X])
-                y = sub["y"].to_numpy(dtype=np.float64)
-                flat = acc.setdefault(int(g), np.zeros(width))
-                flat[: (dim + 1) ** 2] += (X.T @ X).ravel()
-                flat[(dim + 1) ** 2 : -1] += X.T @ y
-                flat[-1] += len(sub)
-        if acc:  # empty partitions yield nothing (Arrow can't type an
-            # empty ndarray column as list<double>)
-            yield pd.DataFrame(
-                {group: list(acc.keys()), "vals": [flat.tolist() for flat in acc.values()]}
+
+def arrow_matrix(col, width: int) -> np.ndarray:
+    """One record batch's fixed-width list column as an (n, width)
+    array, reshaped from the flat values buffer (no per-row Python)."""
+    flat = np.asarray(col.flatten())
+    if flat.size != len(col) * width:
+        raise ValueError(f"list rows are not all {width} wide")
+    return flat.reshape(len(col), width)
+
+
+def sum_partials(df: DataFrame, partial) -> dict[tuple, np.ndarray]:
+    """Σ over partitions of per-partition additive statistics.
+
+    ``partial(batches)`` receives one partition of ``df`` as Arrow
+    record batches and returns ``{key: vector}``: ``key`` a tuple of
+    ints, ``vector`` a 1-D float64 array whose width may differ between
+    keys (not between partitions for one key). An empty dict — an
+    empty partition — contributes nothing. Driver state the partials
+    need (a model, centroids, β) travels in the ``partial`` closure,
+    which is pickled with the plan. Returns ``{key: Σ vector}``.
+
+    One ``mapInArrow`` pass tags each vector with its partition id.
+    The mapped relation's own partition count P picks where the
+    addition runs:
+
+    - P ≤ 256: the vectors are collected and added on the driver. It
+      collects at most 256 × keys × width × 8 bytes: 44 MB for
+      :func:`fold_suffstats` (5 folds × 4,291 at d=64), 21 MB per
+      boosting round of :func:`fit_gbt_fold_models` (5 × 2,048),
+      8.5 MB for t8's covariance (1 × 4,161), 1.3 MB per Lloyd
+      iteration of km1 (10 × 65), and less for IRLS and the t3 sweep.
+    - P > 256: ``groupBy(key)`` adds them in Spark over
+      ``array_sort(collect_list(struct(pid, vals)))``, and the driver
+      reads keys × width doubles.
+
+    Both sides add the same vectors in partition-id order, starting
+    from 0.0, so they return the same bits. Reading P from the mapped
+    relation's RDD runs its upstream shuffle stages; the driver side
+    collects the same executed plan, so they run once (the groupBy side
+    plans the relation again)."""
+
+    def fn(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        out = partial(batches)
+        if out:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([TaskContext.get().partitionId()] * len(out), pa.int32()),
+                    pa.array([list(k) for k in out], pa.list_(pa.int64())),
+                    pa.array(
+                        [np.asarray(v, dtype=np.float64) for v in out.values()],
+                        pa.list_(pa.float64()),
+                    ),
+                ],
+                names=["pid", "key", "vals"],
             )
 
-    return fn
+    rows = df.mapInArrow(fn, "pid int, key array<bigint>, vals array<double>")
+    sums: dict[tuple, np.ndarray] = {}
+    if rows.rdd.getNumPartitions() <= SUM_PARTIALS_DRIVER_MAX:
+        pdf = rows.toPandas().sort_values("pid", kind="stable")
+        for key, v in zip(pdf["key"], pdf["vals"]):
+            key = tuple(int(k) for k in key)
+            sums[key] = sums.get(key, np.zeros(len(v))) + v
+        return sums
+    parts = F.col("parts")
+    merged = rows.groupBy("key").agg(
+        F.array_sort(F.collect_list(F.struct("pid", "vals"))).alias("parts")
+    ).select(
+        "key",
+        F.aggregate(
+            parts,
+            F.array_repeat(F.lit(0.0), F.size(parts[0]["vals"])),
+            lambda acc, p: F.zip_with(acc, p["vals"], lambda a, b: a + b),
+        ).alias("vals"),
+    )
+    for r in merged.collect():
+        sums[tuple(r["key"])] = np.asarray(r["vals"], dtype=np.float64)
+    return sums
 
+
+# ----------------------------------------------------- sufficient stats
 
 def fold_suffstats(df: DataFrame, group: str = "fold", dim: int = DIM) -> dict[int, tuple[np.ndarray, np.ndarray, float]]:
     """One distributed pass → {group: (XtX, Xty, n)}.
 
-    Partial statistics travel as ONE array row per (partition, group) —
-    ~(partitions×k) rows of (d+1)²+d+2 doubles — and merge by
-    element-wise array addition in the aggregate, not (group, idx)
-    scalar rows (which would shuffle (d+1)²× more rows)."""
-    width = (dim + 1) * (dim + 1) + (dim + 1) + 1
-    rows = df.mapInPandas(
-        _suffstat_mapper(group, dim), schema=f"{group} int, vals array<double>"
-    )
-    zero = F.array_repeat(F.lit(0.0), width)
-    merged = rows.groupBy(group).agg(
-        F.aggregate(
-            F.collect_list("vals"), zero, lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b)
-        ).alias("vals")
-    )
-    pdf = merged.toPandas()
-    out: dict[int, tuple[np.ndarray, np.ndarray, float]] = {}
-    d1 = dim + 1
-    for _, row in pdf.iterrows():
-        flat = np.asarray(row["vals"])
-        out[int(row[group])] = (
-            flat[: d1 * d1].reshape(d1, d1),
-            flat[d1 * d1 : -1],
-            float(flat[-1]),
-        )
-    return out
+    Each partition sums its rows' [XtX | Xty | n] per group in
+    (d+1)²+d+2 doubles; :func:`sum_partials` adds those vectors in
+    partition-id order — one array row per (partition, group), never
+    (group, idx) scalar rows."""
+
+    def partial(batches):
+        acc: dict[tuple, np.ndarray] = {}
+        for rb in batches:
+            g = rb.column(group).to_numpy(zero_copy_only=False)
+            X = np.hstack([np.ones((len(g), 1)), arrow_matrix(rb.column("features"), dim)])
+            y = np.asarray(rb.column("y").to_numpy(zero_copy_only=False), dtype=np.float64)
+            for v in np.unique(g):
+                m = g == v
+                acc[(int(v),)] = acc.get((int(v),), 0.0) + suffstat_vector(X[m], y[m])
+        return acc
+
+    sums = sum_partials(df.select(group, "features", "y"), partial)
+    return {g: split_suffstats(flat, dim + 1) for (g,), flat in sums.items()}
+
+
+def suffstat_vector(X1: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """[XᵀX | Xᵀy | n] of one block of rows; ``X1`` carries the
+    intercept column."""
+    return np.concatenate([(X1.T @ X1).ravel(), X1.T @ y, [len(y)]])
+
+
+def split_suffstats(flat: np.ndarray, d1: int) -> tuple[np.ndarray, np.ndarray, float]:
+    """(XtX, Xty, n) from a summed :func:`suffstat_vector`."""
+    return flat[: d1 * d1].reshape(d1, d1), flat[d1 * d1 : -1], float(flat[-1])
 
 
 def ridge_solve(xtx: np.ndarray, xty: np.ndarray, lam: float) -> np.ndarray:
@@ -171,18 +246,21 @@ def fit_global_model(
 # the LightGBM/XGBoost-on-cluster design:
 #
 # - each boosting round is ONE distributed pass producing per-
-#   (fold, feature, bin) residual sums/counts (a k·d·B-row table,
-#   ~10k floats — independent of row count);
+#   (fold, feature, bin) residual sums/counts (k·d·B·2 floats per
+#   partition, ~20k — independent of row count), added by
+#   sum_partials;
 # - the driver picks each fold's best stump from the histogram and
 #   appends it to that fold's ensemble (milliseconds);
 # - all k leave-one-fold-out models advance in the SAME pass: a row
 #   contributes residuals to every fold model except its own, so k-fold
 #   CV costs T passes total, not k·T (the same trick fold_suffstats
 #   plays for the linear kernel);
-# - no randomness anywhere (full-data deterministic boosting), so
-#   results are bit-stable under retries and partitioning.
+# - no randomness anywhere (full-data deterministic boosting), and
+#   histograms add in partition-id order, so results are bit-stable
+#   under retries for a given partitioning (float sums still differ
+#   when the partitioning does).
 #
-# At 100 TB: T × (one scan + a k·d·B-row shuffle). Nothing scales with
+# At 100 TB: T × (one scan + a k·d·B-row merge). Nothing scales with
 # rows except the scans; the model that ships to executors is a list of
 # (feature, threshold, left, right) tuples — KBs.
 
@@ -209,62 +287,71 @@ def feature_bounds(df: DataFrame, dim: int = DIM) -> tuple[np.ndarray, np.ndarra
     return mn, np.where(mx > mn, mx, mn + 1.0)
 
 
-def _gbt_bins_expr(mn: np.ndarray, mx: np.ndarray, n_bins: int):
-    """The histogram bin index as a JVM array expression over the
-    ``features`` column — the SAME IEEE-double arithmetic, in the same
-    order, as the numpy form ``clip(((X - mn) / (mx - mn) * n_bins)
-    .astype(int64), 0, n_bins - 1)`` (both truncate toward zero on a
-    non-negative value, so cast == floor == astype here). Computing
-    bins JVM-side means each boosting round ships (fold, y, bins) —
-    ~74 bytes/row as Arrow int8 lists — instead of the 65-double
-    feature array (~530 bytes/row), and the Python side never pays
-    the object-array ``np.stack`` again (r17, guide §2.3 narrower
-    types + §4.1 pass only the columns the function needs)."""
-    mn_arr = F.array(*[F.lit(float(v)) for v in mn])
-    rng_arr = F.array(*[F.lit(float(hi - lo)) for lo, hi in zip(mn, mx)])
-    shifted = F.zip_with("features", mn_arr, lambda x, lo: x - lo)
-    return F.zip_with(
-        shifted,
-        rng_arr,
-        lambda xm, r: F.greatest(
-            F.least((xm / r * F.lit(float(n_bins))).cast("long"), F.lit(n_bins - 1)),
-            F.lit(0),
-        ).cast("tinyint"),
-    )
+def gbt_edges(mn: np.ndarray, mx: np.ndarray, n_bins: int) -> np.ndarray:
+    """The one split rule: (d, B−1) interior bin edges
+    ``edges[f, j] = mn[f] + (j+1)·(mx[f]−mn[f])/B``.
+
+    A value's bin is ``bin(x) = #{j : edges[f, j] < x}`` and the stump
+    on boundary b splits at ``thr = edges[f, b]``. Each edge is a
+    monotone function of j, so the edges never decrease and
+    ``bin(x) ≤ b ⟺ x ≤ thr`` holds for every x, including a value
+    exactly on an edge (the reference's quantized levels put 3 of 5 on
+    one). Training branches on ``bin ≤ b``; predict_stumps, the MDA
+    mapper, with_gbt_prediction and tree-SHAP branch on ``x ≤ thr``;
+    both send every row the same way."""
+    j = np.arange(1, n_bins, dtype=np.float64)
+    return mn[:, None] + j[None, :] * (mx - mn)[:, None] / n_bins
 
 
-def _gbt_hist_mapper_arrow(bin_models: dict[int, list], n_bins: int, d: int):
-    """Per-partition (fold, y, bins) → nonzero histogram cells.
-
-    r17 form of the boosting histogram pass (guide §4.2): input
-    arrives as Arrow record batches whose ``bins`` column is a
-    list<int8> of fixed length d, so the whole batch reshapes from
-    the flat values buffer with zero per-row Python. Stumps apply by
-    BIN index (``bin <= b``): thresholds sit exactly on bin
-    boundaries, so this is the same branch decision as ``x <= thr``
-    (proven equal on the fitted models by
-    tests/test_ml.py::test_gbt_hist_fit_matches_numpy, whose numpy
-    reference still predicts from raw X) and the leaf values are the
-    same floats, added in the same row order — sr/cnt sums are
-    bit-identical to the pre-r17 pandas mapper."""
+def gbt_bin_frame(df: DataFrame, edges: np.ndarray) -> DataFrame:
+    """(fold, y, bins): the boosting rounds' input. ``bins`` holds
+    bin(x) = #{j : edges[f, j] < x} of each feature as array<tinyint>,
+    so each round ships ~80 bytes/row instead of the 65-double feature
+    array (~530 bytes/row), and the bin index is computed once per fit."""
+    d = edges.shape[0]
 
     def fn(batches):
         import pyarrow as pa
 
-        folds = sorted(bin_models)
-        k = len(folds)
-        sr = np.zeros((k, d, n_bins))
-        cnt = np.zeros((k, d, n_bins))
-        offsets = np.arange(d, dtype=np.int64) * n_bins
+        for rb in batches:
+            X = arrow_matrix(rb.column("features"), d)
+            B = np.empty(X.shape, dtype=np.int8)
+            for f in range(d):
+                B[:, f] = np.searchsorted(edges[f], X[:, f], side="left")
+            offsets = pa.array(np.arange(0, B.size + 1, d, dtype=np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("fold"),
+                    rb.column("y"),
+                    pa.ListArray.from_arrays(offsets, pa.array(B.ravel())),
+                ],
+                names=["fold", "y", "bins"],
+            )
+
+    return df.select(
+        F.col("fold").cast("int").alias("fold"), F.col("y").cast("double").alias("y"), "features"
+    ).mapInArrow(fn, "fold int, y double, bins array<tinyint>")
+
+
+def _gbt_hist_partial(bin_models: dict[int, list], n_bins: int, d: int):
+    """One partition of (fold, y, bins) → {(fold,): [sr | cnt]}: the
+    flattened (d, B) residual-sum and count histograms of each
+    leave-one-fold-out model. Stumps apply by bin index (``bin <= b``,
+    the same branch as ``x <= thr`` by :func:`gbt_edges`); the Arrow
+    ``bins`` column reshapes from its flat int8 buffer with no per-row
+    Python."""
+    folds = sorted(bin_models)
+    offsets = np.arange(d, dtype=np.int64) * n_bins
+
+    def partial(batches):
+        sr = np.zeros((len(folds), d * n_bins))
+        cnt = np.zeros((len(folds), d * n_bins))
         seen = False
         for rb in batches:
             seen = True
             fold = rb.column(0).to_numpy(zero_copy_only=False)
             y = rb.column(1).to_numpy(zero_copy_only=False)
-            flat = np.asarray(rb.column(2).flatten())
-            if flat.size != len(y) * d:  # ragged row — never true for
-                raise ValueError("bins rows are not fixed-length")  # fixed-width features
-            B = flat.reshape(len(y), d).astype(np.int64, copy=False)
+            B = arrow_matrix(rb.column(2), d).astype(np.int64, copy=False)
             for mi, m in enumerate(folds):
                 mask = fold != m  # leave-one-fold-out training rows
                 if not mask.any():
@@ -273,42 +360,27 @@ def _gbt_hist_mapper_arrow(bin_models: dict[int, list], n_bins: int, d: int):
                 for f, b, vl, vr in bin_models[m]:
                     pred += np.where(B[:, f] <= b, vl, vr)
                 resid = (y - pred)[mask]
-                # ONE d·n_bins bincount per fold instead of d calls
-                # (r16, guide §4.2): offset each feature's bins into a
-                # disjoint range; row-major ravel keeps each bin's
-                # float accumulation in row order, so the sums are
-                # bit-identical to the per-feature form
+                # ONE d·n_bins bincount per fold: each feature's bins
+                # offset into a disjoint range; the row-major ravel
+                # keeps each bin's float accumulation in row order
                 flatidx = (B[mask] + offsets).ravel()
-                sr[mi] += np.bincount(
-                    flatidx, weights=np.repeat(resid, d), minlength=d * n_bins
-                ).reshape(d, n_bins)
-                cnt[mi] += np.bincount(flatidx, minlength=d * n_bins).reshape(d, n_bins)
-        if seen:
-            mi, fi, bi = np.nonzero(cnt)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray([folds[i] for i in mi], dtype=np.int32)),
-                    pa.array(fi.astype(np.int32)),
-                    pa.array(bi.astype(np.int32)),
-                    pa.array(sr[mi, fi, bi]),
-                    pa.array(cnt[mi, fi, bi]),
-                ],
-                names=["fold", "feature", "bin", "sr", "cnt"],
-            )
+                sr[mi] += np.bincount(flatidx, weights=np.repeat(resid, d), minlength=d * n_bins)
+                cnt[mi] += np.bincount(flatidx, minlength=d * n_bins)
+        if not seen:
+            return {}
+        return {(m,): np.concatenate([sr[mi], cnt[mi]]) for mi, m in enumerate(folds)}
 
-    return fn
+    return partial
 
 
 def _best_stump_with_bin(
-    hist: np.ndarray, counts: np.ndarray, mn: np.ndarray, mx: np.ndarray, lr: float
+    hist: np.ndarray, counts: np.ndarray, edges: np.ndarray, lr: float
 ) -> tuple[int, int, float, float, float]:
     """Pick the (feature, boundary) stump maximizing SSE reduction
     Σl²/nl + Σr²/nr from a (d, B) residual-sum/count histogram; leaves
-    predict lr × mean residual. Returns (f, b, thr, vl, vr) — ``b`` is
-    the boundary's bin index (``x <= thr`` ⟺ ``bin(x) <= b``, since
-    thr IS the upper edge of bin b), which the Arrow histogram mapper
-    applies stumps by."""
-    d, B = hist.shape
+    predict lr × mean residual. Returns (f, b, thr, vl, vr): training
+    applies the stump as ``bin <= b``, every raw-value consumer as
+    ``x <= thr`` with ``thr = edges[f, b]`` (:func:`gbt_edges`)."""
     sl = np.cumsum(hist, axis=1)[:, :-1]       # left sums at each boundary
     cl = np.cumsum(counts, axis=1)[:, :-1]
     s, c = hist.sum(axis=1, keepdims=True), counts.sum(axis=1, keepdims=True)
@@ -317,20 +389,9 @@ def _best_stump_with_bin(
         gain = np.where(cl > 0, sl**2 / cl, 0.0) + np.where(crt > 0, srt**2 / crt, 0.0)
     gain = np.where((cl > 0) & (crt > 0), gain, -np.inf)
     f, b = np.unravel_index(int(np.argmax(gain)), gain.shape)
-    thr = float(mn[f] + (b + 1) * (mx[f] - mn[f]) / B)
     vl = float(lr * sl[f, b] / cl[f, b]) if cl[f, b] > 0 else 0.0
     vr = float(lr * srt[f, b] / crt[f, b]) if crt[f, b] > 0 else 0.0
-    return int(f), int(b), thr, vl, vr
-
-
-def _best_stump(
-    hist: np.ndarray, counts: np.ndarray, mn: np.ndarray, mx: np.ndarray, lr: float
-) -> tuple[int, float, float, float]:
-    """(f, thr, vl, vr) form of :func:`_best_stump_with_bin` — the
-    model contract every consumer (predict_stumps, stump_frame,
-    tree-SHAP, the MDA mappers) scores with raw feature values."""
-    f, _b, thr, vl, vr = _best_stump_with_bin(hist, counts, mn, mx, lr)
-    return f, thr, vl, vr
+    return int(f), int(b), float(edges[f, b]), vl, vr
 
 
 def fit_gbt_fold_models(
@@ -345,62 +406,30 @@ def fit_gbt_fold_models(
 
     ``df`` must carry (features, y, fold). Returns {fold: stumps}.
 
-    r17 (guide §2.3/§4.1/§4.2): every boosting round used to ship the
-    whole 65-double feature array to Python and re-stack it; the bin
-    index is all the histogram needs, it never changes across rounds,
-    and it is 8× narrower — so rounds now scan a (fold, y, bins)
-    projection where ``bins`` is a JVM tinyint-array expression
-    (:func:`_gbt_bins_expr`) and the Arrow mapper reshapes the flat
-    int8 buffer with zero per-row Python. Fitted models are
-    bit-identical (same histograms — see _gbt_hist_mapper_arrow — and
-    the shared stump chooser)."""
+    Rounds scan the (fold, y, bins) projection of
+    :func:`gbt_bin_frame`; each round is one :func:`sum_partials` pass
+    of per-partition histograms. A stump's training branch
+    (``bin <= b``) and its scoring branch (``x <= thr``) agree on
+    every row by :func:`gbt_edges`, so the histograms the fit chose
+    from are those of the model every consumer scores."""
     mn, mx = feature_bounds(df, dim)
-    # persisted: the bin projection never changes across rounds, and
-    # the 65-element zip_with/cast chain is the expensive part of the
-    # round scan — compute it once, let rounds 2..T read the ~80 B/row
-    # cache (sequential actions, so no AQE cache race here). The rounds
-    # consume it fully before return, so it is unpersisted at exit
-    # rather than pinned (caching.py's convention).
-    fit_in = df.select(
-        F.col("fold").cast("int").alias("fold"),
-        F.col("y").cast("double").alias("y"),
-        _gbt_bins_expr(mn, mx, n_bins).alias("bins"),
-    ).persist()
+    edges = gbt_edges(mn, mx, n_bins)
+    # persisted: the bin projection never changes across rounds — bin
+    # it once, let rounds 2..T read the ~80 B/row cache (sequential
+    # actions, so no AQE cache race here). The rounds consume it fully
+    # before return, so it is unpersisted at exit rather than pinned
+    # (caching.py's convention).
+    fit_in = gbt_bin_frame(df, edges).persist()
     models: dict[int, list] = {m: [] for m in range(k)}
     bin_models: dict[int, list] = {m: [] for m in range(k)}
-    # Partial-combine placement (guide §2.4 remove shuffles / §5 keep
-    # the driver light, balanced per round): each task emits at most
-    # k·d·B nonzero cells, so the DRIVER-side combine is bounded by
-    # tasks × k·d·B rows per round. With few tasks that is a few MB —
-    # collecting the partials directly saves one Exchange + one stage
-    # per boosting round (12 rounds = 12 exchanges at sf0.1, where the
-    # rounds are pure job overhead). With many tasks (any real
-    # cluster scan) the partial volume is unbounded at the driver, so
-    # the map-side-combined groupBy merges first and the driver reads
-    # k·d·B rows. The switch derives from the actual partition count,
-    # not a local constant — same pattern as sources.spread_scan.
-    collect_partials = fit_in.rdd.getNumPartitions() <= 256
+    width = dim * n_bins
     try:
         for _ in range(n_rounds):
-            rows = fit_in.mapInArrow(
-                _gbt_hist_mapper_arrow(bin_models, n_bins, dim),
-                schema="fold int, feature int, bin int, sr double, cnt double",
-            )
-            if not collect_partials:
-                rows = rows.groupBy("fold", "feature", "bin").agg(
-                    F.sum("sr").alias("sr"), F.sum("cnt").alias("cnt")
-                )
-            pdf = rows.toPandas()
+            sums = sum_partials(fit_in, _gbt_hist_partial(bin_models, n_bins, dim))
             for m in models:
-                sub = pdf[pdf["fold"] == m]
-                hist = np.zeros((dim, n_bins))
-                counts = np.zeros((dim, n_bins))
-                # accumulate (duplicates arrive per task on the partials
-                # path; the groupBy path has pre-merged them) in collect
-                # order — deterministic: partitions come back in order
-                np.add.at(hist, (sub["feature"].to_numpy(), sub["bin"].to_numpy()), sub["sr"].to_numpy())
-                np.add.at(counts, (sub["feature"].to_numpy(), sub["bin"].to_numpy()), sub["cnt"].to_numpy())
-                f, b, thr, vl, vr = _best_stump_with_bin(hist, counts, mn, mx, lr)
+                v = sums.get((m,), np.zeros(2 * width))
+                hist, counts = v[:width].reshape(dim, n_bins), v[width:].reshape(dim, n_bins)
+                f, b, thr, vl, vr = _best_stump_with_bin(hist, counts, edges, lr)
                 models[m].append((f, thr, vl, vr))
                 bin_models[m].append((f, b, vl, vr))
     finally:
@@ -498,14 +527,13 @@ def logistic_irls(
 ) -> np.ndarray:
     """Distributed logistic regression by IRLS/Newton.
 
-    Per iteration: broadcast the (d+1)-vector β, ONE mapInPandas pass
-    computes per-partition partial [Hessian | gradient | n] (numpy
-    batch math — X'WX with W = p(1-p), X'(y-p)), partials merge by
-    array addition exactly like :func:`fold_suffstats`, and the driver
-    solves the (d+1)×(d+1) Newton step. Driver state: β only. The
-    classification twin of the suffstats ridge — same shuffle shape
-    (a handful of array rows per pass), iterated because the logistic
-    MLE has no closed form.
+    Per iteration: ONE :func:`sum_partials` pass computes per-partition
+    partial [Hessian | gradient | n] (numpy batch math — X'WX with
+    W = p(1-p), X'(y-p)) against the current β, which travels in the
+    partial's closure, and the driver solves the (d+1)×(d+1) Newton
+    step. Driver state: β only. The classification twin of the
+    suffstats ridge — same merge, iterated because the logistic MLE
+    has no closed form.
 
     ``ridge`` adds an L2 penalty to BOTH gradient and Hessian (a real
     regularizer — keeps β bounded when classes are linearly separable,
@@ -517,24 +545,23 @@ def logistic_irls(
     identically."""
     d1 = len(feature_cols) + 1
     width = d1 * d1 + d1 + 1
-    sc = df.sparkSession.sparkContext
+    rows = df.select(*feature_cols, label_col)
     beta = np.zeros(d1)
     for _ in range(iters):
-        bb = sc.broadcast(beta)
 
-        def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def partial(batches, b=beta):
             H = np.zeros((d1, d1))
             g = np.zeros(d1)
             n = 0.0
-            b = bb.value
-            for pdf in batches:
-                if not len(pdf):
+            for rb in batches:
+                if not rb.num_rows:
                     continue
                 X = np.column_stack(
-                    [np.ones(len(pdf))]
-                    + [pdf[c].to_numpy(dtype=float) for c in feature_cols]
+                    [np.ones(rb.num_rows)]
+                    + [np.asarray(rb.column(c).to_numpy(zero_copy_only=False), dtype=float)
+                       for c in feature_cols]
                 )
-                y = pdf[label_col].to_numpy(dtype=float)
+                y = np.asarray(rb.column(label_col).to_numpy(zero_copy_only=False), dtype=float)
                 z = X @ b
                 if clip_logit is not None:
                     z = np.clip(z, -clip_logit, clip_logit)
@@ -542,19 +569,10 @@ def logistic_irls(
                 w = p * (1.0 - p)
                 H += X.T @ (X * w[:, None])
                 g += X.T @ (y - p)
-                n += len(pdf)
-            yield pd.DataFrame({"vals": [np.concatenate([H.ravel(), g, [n]])]})
+                n += rb.num_rows
+            return {(): np.concatenate([H.ravel(), g, [n]])} if n else {}
 
-        rows = df.mapInPandas(mapper, schema="vals array<double>")
-        zero = F.array_repeat(F.lit(0.0), width)
-        merged = rows.agg(
-            F.aggregate(
-                F.collect_list("vals"),
-                zero,
-                lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-            ).alias("vals")
-        ).collect()[0]["vals"]
-        flat = np.asarray(merged)
+        flat = sum_partials(rows, partial).get((), np.zeros(width))
         H = flat[: d1 * d1].reshape(d1, d1)
         g = flat[d1 * d1 : -1]
         if ridge:

@@ -23,11 +23,13 @@ same mean-|SHAP| table shape (A4), no shap package needed.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -50,6 +52,19 @@ from .cv import kfold_era
 K_FOLDS = 5
 LAM = 1.0
 SEED = 42
+
+# The MDA mappers call this module's helpers (_permutation, _mda_block);
+# pickled by value, they run in a Python worker that cannot import
+# this package.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _permutation(seed: int, fold: int, era: int, f: int, n: int) -> np.ndarray:
+    """The permutation of feature f's column in one (fold, era) group —
+    the one seed rule x1, x1b and x1c share (x1/x1b parity rests on
+    it)."""
+    rng = np.random.default_rng((seed * 1_000_003 + fold * 10_007 + era * 101 + f) % 2**32)
+    return rng.permutation(n)
 
 
 def _mda_block(feats: np.ndarray, preds: np.ndarray, fold: int, era: int,
@@ -83,8 +98,7 @@ def _mda_mapper(models: dict[int, np.ndarray], seed: int):
         preds = np.empty((d + 1, n))
         preds[0] = base
         for f in range(d):
-            rng = np.random.default_rng((seed * 1_000_003 + fold * 10_007 + era * 101 + f) % 2**32)
-            perm = rng.permutation(n)
+            perm = _permutation(seed, fold, era, f, n)
             # only feature f moves: pred_shuf = base + w_f·(x_f[perm] − x_f)
             preds[1 + f] = base + coef[1 + f] * (X[perm, f] - X[:, f])
         return _mda_block(feats, preds, fold, era, vec_id, y)
@@ -92,10 +106,10 @@ def _mda_mapper(models: dict[int, np.ndarray], seed: int):
     return fn
 
 
-def mda_table(preds: DataFrame) -> DataFrame:
-    """Shared MDA post-processing: per-(feature, fold) Spearman →
-    importance = mean over folds of (base − shuf)/(1 − shuf), sorted."""
-    per = score_by_group(preds, ["feature", "fold"])  # spearman per (feature, fold)
+def mda_table(per: DataFrame) -> DataFrame:
+    """The one MDA importance tail, from per-(feature, fold) Spearman
+    rows with feature −1 the unpermuted base: importance = mean over
+    folds of (base − shuf)/(1 − shuf), sorted descending."""
     base = per.filter(F.col("feature") == -1).select(
         F.col("fold").alias("bfold"), F.col("spearman").alias("base_s")
     )
@@ -123,7 +137,7 @@ def mda_importance(
         _mda_mapper(models, seed),
         schema="feature int, fold int, era int, vec_id long, y double, pred double",
     )
-    return mda_table(preds)
+    return mda_table(score_by_group(preds, ["feature", "fold"]))
 
 
 @query(
@@ -171,8 +185,7 @@ def _mda_gbt_mapper(models: dict[int, list], seed: int):
         preds = np.empty((d + 1, n))
         preds[0] = base
         for f in range(d):
-            rng = np.random.default_rng((seed * 1_000_003 + fold * 10_007 + era * 101 + f) % 2**32)
-            perm = rng.permutation(n)
+            perm = _permutation(seed, fold, era, f, n)
             if by_f.get(f):
                 preds[1 + f] = base - col_pred(by_f[f], X[:, f]) + col_pred(by_f[f], X[perm, f])
             else:
@@ -196,7 +209,7 @@ def mda_importance_gbt(
         _mda_gbt_mapper(models, seed),
         schema="feature int, fold int, era int, vec_id long, y double, pred double",
     )
-    return mda_table(preds)
+    return mda_table(score_by_group(preds, ["feature", "fold"]))
 
 
 @query(
@@ -525,10 +538,7 @@ def _mda_suffstats_mapper(models: dict[int, np.ndarray], seed: int):
             if f < 0:
                 pred = base
             else:
-                rng = np.random.default_rng(
-                    (seed * 1_000_003 + fold * 10_007 + era * 101 + f) % 2**32
-                )
-                perm = rng.permutation(n)
+                perm = _permutation(seed, fold, era, f, n)
                 pred = base + coef[1 + f] * (X[perm, f] - X[:, f])
             r = rank_pct(pred)
             rows.append((f, fold, era, n,
@@ -565,20 +575,7 @@ def mda_importance_suffstats(
     )
     # round to 6 like score_by_group does, so x1/x1b parity is exact
     per = agg.select("feature", "fold", F.round(F.try_divide(num, den), 6).alias("spearman"))
-    base = per.filter(F.col("feature") == -1).select(
-        F.col("fold").alias("bfold"), F.col("spearman").alias("base_s")
-    )
-    shuf = per.filter(F.col("feature") >= 0)
-    return (
-        shuf.join(F.broadcast(base), shuf.fold == base.bfold)
-        .withColumn(
-            "imp_fold",
-            (F.col("base_s") - F.col("spearman")) / (1.0 - F.col("spearman")),
-        )
-        .groupBy("feature")
-        .agg(F.round(F.avg("imp_fold"), 6).alias("importance"))
-        .orderBy(F.desc("importance"), F.asc("feature"))
-    )
+    return mda_table(per)
 
 
 @query(

@@ -26,9 +26,13 @@ from pyspark.sql.window import Window
 from ..ml import (
     DIM,
     ERA_DOMAIN,
+    arrow_matrix,
     fit_fold_models,
     fold_suffstats,
     score_by_group,
+    split_suffstats,
+    suffstat_vector,
+    sum_partials,
     supervised_frame,
     with_prediction,
     coef_frame,
@@ -821,8 +825,8 @@ def reduction_sweep_batched(
        transform scans → 1, and downstream consumers read the
        checkpointed blocks.
     3. ONE suffstats pass accumulates every (config, fold) ridge
-       XtX/Xty partial per partition (cfg-varying widths, merged
-       driver-side: ≤ partitions × configs × folds tiny array rows).
+       XtX/Xty partial per partition (cfg-varying widths), added in
+       partition order by ml.sum_partials.
     4. ONE scoring job: union the per-config embedding slices off the
        barrier leaf into long format, broadcast-join the (cfg, fold)
        LOFO coefficients, rank/score per (cfg, fold, era) in one
@@ -937,54 +941,27 @@ def reduction_sweep_batched(
         if not live:
             return status_only()
 
-    # ---- 3. one suffstats pass, driver-side merge
-    widths = {i: (nc + 1) * (nc + 1) + (nc + 1) + 1 for i, _, nc in live}
+    # ---- 3. one suffstats pass over every surviving config
+    ncs = {i: nc for i, _, nc in live}
 
-    def suff_mapper(batches):
+    def suff_partial(batches):
         acc: dict[tuple[int, int], np.ndarray] = {}
-        for pdf in batches:
-            for fold, sub in pdf.groupby("fold"):
-                y = sub["y"].to_numpy(dtype=np.float64)
-                ones = np.ones((len(sub), 1))
-                for i, _, nc in live:
-                    E = np.stack(sub[f"e{i}"].to_numpy()).astype(np.float64)
-                    X1 = np.hstack([ones, E])
-                    flat = acc.setdefault((i, int(fold)), np.zeros(widths[i]))
-                    d1 = nc + 1
-                    flat[: d1 * d1] += (X1.T @ X1).ravel()
-                    flat[d1 * d1 : -1] += X1.T @ y
-                    flat[-1] += len(sub)
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "cfg": [c for c, _ in acc],
-                    "fold": [f for _, f in acc],
-                    "vals": [v.tolist() for v in acc.values()],
-                }
-            )
+        for rb in batches:
+            folds = rb.column("fold").to_numpy(zero_copy_only=False)
+            y = np.asarray(rb.column("y").to_numpy(zero_copy_only=False), dtype=np.float64)
+            ones = np.ones((len(y), 1))
+            X1s = {i: np.hstack([ones, arrow_matrix(rb.column(f"e{i}"), nc)]) for i, nc in ncs.items()}
+            for fold in np.unique(folds):
+                m = folds == fold
+                for i in ncs:
+                    key = (i, int(fold))
+                    acc[key] = acc.get(key, 0.0) + suffstat_vector(X1s[i][m], y[m])
+        return acc
 
-    partials = wide.mapInPandas(
-        suff_mapper, schema="cfg int, fold int, vals array<double>"
-    ).toPandas()
-    stats: dict[int, dict[int, tuple[np.ndarray, np.ndarray, float]]] = {
-        i: {} for i, _, _ in live
-    }
-    merged: dict[tuple[int, int], np.ndarray] = {}
-    for _, r in partials.iterrows():
-        key = (int(r["cfg"]), int(r["fold"]))
-        flat = np.asarray(r["vals"])
-        if key in merged:
-            merged[key] += flat
-        else:
-            merged[key] = flat
-    for (i, fold), flat in merged.items():
-        nc = next(n for j, _, n in live if j == i)
-        d1 = nc + 1
-        stats[i][fold] = (
-            flat[: d1 * d1].reshape(d1, d1),
-            flat[d1 * d1 : -1],
-            float(flat[-1]),
-        )
+    sums = sum_partials(wide.select("fold", "y", *[f"e{i}" for i in ncs]), suff_partial)
+    stats: dict[int, dict[int, tuple[np.ndarray, np.ndarray, float]]] = {i: {} for i in ncs}
+    for (i, fold), flat in sums.items():
+        stats[i][fold] = split_suffstats(flat, ncs[i] + 1)
 
     coef_rows = []
     for i, _, _ in live:
@@ -1139,27 +1116,23 @@ def t3_reduction_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cov_suffstats(df: DataFrame, dim: int):
-    """One mapInPandas pass → (n, sum_x, sum_xxT) — the covariance
-    sufficient statistics. The IncrementalPCA pattern (§2.14) without
-    incrementality: partial batch moments merge by addition."""
-    import numpy as np
-    import pandas as pd
-
+    """One :func:`sum_partials` pass → (n, sum_x, sum_xxT) — the
+    covariance sufficient statistics. The IncrementalPCA pattern
+    (§2.14) without incrementality: partial batch moments merge by
+    addition, one dim+dim²+1 vector per partition."""
     width = dim + dim * dim + 1
 
-    def mapper(batches):
-        flat = np.zeros(width)
-        for pdf in batches:
-            X = np.stack(pdf["features"].to_numpy()).astype(np.float64)
+    def partial(batches):
+        acc = {}
+        for rb in batches:
+            X = arrow_matrix(rb.column("features"), dim).astype(np.float64, copy=False)
+            flat = acc.setdefault((), np.zeros(width))
             flat[0] += len(X)
             flat[1 : dim + 1] += X.sum(axis=0)
             flat[dim + 1 :] += (X.T @ X).ravel()
-        yield pd.DataFrame({"idx": np.arange(width), "val": flat})
+        return acc
 
-    rows = df.mapInPandas(mapper, schema="idx int, val double")
-    pdf = rows.groupBy("idx").agg(F.sum("val").alias("val")).toPandas()
-    flat = np.zeros(width)
-    flat[pdf["idx"].to_numpy()] = pdf["val"].to_numpy()
+    flat = sum_partials(df.select("features"), partial).get((), np.zeros(width))
     n = flat[0]
     mu = flat[1 : dim + 1] / n
     cov = flat[dim + 1 :].reshape(dim, dim) / n - np.outer(mu, mu)
@@ -1187,7 +1160,7 @@ def fit_pca_distributed(df: DataFrame, n_components: int, dim: int = DIM):
     "t8_distributed_pca",
     oracle=None,
     doc="t8 exact full-data PCA in one distributed pass: covariance "
-        "sufficient statistics via mapInPandas partial moments, d×d "
+        "sufficient statistics via ml.sum_partials partial moments, d×d "
         "eigendecomposition on the driver, transform as broadcast "
         "expressions — the scalable upgrade over T7's subsample fit "
         "(and the reference's IncrementalPCA sweep, nb cells 93-103).",
@@ -1335,9 +1308,9 @@ def iso1_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="log1 distributed logistic regression (IRLS/Newton, 6 "
         "iterations): P(lang='en') from the t2 quality components "
         "(capped length, stopword ratio, type/token ratio). Each "
-        "iteration is one mapInPandas pass producing per-partition "
-        "[X'WX | X'(y-p) | n] partials merged by array addition — "
-        "the suffstats-ridge shuffle shape (ml.fold_suffstats), "
+        "iteration is one ml.sum_partials pass producing per-partition "
+        "[X'WX | X'(y-p) | n] partials added in partition order — "
+        "the suffstats-ridge merge (ml.fold_suffstats), "
         "iterated because the logistic MLE has no closed form; "
         "driver state is the coefficient vector alone. The "
         "classification counterpart to ml.py's ridge harness, and "

@@ -703,75 +703,59 @@ def kmeans_fit(df: DataFrame, k: int = KM_K, iters: int = KM_ITERS):
     frame — the trained coarse quantizer ss4's IVF would use instead of
     hash-chosen centroids.
 
-    Per iteration: broadcast the k×d centroid matrix (sc.broadcast, the
-    model side-channel), then ONE Arrow-BLAS mapInPandas pass computes
-    per-partition (cid, partial sum, count) — assignment happens inside
-    the batch matmul, so no corpus×k crossJoin relation, no per-vector
-    argmin window shuffle. The only shuffle per iteration is k rows per
-    partition of (cid, d floats). Driver holds only k×d floats.
+    Per iteration: ONE Arrow-BLAS :func:`ml.sum_partials` pass, with
+    the k×d centroid matrix in the partial's closure, computes
+    per-partition [sum | count] vectors per cid — assignment happens
+    inside the batch matmul, so no corpus×k crossJoin relation, no
+    per-vector argmin window shuffle. Each partition emits at most k
+    (d+1)-float vectors; the driver holds only k×d floats.
     Deterministic: init = hash-chosen rows, argmin ties → lowest cid
     (numpy argmin picks the first index)."""
     import numpy as np
-    import pandas as pd
 
-    spark = df.sparkSession
+    from ..ml import arrow_matrix, sum_partials
+
     # every Lloyd iteration rescans the corpus; pin it once for the fit
     # (scope-local: released before returning the k×d model)
     df = df.persist()
-    cents = (
-        df.filter((F.col("vec_id") % CENT_MOD == 0) & (F.col("vec_id") < CENT_CAP))
-        .orderBy("vec_id")
-        .limit(k)
-        .select(F.col("vec_id"), F.col("vv"))
-        .toPandas()
-    )
-    centroids = np.stack(cents["vv"].to_numpy()).astype(float)
-
-    dim = centroids.shape[1]
-    zero = F.array_repeat(F.lit(0.0), dim)
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(centroids)
-
-        def partial(batches, _bc=bc):
-            C = _bc.value
-            kk, d = C.shape
-            cnorm = (C * C).sum(axis=1)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["vv"].to_numpy()).astype(np.float64)
-                d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + cnorm[None, :]
-                a = d2.argmin(axis=1)
-                sums = np.zeros((kk, d))
-                counts = np.zeros(kk, dtype=np.int64)
-                np.add.at(sums, a, X)
-                np.add.at(counts, a, 1)
-                nz = np.nonzero(counts)[0]
-                yield pd.DataFrame(
-                    {
-                        "cid": nz.astype(np.int32),
-                        "s": [sums[i].tolist() for i in nz],
-                        "n": counts[nz],
-                    }
-                )
-
-        part = df.mapInPandas(partial, "cid int, s array<double>, n long")
-        merged = part.groupBy("cid").agg(
-            F.aggregate(
-                F.collect_list("s"), zero, lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b)
-            ).alias("s"),
-            F.sum("n").alias("n"),
+    try:
+        cents = (
+            df.filter((F.col("vec_id") % CENT_MOD == 0) & (F.col("vec_id") < CENT_CAP))
+            .orderBy("vec_id")
+            .limit(k)
+            .select(F.col("vec_id"), F.col("vv"))
+            .toPandas()
         )
-        pdf = merged.toPandas()
-        bc.destroy()
-        new_centroids = centroids.copy()
-        for _, row in pdf.iterrows():
-            new_centroids[int(row["cid"])] = np.asarray(row["s"]) / row["n"]
-        if np.allclose(new_centroids, centroids, atol=1e-12):
+        centroids = np.stack(cents["vv"].to_numpy()).astype(float)
+        vv = df.select("vv")
+        for _ in range(iters):
+
+            def partial(batches, C=centroids):
+                kk, d = C.shape
+                cnorm = (C * C).sum(axis=1)
+                sums = np.zeros((kk, d))
+                counts = np.zeros(kk)
+                for rb in batches:
+                    if not rb.num_rows:
+                        continue
+                    X = arrow_matrix(rb.column("vv"), d).astype(np.float64, copy=False)
+                    d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + cnorm[None, :]
+                    a = d2.argmin(axis=1)
+                    np.add.at(sums, a, X)
+                    counts += np.bincount(a, minlength=kk)
+                return {
+                    (int(c),): np.append(sums[c], counts[c]) for c in np.nonzero(counts)[0]
+                }
+
+            new_centroids = centroids.copy()
+            for (c,), v in sum_partials(vv, partial).items():
+                new_centroids[c] = v[:-1] / v[-1]
+            if np.allclose(new_centroids, centroids, atol=1e-12):
+                centroids = new_centroids
+                break
             centroids = new_centroids
-            break
-        centroids = new_centroids
-    df.unpersist()
+    finally:
+        df.unpersist()
     return centroids
 
 
@@ -779,9 +763,9 @@ def kmeans_fit(df: DataFrame, k: int = KM_K, iters: int = KM_ITERS):
     "km1_kmeans_quantizer",
     oracle=None,  # iterative fit; numpy-parity tested
     doc="km1 distributed Lloyd's k-means (trained IVF coarse "
-        "quantizer): per iteration one broadcast-assign pass + one "
-        "array-mean aggregation; driver state is k×d floats. Returns "
-        "final (vec_id, cid, d2) assignments.",
+        "quantizer): per iteration one assign pass whose per-partition "
+        "[sum | count] vectors ml.sum_partials adds; driver state is "
+        "k×d floats. Returns final (vec_id, cid, d2) assignments.",
     tags=("similarity", "ml"),
 )
 def km1_kmeans_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2039,7 +2039,7 @@ def cls2_trained_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separate actions and the scoring pass builds a 129-term
     # expression on top — with a lazy pin each of those plans carries
     # (and re-analyzes) the full 128-column pivot tree; the barrier
-    # makes every per-iteration plan a leaf + mapInPandas
+    # makes every per-iteration plan a leaf + mapInArrow
     # (caching.barrier: plan-size rationale, r11)
     feats = barrier(feats)
     beta = logistic_irls(

@@ -5,7 +5,8 @@ Coverage across the repo:
 - scalar pandas_udf            → u1 here
 - grouped-agg pandas_udf       → u2 here
 - applyInPandas (grouped map)  → X1 MDA (importance.py), D3 kernel
-- mapInPandas (partition map)  → ml.fold_suffstats, mm2/mm3
+- mapInPandas (partition map)  → reduction._oos_transform, mm2/mm3
+- mapInArrow (partition map)   → ml.sum_partials (every partial-sum pass)
 
 u1/u2 intentionally compute SQL-expressible things so the Arrow
 UDF path itself is oracle-checked end-to-end (same values as the

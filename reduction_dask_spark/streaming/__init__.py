@@ -80,6 +80,15 @@ def windowed_value_stats(stream: DataFrame, window: str = "1 day", watermark: st
     )
 
 
+def _drain(q, name: str) -> None:
+    """Wait for an availableNow query to finish. One still running
+    after 300 s is stopped and raises: its sink holds a partial
+    result. A query that failed raises from awaitTermination."""
+    if not q.awaitTermination(timeout=300):
+        q.stop()
+        raise RuntimeError(f"{name} stream did not drain within 300s — its result is partial")
+
+
 def run_to_memory(agg: DataFrame, name: str) -> DataFrame:
     """Drive a streaming aggregation over all available input, then
     return the materialized result as a batch DataFrame."""
@@ -91,7 +100,7 @@ def run_to_memory(agg: DataFrame, name: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    _drain(q, name)
     return spark.table(name)
 
 
@@ -273,7 +282,7 @@ def st4_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    spark_q.awaitTermination(timeout=300)
+    _drain(spark_q, "st4")
     # keep the LAST emitted state per user (updates may appear per batch)
     from pyspark.sql.window import Window
 
@@ -338,7 +347,7 @@ def st5_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    _drain(q, "st5")
     return spark.table("st5_out").select(
         F.col("c_user").alias("user_id"),
         "click_id",
@@ -364,7 +373,7 @@ def ensure_protobuf(spark: SparkSession) -> str:
     addPyFile includes nor the driver's PYTHONPATH (observed: the TWS
     driver worker launches with only SPARK_HOME set), so the shim
     travels INSIDE the pickled StatefulProcessor (see shim_payload /
-    the processor's __setstate__ in st6). Returns the active runtime
+    _shim_processor_base). Returns the active runtime
     ('native' | 'shim')."""
     try:
         import google.protobuf as _gp
@@ -401,61 +410,22 @@ def shim_payload() -> dict:
     return out
 
 
-@query(
-    "st6_transform_with_state",
-    oracle="""
-        SELECT user_id,
-               CAST(count(*) AS BIGINT) AS n_events,
-               round(CAST(sum(value) AS DOUBLE), 2) AS sum_value,
-               round(CAST(max(value) AS DOUBLE), 2) AS max_value
-        FROM events GROUP BY user_id
-    """,
-    doc="st6 transformWithStateInPandas (the Spark 4 arbitrary-state "
-        "API that replaces applyInPandasWithState): per-user (count, "
-        "sum, max) held in a typed ValueState, updated per input "
-        "batch, emitted in update mode — named, schema'd, "
-        "independently evolvable state (multiple states, TTL, "
-        "timers), the engine's slot for custom stateful patterns at "
-        "production depth. The TWS python worker speaks protobuf to "
-        "the JVM state server; where google.protobuf is absent the "
-        "vendored mini protobuf runtime (public wire spec, "
-        "vendor/protoshim) is shipped to workers via addPyFile, so "
-        "the path EXECUTES here, not just on full deployments. "
-        "Oracle: the final per-user totals must equal the batch "
-        "aggregate over the same rows.",
-    tags=("streaming",),
-)
-def st6_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+_STATE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    ensure_engine_confs(spark)
-    ensure_protobuf(spark)
-    # transformWithState keeps each named state in its own column
-    # family — only the RocksDB provider supports that (the default
-    # HDFS-backed store errors with multipleColumnFamiliesNotSupported).
-    # The conf is session-wide, so it is saved and RESTORED after the
-    # query drains — other streaming queries' checkpoints (st4/st10)
-    # must not silently switch provider mid-session.
-    _prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+def _shim_processor_base():
+    """A StatefulProcessor base whose ``__setstate__`` installs the
+    embedded protobuf shim in whatever worker process unpickles the
+    processor, BEFORE the TWS state client's lazy
+    ``import google.protobuf`` fires.
 
-    class UserTotals(StatefulProcessor):
-        """cloudpickle serializes this class BY VALUE (it is function-
-        local); __setstate__ must therefore be self-contained (stdlib
-        only) — it materializes the embedded protobuf shim in whatever
-        worker process unpickles the processor, BEFORE the TWS state
-        client's lazy ``import google.protobuf`` fires."""
+    The class is built inside this function, so it is function-local
+    and cloudpickle ships it BY VALUE with each processor (TWS python
+    workers cannot import this package). ``__setstate__`` must
+    therefore be self-contained: stdlib only."""
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
+    class ShimInstallingProcessor(StatefulProcessor):
         def __init__(self, shim=None):
             self._shim = shim
 
@@ -511,6 +481,82 @@ def st6_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 del _sys.modules[m]
             importlib.invalidate_caches()
 
+    return ShimInstallingProcessor
+
+
+def _run_tws(spark: SparkSession, sf_dir: str, processor_cls, output_schema: str, name: str) -> DataFrame:
+    """Run a per-user transformWithStateInPandas processor over the
+    events stream to the memory sink ``name``; return the last update
+    per user (updates may appear once per micro-batch).
+
+    transformWithState keeps each named state in its own column
+    family, which only the RocksDB provider supports (the default
+    HDFS-backed store errors with multipleColumnFamiliesNotSupported).
+    The conf is session-wide, so it is saved and RESTORED once the
+    query drains or fails — other streaming queries' checkpoints
+    (st4/st10) must not silently switch provider mid-session."""
+    ensure_engine_confs(spark)
+    shim = None if ensure_protobuf(spark) == "native" else shim_payload()
+    prev = spark.conf.get(_STATE_PROVIDER, None)
+    spark.conf.set(
+        _STATE_PROVIDER,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    try:
+        agg = read_event_stream(spark, sf_dir).groupBy("user_id").transformWithStateInPandas(
+            processor_cls(shim=shim),
+            outputStructType=output_schema,
+            outputMode="Update",
+            timeMode="None",
+        )
+        q = (
+            agg.writeStream.outputMode("update")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        _drain(q, name)
+    finally:
+        if prev is None:
+            spark.conf.unset(_STATE_PROVIDER)
+        else:
+            spark.conf.set(_STATE_PROVIDER, prev)
+    result = spark.table(name)
+    w = F.row_number().over(Window.partitionBy("user_id").orderBy(F.desc("n_events")))
+    return result.withColumn("rn", w).filter(F.col("rn") == 1).drop("rn")
+
+
+@query(
+    "st6_transform_with_state",
+    oracle="""
+        SELECT user_id,
+               CAST(count(*) AS BIGINT) AS n_events,
+               round(CAST(sum(value) AS DOUBLE), 2) AS sum_value,
+               round(CAST(max(value) AS DOUBLE), 2) AS max_value
+        FROM events GROUP BY user_id
+    """,
+    doc="st6 transformWithStateInPandas (the Spark 4 arbitrary-state "
+        "API that replaces applyInPandasWithState): per-user (count, "
+        "sum, max) held in a typed ValueState, updated per input "
+        "batch, emitted in update mode — named, schema'd, "
+        "independently evolvable state (multiple states, TTL, "
+        "timers), the engine's slot for custom stateful patterns at "
+        "production depth. The TWS python worker speaks protobuf to "
+        "the JVM state server; where google.protobuf is absent the "
+        "vendored mini protobuf runtime (public wire spec, "
+        "vendor/protoshim) is shipped to workers via addPyFile, so "
+        "the path EXECUTES here, not just on full deployments. "
+        "Oracle: the final per-user totals must equal the batch "
+        "aggregate over the same rows.",
+    tags=("streaming",),
+)
+def st6_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd
+
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessorHandle
+
+    class UserTotals(_shim_processor_base()):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._agg = handle.getValueState("agg", "n BIGINT, total DOUBLE, vmax DOUBLE")
 
@@ -533,34 +579,13 @@ def st6_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    stream = read_event_stream(spark, sf_dir)
-    agg = stream.groupBy("user_id").transformWithStateInPandas(
-        UserTotals(shim=None if ensure_protobuf(spark) == "native" else shim_payload()),
-        outputStructType="user_id bigint, n_events bigint, sum_value double, max_value double",
-        outputMode="Update",
-        timeMode="None",
+    return _run_tws(
+        spark,
+        sf_dir,
+        UserTotals,
+        "user_id bigint, n_events bigint, sum_value double, max_value double",
+        "st6_out",
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("st6_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout=300)
-    finally:
-        if _prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", _prev_provider
-            )
-    from pyspark.sql.window import Window
-
-    result = spark.table("st6_out")
-    w = F.row_number().over(Window.partitionBy("user_id").orderBy(F.desc("n_events")))
-    return result.withColumn("rn", w).filter(F.col("rn") == 1).drop("rn")
 
 
 @query(
@@ -594,7 +619,7 @@ def st7_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    _drain(q, "st7")
     return spark.table("st7_out")
 
 
@@ -704,7 +729,7 @@ def st8_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    _drain(q, "st8")
     return spark.read.parquet(out_dir).select(
         F.date_format(F.col("era_win.start"), "yyyy-MM-dd").alias("era_day"),
         "event_type",
@@ -840,7 +865,7 @@ def st10_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    _drain(q, "st10")
 
     n_total = spark.read.parquet(index_dir).select("fingerprint").distinct().count()
     return local_frame(
@@ -958,9 +983,7 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(os.path.join(base, prev), ignore_errors=True)
 
     q = stream.writeStream.foreachBatch(update).trigger(availableNow=True).start()
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise RuntimeError("st11 stream did not drain within 300s — state is partial")
+    _drain(q, "st11")
 
     def answer(pdf: pd.DataFrame) -> pd.DataFrame:
         v = pdf["v"].to_numpy(dtype=np.float64)
@@ -1038,7 +1061,7 @@ def st12_custom_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    _drain(q, "st12")
     return spark.sql(
         f"SELECT lang, CAST(n_docs AS BIGINT) AS n_docs FROM {qname}"
     )
@@ -1197,9 +1220,7 @@ def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(os.path.join(base, prev), ignore_errors=True)
 
     q = stream.writeStream.foreachBatch(update).trigger(availableNow=True).start()
-    if not q.awaitTermination(timeout=300):
-        q.stop()
-        raise RuntimeError("st13 stream did not drain within 300s — state is partial")
+    _drain(q, "st13")
 
     cur = spark.read.parquet(os.path.join(base, _current()))
     ct = (
@@ -1249,69 +1270,9 @@ def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st6b_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessorHandle
 
-    ensure_engine_confs(spark)
-    ensure_protobuf(spark)
-    _prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    class UserValues(StatefulProcessor):
-        def __init__(self, shim=None):
-            self._shim = shim
-
-        def __setstate__(self, state):
-            self.__dict__.update(state)
-            shim = state.get("_shim")
-            if not shim:
-                return
-            import importlib
-            import os as _os
-            import sys as _sys
-            import tempfile as _tf
-
-            try:
-                import google.protobuf as _gp
-
-                if getattr(_gp, "__file__", None) is not None:
-                    return
-            except ImportError:
-                pass
-            # digest-versioned install root: a shim bugfix ships under a
-            # NEW directory, so a stale install from an older payload on a
-            # long-lived worker host can never shadow the current code
-            import hashlib as _hl
-
-            _dg = _hl.sha256()
-            for _rel in sorted(shim):
-                _dg.update(_rel.encode())
-                _dg.update(shim[_rel])
-            root = _os.path.join(
-                _tf.gettempdir(), f"rds_protoshim_{_dg.hexdigest()[:16]}"
-            )
-            for rel, src in shim.items():
-                p = _os.path.join(root, rel)
-                if _os.path.exists(p):
-                    continue
-                _os.makedirs(_os.path.dirname(p), exist_ok=True)
-                tmp = p + f".tmp{_os.getpid()}"
-                with open(tmp, "wb") as fh:
-                    fh.write(src)
-                _os.replace(tmp, p)
-            if root not in _sys.path:
-                _sys.path.insert(0, root)
-            for m in [m for m in _sys.modules if m == "google" or m.startswith("google.")]:
-                del _sys.modules[m]
-            importlib.invalidate_caches()
-
+    class UserValues(_shim_processor_base()):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._vals = handle.getListState("vals", "v DOUBLE")
 
@@ -1331,31 +1292,10 @@ def st6b_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    stream = read_event_stream(spark, sf_dir)
-    agg = stream.groupBy("user_id").transformWithStateInPandas(
-        UserValues(shim=None if ensure_protobuf(spark) == "native" else shim_payload()),
-        outputStructType="user_id bigint, n_events bigint, min_value double, max_value double",
-        outputMode="Update",
-        timeMode="None",
+    return _run_tws(
+        spark,
+        sf_dir,
+        UserValues,
+        "user_id bigint, n_events bigint, min_value double, max_value double",
+        "st6b_out",
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("st6b_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(timeout=300):
-            q.stop()
-            raise RuntimeError("st6b stream did not drain within 300s")
-    finally:
-        if _prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", _prev_provider
-            )
-    result = spark.table("st6b_out")
-    w = F.row_number().over(Window.partitionBy("user_id").orderBy(F.desc("n_events")))
-    return result.withColumn("rn", w).filter(F.col("rn") == 1).drop("rn")

@@ -234,9 +234,10 @@ def test_gbt_hist_fit_matches_numpy(spark):
     from reduction_dask_spark.ml import (
         GBT_BINS,
         GBT_LR,
-        _best_stump,
+        _best_stump_with_bin,
         feature_bounds,
         fit_gbt_fold_models,
+        gbt_edges,
         predict_stumps,
     )
 
@@ -250,7 +251,8 @@ def test_gbt_hist_fit_matches_numpy(spark):
     got = fit_gbt_fold_models(df, k=5, n_rounds=n_rounds)
 
     mn, mx = feature_bounds(df)
-    bins = np.clip(((X - mn) / (mx - mn) * GBT_BINS).astype(int), 0, GBT_BINS - 1)
+    edges = gbt_edges(mn, mx, GBT_BINS)
+    bins = (X[:, :, None] > edges[None, :, :]).sum(axis=2)  # bin(x) = #{j : edges[f, j] < x}
     for m in range(5):
         mask = fold != m
         stumps: list = []
@@ -262,7 +264,8 @@ def test_gbt_hist_fit_matches_numpy(spark):
             for f in range(DIM):
                 hist[f] = np.bincount(bm[:, f], weights=resid, minlength=GBT_BINS)
                 counts[f] = np.bincount(bm[:, f], minlength=GBT_BINS)
-            stumps.append(_best_stump(hist, counts, mn, mx, GBT_LR))
+            f, _b, thr, vl, vr = _best_stump_with_bin(hist, counts, edges, GBT_LR)
+            stumps.append((f, thr, vl, vr))
         for (gf, gt, gl, gr), (ef, et, el, er) in zip(got[m], stumps):
             assert gf == ef
             np.testing.assert_allclose([gt, gl, gr], [et, el, er], rtol=1e-9)
