@@ -22,4 +22,14 @@ Layout
 
 __version__ = "0.1.0"
 
-from .registry import QuerySpec, REGISTRY, query  # noqa: F401
+import sys
+
+from pyspark import cloudpickle
+
+# UDFs, mappers and stream processors call helpers of this package's
+# modules. Pickled by value, they run in a Python worker that cannot
+# import the package (a process started outside the checkout with no
+# PYTHONPATH entry for it).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+from .registry import QuerySpec, REGISTRY, query  # noqa: E402, F401

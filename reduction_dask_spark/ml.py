@@ -28,22 +28,14 @@ two scans.
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 
-from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from .functions import corr_safe
 from .session import local_frame
 from .sources import load_table
-
-# Partials reference helpers of this module (arrow_matrix,
-# suffstat_vector); pickled by value, they run in a Python worker that
-# cannot import this package.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 DIM = 64  # embeddings feature width
 

@@ -23,13 +23,11 @@ same mean-|SHAP| table shape (A4), no shap package needed.
 
 from __future__ import annotations
 
-import sys
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -52,11 +50,6 @@ from .cv import kfold_era
 K_FOLDS = 5
 LAM = 1.0
 SEED = 42
-
-# The MDA mappers call this module's helpers (_permutation, _mda_block);
-# pickled by value, they run in a Python worker that cannot import
-# this package.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _permutation(seed: int, fold: int, era: int, f: int, n: int) -> np.ndarray:

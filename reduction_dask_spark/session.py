@@ -27,6 +27,21 @@ NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a session this package launches:
+    $SPARK_DRIVER_MEMORY when set, else the smaller of 16g and half of
+    the host's physical memory, so that two drivers on one host cannot
+    claim all of it."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env is not None:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf or no such name
+        return "16g"
+    return f"{min(16 << 30, phys // 2) >> 20}m"
+
+
 def get_spark(app: str = "reduction_dask_spark", cpus: int | None = None) -> SparkSession:
     """The engine's tuned local session.
 
@@ -52,7 +67,7 @@ def get_spark(app: str = "reduction_dask_spark", cpus: int | None = None) -> Spa
         # Python DataSource V2 pushdown (sources/jsonl_source.py
         # implements pushFilters; off by default in 4.1)
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config(NANOS_CONF, "true")

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..session import ensure_engine_confs, local_frame
-from ..sources import normalize_ts
+from ..sources import normalize_ts, table_schema
 
 
 def _stage_dir(sf_dir: str, table: str = "events") -> str:
@@ -57,13 +57,14 @@ def _stage_dir(sf_dir: str, table: str = "events") -> str:
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table with proper timestamps.
 
-    FileStreamSource needs an explicit schema; take it from the batch
-    reader's footer inference (cheap, driver-side only) so the stream
+    FileStreamSource needs an explicit schema; take the batch reader's
+    (:func:`sources.table_schema`: a footer-reading Spark job on the
+    session's first use of the table, cached after it) so the stream
     tracks whichever physical timestamp flavor the testdata generation
     used, then normalize exactly like the batch path.
     """
     ensure_engine_confs(spark)
-    file_schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
+    file_schema = table_schema(spark, sf_dir, "events")
     raw = spark.readStream.schema(file_schema).parquet(_stage_dir(sf_dir))
     return normalize_ts(raw, ("ts",))
 
@@ -730,7 +731,7 @@ def st8_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     _drain(q, "st8")
-    return spark.read.parquet(out_dir).select(
+    return spark.read.schema(agg.schema).parquet(out_dir).select(
         F.date_format(F.col("era_win.start"), "yyyy-MM-dd").alias("era_day"),
         "event_type",
         "n",
@@ -845,9 +846,10 @@ def st10_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     # historical index: the already-ingested corpus (dd9's split)
     n_hist_df = fp.filter(F.col("doc_id") % 5 != 0).select("fingerprint").distinct()
     n_hist_df.write.mode("overwrite").parquet(index_dir)
-    n_historical = spark.read.parquet(index_dir).count()
+    index_schema = n_hist_df.schema
+    n_historical = spark.read.schema(index_schema).parquet(index_dir).count()
 
-    schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet").schema
+    schema = table_schema(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(schema)
         .parquet(_stage_dir(sf_dir, table="documents"))
@@ -856,7 +858,7 @@ def st10_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     def ingest(batch: DataFrame, epoch_id: int) -> None:
-        idx = batch.sparkSession.read.parquet(index_dir)
+        idx = batch.sparkSession.read.schema(index_schema).parquet(index_dir)
         fresh = batch.distinct().join(idx, "fingerprint", "left_anti")
         fresh.write.mode("append").parquet(index_dir)
 
@@ -867,7 +869,8 @@ def st10_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     _drain(q, "st10")
 
-    n_total = spark.read.parquet(index_dir).select("fingerprint").distinct().count()
+    index = spark.read.schema(index_schema).parquet(index_dir)
+    n_total = index.select("fingerprint").distinct().count()
     return local_frame(
         spark,
         [(n_historical, n_total - n_historical, n_total)],
@@ -942,9 +945,10 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(name)
         os.replace(tmp, current_ptr)
 
-    local_frame(spark, [], "shard bigint, v double, w bigint").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "epoch_init"))
+    state = "shard bigint, v double, w bigint"
+    local_frame(spark, [], state).write.mode("overwrite").parquet(
+        os.path.join(base, "epoch_init")
+    )
     _publish("epoch_init")
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -953,7 +957,7 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         v, w = _qsk_compact(v, w, QSK_K)
         return pd.DataFrame({"shard": pdf["shard"].iloc[0], "v": v, "w": w})
 
-    schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
+    schema = table_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(schema)
         .parquet(_stage_dir(sf_dir))
@@ -972,10 +976,11 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         dst = os.path.join(base, name)
         if not os.path.exists(os.path.join(dst, "_SUCCESS")):
             merged = (
-                sp.read.parquet(os.path.join(base, _current()))
+                sp.read.schema(state)
+                .parquet(os.path.join(base, _current()))
                 .unionByName(batch)
                 .groupBy("shard")
-                .applyInPandas(build, "shard bigint, v double, w bigint")
+                .applyInPandas(build, state)
             )
             merged.write.mode("overwrite").parquet(dst)
         prev = _current()
@@ -999,7 +1004,8 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.DataFrame(out, columns=["q_pct", "est"])
 
     return (
-        spark.read.parquet(os.path.join(base, _current()))
+        spark.read.schema(state)
+        .parquet(os.path.join(base, _current()))
         .withColumn("g", F.lit(1))
         .groupBy("g")
         .applyInPandas(answer, "q_pct int, est double")
@@ -1184,12 +1190,13 @@ def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(name)
         os.replace(tmp, current_ptr)
 
-    local_frame(spark, [], "event_type string, bin int, c_new bigint").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "epoch_init"))
+    state = "event_type string, bin int, c_new bigint"
+    local_frame(spark, [], state).write.mode("overwrite").parquet(
+        os.path.join(base, "epoch_init")
+    )
     _publish("epoch_init")
 
-    schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
+    schema = table_schema(spark, sf_dir, "events")
     stream = (
         spark.readStream.schema(schema)
         .parquet(_stage_dir(sf_dir))
@@ -1209,7 +1216,8 @@ def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("c_new"))
             )
             merged = (
-                sp.read.parquet(os.path.join(base, _current()))
+                sp.read.schema(state)
+                .parquet(os.path.join(base, _current()))
                 .unionByName(delta)
                 .groupBy("event_type", "bin")
                 .agg(F.sum("c_new").alias("c_new"))
@@ -1222,7 +1230,7 @@ def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream.writeStream.foreachBatch(update).trigger(availableNow=True).start()
     _drain(q, "st13")
 
-    cur = spark.read.parquet(os.path.join(base, _current()))
+    cur = spark.read.schema(state).parquet(os.path.join(base, _current()))
     ct = (
         ref.join(cur, ["event_type", "bin"], "full")
         .select(

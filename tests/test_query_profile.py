@@ -1,6 +1,6 @@
 """Smoke test of tools/query_profile.py: a query's build and execute jobs
-come back from the status store, grouped by call site, and its reps end
-in one build + execute wall line."""
+come back from the status store, grouped by call site, each phase has
+its JIT row, and its reps end in one build + execute wall line."""
 
 from __future__ import annotations
 
@@ -27,6 +27,13 @@ def test_profile_x1c_build_and_execute(spark, capsys):
     assert r["execute"]
     out = capsys.readouterr().out
     assert "driver-only" in out and "toPandas at ml.py:" in out
+    for phase in ("build", "execute"):
+        assert set(r[f"{phase}_jit"]) == {"jit_s", "codegen_classes", "codegen_s"}
+        assert re.search(
+            rf"^  jit {phase} +hotspot \d+\.\d\d s, janino \d+ classes \d+\.\d\d s$",
+            out,
+            re.MULTILINE,
+        )
     wall = round(r["build_s"] + r["execute_s"], 2)
     assert re.search(
         rf"^x1c min={wall:.2f} med={wall:.2f} all=\[{wall}\]$", out, re.MULTILINE

@@ -522,7 +522,8 @@ def test_parquet_row_count_matches_spark(spark, tmp_path):
     """r15 (r14 verdict item 6): the footer-metadata row count that
     gates dsir1's pin downgrade must equal the count() a Spark job
     returns — for the single-file testdata layout AND a
-    directory-of-parts layout written by Spark itself."""
+    directory-of-parts layout written by Spark itself, also after that
+    directory is rewritten."""
     from reduction_dask_spark.sources import parquet_row_count
 
     want = load_table(spark, SF_SMALL, "documents").count()
@@ -532,3 +533,6 @@ def test_parquet_row_count_matches_spark(spark, tmp_path):
     out = str(tmp_path / "docs.parquet")
     spark.range(0, 1000, numPartitions=7).toDF("doc_id").write.parquet(out)
     assert parquet_row_count(str(tmp_path), "docs") == 1000
+    # a rewrite under the same path is counted again, not served stale
+    spark.range(0, 600, numPartitions=3).toDF("doc_id").write.mode("overwrite").parquet(out)
+    assert parquet_row_count(str(tmp_path), "docs") == 600

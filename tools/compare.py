@@ -103,13 +103,15 @@ def main() -> int:
 
         from pyspark.sql import SparkSession
 
+        from reduction_dask_spark.session import driver_memory
+
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or min(
             os.cpu_count() or 4, 32
         )
         spark = (
             SparkSession.builder.master(f"local[{cpus}]")
             .appName("compare-vanilla")
-            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+            .config("spark.driver.memory", driver_memory())
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )

@@ -13,8 +13,13 @@ one row per (phase, call site): job count, union of the jobs' walls,
 executor run time, shuffle read/write, spill and GC. Barrier jobs are
 named after the line that called ``caching.barrier`` and eager collects
 after their caller, so each eager site of a build gets its own row.
-After a query's reps, one line gives the min, median and every value
-of build + execute wall.
+A ``jit`` row per phase gives the JVM's compile work in it: HotSpot
+compile seconds (``CompilationMXBean``), and the classes Janino
+compiled for whole-stage codegen and their compile seconds
+(``CodegenMetrics``, ``CodeGenerator.compileTime``). The counters are
+JVM-wide, so they also see the compiler threads catching up on work
+an earlier phase made hot. After a query's reps, one line gives the
+min, median and every value of build + execute wall.
 
 The script puts its own checkout first on ``sys.path`` and
 ``PYTHONPATH``, so a timing A/B runs each checkout's copy in a fresh
@@ -50,20 +55,38 @@ _GROUP = "spark.jobGroup.id"
 MB = 1 << 20
 
 
+def jit_counters(spark) -> dict:
+    """The JVM's cumulative compile counters: HotSpot compile seconds,
+    and the classes Janino compiled and its compile seconds."""
+    jvm = spark._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return {
+        "jit_s": hotspot.getTotalCompilationTime() / 1e3,
+        "codegen_classes": janino.getCount(),
+        "codegen_s": codegen.compileTime() / 1e9,  # nanoseconds
+    }
+
+
+def _delta(after: dict, before: dict) -> dict:
+    return {k: after[k] - before[k] for k in after}
+
+
 def run_query(spark, fn, sf: str, tag: str) -> dict:
     """Build ``fn(spark, sf)`` under job group ``tag:build``, execute it
     to the noop sink under ``tag:execute``, then release its caches,
-    also when the query fails. Returns the two walls and each phase's
-    jobs."""
+    also when the query fails. Returns the two walls, each phase's
+    jobs and each phase's :func:`jit_counters` delta."""
     sc = spark.sparkContext
     try:
         sc.setLocalProperty(_GROUP, f"{tag}:build")
-        t0 = time.time()
+        c0, t0 = jit_counters(spark), time.time()
         df = fn(spark, sf)
-        t1 = time.time()
+        t1, c1 = time.time(), jit_counters(spark)
         sc.setLocalProperty(_GROUP, f"{tag}:execute")
         df.write.format("noop").mode("overwrite").save()
-        t2 = time.time()
+        t2, c2 = time.time(), jit_counters(spark)
     finally:
         sc.setLocalProperty(_GROUP, None)
         release_pinned()
@@ -73,6 +96,8 @@ def run_query(spark, fn, sf: str, tag: str) -> dict:
         "execute_s": t2 - t1,
         "build": spark_jobs(sc, f"{tag}:build"),
         "execute": spark_jobs(sc, f"{tag}:execute"),
+        "build_jit": _delta(c1, c0),
+        "execute_jit": _delta(c2, c1),
     }
 
 
@@ -111,6 +136,12 @@ def report(name: str, rep: int, r: dict) -> None:
                 f"{g['shuffle_read'] / MB:9.1f} {g['shuffle_write'] / MB:9.1f} "
                 f"{g['spill'] / MB:9.1f} {g['gc_s']:5.2f}  {g['site']}"
             )
+    for phase in ("build", "execute"):
+        j = r[f"{phase}_jit"]
+        print(
+            f"  jit {phase:7s} hotspot {j['jit_s']:.2f} s, "
+            f"janino {j['codegen_classes']} classes {j['codegen_s']:.2f} s"
+        )
 
 
 def profile(spark, name: str, fn, sf: str, reps: int) -> list[dict]:
