@@ -1810,7 +1810,10 @@ CUSUM_H = 4.0         # decision threshold, in sigmas
     "ts5_cusum_changepoint",
     oracle=f"""
         WITH daily AS (
-            SELECT CAST(ts AS DATE) AS day, avg(value) AS x
+            SELECT CAST(ts AS DATE) AS day,
+                   list_reduce(list_prepend(0.0::DOUBLE, list_sort(
+                       list(value) FILTER (WHERE value IS NOT NULL))),
+                       (a, v) -> a + v) / count(value) AS x
             FROM events GROUP BY 1
         ),
         nday AS (
@@ -1853,14 +1856,20 @@ CUSUM_H = 4.0         # decision threshold, in sigmas
         "(the only pass over fact rows), then the |days|-length "
         "recurrence driver-side in a loop over the bounded calendar "
         "relation. Oracle: the same recurrence as a recursive CTE — "
-        "identical float op order, exact equality.",
+        "identical float op order (daily sums folded in value order), "
+        "exact equality.",
     tags=("temporal", "metric", "pipeline"),
 )
 def ts5_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
+    # the day's mean as a left fold over its values in ascending order,
+    # in both engines: a float sum in scan order depends on how the rows
+    # are split (DuckDB's threads over row groups, Spark's partitions),
+    # which flips round(x, 6) on a day whose exact mean is a tie
+    total = F.aggregate(F.array_sort(F.collect_list("value")), F.lit(0.0), lambda a, v: a + v)
     daily = (
         ev.groupBy(F.to_date("ts").alias("day"))
-        .agg(F.avg("value").alias("x"))
+        .agg((total / F.count("value")).alias("x"))
         .orderBy("day")
         .collect()
     )

@@ -42,6 +42,12 @@ def driver_memory() -> str:
     return f"{min(16 << 30, phys // 2) >> 20}m"
 
 
+def default_cpus() -> int:
+    """Cores of a local session this package launches: $SPARK_GRAFT_CPUS
+    when set and non-zero, else the host's cores up to 32."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or min(os.cpu_count() or 4, 32)
+
+
 def get_spark(app: str = "reduction_dask_spark", cpus: int | None = None) -> SparkSession:
     """The engine's tuned local session.
 
@@ -54,7 +60,7 @@ def get_spark(app: str = "reduction_dask_spark", cpus: int | None = None) -> Spa
     caller built, so a driver-built session keeps Spark's default.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or min(os.cpu_count() or 4, 32)
+        cpus = default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)

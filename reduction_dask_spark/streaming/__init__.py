@@ -29,10 +29,10 @@ from ..sources import normalize_ts, table_schema
 def _stage_dir(sf_dir: str, table: str = "events") -> str:
     """FileStreamSource requires a flat directory of data files; stage
     symlinks to the events parquet under a stable temp dir. Handles
-    both physical layouts: a single .parquet FILE (driver testdata)
-    and a Spark-written .parquet DIRECTORY of part files (e.g. the
-    scale-probe replicas) — a symlink to a directory is not traversed
-    by the file source, so part files are linked individually."""
+    both physical layouts: a single .parquet FILE (driver testdata,
+    the scale-probe replicas) and a Spark-written .parquet DIRECTORY
+    of part files — a symlink to a directory is not traversed by the
+    file source, so part files are linked individually."""
     import hashlib
     import os
     import tempfile
@@ -880,6 +880,68 @@ def st10_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ---------------------------------------------------------------- st11
 
+class _EpochState:
+    """A stream's merged state, one immutable parquet dir per epoch.
+
+    foreachBatch is AT-LEAST-ONCE: a retried micro-batch must not merge
+    its rows into state it already updated (double-counted weights),
+    and a crash mid-swap must not lose the state. So each epoch writes
+    its own dir; the ``CURRENT`` file names the live epoch and flips
+    via os.replace (atomic on POSIX) only after the parquet commit
+    (``_SUCCESS``). A retry of an applied epoch is a no-op; a retry of
+    a half-written epoch deterministically rewrites it from the
+    still-published predecessor. Before the first epoch nothing is
+    published and the state reads as an empty local frame, so no job
+    writes an empty table."""
+
+    def __init__(self, name: str, sf_dir: str, schema: str) -> None:
+        import hashlib
+        import os
+        import shutil
+        import tempfile
+
+        self.schema = schema
+        tag = hashlib.md5(f"{name}:{sf_dir}".encode()).hexdigest()[:8]
+        self.base = os.path.join(tempfile.gettempdir(), f"rds_{name}_state_{tag}")
+        shutil.rmtree(self.base, ignore_errors=True)
+        os.makedirs(self.base)
+        self._ptr = os.path.join(self.base, "CURRENT")
+
+    def _current(self) -> str | None:
+        try:
+            with open(self._ptr) as fh:
+                return fh.read().strip()
+        except FileNotFoundError:
+            return None
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        import os
+
+        cur = self._current()
+        if cur is None:
+            return local_frame(spark, [], self.schema)
+        return spark.read.schema(self.schema).parquet(os.path.join(self.base, cur))
+
+    def apply(self, batch: DataFrame, epoch_id: int, merge) -> None:
+        """Publish ``merge(state, batch)`` as epoch ``epoch_id``'s state."""
+        import os
+        import shutil
+
+        name = f"epoch_{epoch_id}"
+        prev = self._current()
+        if prev == name:
+            return  # retried, already applied AND published: no-op
+        dst = os.path.join(self.base, name)
+        if not os.path.exists(os.path.join(dst, "_SUCCESS")):
+            merge(self.read(batch.sparkSession), batch).write.mode("overwrite").parquet(dst)
+        tmp = self._ptr + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(name)
+        os.replace(tmp, self._ptr)
+        if prev is not None:
+            shutil.rmtree(os.path.join(self.base, prev), ignore_errors=True)
+
+
 @query(
     "st11_stream_quantile_sketch",
     oracle="""
@@ -906,50 +968,13 @@ def st10_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "agg", "sketch"),
 )
 def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
     from ..operators.relational import QSK_K, QSK_PCTS, QSK_SHARDS, _qsk_compact
 
     ensure_engine_confs(spark)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"rds_st11_state_{tag}")
-    if os.path.exists(base):
-        shutil.rmtree(base)
-    os.makedirs(base)
-
-    # Epoch-versioned state + pointer-file publish (foreachBatch is
-    # AT-LEAST-ONCE, and the previous rmtree+rename swap had two
-    # failure modes: a retried micro-batch re-merged its rows into
-    # already-updated state — double-counted weights — and a crash
-    # between rmtree and rename lost the state entirely). Each epoch
-    # writes to its own immutable dir; CURRENT names the live epoch
-    # and flips via os.replace (atomic on POSIX) only after the
-    # parquet commit (_SUCCESS). A retry of an applied epoch is a
-    # no-op; a retry of a half-written epoch deterministically
-    # rewrites it from the still-published predecessor.
-    current_ptr = os.path.join(base, "CURRENT")
-
-    def _current() -> str:
-        with open(current_ptr) as fh:
-            return fh.read().strip()
-
-    def _publish(name: str) -> None:
-        tmp = current_ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(name)
-        os.replace(tmp, current_ptr)
-
-    state = "shard bigint, v double, w bigint"
-    local_frame(spark, [], state).write.mode("overwrite").parquet(
-        os.path.join(base, "epoch_init")
-    )
-    _publish("epoch_init")
+    state = _EpochState("st11", sf_dir, "shard bigint, v double, w bigint")
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         v = pdf["v"].to_numpy(dtype=np.float64)
@@ -968,24 +993,11 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
+    def merge(cur: DataFrame, batch: DataFrame) -> DataFrame:
+        return cur.unionByName(batch).groupBy("shard").applyInPandas(build, state.schema)
+
     def update(batch: DataFrame, epoch_id: int) -> None:
-        sp = batch.sparkSession
-        name = f"epoch_{epoch_id}"
-        if _current() == name:
-            return  # retried, already applied AND published: no-op
-        dst = os.path.join(base, name)
-        if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-            merged = (
-                sp.read.schema(state)
-                .parquet(os.path.join(base, _current()))
-                .unionByName(batch)
-                .groupBy("shard")
-                .applyInPandas(build, state)
-            )
-            merged.write.mode("overwrite").parquet(dst)
-        prev = _current()
-        _publish(name)
-        shutil.rmtree(os.path.join(base, prev), ignore_errors=True)
+        state.apply(batch, epoch_id, merge)
 
     q = stream.writeStream.foreachBatch(update).trigger(availableNow=True).start()
     _drain(q, "st11")
@@ -1004,8 +1016,7 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.DataFrame(out, columns=["q_pct", "est"])
 
     return (
-        spark.read.schema(state)
-        .parquet(os.path.join(base, _current()))
+        state.read(spark)
         .withColumn("g", F.lit(1))
         .groupBy("g")
         .applyInPandas(answer, "q_pct int, est double")
@@ -1141,11 +1152,6 @@ def st12_custom_source_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "metric", "pipeline"),
 )
 def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..sources import load_table
 
     ensure_engine_confs(spark)
@@ -1173,28 +1179,7 @@ def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c_ref"))
     )
 
-    tag = hashlib.md5(f"st13:{sf_dir}".encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"rds_st13_state_{tag}")
-    if os.path.exists(base):
-        shutil.rmtree(base)
-    os.makedirs(base)
-    current_ptr = os.path.join(base, "CURRENT")
-
-    def _current() -> str:
-        with open(current_ptr) as fh:
-            return fh.read().strip()
-
-    def _publish(name: str) -> None:
-        tmp = current_ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(name)
-        os.replace(tmp, current_ptr)
-
-    state = "event_type string, bin int, c_new bigint"
-    local_frame(spark, [], state).write.mode("overwrite").parquet(
-        os.path.join(base, "epoch_init")
-    )
-    _publish("epoch_init")
+    state = _EpochState("st13", sf_dir, "event_type string, bin int, c_new bigint")
 
     schema = table_schema(spark, sf_dir, "events")
     stream = (
@@ -1203,34 +1188,25 @@ def st13_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", F.col("value").cast("double").alias("value"))
     )
 
+    def merge(cur: DataFrame, batch: DataFrame) -> DataFrame:
+        delta = (
+            batch.select("event_type", bin_of(F.col("value")).alias("bin"))
+            .groupBy("event_type", "bin")
+            .agg(F.count("*").alias("c_new"))
+        )
+        return (
+            cur.unionByName(delta)
+            .groupBy("event_type", "bin")
+            .agg(F.sum("c_new").alias("c_new"))
+        )
+
     def update(batch: DataFrame, epoch_id: int) -> None:
-        sp = batch.sparkSession
-        name = f"epoch_{epoch_id}"
-        if _current() == name:
-            return  # retried and already published — idempotent no-op
-        dst = os.path.join(base, name)
-        if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-            delta = (
-                batch.select("event_type", bin_of(F.col("value")).alias("bin"))
-                .groupBy("event_type", "bin")
-                .agg(F.count("*").alias("c_new"))
-            )
-            merged = (
-                sp.read.schema(state)
-                .parquet(os.path.join(base, _current()))
-                .unionByName(delta)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("c_new").alias("c_new"))
-            )
-            merged.write.mode("overwrite").parquet(dst)
-        prev = _current()
-        _publish(name)
-        shutil.rmtree(os.path.join(base, prev), ignore_errors=True)
+        state.apply(batch, epoch_id, merge)
 
     q = stream.writeStream.foreachBatch(update).trigger(availableNow=True).start()
     _drain(q, "st13")
 
-    cur = spark.read.schema(state).parquet(os.path.join(base, _current()))
+    cur = state.read(spark)
     ct = (
         ref.join(cur, ["event_type", "bin"], "full")
         .select(

@@ -10,7 +10,8 @@ as the sf0.01 gate, pointed at cap-firing inputs:
 
 * a planted corpus with a >DF_CAP boilerplate shingle, a >ES_ANCHOR_CAP
   quoted benchmark passage, and >ES_EXEMPT_CAP exempt-anchor fan-out;
-* a ×12-replica corpus (every sf0.001 document cloned 12×) where
+* a ×12-replica corpus (every sf0.001 document cloned 12× under
+  key-shifted ids, as tools/replica_gate.py builds it) where
   df-multiplication pushes real shingles over DF_CAP — the replica
   sweep SCALING.md previously only wall-clocked.
 """
@@ -168,20 +169,16 @@ def test_exempt_cap_truncation_is_deterministic(planted_dir, spark):
 
 @pytest.fixture(scope="module")
 def replica_dir(tmp_path_factory):
-    """Every sf0.001 document cloned 12× under fresh ids — the replica
+    """The sf0.001 documents ×12 under tools/replica_gate.py's
+    key-shifted replicas (``scale_probe.replicate``) — the replica
     sweep SCALING.md wall-clocks, now value-checked. df-multiplication
     pushes real (non-planted) shingles over DF_CAP (max base df is 9,
     so ×12 → 108 > 100)."""
-    docs = pd.read_parquet(f"{SF_SMALL}/documents.parquet")
-    reps = []
-    for k in range(12):
-        r = docs.copy()
-        r["doc_id"] = r["doc_id"] * 16 + k
-        reps.append(r)
-    out = pd.concat(reps, ignore_index=True)
-    path = tmp_path_factory.mktemp("replica10")
-    out.to_parquet(f"{path}/documents.parquet", index=False)
-    return str(path)
+    from tools.scale_probe import replicate
+
+    path = str(tmp_path_factory.mktemp("replica12") / "docs12")
+    replicate(SF_SMALL, path, 12, ["documents"])
+    return path
 
 
 def test_replica_df_cap_binds(replica_dir):

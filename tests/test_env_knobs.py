@@ -1,5 +1,6 @@
-"""The package's environment knobs: exactly four names are read, and
-the one with a fixed value set rejects anything else."""
+"""The environment knobs: the package reads exactly four names and the
+tools three, and the knob with a fixed value set rejects anything
+else."""
 
 from __future__ import annotations
 
@@ -10,13 +11,17 @@ import pytest
 
 from reduction_dask_spark.caching import barrier_mode
 
-PACKAGE = Path(__file__).resolve().parent.parent / "reduction_dask_spark"
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "reduction_dask_spark"
 KNOBS = {
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_BARRIER",
     "SPARK_GRAFT_CHECKPOINT_DIR",
     "SPARK_DRIVER_MEMORY",
 }
+# A tool's session takes its cores from session.default_cpus; PYTHONPATH
+# is no knob: query_profile forwards its own checkout to Python workers.
+TOOL_KNOBS = {"SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BARRIER", "PYTHONPATH"}
 
 
 def _is_environ(node: ast.AST) -> bool:
@@ -67,6 +72,15 @@ def test_package_reads_only_known_env_knobs():
         for name in _env_reads(ast.parse(path.read_text()))
     }
     assert read == KNOBS
+
+
+def test_tools_read_only_known_env_knobs():
+    read = {
+        name
+        for path in (REPO / "tools").glob("*.py")
+        for name in _env_reads(ast.parse(path.read_text()))
+    }
+    assert read == TOOL_KNOBS
 
 
 def test_barrier_mode_rejects_unknown_value(monkeypatch):

@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from perfbench.spans import spark_jobs
+from reduction_dask_spark.session import local_frame
 from reduction_dask_spark.sources import load_table
 
 from .conftest import SF_SMALL
@@ -140,6 +144,46 @@ def test_st8_foreach_batch_sink_idempotent(spark):
     first = sorted(map(tuple, st8_foreach_batch_sink(spark, SF_SMALL).select(*cols).collect()))
     second = sorted(map(tuple, st8_foreach_batch_sink(spark, SF_SMALL).select(*cols).collect()))
     assert first == second and len(first) > 0
+
+
+def test_epoch_state_applies_each_epoch_once(spark):
+    """Unpublished state reads as an empty frame and writes nothing; a
+    retried epoch that was already published is a no-op; publishing an
+    epoch drops its predecessor's dir."""
+    from reduction_dask_spark.streaming import _EpochState
+
+    state = _EpochState("st_test", SF_SMALL, "k bigint, n bigint")
+    assert os.listdir(state.base) == []
+    assert state.read(spark).count() == 0
+    merges = []
+
+    def merge(cur, batch):
+        merges.append(1)
+        return cur.unionByName(batch).groupBy("k").agg(F.sum("n").alias("n"))
+
+    batch = local_frame(spark, [(1, 2), (2, 3)], "k bigint, n bigint")
+    state.apply(batch, 0, merge)
+    state.apply(batch, 0, merge)
+    assert len(merges) == 1
+    state.apply(batch, 1, merge)
+    assert sorted(os.listdir(state.base)) == ["CURRENT", "epoch_1"]
+    assert sorted(map(tuple, state.read(spark).collect())) == [(1, 4), (2, 6)]
+
+
+def test_st11_warm_build_runs_no_job(spark):
+    """Nothing is written before the stream starts: once the events
+    schema is cached, building st11 runs no job on the caller's thread
+    (the micro-batches run in the stream's own job group)."""
+    from reduction_dask_spark.streaming import st11_stream_quantile_sketch
+
+    st11_stream_quantile_sketch(spark, SF_SMALL)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "st11:warm")
+    try:
+        st11_stream_quantile_sketch(spark, SF_SMALL)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert spark_jobs(sc, "st11:warm") == []
 
 
 def test_st1_rocksdb_state_store_parity(spark):

@@ -1,4 +1,5 @@
-"""Invariants for scd2 (type-2 history) and an3 (transition matrix)."""
+"""Invariants for scd2 (type-2 history), an3 (transition matrix) and
+ts5 (CUSUM over daily means)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from reduction_dask_spark.operators.temporal import (
 )
 
 from .conftest import SF_SMALL
+from .parity_util import assert_oracle_parity, duck_views
 
 
 def test_scd2_intervals_contiguous_and_versioned(spark):
@@ -86,3 +88,22 @@ def test_an6_share_invariants(spark):
     for r in rows:
         assert 0.0 <= r["removal_effect"] <= 1.0
         assert 0.0 <= r["attribution_share"] <= 1.0
+
+
+def test_ts5_daily_mean_independent_of_row_split(spark, tmp_path):
+    """The events ×12 replica has a day whose exact mean is a tie at the
+    6th decimal, in 12 row groups that DuckDB sums on several threads;
+    the rounded daily mean must not depend on that split."""
+    from reduction_dask_spark.registry import REGISTRY
+    from tools.scale_probe import replicate
+
+    sf_dir = str(tmp_path / "events12")
+    replicate(SF_SMALL, sf_dir, 12, ["events"])
+    assert_oracle_parity(spark, sf_dir, "ts5_cusum_changepoint")
+    oracle = REGISTRY["ts5_cusum_changepoint"].oracle
+    runs = []
+    for threads in (1, 4):
+        con = duck_views(sf_dir)
+        con.execute(f"SET threads = {threads}")
+        runs.append(sorted(con.execute(oracle).fetchall()))
+    assert runs[0] == runs[1]

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
@@ -91,7 +92,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as e
 
     if vanilla:
@@ -99,17 +100,12 @@ def main() -> int:
         # get_spark's confs — proves each query passes in the session
         # the driver actually builds (ensure_engine_confs at the
         # source layer is the only thing allowed to touch confs)
-        import os
-
         from pyspark.sql import SparkSession
 
-        from reduction_dask_spark.session import driver_memory
+        from reduction_dask_spark.session import default_cpus, driver_memory
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or min(
-            os.cpu_count() or 4, 32
-        )
         spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
+            SparkSession.builder.master(f"local[{default_cpus()}]")
             .appName("compare-vanilla")
             .config("spark.driver.memory", driver_memory())
             .config("spark.ui.enabled", "false")

@@ -64,6 +64,10 @@ def dump(name: str, sf_dir: str) -> None:
         .appName(f"plan_identity_{name}")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
+        # metadata strings (file locations, pushed filters) are cut at
+        # 100 chars by default, before normalize() renumbers their ids,
+        # so the same plan can be cut at different points
+        .config("spark.sql.maxMetadataStringLength", "1000000")
         .getOrCreate()
     )
     load_all_operators()

@@ -25,7 +25,10 @@ The script puts its own checkout first on ``sys.path`` and
 ``PYTHONPATH``, so a timing A/B runs each checkout's copy in a fresh
 session, interleaved: ``python A/tools/query_profile.py NAME --reps 5``
 then the same from B. :func:`run_query` is also the timing loop of
-``tools/report.py``, ``tools/scale_probe.py`` and ``tools/sweep.py``.
+``tools/report.py`` and ``tools/scale_probe.py``, which put their rows
+into SCALING.md through ``scale_probe.upsert_scaling``, and of
+``tools/sweep.py``, which runs every query on the ×R replica that
+``scale_probe.replicate`` builds.
 
 ``--sf`` defaults to $SPARK_GRAFT_SF_DIR; the session honours
 $SPARK_GRAFT_CPUS.

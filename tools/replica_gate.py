@@ -1,9 +1,10 @@
 """×N-replica VALUE-equality gate.
 
-Clones the base-scale tables N times under shifted keys (the same
-FK-consistent key-shift model as tools/scale_probe.py: replica k adds
-k·OFFSET to every entity key, dimension tables and timestamps shared),
-then runs tools/compare.py's exact Spark↔DuckDB comparison over every
+Clones the base-scale tables of one family N times under shifted keys
+with tools/scale_probe.py's ``replicate`` (replica k adds k·OFFSET to
+every entity key; every other table is a symlink to the base; the
+replica is reused while its marker matches the base), then runs
+tools/compare.py's exact Spark↔DuckDB comparison over every
 registered oracle query in the selected family:
 
 - ``docs``  — queries whose oracle reads ONLY the documents table.
@@ -41,24 +42,20 @@ count so a parser regression that silently drops queries fails loudly.
 Usage: python tools/replica_gate.py [N] [workdir] [--family docs|tpch|events|emb]
                                     [--base SF_DIR]
        (defaults: N=12, workdir=/tmp/rds_replica_{family}{N},
-        base=$SPARK_GRAFT_REPLICA_BASE or /root/testdata/sf0.001)
+        base=/root/testdata/sf0.001)
 """
 
 from __future__ import annotations
 
-import os
 import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-# the FK-consistent key-shift model, shared with the ×R scale probe
-from tools.scale_probe import KEY_COLS, OFFSET  # noqa: E402
+from reduction_dask_spark.sources import TABLES  # noqa: E402
+from tools.scale_probe import replicate  # noqa: E402
 
-ALL_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 TPCH_TABLES = frozenset("region nation customer supplier part orders lineitem".split())
 TPCH_REPLICATED = frozenset("customer orders lineitem".split())
 
@@ -80,7 +77,7 @@ def referenced_tables(sql: str) -> set[str]:
     # alias token so `... AS part` can't read as a scan of `part`
     s = re.sub(r"\bAS\s+(\w+)\b(?!\s*\()", " AS _alias_", s, flags=re.IGNORECASE)
     return {
-        t for t in ALL_TABLES if t not in ctes and re.search(rf"\b{t}\b", s, re.IGNORECASE)
+        t for t in TABLES if t not in ctes and re.search(rf"\b{t}\b", s, re.IGNORECASE)
     }
 
 
@@ -115,65 +112,9 @@ def family_queries(family: str) -> list[str]:
     return out
 
 
-def build_replica_dir(n: int, workdir: str, base: str, tables: set[str]) -> None:
-    """Write ×n key-shifted replicas of ``tables`` into ``workdir``;
-    symlink every other table unchanged (compare.py registers views
-    for all ten).
-
-    A marker file records (base, n, OFFSET, replicated tables, base
-    parquet mtimes); any mismatch — a different --base, a different N,
-    regenerated base data — triggers a full rebuild instead of
-    silently reusing stale replicas (r11 ADVICE item: the old
-    exists-check would certify against an outdated workdir)."""
-    import json
-
-    import pandas as pd
-
-    marker = {
-        "base": os.path.realpath(base),
-        "n": n,
-        "offset": OFFSET,
-        "replicated": sorted(tables),
-        "base_mtimes": {
-            t: round(os.path.getmtime(f"{base}/{t}.parquet"), 3) for t in ALL_TABLES
-        },
-    }
-    marker_path = f"{workdir}/REPLICA_MARKER.json"
-    os.makedirs(workdir, exist_ok=True)
-    try:
-        with open(marker_path) as fh:
-            fresh = json.load(fh) == marker
-    except (OSError, ValueError):
-        fresh = False
-    if not fresh:
-        for t in ALL_TABLES:
-            dst = f"{workdir}/{t}.parquet"
-            if os.path.lexists(dst):
-                os.remove(dst)
-    for t in ALL_TABLES:
-        dst = f"{workdir}/{t}.parquet"
-        if os.path.lexists(dst):
-            continue
-        if t not in tables or not KEY_COLS[t]:
-            os.symlink(f"{base}/{t}.parquet", dst)
-            continue
-        df = pd.read_parquet(f"{base}/{t}.parquet")
-        reps = []
-        for k in range(n):
-            r = df.copy()
-            for col in KEY_COLS[t]:
-                r[col] = r[col] + k * OFFSET
-            reps.append(r)
-        pd.concat(reps, ignore_index=True).to_parquet(dst, index=False)
-    with open(marker_path, "w") as fh:
-        json.dump(marker, fh, indent=1)
-
-
 def main() -> None:
     argv = list(sys.argv[1:])
-    family, base = "docs", os.environ.get(
-        "SPARK_GRAFT_REPLICA_BASE", "/root/testdata/sf0.001"
-    )
+    family, base = "docs", "/root/testdata/sf0.001"
     if "--family" in argv:
         i = argv.index("--family")
         family = argv[i + 1]
@@ -191,7 +132,7 @@ def main() -> None:
         else {"embeddings", "documents"} if family == "emb"
         else set(TPCH_REPLICATED)
     )
-    build_replica_dir(n, workdir, base, replicated)
+    replicate(base, workdir, n, replicated)
     names = family_queries(family)
     print(f"replica gate: family={family}, N={n}, base={base}, {len(names)} oracle queries")
     # full classified membership into the log so a single query

@@ -1,5 +1,7 @@
-"""Generate SCALING.md's table: build + execute wall-clock vs scale
+"""Update SCALING.md's first table: build + execute wall-clock vs scale
 factor for headline queries, each timed by ``query_profile.run_query``.
+Each query's row is replaced in place (``scale_probe.upsert_scaling``),
+so every other line of the file stays as it was.
 
 Usage: python tools/report.py
 """
@@ -10,6 +12,8 @@ import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from tools.scale_probe import upsert_scaling  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 SCALING_QUERIES = [
@@ -35,6 +39,26 @@ SCALING_QUERIES = [
     "ss4_cosine_topk_ivf",
     "w2_rank_importance",
 ]
+HEADING = "# SCALING — wall-clock (s) vs scale factor"
+SECTION = [
+    f"{HEADING}, local[32]",
+    "",
+    "lineitem rows: sf0.001 ≈ 6k, sf0.01 ≈ 60k, sf0.1 ≈ 600k "
+    "(events 1k/10k/100k, documents 500/500/5000, embeddings 500/500/2000).",
+    "Flat curves = fixed Spark overhead dominates (good: the plan's "
+    "data-dependent cost is still small at sf0.1); the judge-relevant "
+    "signal is the RATIO sf0.1/sf0.01 staying far below the 10× data ratio.",
+    "",
+    "| query | sf0.001 | sf0.01 | sf0.1 | sf0.1/sf0.01 |",
+    "|---|---|---|---|---|",
+]
+
+
+def row(name: str, ts: list[float]) -> str:
+    ratio = ts[2] / ts[1] if ts[1] else float("nan")
+    return f"| {name} | {ts[0]:.2f} | {ts[1]:.2f} | {ts[2]:.2f} | {ratio:.2f}× |"
+
+
 def main() -> None:
     import __spark_entry__ as e
     from reduction_dask_spark.session import get_spark
@@ -51,34 +75,8 @@ def main() -> None:
             r = run_query(spark, qs[name], sf, f"{name}:{sf}")
             rows[name].append(r["build_s"] + r["execute_s"])
 
-    out = [
-        "# SCALING — wall-clock (s) vs scale factor, local[32]",
-        "",
-        "lineitem rows: sf0.001 ≈ 6k, sf0.01 ≈ 60k, sf0.1 ≈ 600k "
-        "(events 1k/10k/100k, documents 500/500/5000, embeddings 500/500/2000).",
-        "Flat curves = fixed Spark overhead dominates (good: the plan's "
-        "data-dependent cost is still small at sf0.1); the judge-relevant "
-        "signal is the RATIO sf0.1/sf0.01 staying far below the 10× data ratio.",
-        "",
-        "| query | sf0.001 | sf0.01 | sf0.1 | sf0.1/sf0.01 |",
-        "|---|---|---|---|---|",
-    ]
-    for name, ts in rows.items():
-        ratio = ts[2] / ts[1] if ts[1] else float("nan")
-        out.append(
-            f"| {name} | {ts[0]:.2f} | {ts[1]:.2f} | {ts[2]:.2f} | {ratio:.2f}× |"
-        )
-    # preserve appended scale-probe sections (tools/scale_probe.py)
-    # across regenerations — they are separate, expensive evidence
-    md = Path("SCALING.md")
-    probe_tail = ""
-    if md.exists():
-        old = md.read_text()
-        marker = "## scale probe"
-        if marker in old:
-            probe_tail = "\n" + old[old.index(marker):]
-    md.write_text("\n".join(out) + "\n" + probe_tail)
-    print("wrote SCALING.md")
+    upsert_scaling(HEADING, SECTION, [row(name, ts) for name, ts in rows.items()])
+    print(f"updated {len(rows)} rows in SCALING.md")
     spark.stop()
 
 

@@ -15,8 +15,11 @@ this to stay cheap).
 
 Usage: python tools/scale_probe.py [R] [query ...] [--nodup] [--reps N]
        (default R=10, full list)
-Writes the replicated tables once (cached across runs) and appends a
-"scale probe" section to SCALING.md.
+:func:`replicate` writes the replica once and reuses it while its
+marker matches the base (tools/sweep.py and tools/replica_gate.py
+build through it too); the probed rows go into SCALING.md's
+"scale probe ×R" table through :func:`upsert_scaling`, the file's one
+writer (tools/report.py uses it for the scale-factor table).
 
 --nodup (r11 verdict item 3): builds a DUP-FREE control corpus —
 document text in replica i is permuted by a per-replica coprime word
@@ -35,33 +38,32 @@ a value-equality gate (that is replica_gate's job).
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import sys
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SRC = "/root/testdata/sf0.1"
-# Shared with tools/replica_gate.py. OFFSET lies beyond every natural
-# key range in sf0.1 (and far beyond sf0.001's keys, which are < 10^7);
-# OFFSET % 5 == 0 preserves the doc_id mod-5 delta split dd12/dd13 use,
-# and OFFSET % 20 == 0 preserves era = vec_id % 20 and the vec_id % 1000
-# noise term, so replica rows carry identical supervised targets.
-OFFSET = 1_000_000_000
+# The key-shift model of the benchmark's ×10 workload. OFFSET lies
+# beyond every natural key range in sf0.1 (and far beyond sf0.001's
+# keys, which are < 10^7); OFFSET % 5 == 0 preserves the doc_id mod-5
+# delta split dd12/dd13 use, and OFFSET % 20 == 0 preserves
+# era = vec_id % 20 and the vec_id % 1000 noise term, so replica rows
+# carry identical supervised targets.
+from perfbench.datagen import KEY_COLS, OFFSET  # noqa: E402
+from reduction_dask_spark.sources import TABLES, file_signature  # noqa: E402
 
-# key columns to shift, per table (FK-consistent)
-KEY_COLS = {
-    "region": (),
-    "nation": (),
-    "customer": ("c_custkey",),
-    "supplier": ("s_suppkey",),
-    "part": ("p_partkey",),
-    "orders": ("o_orderkey", "o_custkey"),
-    "lineitem": ("l_orderkey", "l_partkey", "l_suppkey"),
-    "events": ("event_id", "user_id"),
-    "documents": ("doc_id",),
-    "embeddings": ("vec_id",),
-}
+SRC = "/root/testdata/sf0.1"
+SCALING = Path(__file__).resolve().parent.parent / "SCALING.md"
+MARKER = "REPLICA_MARKER.json"
+# every table with entity keys; region and nation are shared
+REPLICATED = tuple(t for t in TABLES if KEY_COLS[t])
 
 PROBE_QUERIES = [
     "q1_pricing_summary",
@@ -107,31 +109,119 @@ def _stride_permute(text: str, rep: int) -> str:
     return " ".join(w[i] for i in perm)
 
 
-def build(spark, r: int, dest: str, nodup: bool = False) -> None:
-    import pandas as pd
-    from pyspark.sql import functions as F
+def _replica(table: pa.Table, keys: tuple[str, ...], k: int, permute: bool) -> pa.Table:
+    """Replica ``k`` of ``table``: ``keys`` shifted by k·OFFSET and,
+    with ``permute``, the ``text`` column stride-permuted; same schema
+    and row order as ``table``."""
+    for name in keys:
+        i = table.schema.get_field_index(name)
+        shift = pa.scalar(k * OFFSET, table.schema.field(i).type)
+        table = table.set_column(i, table.schema.field(i), pc.add(table[name], shift))
+    if permute:
+        i = table.schema.get_field_index("text")
+        text = [_stride_permute(x, k) for x in table["text"].to_pylist()]
+        table = table.set_column(
+            i, table.schema.field(i), pa.array(text, table.schema.field(i).type)
+        )
+    return table
 
-    for table, keys in KEY_COLS.items():
-        out = f"{dest}/{table}.parquet"
-        if os.path.exists(out):
+
+def replicate(base: str, dest: str, n: int, tables, nodup: bool = False) -> bool:
+    """Make ``dest`` hold ×``n`` key-shifted replicas of ``tables`` read
+    from ``base``, and a symlink to every other table; return whether
+    it was built (False: the existing replica was reused as is).
+
+    Replica k adds k·OFFSET to the table's ``KEY_COLS``; with ``nodup``
+    the documents' text is also :func:`_stride_permute`-d per replica.
+    Each replicated table is one parquet file with its base's schema,
+    written replica by replica in base row order, so only one replica
+    is in memory at a time.
+
+    The build goes to ``dest + ".tmp"``, gets a marker (the base's
+    realpath, n, OFFSET, the replicated tables, nodup and the
+    ``sources.file_signature`` of every base table), and is renamed
+    into place. A ``dest`` whose marker matches is reused; any
+    mismatch (another base, n or table set, a base file rewritten in
+    place) rebuilds. A leftover ``.tmp`` is never read, only replaced.
+    A ``dest`` that holds anything but tables and the marker is not a
+    replica and is never deleted."""
+    base, dest = os.path.realpath(base), os.path.normpath(dest)
+    tables = sorted(tables)
+    # as json.load gives it back (tuples become lists), to compare equal
+    marker = json.loads(json.dumps({
+        "base": base,
+        "n": n,
+        "offset": OFFSET,
+        "tables": tables,
+        "nodup": nodup,
+        "signatures": {t: file_signature(f"{base}/{t}.parquet") for t in TABLES},
+    }))
+    try:
+        with open(os.path.join(dest, MARKER)) as fh:
+            if json.load(fh) == marker:
+                return False
+    except (OSError, ValueError):
+        pass
+    if os.path.isdir(dest):
+        stray = set(os.listdir(dest)) - {f"{t}.parquet" for t in TABLES} - {MARKER}
+        if stray:
+            raise SystemExit(f"{dest} holds {sorted(stray)}: not a replica, not replacing it")
+    tmp = dest + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    for t in TABLES:
+        src, out = f"{base}/{t}.parquet", f"{tmp}/{t}.parquet"
+        if t not in tables:
+            os.symlink(src, out)
             continue
-        df = spark.read.parquet(f"{SRC}/{table}.parquet")
-        if keys:
-            rep = spark.range(r).select(F.col("id").alias("_rep"))
-            df = df.crossJoin(rep)
-            for k in keys:
-                df = df.withColumn(k, F.col(k) + F.col("_rep") * OFFSET)
-            if nodup and table == "documents":
-                permute = F.pandas_udf(
-                    lambda t, rp: pd.Series(
-                        _stride_permute(x, int(i)) for x, i in zip(t, rp)
-                    ),
-                    "string",
+        table = pq.read_table(src)
+        with pq.ParquetWriter(out, table.schema) as writer:
+            for k in range(n):
+                writer.write_table(
+                    _replica(table, KEY_COLS[t], k, nodup and t == "documents")
                 )
-                df = df.withColumn("text", permute(F.col("text"), F.col("_rep")))
-            df = df.drop("_rep")
-        df.write.mode("overwrite").parquet(out)
-        print(f"built {table} x{1 if not keys else r}", flush=True)
+        print(f"built {t} x{n}", flush=True)
+    with open(os.path.join(tmp, MARKER), "w") as fh:
+        json.dump(marker, fh, indent=1)
+    shutil.rmtree(dest, ignore_errors=True)
+    os.rename(tmp, dest)
+    return True
+
+
+def _row_name(line: str) -> str:
+    return line.split("|")[1].strip()
+
+
+def upsert_scaling(heading: str, section: list[str], rows: list[str], md: Path = SCALING) -> None:
+    """Put ``rows`` (``| name | ...`` table lines) into the first table
+    under the first line of ``md`` that starts with ``heading``: a row
+    whose first cell names the same query is replaced in place, a new
+    name is appended after the table's last row, and every other byte
+    of the file stays as it was. Without such a heading, ``section``
+    (the heading line, any text and the table's header rows) and
+    ``rows`` are appended to the file as a new section."""
+    text = md.read_text()
+    lines = text.split("\n")
+    start = next((i for i, ln in enumerate(lines) if ln.startswith(heading)), None)
+    if start is None:
+        sep = "\n" if text and not text.endswith("\n") else ""
+        md.write_text(text + sep + "\n" + "\n".join([*section, *rows]) + "\n")
+        return
+    top = start + 1
+    while top < len(lines) and not lines[top].startswith(("|", "#")):
+        top += 1
+    if top == len(lines) or lines[top].startswith("#"):
+        raise ValueError(f"{md}: no table under {lines[start]!r}")
+    end = top
+    while end < len(lines) and lines[end].startswith("|"):
+        end += 1
+    new = {_row_name(r): r for r in rows}
+    for i in range(top + 2, end):  # past the header and separator rows
+        name = _row_name(lines[i])
+        if name in new:
+            lines[i] = new.pop(name)
+    lines[end:end] = new.values()
+    md.write_text("\n".join(lines))
 
 
 def main() -> None:
@@ -154,21 +244,19 @@ def main() -> None:
     r = int(argv[0]) if argv else 10
     probe = argv[1:] or PROBE_QUERIES
     dest = f"/tmp/rds_scale_x{r}" + ("_nodup" if nodup else "")
-    os.makedirs(dest, exist_ok=True)
+    replicate(SRC, dest, r, REPLICATED, nodup=nodup)
 
     import __spark_entry__ as e
     from reduction_dask_spark.session import get_spark
     from tools.query_profile import run_query
 
     spark = get_spark("scale_probe")
-    build(spark, r, dest, nodup=nodup)
-
     qs = e.queries()
     run_query(spark, qs["m1_spearman_by_era"], SRC, "warm-up")
 
     if nodup:
-        lines = [
-            "",
+        heading = f"## dup-free ×{r} control "
+        section = [
             f"## dup-free ×{r} control (scale_probe --nodup)",
             "",
             "Same key-shifted replication, but replica text is stride-",
@@ -181,8 +269,8 @@ def main() -> None:
             "|---|---|---|---|",
         ]
     else:
-        lines = [
-            "",
+        heading = f"## scale probe ×{r} "
+        section = [
             f"## scale probe ×{r} (replicated sf0.1 → ~{r*600_000//1_000_000}M "
             f"lineitem / {r*100}k events / {r*5}k documents / {r*2}k embeddings)",
             "",
@@ -195,52 +283,16 @@ def main() -> None:
             f"| query | sf0.1 | ×{r} | ratio |",
             "|---|---|---|---|",
         ]
+    rows = []
     for name in probe:
         ts = []
         for sf_dir in (SRC, dest):
             runs = [run_query(spark, qs[name], sf_dir, f"{name}:{sf_dir}:{i}") for i in range(reps)]
             ts.append(min(r["build_s"] + r["execute_s"] for r in runs))
-        lines.append(f"| {name} | {ts[0]:.2f} | {ts[1]:.2f} | {ts[1]/ts[0]:.2f}× |")
-        print(lines[-1], flush=True)
-
-    md = Path(__file__).resolve().parent.parent / "SCALING.md"
-    text = md.read_text()
-    marker = (
-        f"## dup-free ×{r} control " if nodup else f"## scale probe ×{r} "
-    )
-    if marker in text:
-        # merge into the existing same-R section: update/insert only the
-        # probed queries' rows, keep every other row and later sections
-        # (the old behavior truncated from the marker to EOF, silently
-        # deleting the other probe sections' evidence)
-        start = text.index(marker)
-        nxt = text.find("\n## ", start + 1)
-        end = len(text) if nxt == -1 else nxt + 1
-        section = text[start:end]
-        sec_lines = section.rstrip("\n").split("\n")
-        new_rows = {
-            ln.split("|")[1].strip(): ln
-            for ln in lines
-            if ln.startswith("| ") and not ln.startswith("| query |")
-        }
-        out_lines, seen = [], set()
-        for ln in sec_lines:
-            if ln.startswith("| ") and not ln.startswith("| query |"):
-                name = ln.split("|")[1].strip()
-                if name in new_rows:
-                    ln = new_rows[name]
-                    seen.add(name)
-            out_lines.append(ln)
-        out_lines.extend(ln for q, ln in new_rows.items() if q not in seen)
-        rebuilt = text[:start] + "\n".join(out_lines) + "\n"
-        rest = text[end:].lstrip("\n")
-        if rest:
-            rebuilt += "\n" + rest
-        md.write_text(rebuilt)
-        print("merged probe rows into existing SCALING.md section")
-    else:
-        md.write_text(text.rstrip("\n") + "\n\n" + "\n".join(lines) + "\n")
-        print("appended scale-probe section to SCALING.md")
+        rows.append(f"| {name} | {ts[0]:.2f} | {ts[1]:.2f} | {ts[1]/ts[0]:.2f}× |")
+        print(rows[-1], flush=True)
+    upsert_scaling(heading, section, rows)
+    print(f"updated SCALING.md: {len(rows)} rows under {heading.strip()!r}")
     spark.stop()
 
 

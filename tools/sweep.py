@@ -1,11 +1,13 @@
 """Whole-registry execution sweep: run EVERY registered query
-end-to-end against the replicated tables (tools/scale_probe.py builds
-them) and log per-query wall-clock — the "nothing in the registry
-breaks one decade up" evidence SCALING.md cites.
+end-to-end against the ×R replicated sf0.1 tables and log per-query
+wall-clock — the "nothing in the registry breaks one decade up"
+evidence SCALING.md cites.
 
 Resumable: completed queries are read back from the log and skipped,
 so the sweep can be re-invoked until it prints DONE (useful under
 session/time caps). A FAIL line is retried on the next invocation.
+The replica is tools/scale_probe.py's: ``replicate`` builds it on the
+first run and reuses it while its marker matches the base.
 
 Usage: python tools/sweep.py [R] [logfile]      (default R=10,
        log /tmp/rds_sweep_x{R}.log)
@@ -13,19 +15,19 @@ Usage: python tools/sweep.py [R] [logfile]      (default R=10,
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from tools.scale_probe import REPLICATED, SRC, replicate  # noqa: E402
 
 
 def main() -> None:
     r = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     log = Path(sys.argv[2] if len(sys.argv) > 2 else f"/tmp/rds_sweep_x{r}.log")
     dest = f"/tmp/rds_scale_x{r}"
-    if not os.path.isdir(dest):
-        raise SystemExit(f"{dest} missing — run tools/scale_probe.py {r} first")
+    replicate(SRC, dest, r, REPLICATED)
 
     done = set()
     if log.exists():
