@@ -3,7 +3,7 @@
 Several operators MUST materialize an intermediate exactly once and
 have every consumer branch read that one materialization:
 
-- global_rank / global_prefix_agg pin the pid-stamped range exchange
+- global_prefix_agg (global_rank through it) pins the pid-stamped range exchange
   (the pid-consistency contract — see operators/relational.py);
 - the dedup/graph family pins the shingle index and its exact-dup-
   representative slice, which feed both candidate generation and the
@@ -233,7 +233,3 @@ def release_pinned() -> int:
                     )
     return len(drained) + len(barriered)
 
-
-def pinned_count() -> int:
-    with _LOCK:
-        return len(_PINNED)

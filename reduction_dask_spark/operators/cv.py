@@ -67,11 +67,6 @@ def kfold_era(
     return df.join(F.broadcast(folds), era_col)
 
 
-def train_test_fold(df: DataFrame, fold: int) -> tuple[DataFrame, DataFrame]:
-    """train = eras outside the fold, test = eras inside (utils.py:34-41)."""
-    return df.filter(F.col("fold") != fold), df.filter(F.col("fold") == fold)
-
-
 def _fold_sql(k: int, seed: int = 42) -> str:
     h = md5i_sql(f"'{seed}:' || CAST(era AS VARCHAR)")
     return f"""

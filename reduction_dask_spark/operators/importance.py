@@ -269,30 +269,6 @@ def x4_linear_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------ X4b
 
 
-def stump_shap_closed_form(
-    stumps: list[tuple[int, float, float, float]],
-    x: "np.ndarray",
-    background: "np.ndarray",
-) -> "np.ndarray":
-    """Exact interventional SHAP of a depth-1 stump ensemble at point x
-    against a background sample, in closed form.
-
-    A stump s = (f, thr, vl, vr) depends on feature f ALONE, so its
-    Shapley attribution lands entirely on f:
-        φ_f += s(x_f) − E_b[s(b_f)]
-    and the ensemble's SHAP is the sum over stumps (Shapley values are
-    additive across additive model components). This is TreeExplainer's
-    interventional value specialized to depth 1 — exact, no
-    approximation (parity-tested against brute-force subset
-    enumeration in tests/test_round5_ops.py)."""
-    phi = np.zeros(len(x))
-    for f, thr, vl, vr in stumps:
-        sx = vl if x[f] <= thr else vr
-        eb = float(np.where(background[:, f] <= thr, vl, vr).mean())
-        phi[f] += sx - eb
-    return phi
-
-
 def tree_shap_scores(
     spark: SparkSession, sf_dir: str, n_rows: int = 1000, k: int = K_FOLDS
 ) -> DataFrame:

@@ -10,10 +10,12 @@ chunking the reference hand-codes is free (partitions), and the
 memory choreography of T6 (psutil gather, tuners.py:673-705) is
 subsumed by lazy pipelining + spill.
 
-The reducer kernel here is PCA by numpy SVD (deterministic sign
-convention). sklearn/umap kernels from §2.14 plug into the same two
-functions unchanged — the operator is the *pattern*, the kernel is
-swappable (reference ships them as arbitrary pickled estimators).
+Every subsample fit here takes one path: :func:`head_sample` collects
+the pinned head, :func:`fit_embedder` maps (head, kernel, width) to a
+numpy embed fn, and :func:`_oos_transform` runs that fn over the full
+table. sklearn/umap kernels from §2.14 would plug into the dispatch
+unchanged — the operator is the *pattern*, the kernel is swappable
+(the reference ships them as arbitrary pickled estimators).
 """
 
 from __future__ import annotations
@@ -28,14 +30,11 @@ from ..ml import (
     ERA_DOMAIN,
     arrow_matrix,
     fit_fold_models,
-    fold_suffstats,
     score_by_group,
     split_suffstats,
     suffstat_vector,
     sum_partials,
     supervised_frame,
-    with_prediction,
-    coef_frame,
 )
 from ..registry import query
 from ..session import local_frame
@@ -45,6 +44,34 @@ from .text import QUALITY_OF_TOKS_SQL
 FIT_ROWS = 200
 N_COMPONENTS = 2
 SEED = 42
+LMDS_LANDMARKS = 100
+
+
+def head_sample(df: DataFrame) -> np.ndarray:
+    """The pinned head every subsample fit reads (utils.py:151
+    `train_x[:num_fit_rows]`): the first max(FIT_ROWS, LMDS_LANDMARKS)
+    rows of a supervised frame by vec_id, as a float64 matrix. PCA
+    fits on its first FIT_ROWS rows, the landmark kernels on its first
+    LMDS_LANDMARKS. orderBy+limit plans a TakeOrderedAndProject
+    (partial per-partition top-k), not a single-partition global
+    row_number."""
+    head = (
+        df.orderBy("vec_id")
+        .limit(max(FIT_ROWS, LMDS_LANDMARKS))
+        .select("features")
+        .toPandas()
+    )
+    return np.stack(head["features"].to_numpy()).astype(np.float64)
+
+
+def _pin_signs(V: np.ndarray) -> np.ndarray:
+    """Deterministic eigenvector sign, in place: flip each column of V
+    so its largest-|loading| coordinate is positive. Returns V."""
+    for i in range(V.shape[1]):
+        j = int(np.argmax(np.abs(V[:, i])))
+        if V[j, i] < 0:
+            V[:, i] = -V[:, i]
+    return V
 
 
 def _fit_pca_math(X: np.ndarray, n_components: int):
@@ -52,30 +79,22 @@ def _fit_pca_math(X: np.ndarray, n_components: int):
     mu = X.mean(axis=0)
     _, _, vt = np.linalg.svd(X - mu, full_matrices=False)
     comps = vt[:n_components]
-    # deterministic sign: largest-|loading| coordinate positive
-    for i in range(len(comps)):
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i, j] < 0:
-            comps[i] = -comps[i]
+    comps = _pin_signs(comps.T).T
     return mu, comps
 
 
-def fit_pca(spark: SparkSession, sf_dir: str, n_components: int, fit_rows: int = FIT_ROWS):
-    """T7 phase 1: fit on a pinned head subsample, driver-side
-    (utils.py:151 `train_x[:num_fit_rows]`). Returns (mean, components)."""
-    df = supervised_frame(spark, sf_dir)
-    # pinned head via orderBy+limit → TakeOrderedAndProject (partial
-    # per-partition top-k), not a single-partition global row_number
-    head = df.orderBy("vec_id").limit(fit_rows).select("features").toPandas()
-    X = np.stack(head["features"].to_numpy()).astype(np.float64)
-    return _fit_pca_math(X, n_components)
+def fit_pca(spark: SparkSession, sf_dir: str, n_components: int):
+    """T7 phase 1: fit on the pinned head subsample, driver-side.
+    Returns (mean, components)."""
+    H = head_sample(supervised_frame(spark, sf_dir))
+    return _fit_pca_math(H[:FIT_ROWS], n_components)
 
 
 def pca_embed_fn(mu: np.ndarray, comps: np.ndarray):
     """Numpy PCA embed for the _oos_transform shell. Accumulates the
     projection LEFT-TO-RIGHT per feature — the identical IEEE-double
     op sequence as pca_transform's zip_with/aggregate fold — so the
-    sweep's batched and looped paths agree bit-for-bit."""
+    sweep's PCA configs equal t7's projection bit-for-bit."""
     biases = np.array([float(mu @ c) for c in comps])
 
     def embed(X: np.ndarray) -> np.ndarray:
@@ -132,11 +151,9 @@ def t7_fit_transform_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the out-of-sample transform is y(x) = ½·VΛ^(-1/2)ᵀ(δ̄ − δ(x)) — per
 # row, distances to L landmarks then a k×L matmul, computed in an
 # Arrow-batched mapInPandas with the landmark matrix broadcast by
-# closure. Metric is pluggable; squared L1 here, so the embedding is
-# NOT a linear projection of the features (a genuine nonlinear kernel,
-# not PCA in disguise).
-
-LMDS_LANDMARKS = 100
+# closure. The distance is squared L1, so the embedding is NOT a
+# linear projection of the features (a genuine nonlinear kernel, not
+# PCA in disguise).
 
 
 def _pairwise_sq(metric: str, A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -151,25 +168,8 @@ def _pairwise_sq(metric: str, A: np.ndarray, B: np.ndarray) -> np.ndarray:
     raise ValueError(f"unknown metric: {metric}")
 
 
-def fit_lmds(
-    spark: SparkSession,
-    sf_dir: str,
-    n_components: int,
-    metric: str = "l1",
-    n_landmarks: int = LMDS_LANDMARKS,
-):
-    """Landmark-MDS fit on a pinned head subsample: classical-MDS
-    eigendecomposition of the landmark distance matrix. Returns
-    (landmarks L×d, δ̄ column means, projection VΛ^(-1/2) L×k)."""
-    df = supervised_frame(spark, sf_dir)
-    head = df.orderBy("vec_id").limit(n_landmarks).select("features").toPandas()
-    L = np.stack(head["features"].to_numpy()).astype(np.float64)
-    D = _pairwise_sq(metric, L, L)
-    return L, *(_cmds_from_sq(D, n_components))
-
-
 def _cmds_from_sq(D: np.ndarray, n_components: int):
-    """Classical-MDS eigenblock shared by fit_lmds / fit_lisomap:
+    """Classical-MDS eigenblock shared by landmark MDS and Isomap:
     double-center the squared-distance matrix, top eigenpairs,
     deterministic sign, VΛ^(-1/2). Returns (δ̄ column means, pseudo)."""
     n = len(D)
@@ -179,42 +179,25 @@ def _cmds_from_sq(D: np.ndarray, n_components: int):
     order = np.argsort(vals)[::-1][:n_components]
     vals, vecs = vals[order], vecs[:, order]
     vals = np.maximum(vals, 1e-12)
-    # deterministic sign: largest-|loading| coordinate positive
-    for i in range(vecs.shape[1]):
-        j = int(np.argmax(np.abs(vecs[:, i])))
-        if vecs[j, i] < 0:
-            vecs[:, i] = -vecs[:, i]
+    _pin_signs(vecs)
     pseudo = vecs / np.sqrt(vals)  # L×k, the VΛ^(-1/2) out-of-sample map
     return D.mean(axis=0), pseudo
 
 
 def lmds_embed_fn(
-    landmarks: np.ndarray, delta_mean: np.ndarray, pseudo: np.ndarray,
-    metric: str = "l1", delta_fn=None,
+    landmarks: np.ndarray, delta_mean: np.ndarray, pseudo: np.ndarray, delta_fn=None,
 ):
-    """Numpy Nyström out-of-sample embed (lmds_transform's kernel) as
-    a standalone fn for the batched sweep."""
+    """Numpy Nyström out-of-sample embed: per Arrow batch, squared
+    distances to the L landmarks + one (n×L)·(L×k) matmul. Only the
+    KB-sized landmark matrix ships to executors. ``delta_fn``
+    overrides the squared-distance computation (Isomap passes the
+    graph-geodesic version); default is squared L1."""
 
     def embed(X: np.ndarray) -> np.ndarray:
-        delta = delta_fn(X) if delta_fn is not None else _pairwise_sq(metric, X, landmarks)
+        delta = delta_fn(X) if delta_fn is not None else _pairwise_sq("l1", X, landmarks)
         return 0.5 * (delta_mean[None, :] - delta) @ pseudo
 
     return embed
-
-
-def lmds_transform(
-    df: DataFrame, landmarks: np.ndarray, delta_mean: np.ndarray, pseudo: np.ndarray,
-    metric: str = "l1", delta_fn=None,
-) -> DataFrame:
-    """Distributed Nyström out-of-sample embedding: per Arrow batch,
-    squared distances to the L landmarks + one (n×L)·(L×k) matmul.
-    Only the KB-sized landmark matrix ships to executors. ``delta_fn``
-    overrides the squared-distance computation (t9b passes the
-    graph-geodesic version); default is _pairwise_sq(metric). Routed
-    through the shared _oos_transform mapInPandas shell."""
-    return _oos_transform(
-        df, lmds_embed_fn(landmarks, delta_mean, pseudo, metric, delta_fn), pseudo.shape[1]
-    )
 
 
 @query(
@@ -229,12 +212,17 @@ def lmds_transform(
     tags=("reduction", "ml"),
 )
 def t9_landmark_mds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    Lm, dmean, pseudo = fit_lmds(spark, sf_dir, N_COMPONENTS)
     df = supervised_frame(spark, sf_dir)
-    return lmds_transform(df, Lm, dmean, pseudo)
+    embed = fit_embedder(head_sample(df), "lmds_l1", N_COMPONENTS)
+    return _oos_transform(df, embed, N_COMPONENTS)
 
 
 # --------------------------------- geodesic kernel: landmark Isomap
+#
+# The reference's headline distributed transform is Isomap (nb cells
+# 56-68, tuners.py:149-373): a kNN graph over the landmarks,
+# shortest-path geodesics, then the SAME classical-MDS eigenproblem as
+# landmark MDS on the squared geodesic matrix.
 
 ISOMAP_KNN = 8
 
@@ -262,28 +250,8 @@ def _geodesic_matrix(L: np.ndarray, knn: int = ISOMAP_KNN) -> np.ndarray:
     return W
 
 
-def fit_lisomap(
-    spark: SparkSession,
-    sf_dir: str,
-    n_components: int,
-    n_landmarks: int = LMDS_LANDMARKS,
-    knn: int = ISOMAP_KNN,
-):
-    """Landmark-Isomap fit (the reference's headline distributed
-    transform is Isomap — nb cells 56-68, tuners.py:149-373): kNN
-    graph over the pinned landmark subsample, shortest-path geodesics,
-    then the SAME classical-MDS eigenproblem as fit_lmds on the
-    squared geodesic matrix. Returns (landmarks, geodesics G, δ̄,
-    VΛ^(-1/2))."""
-    df = supervised_frame(spark, sf_dir)
-    head = df.orderBy("vec_id").limit(n_landmarks).select("features").toPandas()
-    L = np.stack(head["features"].to_numpy()).astype(np.float64)
-    G = _geodesic_matrix(L, knn)
-    return L, G, *(_cmds_from_sq(G * G, n_components))
-
-
 def geodesic_delta_fn(landmarks: np.ndarray, G: np.ndarray):
-    """Out-of-sample squared geodesics for lmds_transform: the standard
+    """Out-of-sample squared geodesics for lmds_embed_fn: the standard
     landmark-Isomap extension d_geo(x, l) = min_j (‖x − L_j‖ + G[j, l])
     — an (n×L) ⊗ (L×L) min-plus product, evaluated as L rank-1 minima
     so batch memory stays n×L."""
@@ -314,9 +282,9 @@ def geodesic_delta_fn(landmarks: np.ndarray, G: np.ndarray):
     tags=("reduction", "ml"),
 )
 def t9b_landmark_isomap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    L, G, dmean, pseudo = fit_lisomap(spark, sf_dir, N_COMPONENTS)
     df = supervised_frame(spark, sf_dir)
-    return lmds_transform(df, L, dmean, pseudo, delta_fn=geodesic_delta_fn(L, G))
+    embed = fit_embedder(head_sample(df), "lisomap_l2", N_COMPONENTS)
+    return _oos_transform(df, embed, N_COMPONENTS)
 
 
 # --------------------------- local-linear kernel: landmark LLE
@@ -337,32 +305,17 @@ def _lle_local_weights(Z: np.ndarray) -> np.ndarray:
     return w / w.sum()
 
 
-def fit_llle(
-    spark: SparkSession,
-    sf_dir: str,
-    n_components: int,
-    n_landmarks: int = LMDS_LANDMARKS,
-    knn: int = LLE_KNN,
-):
+def _fit_llle_math(L: np.ndarray, n_components: int) -> np.ndarray:
     """Landmark LLE fit — the last buildable reference DR family
-    (LocallyLinearEmbedding sweeps, /root/reference nb cells 69-79;
-    tuners.py:149-373 takes any reducer): on the pinned landmark
-    subsample, solve each point's local reconstruction weights over
-    its kNN, then take the bottom non-constant eigenvectors of
-    M = (I−W)ᵀ(I−W) as the landmark embedding. All O(L²)–O(L³) work is
-    driver-side on the bounded subsample, exactly like fit_lmds /
-    fit_lisomap. Returns (landmarks L×d, landmark embedding Y L×k)."""
-    df = supervised_frame(spark, sf_dir)
-    head = df.orderBy("vec_id").limit(n_landmarks).select("features").toPandas()
-    L = np.stack(head["features"].to_numpy()).astype(np.float64)
-    return L, _fit_llle_math(L, n_components, knn)
-
-
-def _fit_llle_math(L: np.ndarray, n_components: int, knn: int) -> np.ndarray:
-    """Driver-side landmark-LLE fit math on a collected landmark set."""
+    (LocallyLinearEmbedding sweeps, nb cells 69-79; tuners.py:149-373
+    takes any reducer): solve each landmark's local reconstruction
+    weights over its LLE_KNN neighbors, then take the bottom
+    non-constant eigenvectors of M = (I−W)ᵀ(I−W) as the landmark
+    embedding Y (L×k). All O(L²)–O(L³) work is driver-side on the
+    bounded subsample."""
     n = len(L)
     d = np.sqrt(_pairwise_sq("l2", L, L))
-    nn = np.argsort(d, axis=1)[:, 1 : knn + 1]
+    nn = np.argsort(d, axis=1)[:, 1 : LLE_KNN + 1]
     W = np.zeros((n, n))
     for i in range(n):
         W[i, nn[i]] = _lle_local_weights(L[nn[i]] - L[i])
@@ -372,36 +325,20 @@ def _fit_llle_math(L: np.ndarray, n_components: int, knn: int) -> np.ndarray:
     # ascending eigh order: index 0 is the constant mode (val ≈ 0);
     # the embedding is the next n_components eigenvectors, scaled by
     # sqrt(n) (unit-covariance convention)
-    Y = vecs[:, 1 : n_components + 1] * np.sqrt(n)
-    for i in range(Y.shape[1]):
-        j = int(np.argmax(np.abs(Y[:, i])))
-        if Y[j, i] < 0:
-            Y[:, i] = -Y[:, i]
-    return Y
+    return _pin_signs(vecs[:, 1 : n_components + 1] * np.sqrt(n))
 
 
-def lle_transform(
-    df: DataFrame, landmarks: np.ndarray, Y: np.ndarray, knn: int = LLE_KNN
-) -> DataFrame:
-    """Distributed LLE out-of-sample extension (Saul & Roweis 2003):
-    per Arrow batch, each row finds its kNN among the LANDMARKS,
-    solves the same regularized local Gram system for reconstruction
-    weights, and embeds as the weight-combination of the landmark
-    embedding y(x) = Σ_j w_j·Y[j]. Only (landmarks, Y) — KBs — ship
-    to executors; per-row cost is one k×k solve, nothing scales with
-    corpus size but the scan. Routed through the shared
-    _oos_transform mapInPandas shell."""
-    return _oos_transform(df, lle_embed_fn(landmarks, Y, knn), Y.shape[1])
-
-
-def lle_embed_fn(landmarks: np.ndarray, Y: np.ndarray, knn: int = LLE_KNN):
-    """Numpy LLE out-of-sample embed (lle_transform's kernel) as a
-    standalone fn for the batched sweep."""
+def lle_embed_fn(landmarks: np.ndarray, Y: np.ndarray):
+    """Numpy LLE out-of-sample extension (Saul & Roweis 2003): each row
+    finds its LLE_KNN nearest LANDMARKS, solves the same regularized
+    local Gram system for reconstruction weights, and embeds as the
+    weight-combination of the landmark embedding y(x) = Σ_j w_j·Y[j].
+    Per-row cost is one k×k solve."""
     k = Y.shape[1]
 
     def embed(X: np.ndarray) -> np.ndarray:
         d2 = _pairwise_sq("l2", X, landmarks)
-        idx = np.argsort(d2, axis=1)[:, :knn]
+        idx = np.argsort(d2, axis=1)[:, :LLE_KNN]
         out_y = np.empty((len(X), k))
         for r in range(len(X)):
             w = _lle_local_weights(landmarks[idx[r]] - X[r])
@@ -428,9 +365,9 @@ def lle_embed_fn(landmarks: np.ndarray, Y: np.ndarray, knn: int = LLE_KNN):
     tags=("reduction", "ml"),
 )
 def t9c_landmark_lle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    L, Y = fit_llle(spark, sf_dir, N_COMPONENTS)
     df = supervised_frame(spark, sf_dir)
-    return lle_transform(df, L, Y)
+    embed = fit_embedder(head_sample(df), "llle_l2", N_COMPONENTS)
+    return _oos_transform(df, embed, N_COMPONENTS)
 
 
 # ------------------------------- shared out-of-sample mapper shell
@@ -481,28 +418,13 @@ def _rbf_gamma(L: np.ndarray) -> float:
     return 1.0 / (L.shape[1] * v) if v > 0 else 1.0
 
 
-def fit_lkpca(
-    spark: SparkSession,
-    sf_dir: str,
-    n_components: int,
-    n_landmarks: int = LMDS_LANDMARKS,
-):
-    """Nyström landmark KernelPCA fit — the reference's KernelPCA
-    sweep slot (/root/reference nb cells 80-90; tuners.py:149-373
-    accepts any reducer) on the same subsample-fit / broadcast /
-    distributed-transform path as fit_lmds: RBF kernel matrix over
-    the pinned landmark set, double-centering (Schölkopf's K̃ = JKJ),
-    driver eigensolve, α = VΛ^(−1/2) as the out-of-sample projection
-    of centered kernel vectors. Returns (landmarks, γ, column means
-    of K, grand mean of K, α)."""
-    df = supervised_frame(spark, sf_dir)
-    head = df.orderBy("vec_id").limit(n_landmarks).select("features").toPandas()
-    L = np.stack(head["features"].to_numpy()).astype(np.float64)
-    return L, *(_fit_lkpca_math(L, n_components))
-
-
 def _fit_lkpca_math(L: np.ndarray, n_components: int):
-    """Driver-side Nyström-KPCA fit math on a collected landmark set."""
+    """Nyström landmark KernelPCA fit — the reference's KernelPCA sweep
+    slot (nb cells 80-90; tuners.py:149-373 accepts any reducer): RBF
+    kernel matrix over the landmark set, double-centering (Schölkopf's
+    K̃ = JKJ), driver eigensolve, α = VΛ^(−1/2) as the out-of-sample
+    projection of centered kernel vectors. Returns (γ, column means of
+    K, grand mean of K, α)."""
     gamma = _rbf_gamma(L)
     K = np.exp(-gamma * _pairwise_sq("l2", L, L))
     n = len(L)
@@ -512,10 +434,7 @@ def _fit_lkpca_math(L: np.ndarray, n_components: int):
     order = np.argsort(vals)[::-1][:n_components]
     vals, vecs = vals[order], vecs[:, order]
     vals = np.maximum(vals, 1e-12)
-    for i in range(vecs.shape[1]):
-        j = int(np.argmax(np.abs(vecs[:, i])))
-        if vecs[j, i] < 0:
-            vecs[:, i] = -vecs[:, i]
+    _pin_signs(vecs)
     alpha = vecs / np.sqrt(vals)
     return gamma, K.mean(axis=0), float(K.mean()), alpha
 
@@ -557,9 +476,9 @@ def kpca_embed_fn(
     tags=("reduction", "ml"),
 )
 def t9d_landmark_kpca(spark: SparkSession, sf_dir: str) -> DataFrame:
-    L, gamma, cm, gm, alpha = fit_lkpca(spark, sf_dir, N_COMPONENTS)
     df = supervised_frame(spark, sf_dir)
-    return _oos_transform(df, kpca_embed_fn(L, gamma, cm, gm, alpha), N_COMPONENTS)
+    embed = fit_embedder(head_sample(df), "lkpca_rbf", N_COMPONENTS)
+    return _oos_transform(df, embed, N_COMPONENTS)
 
 
 # ------- neighbor-graph kernel: landmark spectral embedding (UMAP slot)
@@ -567,36 +486,21 @@ def t9d_landmark_kpca(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPEC_KNN = 8
 
 
-def fit_lspectral(
-    spark: SparkSession,
-    sf_dir: str,
-    n_components: int,
-    n_landmarks: int = LMDS_LANDMARKS,
-    knn: int = SPEC_KNN,
-):
+def _fit_lspectral_math(L: np.ndarray, n_components: int):
     """Landmark spectral embedding (Laplacian eigenmaps) — the honest
     buildable stand-in for the reference's UMAP sweep (nb cells
     104-114; the umap package is container-absent, documented in
     ROADMAP.md): UMAP-SHAPED (a kNN-graph embedding judged by the
     same coranking trust column), not UMAP. Fit: symmetrized kNN
-    graph over the pinned landmark set with heat-kernel weights at
-    the median-kNN-distance bandwidth, normalized Laplacian
+    graph over the landmark set with heat-kernel weights at the
+    median-kNN-distance bandwidth, normalized Laplacian
     L_sym = I − D^(−1/2) W D^(−1/2), bottom non-constant eigenvectors
     mapped back through D^(−1/2) (the generalized eigenproblem
-    Lu = λDu), unit-norm·√n scaling like fit_llle. Returns
-    (landmarks, σ, Y landmark embedding)."""
-    df = supervised_frame(spark, sf_dir)
-    head = df.orderBy("vec_id").limit(n_landmarks).select("features").toPandas()
-    L = np.stack(head["features"].to_numpy()).astype(np.float64)
-    return L, *(_fit_lspectral_math(L, n_components, knn))
-
-
-def _fit_lspectral_math(L: np.ndarray, n_components: int, knn: int = SPEC_KNN):
-    """Driver-side landmark-spectral fit math on a collected landmark
-    set; returns (σ, Y landmark embedding)."""
+    Lu = λDu), unit-norm·√n scaling like LLE. Returns (σ, Y landmark
+    embedding)."""
     n = len(L)
     d = np.sqrt(_pairwise_sq("l2", L, L))
-    nn = np.argsort(d, axis=1)[:, 1 : knn + 1]
+    nn = np.argsort(d, axis=1)[:, 1 : SPEC_KNN + 1]
     sigma = float(np.median(d[np.arange(n)[:, None], nn]))
     sigma = sigma if sigma > 0 else 1.0
     W = np.zeros((n, n))
@@ -613,27 +517,21 @@ def _fit_lspectral_math(L: np.ndarray, n_components: int, knn: int = SPEC_KNN):
     # eigenvectors, then normalize each to ‖·‖=√n
     U = vecs[:, 1 : n_components + 1] * dinv[:, None]
     U = U / np.linalg.norm(U, axis=0) * np.sqrt(n)
-    for i in range(U.shape[1]):
-        j = int(np.argmax(np.abs(U[:, i])))
-        if U[j, i] < 0:
-            U[:, i] = -U[:, i]
-    return sigma, U
+    return sigma, _pin_signs(U)
 
 
-def spectral_embed_fn(
-    landmarks: np.ndarray, sigma: float, Y: np.ndarray, knn: int = SPEC_KNN
-):
+def spectral_embed_fn(landmarks: np.ndarray, sigma: float, Y: np.ndarray):
     """Out-of-sample extension for _oos_transform: each row embeds as
-    the heat-kernel-affinity-weighted average of its kNN landmarks'
-    embeddings — the same neighbor-interpolation UMAP's transform()
-    performs, and the natural extension for an affinity-graph
-    embedding. Per-row cost O(L) distances + O(knn·k); a landmark's
-    own kNN set contains itself at weight 1, so landmarks land near
-    their fitted coordinates."""
+    the heat-kernel-affinity-weighted average of its SPEC_KNN nearest
+    landmarks' embeddings — the same neighbor-interpolation UMAP's
+    transform() performs, and the natural extension for an
+    affinity-graph embedding. Per-row cost O(L) distances + O(knn·k);
+    a landmark's own kNN set contains itself at weight 1, so landmarks
+    land near their fitted coordinates."""
 
     def embed(X: np.ndarray) -> np.ndarray:
         d2 = _pairwise_sq("l2", X, landmarks)
-        idx = np.argsort(d2, axis=1)[:, :knn]
+        idx = np.argsort(d2, axis=1)[:, :SPEC_KNN]
         rows = np.arange(len(X))[:, None]
         a = np.exp(-d2[rows, idx] / (2.0 * sigma * sigma))
         a = a / np.maximum(a.sum(axis=1, keepdims=True), 1e-300)
@@ -658,166 +556,64 @@ def spectral_embed_fn(
     tags=("reduction", "ml"),
 )
 def t9e_spectral_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    L, sigma, Y = fit_lspectral(spark, sf_dir, N_COMPONENTS)
     df = supervised_frame(spark, sf_dir)
-    return _oos_transform(df, spectral_embed_fn(L, sigma, Y), N_COMPONENTS)
+    embed = fit_embedder(head_sample(df), "lspec_l2", N_COMPONENTS)
+    return _oos_transform(df, embed, N_COMPONENTS)
 
 
-def reduction_sweep(
-    spark: SparkSession,
-    sf_dir: str,
-    configs=(
-        ("pca", 2), ("pca", 4), ("pca", 8), ("pca", 16),
-        ("lmds_l1", 2), ("lmds_l1", 4),
-        ("lisomap_l2", 2), ("lisomap_l2", 4),
-        ("llle_l2", 2), ("llle_l2", 4),
-        ("lkpca_rbf", 2), ("lkpca_rbf", 4),
-        ("lspec_l2", 2), ("lspec_l2", 4),
-    ),
-    lam: float = 1.0,
-    k: int = 5,
-) -> DataFrame:
-    """T3 tune_reduction_dask (tuners.py:149-252): sweep reducer KERNEL
-    × hyperparameters; per config: transform → era-CV model fit/score.
-    Failed configs get a status column, not index bookkeeping
-    (reference drops Nones with positional arithmetic, tuners.py:219-248)."""
-    results = []
-    for kernel, nc in configs:
-        try:
-            base = supervised_frame(spark, sf_dir)
-            if kernel == "pca":
-                mu, comps = fit_pca(spark, sf_dir, nc)
-                cols = [f"mc{i + 1}" for i in range(nc)]
-                # numpy embed (left-fold op order = pca_transform's
-                # zip_with fold) through the shared shell, so the
-                # looped and batched sweeps agree bit-for-bit; the
-                # JVM-expression path stays t7's
-                reduced_wide = _oos_transform(base, pca_embed_fn(mu, comps), nc)
-            elif kernel == "lisomap_l2":
-                Lm, G, dmean, pseudo = fit_lisomap(spark, sf_dir, nc)
-                cols = [f"mc{i + 1}" for i in range(nc)]
-                reduced_wide = lmds_transform(
-                    base, Lm, dmean, pseudo, delta_fn=geodesic_delta_fn(Lm, G)
-                )
-            elif kernel == "llle_l2":
-                Lm, Yl = fit_llle(spark, sf_dir, nc)
-                cols = [f"mc{i + 1}" for i in range(nc)]
-                reduced_wide = lle_transform(base, Lm, Yl)
-            elif kernel == "lkpca_rbf":
-                Lm, gam, cm, gm, alpha = fit_lkpca(spark, sf_dir, nc)
-                cols = [f"mc{i + 1}" for i in range(nc)]
-                reduced_wide = _oos_transform(
-                    base, kpca_embed_fn(Lm, gam, cm, gm, alpha), nc
-                )
-            elif kernel == "lspec_l2":
-                Lm, sig, Ys = fit_lspectral(spark, sf_dir, nc)
-                cols = [f"mc{i + 1}" for i in range(nc)]
-                reduced_wide = _oos_transform(
-                    base, spectral_embed_fn(Lm, sig, Ys), nc
-                )
-            else:
-                Lm, dmean, pseudo = fit_lmds(spark, sf_dir, nc)
-                cols = [f"mc{i + 1}" for i in range(nc)]
-                reduced_wide = lmds_transform(base, Lm, dmean, pseudo)
-            # barriered (r11): three actions read the transformed
-            # relation per config (suffstats pass, CV score collect,
-            # coranking trust) — materialize the transform once
-            # instead of re-running it per action (caching.barrier)
-            from ..caching import barrier
-
-            reduced_wide = barrier(reduced_wide.select("vec_id", "era", "y", *cols))
-            reduced = reduced_wide.select(
-                "vec_id",
-                "era",
-                F.array(*[F.col(c) for c in cols]).alias("features"),
-                "y",
-            )
-            # static era domain, IDENTICAL to the batched path's
-            # kfold_era call (r12 ADVICE: on a corpus missing an era
-            # a distinct-scan-derived domain would split folds
-            # differently between the two paths, silently breaking
-            # the loop≡batched value contract the parity test pins)
-            folded = kfold_era(reduced, "era", k=k, eras=list(ERA_DOMAIN))
-            stats = fold_suffstats(folded, dim=nc)
-            models = fit_fold_models(stats, lam)
-            coefs = coef_frame(spark, models)
-            scored = with_prediction(folded, coefs)
-            row = (
-                score_by_group(scored, ["fold"])
-                .agg(F.round(F.avg("spearman"), 6).alias("s"), F.round(F.avg("quartic"), 6).alias("q"))
-                .collect()[0]
-            )
-            # coranking quality: does the embedding preserve original
-            # k-neighborhoods? (the trustworthiness judgment the
-            # reference imports for its sweeps, nb cell 2)
-            trust = coranking_trust_nd(
-                base.select("vec_id", "features"),
-                reduced_wide.select("vec_id", *cols),
-                cols,
-            )
-            results.append((kernel, int(nc), row["s"], row["q"], trust, "ok"))
-        except Exception as e:  # status column instead of dropped index
-            results.append((kernel, int(nc), None, None, None, f"error: {type(e).__name__}"))
-    return local_frame(
-        spark,
-        results,
-        "kernel string, n_components int, spearman_mean double, quartic_mean double, "
-        "trust_mean double, status string",
-    )
+# --------------------------------------------- the one kernel dispatch
 
 
-def _sweep_embedder(H: np.ndarray, kernel: str, nc: int):
-    """Driver-side fit for one sweep config from ONE pre-collected
-    head subsample H (first max(FIT_ROWS, LMDS_LANDMARKS) rows by
-    vec_id — the same pinned heads every fit_* collects itself, so
-    the fitted state is identical). Returns a numpy embed fn
-    (n×d → n×nc) closing over only KB-sized fitted state."""
+def fit_embedder(H: np.ndarray, kernel: str, nc: int):
+    """Driver-side fit of one reduction kernel on the head sample H
+    (:func:`head_sample`): PCA on its first FIT_ROWS rows, every
+    landmark kernel on its first LMDS_LANDMARKS. Returns a numpy embed
+    fn (n×d → n×nc) closing over only KB-sized fitted state — the fn
+    t9–t9e run through :func:`_oos_transform` and the t3 sweep runs
+    per config."""
     L = H[:LMDS_LANDMARKS]
     if kernel == "pca":
         return pca_embed_fn(*_fit_pca_math(H[:FIT_ROWS], nc))
     if kernel == "lmds_l1":
-        dm, pseudo = _cmds_from_sq(_pairwise_sq("l1", L, L), nc)
-        return lmds_embed_fn(L, dm, pseudo, metric="l1")
+        return lmds_embed_fn(L, *_cmds_from_sq(_pairwise_sq("l1", L, L), nc))
     if kernel == "lisomap_l2":
-        G = _geodesic_matrix(L, ISOMAP_KNN)
-        dm, pseudo = _cmds_from_sq(G * G, nc)
-        return lmds_embed_fn(L, dm, pseudo, delta_fn=geodesic_delta_fn(L, G))
+        G = _geodesic_matrix(L)
+        return lmds_embed_fn(L, *_cmds_from_sq(G * G, nc), delta_fn=geodesic_delta_fn(L, G))
     if kernel == "llle_l2":
-        return lle_embed_fn(L, _fit_llle_math(L, nc, LLE_KNN))
+        return lle_embed_fn(L, _fit_llle_math(L, nc))
     if kernel == "lkpca_rbf":
-        gamma, cm, gm, alpha = _fit_lkpca_math(L, nc)
-        return kpca_embed_fn(L, gamma, cm, gm, alpha)
+        return kpca_embed_fn(L, *_fit_lkpca_math(L, nc))
     if kernel == "lspec_l2":
-        sigma, U = _fit_lspectral_math(L, nc, SPEC_KNN)
-        return spectral_embed_fn(L, sigma, U)
-    raise ValueError(f"unknown sweep kernel: {kernel}")
+        return spectral_embed_fn(L, *_fit_lspectral_math(L, nc))
+    raise ValueError(f"unknown reduction kernel: {kernel}")
+
+
+SWEEP_CONFIGS = (
+    ("pca", 2), ("pca", 4), ("pca", 8), ("pca", 16),
+    ("lmds_l1", 2), ("lmds_l1", 4),
+    ("lisomap_l2", 2), ("lisomap_l2", 4),
+    ("llle_l2", 2), ("llle_l2", 4),
+    ("lkpca_rbf", 2), ("lkpca_rbf", 4),
+    ("lspec_l2", 2), ("lspec_l2", 4),
+)
+SWEEP_LAM = 1.0  # ridge penalty of each config's era-CV model
+SWEEP_FOLDS = 5
 
 
 def reduction_sweep_batched(
-    spark: SparkSession,
-    sf_dir: str,
-    configs=(
-        ("pca", 2), ("pca", 4), ("pca", 8), ("pca", 16),
-        ("lmds_l1", 2), ("lmds_l1", 4),
-        ("lisomap_l2", 2), ("lisomap_l2", 4),
-        ("llle_l2", 2), ("llle_l2", 4),
-        ("lkpca_rbf", 2), ("lkpca_rbf", 4),
-        ("lspec_l2", 2), ("lspec_l2", 4),
-    ),
-    lam: float = 1.0,
-    k: int = 5,
-    trust_k: int = 5,
+    spark: SparkSession, sf_dir: str, configs=SWEEP_CONFIGS
 ) -> DataFrame:
-    """reduction_sweep re-planned as ~6 Spark jobs instead of a
-    14-config driver loop of ~70 (r11 verdict item 5: t3 was the
-    heaviest registered query, 20.3 s at sf0.1, flat-in-sf — i.e.
-    driver/job-count bound, the pipe3 syndrome). Value-identical to
-    the loop (tests/test_ml.py::test_sweep_batched_matches_loop);
-    the batching:
+    """T3 tune_reduction_dask (tuners.py:149-252): sweep reducer KERNEL
+    × n_components; per config: transform → era-CV ridge fit/score →
+    coranking trust. Failed configs get a status column, not index
+    bookkeeping (the reference drops Nones with positional arithmetic,
+    tuners.py:219-248). Planned as ~6 Spark jobs, not a per-config
+    driver loop of ~70; the per-config loop survives as the reference
+    of tests/test_ml.py::test_sweep_batched_matches_loop, which pins
+    the two equal. The batching:
 
     1. ONE head collect serves every fit — all 14 fits are driver
-       math on slices of the same pinned 200-row head the individual
-       fit_* functions collect themselves (14 TakeOrdered scans → 1).
+       math on slices of the same :func:`head_sample`.
     2. ONE mapInPandas pass computes ALL embeddings (wide: one
        array<double> column per config, np.round(·,6) exactly like
        _oos_transform), fold column attached by the broadcast
@@ -834,12 +630,11 @@ def reduction_sweep_batched(
     5. ONE trust job: the ORIGINAL-space anchor ranking (the
        dominant cost — 64-d distances over anchors×corpus + a full
        rank window) is computed ONCE and shared by all configs
-       (the loop recomputed it 14×); embedded ranks use the
+       (a per-config loop recomputes it 14×); embedded ranks use the
        rank<=k filter Spark rewrites into WindowGroupLimit (map-side
        top-k, no full sort), and only the ~configs×anchors×k
        surviving intrusion candidates broadcast-join back onto the
-       original ranking. Penalty/denominator arithmetic identical to
-       coranking_trust_nd.
+       original ranking. k is TW_K, tw1's neighborhood.
 
     100 TB shape: nothing new materializes per config — one corpus
     scan feeds everything; the barrier stores (ids, fold, y, Σnc≈60
@@ -851,20 +646,14 @@ def reduction_sweep_batched(
     from .similarity import dot as vdot
 
     base = supervised_frame(spark, sf_dir)
-    head = (
-        base.orderBy("vec_id")
-        .limit(max(FIT_ROWS, LMDS_LANDMARKS))
-        .select("features")
-        .toPandas()
-    )
-    H = np.stack(head["features"].to_numpy()).astype(np.float64)
+    H = head_sample(base)
 
     embedders: list[tuple[int, str, int]] = []  # (cfg_idx, kernel, nc)
     fns: dict[int, object] = {}
     status: dict[int, str] = {}
     for i, (kernel, nc) in enumerate(configs):
         try:
-            fns[i] = _sweep_embedder(H, kernel, nc)
+            fns[i] = fit_embedder(H, kernel, nc)
             embedders.append((i, kernel, nc))
         except Exception as e:  # status column instead of dropped index
             status[i] = f"error: {type(e).__name__}"
@@ -923,8 +712,8 @@ def reduction_sweep_batched(
     )
     wide = base.mapInPandas(transform_mapper, schema=wide_schema)
     # era domain is static metadata (era = vec_id % 20, ml.py) — the
-    # same map kfold_era derives from its distinct scan in the loop
-    wide = kfold_era(wide, "era", k=k, eras=list(ERA_DOMAIN))
+    # same map kfold_era would derive from a distinct scan
+    wide = kfold_era(wide, "era", k=SWEEP_FOLDS, eras=list(ERA_DOMAIN))
     wide = barrier(wide)
 
     # demote configs whose embed failed on ANY partition (one tiny
@@ -965,7 +754,7 @@ def reduction_sweep_batched(
 
     coef_rows = []
     for i, _, _ in live:
-        for fold, c in fit_fold_models(stats[i], lam).items():
+        for fold, c in fit_fold_models(stats[i], SWEEP_LAM).items():
             coef_rows.append(
                 (i, int(fold), float(c[0]), [float(w) for w in c[1:]])
             )
@@ -1061,11 +850,11 @@ def reduction_sweep_batched(
                 Window.partitionBy("cfg", "qid").orderBy("de2", "vec_id")
             ),
         )
-        .filter(F.col("re") <= trust_k)
+        .filter(F.col("re") <= TW_K)
         .select("cfg", "qid", "vec_id")
     )
-    denom = float(trust_k) * (2.0 * n - 3.0 * trust_k - 1.0)
-    # every (cfg, qid) keeps exactly trust_k rows in topk, so the
+    denom = float(TW_K) * (2.0 * n - 3.0 * TW_K - 1.0)
+    # every (cfg, qid) keeps exactly TW_K rows in topk, so the
     # per-anchor groupBy below loses no anchors (zero-intrusion
     # anchors aggregate a zero penalty rather than vanishing)
     trust = {
@@ -1075,7 +864,7 @@ def reduction_sweep_batched(
         .groupBy("cfg", "qid")
         .agg(
             F.sum(
-                F.when(F.col("ro") > trust_k, F.col("ro") - trust_k).otherwise(0)
+                F.when(F.col("ro") > TW_K, F.col("ro") - TW_K).otherwise(0)
             ).alias("tpen")
         )
         .groupBy("cfg")
@@ -1104,11 +893,12 @@ def reduction_sweep_batched(
         "carrying trust_mean — the mean coranking trustworthiness of "
         "the produced embedding vs the original feature space (the "
         "quality judgment the reference imports for its sweeps, nb "
-        "cell 2; tw1's n-D sibling on a fixed anchor batch). r12: "
-        "runs the BATCHED plan (one transform pass / one suffstats "
-        "pass / one scoring job / one shared-ranking trust job — see "
-        "reduction_sweep_batched) — value-identical to the per-config "
-        "loop kept as reduction_sweep for the parity test.",
+        "cell 2; tw1's n-D sibling on a fixed anchor batch). Runs "
+        "the BATCHED plan (one transform pass / one suffstats pass / "
+        "one scoring job / one shared-ranking trust job — see "
+        "reduction_sweep_batched), value-identical to the per-config "
+        "loop that tests/test_ml.py::test_sweep_batched_matches_loop "
+        "keeps as its reference.",
     tags=("reduction", "ml"),
 )
 def t3_reduction_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1139,21 +929,14 @@ def _cov_suffstats(df: DataFrame, dim: int):
     return n, mu, cov
 
 
-def fit_pca_distributed(df: DataFrame, n_components: int, dim: int = DIM):
+def fit_pca_distributed(df: DataFrame, n_components: int):
     """T7/IncrementalPCA upgrade: exact full-data PCA from ONE
     distributed pass (covariance suffstats + driver eigendecomposition
     of the d×d matrix) — no subsample approximation, no data collect."""
-    import numpy as np
-
-    _, mu, cov = _cov_suffstats(df, dim)
+    _, mu, cov = _cov_suffstats(df, DIM)
     vals, vecs = np.linalg.eigh(cov)
     order = np.argsort(vals)[::-1][:n_components]
-    comps = vecs[:, order].T
-    for i in range(len(comps)):
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i, j] < 0:
-            comps[i] = -comps[i]
-    return mu, comps
+    return mu, _pin_signs(vecs[:, order]).T
 
 
 @query(
@@ -1363,60 +1146,6 @@ def _tw_proj_coefs(dim: int = DIM) -> list[list[float]]:
         ]
         for j in range(2)
     ]
-
-
-def coranking_trust_nd(
-    orig: DataFrame, emb: DataFrame, emb_cols, k: int = 5
-) -> float:
-    """Mean per-anchor trustworthiness of an n-D embedding vs the
-    original feature space — coranking_metrics' n-dimensional sibling
-    for the sweep's quality column (no oracle constraint here, so the
-    embedded distance uses the norm²+dot expansion for any width).
-    orig = (vec_id, features); emb = (vec_id, <emb_cols...>)."""
-    from .similarity import QUERY_CAP, QUERY_MOD
-    from .similarity import dot as vdot
-
-    pv = F.array(*[F.col(c) for c in emb_cols])
-    feat = (
-        orig.join(emb, "vec_id")
-        .select(
-            "vec_id",
-            F.col("features").alias("vv"),
-            vdot(F.col("features"), F.col("features")).alias("n2"),
-            pv.alias("pv"),
-        )
-        .withColumn("pn2", vdot(F.col("pv"), F.col("pv")))
-        .withColumn(
-            "is_anchor",
-            (F.col("vec_id") % QUERY_MOD == 0) & (F.col("vec_id") < QUERY_CAP),
-        )
-    )
-    q = feat.filter("is_anchor").select(
-        F.col("vec_id").alias("qid"),
-        F.col("vv").alias("qv"), F.col("n2").alias("qn2"),
-        F.col("pv").alias("qp"), F.col("pn2").alias("qpn2"),
-    )
-    pairs = q.join(feat, F.col("qid") != F.col("vec_id")).select(
-        "qid", "vec_id",
-        F.round(F.col("qn2") + F.col("n2") - 2 * vdot("qv", "vv"), 5).alias("do2"),
-        F.round(F.col("qpn2") + F.col("pn2") - 2 * vdot("qp", "pv"), 5).alias("de2"),
-    )
-    wo = Window.partitionBy("qid").orderBy("do2", "vec_id")
-    we = Window.partitionBy("qid").orderBy("de2", "vec_id")
-    ranked = pairs.select(
-        "qid",
-        F.row_number().over(wo).alias("ro"),
-        F.row_number().over(we).alias("re"),
-    )
-    pen = ranked.groupBy("qid").agg(
-        F.sum(
-            F.when((F.col("re") <= k) & (F.col("ro") > k), F.col("ro") - k).otherwise(0)
-        ).alias("tpen")
-    )
-    n = feat.count()
-    denom = float(k) * (2.0 * n - 3.0 * k - 1.0)
-    row = pen.agg(F.avg(1.0 - 2.0 * F.col("tpen") / denom).alias("t")).collect()[0]
-    return round(float(row["t"]), 6)
 
 
 def coranking_metrics(feat: DataFrame, k: int = TW_K) -> DataFrame:

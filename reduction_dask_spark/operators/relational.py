@@ -433,61 +433,18 @@ def a9_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------- windows / top-k
 
 def global_rank(df: DataFrame, *order_cols, out: str = "rnk") -> DataFrame:
-    """Distributed total-order rank without a single-partition window.
-
-    Two-pass pattern: range-repartition on the sort keys (Spark's
-    distributed sort machinery, the same thing orderBy uses), then
-    row_number WITHIN each range partition plus the per-partition row
-    counts as offsets (a bounded driver-side table: one integer per
-    partition).  Output values are independent of where the sampled
-    range boundaries land.  Requires the ordering to be total (callers
-    append a unique tie-break key), so rank == row_number.
+    """Distributed total-order rank without a single-partition window:
+    the inclusive prefix count of :func:`global_prefix_agg` over the
+    sort keys (range-repartition, local running count, per-partition
+    counts as offsets). Output values are independent of where the
+    sampled range boundaries land. Requires the ordering to be total
+    (callers append a unique tie-break key), so rank == row_number.
 
     A plain ``Window.orderBy`` computes the same thing by moving the
     ENTIRE relation to one partition — fine for bounded metadata,
     fatal for a 100 TB-derived score table.
     """
-    spark = df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # PID-CONSISTENCY CONTRACT: the local window and the offset branch
-    # must observe IDENTICAL partition ids. Relying on plan-level
-    # exchange reuse is NOT safe — under AQE each branch compiles to
-    # its own ShuffleQueryStage, and range boundaries are SAMPLED per
-    # exchange instance (seeded by rdd.id), so two physical exchanges
-    # can legally split a key run across different partition ids and
-    # silently misalign the offsets at scale (small SFs mask it: the
-    # sample covers the whole relation). persist() pins one
-    # materialized exchange that every branch reads; a cache-miss
-    # recompute replays the SAME exchange instance (boundaries are
-    # fixed driver-side at partitioner creation), so pids stay
-    # consistent even under executor loss. tests/test_plans.py pins
-    # the single-range-exchange shape. Cache lifecycle is CALLER-owned
-    # (the pinned relation feeds the lazy result): caching.pin
-    # registers it so release_pinned() bounds storage across many
-    # in-session queries.
-    pid = pin(
-        df.repartitionByRange(n_part, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    wp = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = pid.withColumn("_rn", F.row_number().over(wp))
-    # The counts relation is one row per partition (bounded by the
-    # partition count, not the data); its prefix sum is a triangular
-    # broadcast self-join on that metadata-sized relation, NOT a
-    # global window (a constant-key window gets constant-folded to an
-    # empty partition spec and WindowExec single-partitions the node).
-    counts = pid.groupBy("_pid").agg(F.count("*").alias("_n"))
-    prev = counts.select(F.col("_pid").alias("_p2"), F.col("_n").alias("_n2"))
-    offs = (
-        counts.join(F.broadcast(prev), F.col("_p2") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.coalesce(F.sum("_n2"), F.lit(0)).cast("bigint").alias("_off"))
-    )
-    return (
-        local.join(F.broadcast(offs), "_pid")
-        .withColumn(out, (F.col("_rn") + F.col("_off")).cast("bigint"))
-        .drop("_pid", "_rn", "_off")
-    )
+    return global_prefix_agg(df, order_cols, [(F.lit(1), "sum", out)], inclusive=True)
 
 
 def global_prefix_agg(
@@ -496,14 +453,19 @@ def global_prefix_agg(
     aggs,
     inclusive: bool = False,
 ) -> DataFrame:
-    """Distributed running aggregate over a total order — the
-    generalization of :func:`global_rank`'s two-pass pattern shared by
-    auc1 (midrank prefix counts), ks1 (two ECDF prefix sums) and sky1
-    (strict-prefix min). ``aggs`` is a list of (src_col, fn, out_col)
-    with fn in {'sum', 'min', 'max'}; ``inclusive`` includes the
-    current row (ks1) vs the strict prefix (auc1/sky1). Sum outputs
-    coalesce an empty prefix to 0; min/max leave it NULL (callers
-    supply their identity).
+    """Distributed running aggregate over a total order, in two passes:
+    range-repartition on the sort keys, a running aggregate WITHIN each
+    range partition, and the per-partition totals of all earlier
+    partitions as offsets (a bounded table: one row per partition,
+    prefix-summed by a triangular broadcast self-join — a constant-key
+    global window would single-partition the node). Shared by
+    global_rank (inclusive prefix count), auc1 (midrank prefix counts),
+    ks1 (two ECDF prefix sums) and sky1 (strict-prefix min). ``aggs``
+    is a list of (src, fn, out_col) with src a column name or Column
+    and fn in {'sum', 'min', 'max'}; ``inclusive`` includes the
+    current row (global_rank/ks1) vs the strict prefix (auc1/sky1).
+    Sum outputs coalesce an empty prefix to 0; min/max leave it NULL
+    (callers supply their identity).
 
     THE PID-CONSISTENCY CONTRACT (documented once, here): the local
     window and the per-partition totals must observe IDENTICAL
@@ -518,9 +480,8 @@ def global_prefix_agg(
     SAME exchange instance (boundaries fixed driver-side at partitioner
     creation), so pids stay consistent under executor loss too. Every
     prefix-over-range-partitions consumer must go through this helper
-    (or global_rank) rather than inlining the pattern — the invariant
-    lives in one place and tests/test_plans.py pins the single-range-
-    exchange plan shape.
+    rather than inlining the pattern — the invariant lives in one place
+    and tests/test_plans.py pins the single-range-exchange plan shape.
     """
     fns = {"sum": F.sum, "min": F.min, "max": F.max}
     spark = df.sparkSession

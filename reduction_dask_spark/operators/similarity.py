@@ -38,7 +38,8 @@ QUERY_CAP = QUERY_MOD * N_QUERIES  # doesn't grow with the corpus; an
                      # uncapped %-sample turns every O(|Q|·candidates)
                      # ranker quadratic at scale (rrf1's probe measured
                      # it). A no-op at the driver SFs (max vec_id 1999).
-N_PLANES = 6         # 64 LSH buckets — sized for the driver's sf (see lsh_planes_for)
+N_PLANES = 6         # 64 LSH buckets — sized for the driver's sf; at scale
+                     # 2^planes ≈ n/200 (tests/test_text_retrieval.py)
 DIM = 64
 NEARDUP_TAU = 0.4
 
@@ -54,61 +55,6 @@ def _fp_elems(col: str) -> Column:
     return F.transform(
         col, lambda x: F.coalesce(x.cast("string"), F.lit("NULL"))
     )
-
-
-def ivf_lists_for(n_vectors: int) -> int:
-    """IVF list count sized to the corpus: k ≈ √n (the FAISS rule of
-    thumb — balances list-scan cost n/k per probe against the k-way
-    quantizer scoring per query). The REGISTERED ss4 demo derives its
-    centroid set from `vec_id % 53` so the DuckDB oracle can mirror it,
-    which grows the list count linearly with the corpus — fine at the
-    driver's fixed sf, quadratic as a production config (the ×100
-    probe measures it: SCALING.md). Production callers size with this
-    helper and train with kmeans_fit (ss7's path, fixed k, 9× on ×100
-    data)."""
-    import math
-
-    return max(1, int(math.isqrt(max(1, n_vectors))))
-
-
-def lsh_planes_for(n_vectors: int, target_bucket: int = 200) -> int:
-    """Plane count sized to the corpus: 2^planes buckets ≈ n/target.
-
-    A FIXED plane count has the wrong asymptotics — bucket population
-    grows linearly with the corpus, and with it the exact-rerank cost
-    per query. Sizing planes ≈ log2(n / target_bucket) keeps expected
-    bucket size constant at any scale (64 buckets at the bench sf,
-    ~2^29 buckets at 100 TB). The REGISTERED ss2/ss5 queries pin
-    N_PLANES={6} because the DuckDB oracle must evaluate the identical
-    plane set at the driver's fixed sf; production callers size with
-    this helper (and multi-probe fan-out, ss5, recovers the recall a
-    deeper code costs)."""
-    import math
-
-    return max(1, math.ceil(math.log2(max(2.0, n_vectors / target_bucket))))
-
-
-def lsh_bands_for(tau: float, n_hashes: int = 32) -> tuple[int, int]:
-    """(bands, rows) for a MinHash signature of ``n_hashes`` whose
-    S-curve threshold (1/b)^(1/r) sits closest to the target Jaccard
-    ``tau`` — the standard banding-theory sizing (MMDS ch. 3): pairs
-    with similarity above the threshold are near-certain candidates,
-    pairs far below are near-certain non-candidates, and the
-    transition steepens with r. dd3 pins (8, 4) because the oracle
-    must mirror a fixed layout at the driver SF — (8, 4) is exactly
-    what this helper returns for tau=0.7, n=32; production callers
-    re-derive the banding from their threshold instead of inheriting
-    the demo constants."""
-    best = None
-    for r in range(1, n_hashes + 1):
-        if n_hashes % r:
-            continue
-        b = n_hashes // r
-        thr = (1.0 / b) ** (1.0 / r)
-        err = abs(thr - tau)
-        if best is None or err < best[0]:
-            best = (err, b, r)
-    return best[1], best[2]
 
 
 def as_double(col: Column) -> Column:
@@ -461,8 +407,8 @@ N_CENTROIDS = 40  # capped at a FIXED centroid count: an uncapped %-sample
 CENT_CAP = CENT_MOD * N_CENTROIDS  # grows the quantizer linearly with the
                   # corpus (x100 probe: 21x) — with a fixed coarse codebook
                   # the demo degrades gracefully to linear list scans; real
-                  # sizing is ivf_lists_for (k ~ sqrt(n)) + ss7's trained
-                  # k-means lists. A no-op at the driver SFs.
+                  # sizing is k ~ sqrt(n) lists (tests/test_text_retrieval.py)
+                  # + ss7's trained k-means lists. A no-op at the driver SFs.
 N_PROBE = 2
 
 

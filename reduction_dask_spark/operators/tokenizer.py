@@ -177,63 +177,6 @@ def bpe1_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- bpe2
 
-def py_apply_merge(sym: list, a: str, b: str) -> list:
-    """Greedy left-to-right merge of adjacent (a, b) → a+b — the pure-
-    Python twin of _apply_merge (same semantics, used by the encoder
-    and by the training parity tests)."""
-    out: list = []
-    for x in sym:
-        if out and out[-1] == a and x == b:
-            out[-1] = a + b
-        else:
-            out.append(x)
-    return out
-
-
-def bpe_encode(d: DataFrame, merges: list[tuple], text_col: str = "text") -> DataFrame:
-    """Encode a document relation with a trained merge table: split to
-    words → chars, apply the merges in rank order (Sennrich apply
-    semantics, matching bpe_train's fold), emit per-doc token stats.
-
-    Scale shape: the model is the k-row merge table — broadcast once —
-    and encoding is embarrassingly parallel per document, one Arrow-
-    batched mapInPandas pass over the corpus with zero shuffles. This
-    is the tokenize step every training-data pipeline runs after
-    induction; at 100 TB it is scan-bound, exactly as it should be."""
-    import pandas as pd  # noqa: F401
-
-    table = [(m[1], m[2]) for m in sorted(merges, key=lambda m: m[0])]
-    sc = d.sparkSession.sparkContext
-    bc = sc.broadcast(table)
-
-    def encode(batches):
-        import pandas as pd
-
-        tbl = bc.value
-        for pdf in batches:
-            n_tokens, n_chars = [], []
-            for text in pdf[text_col]:
-                total = 0
-                chars = 0
-                for w in (text or "").split(" "):
-                    if not w:
-                        continue
-                    s = list(w)
-                    chars += len(s)
-                    for a, b in tbl:
-                        s = py_apply_merge(s, a, b)
-                    total += len(s)
-                n_tokens.append(total)
-                n_chars.append(chars)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "n_tokens": n_tokens, "n_chars": n_chars}
-            )
-
-    return d.select("doc_id", text_col).mapInPandas(
-        encode, schema="doc_id bigint, n_tokens bigint, n_chars bigint"
-    )
-
-
 def bpe_encode_vocab(
     d: DataFrame,
     final_vocab: DataFrame,
@@ -245,10 +188,11 @@ def bpe_encode_vocab(
     symbol arrays — the merges were already applied there, once per
     DISTINCT word), and per-doc totals are arithmetic expansion:
     explode docs to words, equi-join the word→token-count table,
-    sum per doc. Value-identical to :func:`bpe_encode` (pinned by
-    tests/test_round3_ops.py::TestBPEEncode parity) because both
-    paths apply identical merge semantics per word and a word's
-    tokenization is position-independent.
+    sum per doc. Value-identical to the per-occurrence reference
+    encoder ``bpe_encode`` of tests/test_round3_ops.py (pinned by
+    TestBPEEncode parity) because both paths apply identical merge
+    semantics per word and a word's tokenization is
+    position-independent.
 
     Scale shape: the Python/JVM merge work is |distinct words|
     (Heaps-sublinear in corpus size; CONSTANT under replica growth),
@@ -265,8 +209,7 @@ def bpe_encode_vocab(
     by construction when it was trained on the same corpus (bpe2's
     case). Words absent from the vocab drop out of the inner join
     (they would contribute nothing to n_tokens/n_chars); to encode a
-    DIFFERENT corpus with a trained merge table, use
-    :func:`bpe_encode`, which tokenizes any word. Pass
+    DIFFERENT corpus, train a vocab that covers it first. Pass
     ``check_coverage=True`` to enforce the contract (r13 ADVICE): a
     distinct-word anti-join count runs before the corpus pass and a
     non-zero miss raises instead of silently undercounting. The
@@ -288,7 +231,7 @@ def bpe_encode_vocab(
             raise ValueError(
                 "bpe_encode_vocab coverage contract violated: corpus words "
                 f"absent from final_vocab, e.g. {[r['w'] for r in missed]}; "
-                "train the vocab on this corpus or use bpe_encode()"
+                "train the vocab on this corpus"
             )
     per_doc = (
         doc_words(d, text_col).join(F.broadcast(wtok), "w")
@@ -319,12 +262,12 @@ def bpe_encode_vocab(
         "word's token count, so the corpus pass is a pure-JVM "
         "explode + broadcast join + sum — the per-occurrence Python "
         "re-merge the r12 encoder ran is gone (×10: 18.2 s → see "
-        "SCALING.md). Value-parity with the direct per-occurrence "
-        "encoder (bpe_encode) is pinned per doc_id by "
+        "SCALING.md). Value-parity with a direct per-occurrence "
+        "Python encoder is pinned per doc_id by "
         "TestBPEEncode::test_vocab_quotient_matches_direct_encoder; "
         "the older cross-implementation invariant (Python encoder "
-        "total == JVM fold vocab total) still runs against "
-        "bpe_encode itself.",
+        "total == JVM fold vocab total) runs against that same "
+        "reference encoder.",
     tags=("text", "pipeline", "udf"),
 )
 def bpe2_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

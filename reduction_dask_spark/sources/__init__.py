@@ -260,13 +260,6 @@ def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -
     return reader.option("inferSchema", True).csv(path)
 
 
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def write_append(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     """S2: append sink (results-log pattern, nb cells 22/54/67/...)."""
     df.write.mode("append").format(fmt).save(path)

@@ -25,7 +25,9 @@ def spark():
 def duck():
     import duckdb
 
+    from reduction_dask_spark.sources import TABLES
+
     con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMALL}/{t}.parquet'")
     return con

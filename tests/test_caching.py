@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from perfbench.spans import spark_jobs
-from reduction_dask_spark.caching import barrier, pin, pinned_count, release_pinned
+from reduction_dask_spark.caching import _PINNED, barrier, pin, release_pinned
 
 
 def _persistent_rdd_count(spark) -> int:
@@ -62,9 +62,9 @@ def test_release_counts_pins_and_barriers(spark):
     p.count()
     b = barrier(spark.range(10))
     b.count()
-    assert pinned_count() == 1
+    assert len(_PINNED) == 1
     assert release_pinned() == 2
-    assert pinned_count() == 0
+    assert len(_PINNED) == 0
     # a released PIN recomputes silently (documented contract)
     assert p.count() == 10
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from reduction_dask_spark.functions import era_events
-from reduction_dask_spark.operators.cv import cross_folds, kfold_era, lhs_param_table, train_test_fold
+from reduction_dask_spark.operators.cv import cross_folds, kfold_era, lhs_param_table
 from reduction_dask_spark.sources import load_table
 
 from .conftest import SF_SMALL
@@ -28,7 +28,8 @@ def test_folds_cover_all_rows_and_partition(spark):
     ev = load_table(spark, SF_SMALL, "events")
     df = _folded(spark)
     assert df.count() == ev.count()
-    train, test = train_test_fold(df, 0)
+    # train = eras outside the fold, test = eras inside (utils.py:34-41)
+    train, test = df.filter(F.col("fold") != 0), df.filter(F.col("fold") == 0)
     assert train.count() + test.count() == ev.count()
     # train ∩ test = ∅ on the key
     assert train.join(test, "event_id", "inner").count() == 0

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from reduction_dask_spark.operators.cv import kfold_era, train_test_fold
+from reduction_dask_spark.operators.cv import kfold_era
 from reduction_dask_spark.operators.dedup import jaccard_pairs, shingles_of_tokens
 from reduction_dask_spark.operators.permutation import permute_column
 
@@ -18,7 +18,7 @@ def test_kfold_more_folds_than_eras(spark):
     folded = kfold_era(df, "era", k=10)
     per_era = folded.groupBy("era").agg(F.countDistinct("fold").alias("nf")).collect()
     assert all(r["nf"] == 1 for r in per_era)
-    train, test = train_test_fold(folded, 0)
+    train, test = folded.filter(F.col("fold") != 0), folded.filter(F.col("fold") == 0)
     assert train.count() + test.count() == 30
 
 

@@ -274,7 +274,7 @@ def test_gbt_hist_fit_matches_numpy(spark):
 def test_gbt_fit_unpersists_bin_projection(spark):
     """The boosting rounds consume the persisted bin projection before
     fit_gbt_fold_models returns, so it leaves no pin and no cache."""
-    from reduction_dask_spark.caching import pinned_count, release_pinned
+    from reduction_dask_spark.caching import _PINNED, release_pinned
     from reduction_dask_spark.ml import fit_gbt_fold_models
 
     release_pinned()
@@ -282,7 +282,7 @@ def test_gbt_fit_unpersists_bin_projection(spark):
     baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
     df = kfold_era(supervised_frame(spark, SF_SMALL), "era", k=5)
     assert len(fit_gbt_fold_models(df, k=5, n_rounds=2)) == 5
-    assert pinned_count() == 0
+    assert len(_PINNED) == 0
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline
 
 
@@ -313,19 +313,29 @@ def test_gbt_mda_recovers_planted_features(spark):
 
 # ------------------------------------------------- landmark MDS kernel
 
+def _landmarks(spark):
+    """(supervised frame, landmark matrix): the landmark slice of the
+    head sample every landmark fit reads."""
+    from reduction_dask_spark.operators.reduction import LMDS_LANDMARKS, head_sample
+
+    df = supervised_frame(spark, SF_SMALL)
+    return df, head_sample(df)[:LMDS_LANDMARKS]
+
+
 def test_lmds_transform_matches_numpy(spark):
     """Distributed Nyström transform == the same formula on collected
     rows, and landmarks reproduce their own classical-MDS embedding."""
     from reduction_dask_spark.operators.reduction import (
+        _cmds_from_sq,
+        _oos_transform,
         _pairwise_sq,
-        fit_lmds,
-        lmds_transform,
+        lmds_embed_fn,
     )
 
-    Lm, dmean, pseudo = fit_lmds(spark, SF_SMALL, 2)
-    df = supervised_frame(spark, SF_SMALL)
+    df, Lm = _landmarks(spark)
+    dmean, pseudo = _cmds_from_sq(_pairwise_sq("l1", Lm, Lm), 2)
     got = (
-        lmds_transform(df, Lm, dmean, pseudo)
+        _oos_transform(df, lmds_embed_fn(Lm, dmean, pseudo), 2)
         .select("vec_id", "mc1", "mc2")
         .toPandas()
         .sort_values("vec_id")
@@ -353,11 +363,17 @@ def test_lmds_transform_matches_numpy(spark):
 def test_lmds_is_not_linear_projection(spark):
     """Squared-L1 MDS must not be expressible as a linear map of the
     features — guards against the kernel degenerating into PCA."""
-    from reduction_dask_spark.operators.reduction import fit_lmds, lmds_transform
+    from reduction_dask_spark.operators.reduction import (
+        _cmds_from_sq,
+        _oos_transform,
+        _pairwise_sq,
+        lmds_embed_fn,
+    )
 
-    Lm, dmean, pseudo = fit_lmds(spark, SF_SMALL, 2)
-    df = supervised_frame(spark, SF_SMALL)
-    got = lmds_transform(df, Lm, dmean, pseudo).select("vec_id", "mc1").toPandas()
+    df, Lm = _landmarks(spark)
+    dmean, pseudo = _cmds_from_sq(_pairwise_sq("l1", Lm, Lm), 2)
+    embed = lmds_embed_fn(Lm, dmean, pseudo)
+    got = _oos_transform(df, embed, 2).select("vec_id", "mc1").toPandas()
     pdf = df.select("vec_id", "features").toPandas()
     merged = got.merge(pdf, on="vec_id")
     X = np.stack(merged["features"].to_numpy()).astype(float)
@@ -368,9 +384,9 @@ def test_lmds_is_not_linear_projection(spark):
 
 
 def test_reduction_sweep_has_all_kernels(spark):
-    from reduction_dask_spark.operators.reduction import reduction_sweep
+    from reduction_dask_spark.operators.reduction import reduction_sweep_batched
 
-    out = reduction_sweep(
+    out = reduction_sweep_batched(
         spark,
         SF_SMALL,
         configs=(
@@ -420,16 +436,20 @@ def test_lisomap_transform_matches_numpy(spark):
     collected rows; geodesics differ from Euclidean (genuine manifold
     metric, not MDS in disguise)."""
     from reduction_dask_spark.operators.reduction import (
+        _cmds_from_sq,
+        _geodesic_matrix,
+        _oos_transform,
         _pairwise_sq,
-        fit_lisomap,
         geodesic_delta_fn,
-        lmds_transform,
+        lmds_embed_fn,
     )
 
-    Lm, G, dmean, pseudo = fit_lisomap(spark, SF_SMALL, 2)
-    df = supervised_frame(spark, SF_SMALL)
+    df, Lm = _landmarks(spark)
+    G = _geodesic_matrix(Lm)
+    dmean, pseudo = _cmds_from_sq(G * G, 2)
+    embed = lmds_embed_fn(Lm, dmean, pseudo, delta_fn=geodesic_delta_fn(Lm, G))
     got = (
-        lmds_transform(df, Lm, dmean, pseudo, delta_fn=geodesic_delta_fn(Lm, G))
+        _oos_transform(df, embed, 2)
         .select("vec_id", "mc1", "mc2")
         .toPandas()
         .sort_values("vec_id")
@@ -586,16 +606,17 @@ def test_llle_transform_matches_numpy(spark):
     fitted coordinates."""
     from reduction_dask_spark.operators.reduction import (
         LLE_KNN,
+        _fit_llle_math,
         _lle_local_weights,
+        _oos_transform,
         _pairwise_sq,
-        fit_llle,
-        lle_transform,
+        lle_embed_fn,
     )
 
-    Lm, Y = fit_llle(spark, SF_SMALL, 2)
-    df = supervised_frame(spark, SF_SMALL)
+    df, Lm = _landmarks(spark)
+    Y = _fit_llle_math(Lm, 2)
     got = (
-        lle_transform(df, Lm, Y)
+        _oos_transform(df, lle_embed_fn(Lm, Y), 2)
         .select("vec_id", "mc1", "mc2")
         .toPandas()
         .sort_values("vec_id")
@@ -639,14 +660,14 @@ def test_lkpca_transform_matches_numpy_and_self_embedding(spark):
     training embedding √λ·v (the double-centering identity
     k̃(L_i) = (JKJ)[i])."""
     from reduction_dask_spark.operators.reduction import (
+        _fit_lkpca_math,
         _oos_transform,
         _pairwise_sq,
-        fit_lkpca,
         kpca_embed_fn,
     )
 
-    Lm, gamma, cm, gm, alpha = fit_lkpca(spark, SF_SMALL, 2)
-    df = supervised_frame(spark, SF_SMALL)
+    df, Lm = _landmarks(spark)
+    gamma, cm, gm, alpha = _fit_lkpca_math(Lm, 2)
     got = (
         _oos_transform(df, kpca_embed_fn(Lm, gamma, cm, gm, alpha), 2)
         .select("vec_id", "mc1", "mc2")
@@ -732,14 +753,14 @@ def test_lspectral_transform_matches_numpy(spark):
     embedding is non-degenerate."""
     from reduction_dask_spark.operators.reduction import (
         SPEC_KNN,
+        _fit_lspectral_math,
         _oos_transform,
         _pairwise_sq,
-        fit_lspectral,
         spectral_embed_fn,
     )
 
-    Lm, sigma, Y = fit_lspectral(spark, SF_SMALL, 2)
-    df = supervised_frame(spark, SF_SMALL)
+    df, Lm = _landmarks(spark)
+    sigma, Y = _fit_lspectral_math(Lm, 2)
     got = (
         _oos_transform(df, spectral_embed_fn(Lm, sigma, Y), 2)
         .select("vec_id", "mc1", "mc2")
@@ -978,17 +999,122 @@ def test_cls2b_eval_auc_and_reliability(spark):
         assert abs(r["ece_contrib"] - round(ece_c, 6)) < 2e-6
 
 
+def _coranking_trust_nd(orig, emb, emb_cols, k):
+    """Mean per-anchor trustworthiness of an n-D embedding vs the
+    original feature space: coranking_metrics' trust column for any
+    embedding width (the norm²+dot expansion on both sides).
+    orig = (vec_id, features); emb = (vec_id, <emb_cols...>)."""
+    from pyspark.sql.window import Window
+
+    from reduction_dask_spark.operators.similarity import QUERY_CAP, QUERY_MOD
+    from reduction_dask_spark.operators.similarity import dot as vdot
+
+    pv = F.array(*[F.col(c) for c in emb_cols])
+    feat = (
+        orig.join(emb, "vec_id")
+        .select(
+            "vec_id",
+            F.col("features").alias("vv"),
+            vdot(F.col("features"), F.col("features")).alias("n2"),
+            pv.alias("pv"),
+        )
+        .withColumn("pn2", vdot(F.col("pv"), F.col("pv")))
+        .withColumn(
+            "is_anchor",
+            (F.col("vec_id") % QUERY_MOD == 0) & (F.col("vec_id") < QUERY_CAP),
+        )
+    )
+    q = feat.filter("is_anchor").select(
+        F.col("vec_id").alias("qid"),
+        F.col("vv").alias("qv"), F.col("n2").alias("qn2"),
+        F.col("pv").alias("qp"), F.col("pn2").alias("qpn2"),
+    )
+    pairs = q.join(feat, F.col("qid") != F.col("vec_id")).select(
+        "qid", "vec_id",
+        F.round(F.col("qn2") + F.col("n2") - 2 * vdot("qv", "vv"), 5).alias("do2"),
+        F.round(F.col("qpn2") + F.col("pn2") - 2 * vdot("qp", "pv"), 5).alias("de2"),
+    )
+    wo = Window.partitionBy("qid").orderBy("do2", "vec_id")
+    we = Window.partitionBy("qid").orderBy("de2", "vec_id")
+    ranked = pairs.select(
+        "qid",
+        F.row_number().over(wo).alias("ro"),
+        F.row_number().over(we).alias("re"),
+    )
+    pen = ranked.groupBy("qid").agg(
+        F.sum(
+            F.when((F.col("re") <= k) & (F.col("ro") > k), F.col("ro") - k).otherwise(0)
+        ).alias("tpen")
+    )
+    n = feat.count()
+    denom = float(k) * (2.0 * n - 3.0 * k - 1.0)
+    row = pen.agg(F.avg(1.0 - 2.0 * F.col("tpen") / denom).alias("t")).collect()[0]
+    return round(float(row["t"]), 6)
+
+
+def _sweep_loop(spark, configs):
+    """The t3 sweep as a per-config driver loop — the reference the
+    batched plan is pinned to: per config, transform through the shared
+    shell, era-CV ridge fit/score with the ml harness, and coranking
+    trust, each a separate set of Spark jobs."""
+    from reduction_dask_spark.caching import barrier
+    from reduction_dask_spark.ml import ERA_DOMAIN
+    from reduction_dask_spark.operators.reduction import (
+        SWEEP_FOLDS,
+        SWEEP_LAM,
+        TW_K,
+        _oos_transform,
+        fit_embedder,
+        head_sample,
+    )
+    from reduction_dask_spark.session import local_frame
+
+    base = supervised_frame(spark, SF_SMALL)
+    H = head_sample(base)
+    results = []
+    for kernel, nc in configs:
+        try:
+            cols = [f"mc{i + 1}" for i in range(nc)]
+            reduced_wide = barrier(
+                _oos_transform(base, fit_embedder(H, kernel, nc), nc)
+                .select("vec_id", "era", "y", *cols)
+            )
+            reduced = reduced_wide.select(
+                "vec_id", "era", F.array(*[F.col(c) for c in cols]).alias("features"), "y"
+            )
+            folded = kfold_era(reduced, "era", k=SWEEP_FOLDS, eras=list(ERA_DOMAIN))
+            models = fit_fold_models(fold_suffstats(folded, dim=nc), SWEEP_LAM)
+            scored = with_prediction(folded, coef_frame(spark, models))
+            row = (
+                score_by_group(scored, ["fold"])
+                .agg(F.round(F.avg("spearman"), 6).alias("s"), F.round(F.avg("quartic"), 6).alias("q"))
+                .collect()[0]
+            )
+            trust = _coranking_trust_nd(
+                base.select("vec_id", "features"),
+                reduced_wide.select("vec_id", *cols),
+                cols,
+                TW_K,
+            )
+            results.append((kernel, int(nc), row["s"], row["q"], trust, "ok"))
+        except Exception as e:  # status column instead of dropped index
+            results.append((kernel, int(nc), None, None, None, f"error: {type(e).__name__}"))
+    return local_frame(
+        spark,
+        results,
+        "kernel string, n_components int, spearman_mean double, quartic_mean double, "
+        "trust_mean double, status string",
+    ).toPandas()
+
+
 def test_sweep_batched_matches_loop(spark):
-    """The r12 batched sweep (one transform pass / one suffstats pass /
+    """The batched sweep (one transform pass / one suffstats pass /
     one scoring job / one shared-ranking trust job) must reproduce the
     per-config loop's result table: same rows, same statuses, CV
     scores and trust equal to the 6-dp rounding both paths apply
     (tiny tolerance absorbs aggregation-merge-order float noise in
     corr/avg, which is not deterministic across plans)."""
-    from reduction_dask_spark.operators.reduction import (
-        reduction_sweep,
-        reduction_sweep_batched,
-    )
+    from reduction_dask_spark.operators.reduction import reduction_sweep_batched
 
     configs = (
         ("pca", 2), ("pca", 16),
@@ -998,12 +1124,7 @@ def test_sweep_batched_matches_loop(spark):
         ("lkpca_rbf", 4),
         ("lspec_l2", 2),
     )
-    loop = (
-        reduction_sweep(spark, SF_SMALL, configs=configs)
-        .toPandas()
-        .set_index(["kernel", "n_components"])
-        .sort_index()
-    )
+    loop = _sweep_loop(spark, configs).set_index(["kernel", "n_components"]).sort_index()
     bat = (
         reduction_sweep_batched(spark, SF_SMALL, configs=configs)
         .toPandas()
@@ -1024,7 +1145,7 @@ def test_sweep_batched_isolates_executor_failure(spark, monkeypatch):
     abort the whole batch (the per-config loop's contract)."""
     from reduction_dask_spark.operators import reduction as R
 
-    real = R._sweep_embedder
+    real = R.fit_embedder
 
     def fake(H, kernel, nc):
         fn = real(H, kernel, nc)
@@ -1034,7 +1155,7 @@ def test_sweep_batched_isolates_executor_failure(spark, monkeypatch):
             return boom
         return fn
 
-    monkeypatch.setattr(R, "_sweep_embedder", fake)
+    monkeypatch.setattr(R, "fit_embedder", fake)
     configs = (("pca", 2), ("lmds_l1", 2), ("lkpca_rbf", 2))
     out = (
         R.reduction_sweep_batched(spark, SF_SMALL, configs=configs)
@@ -1054,7 +1175,7 @@ def test_sweep_batched_all_configs_fail_executor_side(spark, monkeypatch):
     executor-side must still return the full status table."""
     from reduction_dask_spark.operators import reduction as R
 
-    real = R._sweep_embedder
+    real = R.fit_embedder
 
     def fake(H, kernel, nc):
         real(H, kernel, nc)  # driver fit succeeds; runtime fn fails
@@ -1063,7 +1184,7 @@ def test_sweep_batched_all_configs_fail_executor_side(spark, monkeypatch):
             raise ValueError("injected")
         return boom
 
-    monkeypatch.setattr(R, "_sweep_embedder", fake)
+    monkeypatch.setattr(R, "fit_embedder", fake)
     configs = (("pca", 2), ("pca", 4))
     out = R.reduction_sweep_batched(spark, SF_SMALL, configs=configs).toPandas()
     assert len(out) == 2

@@ -1,0 +1,64 @@
+"""The one-path rule: an alternative path survives only if a registered
+query or a contract uses it. Every top-level function and class of the
+package must be a registered ``@query``, be referenced by name from
+package code or from a caller outside the tests (``bench.py``,
+``__spark_entry__.py``, ``tools/``, ``perfbench/``), be named in
+COVERAGE.md, or live in the ``api`` facade or the ``plans`` helpers.
+A definition only tests reach belongs in the test that uses it."""
+
+from __future__ import annotations
+
+import ast
+import re
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "reduction_dask_spark"
+EXEMPT = {"api.py", "plans"}  # the facade and the plan helpers
+
+
+def _package_modules():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if "vendor" not in path.relative_to(PACKAGE).parts:
+            yield path
+
+
+def _referenced_names(tree: ast.AST):
+    """Every name a module loads, reads as an attribute or imports."""
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.rsplit(".", 1)[-1]
+
+
+def _is_query(node) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query"
+        for d in node.decorator_list
+    )
+
+
+def test_every_package_definition_has_a_non_test_user():
+    callers = [
+        *_package_modules(),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+        *sorted((REPO / "tools").glob("*.py")),
+        *sorted((REPO / "perfbench").glob("*.py")),
+    ]
+    used = {name for path in callers for name in _referenced_names(ast.parse(path.read_text()))}
+    covered = set(re.findall(r"\w+", (REPO / "COVERAGE.md").read_text()))
+    orphans = [
+        f"{path.relative_to(PACKAGE)}:{node.name}"
+        for path in _package_modules()
+        if path.relative_to(PACKAGE).parts[0] not in EXEMPT
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not _is_query(node)
+        and node.name not in used
+        and node.name not in covered
+    ]
+    assert orphans == []

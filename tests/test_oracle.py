@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from reduction_dask_spark.caching import release_pinned
 from tools.compare import compare
 
 import __spark_entry__ as entrymod
@@ -18,8 +19,19 @@ QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
 
 
+@pytest.fixture
+def released(spark):
+    """Free the pins and barrier blocks a query leaves behind once its
+    result is collected (compare.py does the same between queries); the
+    contract's clearCache alone drops neither registry. Teardown runs
+    whether the test passed or failed."""
+    yield
+    release_pinned()
+    spark.catalog.clearCache()
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_oracle_match(name, spark, duck):
+def test_oracle_match(name, spark, duck, released):
     sdf = QUERIES[name](spark, SF_SMALL).toPandas()
     ddf = duck.execute(ORACLES[name]).fetchdf()
     errs = compare(name, sdf, ddf)
@@ -38,5 +50,9 @@ def test_all_queries_run(spark):
     for name, fn in QUERIES.items():
         if name in ORACLES:
             continue
-        df = fn(spark, SF_SMALL)
-        assert df.count() >= 0, name
+        try:
+            df = fn(spark, SF_SMALL)
+            assert df.count() >= 0, name
+        finally:
+            release_pinned()
+            spark.catalog.clearCache()

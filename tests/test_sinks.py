@@ -200,8 +200,6 @@ def test_orc_and_json_roundtrip(spark):
     import tempfile
     from pathlib import Path
 
-    from reduction_dask_spark.sources import read_json
-
     df = load_table(spark, SF_SMALL, "events").select("event_id", "event_type", "value")
     with tempfile.TemporaryDirectory() as d:
         orc = str(Path(d) / "orc")
@@ -209,7 +207,7 @@ def test_orc_and_json_roundtrip(spark):
         assert spark.read.orc(orc).count() == df.count()
         js = str(Path(d) / "json")
         df.write.json(js)
-        back = read_json(spark, js, schema="event_id bigint, event_type string, value double")
+        back = spark.read.schema("event_id bigint, event_type string, value double").json(js)
         assert back.count() == df.count()
 
 

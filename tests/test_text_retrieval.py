@@ -2,11 +2,41 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
 from reduction_dask_spark.operators.text import MIX_TEMP, bm25_topk, mw2_mixture_sample
 
 from .conftest import SF_SMALL
+
+
+def ivf_lists_for(n_vectors: int) -> int:
+    """IVF list count sized to the corpus: k ≈ √n (the FAISS rule of
+    thumb — balances list-scan cost n/k per probe against the k-way
+    quantizer scoring per query). The REGISTERED ss4 demo derives its
+    centroid set from `vec_id % 53` so the DuckDB oracle can mirror it,
+    which grows the list count linearly with the corpus — fine at the
+    driver's fixed sf, quadratic as a production config (the ×100
+    probe measures it: SCALING.md). Production callers size with this
+    rule and train with kmeans_fit (ss7's path, fixed k, 9× on ×100
+    data)."""
+    return max(1, int(math.isqrt(max(1, n_vectors))))
+
+
+def lsh_planes_for(n_vectors: int, target_bucket: int = 200) -> int:
+    """Plane count sized to the corpus: 2^planes buckets ≈ n/target.
+
+    A FIXED plane count has the wrong asymptotics — bucket population
+    grows linearly with the corpus, and with it the exact-rerank cost
+    per query. Sizing planes ≈ log2(n / target_bucket) keeps expected
+    bucket size constant at any scale (64 buckets at the bench sf,
+    ~2^29 buckets at 100 TB). The REGISTERED ss2/ss5 queries pin
+    N_PLANES={6} because the DuckDB oracle must evaluate the identical
+    plane set at the driver's fixed sf; production callers size with
+    this rule (and multi-probe fan-out, ss5, recovers the recall a
+    deeper code costs)."""
+    return max(1, math.ceil(math.log2(max(2.0, n_vectors / target_bucket))))
 
 
 def _docs(spark, rows):
@@ -71,8 +101,6 @@ def test_mixture_sample_upsamples_tail(spark):
 
 
 def test_lsh_planes_scale_with_corpus():
-    from reduction_dask_spark.operators.similarity import lsh_planes_for
-
     assert lsh_planes_for(200) == 1            # degenerate floor
     assert lsh_planes_for(12_800) == 6         # the bench regime (64 buckets)
     p10, p11 = lsh_planes_for(10**10), lsh_planes_for(10**11)
@@ -83,8 +111,6 @@ def test_lsh_planes_scale_with_corpus():
 
 
 def test_ivf_lists_scale_with_corpus():
-    from reduction_dask_spark.operators.similarity import ivf_lists_for
-
     assert ivf_lists_for(0) == 1
     assert ivf_lists_for(10_000) == 100
     # per-probe list-scan size n/k stays O(sqrt n), not O(n)

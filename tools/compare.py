@@ -116,8 +116,10 @@ def main() -> int:
         from reduction_dask_spark.session import get_spark
 
         spark = get_spark("compare")
+    from reduction_dask_spark.sources import TABLES
+
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events documents embeddings").split():
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, oracles = e.queries(), e.oracle_sql()
