@@ -13,9 +13,8 @@ is not reproducible cross-engine, the *invariants* are what we keep).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
-from ..functions import ERA_EVENTS_SQL, era_events, md5i, md5i_sql, phash, phash_sql
+from ..functions import ERA_EVENTS_SQL, era_events, md5i_sql, phash, phash_sql
 from ..registry import query
 from ..session import local_frame
 from ..sources import load_table

@@ -30,7 +30,7 @@ from pyspark.sql.window import Window
 from ..functions import md5h60, md5h60_sql, md5i, md5i_sql, phash, phash_sql
 from ..caching import pin
 from ..registry import query
-from ..sources import load_table
+from ..sources import load_table, spread_scan
 from .text import QUALITY_OF_TOKS_SQL, normalized_fingerprint
 
 K_SHINGLE = 3
@@ -68,26 +68,66 @@ def shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shingle_table_of(load_table(spark, sf_dir, "documents"))
 
 
-def _raw_shingles(d: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
+def _raw_shingles(d: DataFrame) -> DataFrame:
     """Uncapped (doc_id, shingle) explode of a (doc_id, text) relation —
     per-doc DISTINCT 3-gram shingles hashed to 60-bit ints at explode
-    time. ``extra_cols`` are carried through unchanged (used by the
-    rep-quotient cap to keep group multiplicity alongside each row)."""
+    time."""
     toked = d.select(
-        "doc_id", *extra_cols, F.split(F.col("text"), " ").alias("toks")
+        "doc_id", F.split(F.col("text"), " ").alias("toks")
     ).filter(F.size("toks") >= K_SHINGLE)
     return toked.select(
         "doc_id",
-        *extra_cols,
         F.explode(
             F.transform(shingles_of_tokens(F.col("toks")), lambda s: md5h60(s))
         ).alias("shingle"),
     )
 
 
-def rep_capped_shingles(d: DataFrame, grp: DataFrame) -> DataFrame:
+def exact_members(d: DataFrame, key: Column | None = None) -> DataFrame:
+    """The exact-duplicate quotient: ``(doc_id, rep_id, m)`` for EVERY
+    row of ``d``, where rows with equal ``key`` form one group, rep_id
+    is the group's min doc_id and m its size — one window over one
+    exchange on the key. ``key`` defaults to ``md5(text)`` (members
+    share the literal text, hence identical shingles / prefixes /
+    blocks / anchors); the embedding family passes its NULL-explicit
+    vector fingerprint. Representatives are the rows with
+    ``doc_id == rep_id`` (:func:`representatives`).
+
+    Every quotient consumer runs its expensive kernel on
+    representatives only and expands the result back through this one
+    relation (:func:`expand_rep_pairs`, :func:`expand_collapsed_labels`,
+    or a join on rep_id); any corpus-frequency cap (df-cap, block cap)
+    is still counted over the FULL corpus (:func:`rep_capped_shingles`
+    weights by m). Pinned: the rep restriction and the expansion both
+    read it.
+
+    NULL rule: md5(NULL) is NULL and a window partition holds every
+    NULL key, so ALL NULL-text rows form ONE group. Kernels that drop
+    NULL-text docs through an eligibility rule (no capped shingle, no
+    anchor) need nothing more; a kernel that emits a row for every doc
+    it is given (dd4's simhash, er2's block key) must filter NULL
+    texts before building the quotient."""
+    k = F.md5(F.col("text")) if key is None else key
+    w = Window.partitionBy("fp")
+    return pin(
+        d.select("doc_id", k.alias("fp")).select(
+            "doc_id",
+            F.min("doc_id").over(w).alias("rep_id"),
+            F.count(F.lit(1)).over(w).alias("m"),
+        )
+    )
+
+
+def representatives(members: DataFrame) -> DataFrame:
+    """The representative rows (doc_id = rep_id) of an
+    :func:`exact_members` relation: one per group, carrying its m."""
+    return members.filter(F.col("doc_id") == F.col("rep_id"))
+
+
+def rep_capped_shingles(d: DataFrame, members: DataFrame) -> DataFrame:
     """FULL-corpus-df-capped shingle index RESTRICTED to exact-group
-    representatives, computed WITHOUT shingling duplicates (r14).
+    representatives, computed WITHOUT shingling duplicates (r14) — the
+    one capped representative index of the quotient family.
 
     Value-identical to ``shingle_table_of(d) ⋉ reps`` (pinned by
     tests/test_quotient_parity.py): members of an exact group carry the
@@ -95,18 +135,21 @@ def rep_capped_shingles(d: DataFrame, grp: DataFrame) -> DataFrame:
     the full-corpus document frequency of a shingle is
     df(s) = Σ_groups m·[s ∈ rep content] — the cap decision is exact
     with the shingle explode running over DISTINCT CONTENTS only.
-    Consumers that previously built the corpus-linear full index and
-    then semi-joined it down to reps (deval1/dd2b/dd6/gr3/gr4) paid
-    the whole explode+hash pass just to compute df; under a k-way
-    duplicate load this does 1/k of that work (deval1 profile at ×10:
-    the full-index build was 16.2 s of a 30.3 s query). The rep join
-    broadcasts when grp is small and degrades to a shuffle join at
-    cluster scale — the same join shape the semi-join already had."""
-    reps = grp.select(F.col("rep_id").alias("doc_id"), F.col("m").alias("_m"))
-    sh = pin(_raw_shingles(d.join(reps, "doc_id"), extra_cols=("_m",)))
+    Capping over representatives alone (unweighted) would keep a
+    shingle that only a large duplicate group pushes past DF_CAP.
+    Under a k-way duplicate load this does 1/k of the full index's
+    work (deval1 profile at ×10: the full-index build was 16.2 s of a
+    30.3 s query). The rep restriction is a semi join, so the corpus
+    is always the streamed side (it broadcasts the rep set when that is
+    small and degrades to a shuffle join at cluster scale), spread over
+    every core first when the scan has fewer splits than cores: the
+    explode and every pair join downstream inherit its partitioning."""
+    reps = representatives(members).select("doc_id", "m")
+    sh = pin(_raw_shingles(spread_scan(d).join(reps, "doc_id", "left_semi")))
     hot = (
-        sh.groupBy("shingle")
-        .agg(F.sum("_m").alias("df"))
+        sh.join(reps, "doc_id")
+        .groupBy("shingle")
+        .agg(F.sum("m").alias("df"))
         .filter(F.col("df") > DF_CAP)
         .select("shingle")
     )
@@ -204,49 +247,22 @@ _JACCARD_SQL = jaccard_sql_from("sh")
 
 
 def _exact_dup_parts(d: DataFrame, tau: float, pair_fn=None):
-    """Shared machinery of the exact-duplicate quotient (r12): returns
-    ``(m, gn, rp, alive)`` where ``m`` = (doc_id, rid) member→rep map
-    over byte-identical texts, ``gn`` = (rid, gn) group sizes, ``rp``
-    = REPRESENTATIVE-level pairs ≥ tau over the rep shingle index —
-    by default exact Jaccard (:func:`jaccard_pairs`); r14 generalizes
-    with ``pair_fn(sh_capped, tau)`` so candidate-generation variants
-    whose keys are CONTENT functions (dd3's minhash band buckets)
-    quotient through the same machinery — capped with the FULL-corpus
-    df (each shingle's true df is Σ group-size over the rep index, so
-    exactly the shingles the uncollapsed plan drops are dropped) —
-    and ``alive`` = (rid) reps with ≥ 1 surviving post-cap shingle
-    (the membership rule for intra-group jaccard-1 edges; identical
-    for the minhash path, where a doc has a signature iff its capped
-    shingle set is non-empty)."""
-    m = exact_member_map(d)
-    gn = m.groupBy("rid").agg(F.count("*").alias("gn"))
-    rep_docs = d.join(
-        m.filter(F.col("doc_id") == F.col("rid")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    toked = rep_docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks")
-    ).filter(F.size("toks") >= K_SHINGLE)
-    sh_r = pin(
-        toked.select(
-            "doc_id",
-            F.explode(
-                F.transform(shingles_of_tokens(F.col("toks")), lambda s: md5h60(s))
-            ).alias("shingle"),
-        )
-    )
-    hot = (
-        sh_r.join(gn.withColumnRenamed("rid", "doc_id"), "doc_id")
-        .groupBy("shingle")
-        .agg(F.sum("gn").alias("df"))
-        .filter(F.col("df") > DF_CAP)
-        .select("shingle")
-    )
-    sh_capped = pin(sh_r.join(F.broadcast(hot), "shingle", "left_anti"))
-    rp = (pair_fn or jaccard_pairs)(sh_capped, tau)
-    alive = sh_capped.select(F.col("doc_id").alias("rid")).distinct()
-    return m, gn, rp, alive
+    """Representative-level pairs of the exact-duplicate quotient
+    (r12): returns ``(members, rp, alive)`` where ``members`` is
+    :func:`exact_members` of ``d``, ``rp`` = REPRESENTATIVE pairs ≥ tau
+    over :func:`rep_capped_shingles` — by default exact Jaccard
+    (:func:`jaccard_pairs`); r14 generalizes with
+    ``pair_fn(sh_capped, tau)`` so candidate-generation variants whose
+    keys are CONTENT functions (dd3's minhash band buckets) quotient
+    the same way — and ``alive`` = (rep_id) reps with ≥ 1 surviving
+    post-cap shingle (the membership rule for intra-group jaccard-1
+    edges; identical for the minhash path, where a doc has a signature
+    iff its capped shingle set is non-empty)."""
+    members = exact_members(d)
+    sh = pin(rep_capped_shingles(d, members))
+    rp = (pair_fn or jaccard_pairs)(sh, tau)
+    alive = sh.select(F.col("doc_id").alias("rep_id")).distinct()
+    return members, rp, alive
 
 
 def jaccard_pairs_collapsed(d: DataFrame, tau: float, pair_fn=None) -> DataFrame:
@@ -258,14 +274,11 @@ def jaccard_pairs_collapsed(d: DataFrame, tau: float, pair_fn=None) -> DataFrame
     REPRESENTATIVE per exact-dup group and qualifying representative
     pairs expand back to member pairs afterwards.
 
-    The df-cap stays a FULL-CORPUS cap (the subtle part): a shingle's
-    true document frequency is Σ group-size over the rep groups that
-    contain it, so the hot list is computed from the REP index joined
-    with group sizes — no full-corpus explode anywhere, yet exactly
-    the shingles the uncollapsed plan drops are dropped. Sizes for
-    the Jaccard denominator come from the capped rep index, which
-    every member shares, so pair values are bit-identical. Intra-group
-    pairs (identical texts) carry jaccard = 1.0 — exactly
+    The df-cap stays a FULL-CORPUS cap (:func:`rep_capped_shingles`),
+    so exactly the shingles the uncollapsed plan drops are dropped.
+    Sizes for the Jaccard denominator come from the capped rep index,
+    which every member shares, so pair values are bit-identical.
+    Intra-group pairs (identical texts) carry jaccard = 1.0 — exactly
     round(n/(n+n−n), 6) — and exist iff the text has ≥ K_SHINGLE
     tokens and ≥ 1 surviving (post-cap) shingle, the same membership
     rule the direct plan applies. Under a k-way duplicated corpus the
@@ -275,45 +288,31 @@ def jaccard_pairs_collapsed(d: DataFrame, tau: float, pair_fn=None) -> DataFrame
     ``pair_fn`` (r14): swap the representative-level pair kernel —
     dd3 passes the minhash-LSH candidate+verify pipeline; band keys
     are content functions, so the expansion argument is unchanged."""
-    m, _, rp, alive = _exact_dup_parts(d, tau, pair_fn=pair_fn)
-    return expand_rep_pairs(m, rp, "jaccard", F.lit(1.0), alive=alive)
-
-
-def exact_member_map(d: DataFrame) -> DataFrame:
-    """(doc_id, rid) member→representative map over byte-identical
-    texts — rid = min doc_id of the md5(text) group. Factored (r15)
-    so the quotient kernels share ONE definition; pinned because both
-    the rep restriction and the expansion joins consume it. Callers
-    whose kernel emits docs unconditionally (dd4) must pre-filter NULL
-    texts: md5(NULL) is NULL and the window would glue every NULL-text
-    doc into one phantom group."""
-    return pin(
-        d.select("doc_id", F.md5(F.col("text")).alias("gk"))
-        .withColumn("rid", F.min("doc_id").over(Window.partitionBy("gk")))
-        .select("doc_id", "rid")
-    )
+    members, rp, alive = _exact_dup_parts(d, tau, pair_fn=pair_fn)
+    return expand_rep_pairs(members, rp, "jaccard", F.lit(1.0), alive=alive)
 
 
 def expand_rep_pairs(
-    m: DataFrame,
+    members: DataFrame,
     rp: DataFrame,
     score_col: str,
-    intra_score,
+    intra_score: Column,
     alive: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared member-pair expansion of the exact-duplicate quotient
-    (r15, factored from jaccard_pairs_collapsed + dd4's inline copy so
-    quotient fixes apply to every kernel): ``m`` = (doc_id, rid)
-    member→rep map, ``rp`` = rep-level pairs carrying ``score_col``.
-    Cross-group rep pairs expand to member pairs with the rep score;
-    every m≥2 group additionally self-pairs at ``intra_score`` (the
-    identical-text score: jaccard 1.0, hamming 0). ``alive`` restricts
-    intra membership to reps the kernel would emit at all (the shingle
-    family's non-empty-capped-set rule); pass None when every doc
-    fingerprints (dd4). Only output-sized joins — the quotient's whole
-    point is that the expensive kernel already ran on reps only."""
-    pa = m.select(F.col("rid").alias("doc_a"), F.col("doc_id").alias("ma"))
-    pb = m.select(F.col("rid").alias("doc_b"), F.col("doc_id").alias("mb"))
+    """Member-pair expansion of the exact-duplicate quotient, shared by
+    every pair kernel (dd2/dd3/dd7 via jaccard_pairs_collapsed, dd4,
+    dd5): ``members`` = :func:`exact_members`, ``rp`` = rep-level
+    (doc_a, doc_b) pairs carrying ``score_col``. Cross-group rep pairs
+    expand to member pairs with the rep score; every m≥2 group
+    additionally self-pairs at ``intra_score`` (the identical-content
+    score), evaluated over members joined with ``alive``. ``alive``
+    restricts intra membership to reps the kernel would emit at all
+    (the shingle family's non-empty-capped-set rule; dd5's self-cosine
+    ≥ τ, whose per-rep score column ``intra_score`` then reads); pass
+    None when every doc fingerprints (dd4). Only output-sized joins —
+    the expensive kernel already ran on reps only."""
+    pa = members.select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("ma"))
+    pb = members.select(F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("mb"))
     cross = (
         rp.join(pa, "doc_a")
         .join(pb, "doc_b")
@@ -323,13 +322,13 @@ def expand_rep_pairs(
             score_col,
         )
     )
-    members = m.join(alive, "rid") if alive is not None else m
-    ia = members.select("rid", F.col("doc_id").alias("doc_a"))
-    ib = members.select("rid", F.col("doc_id").alias("doc_b"))
+    live = members.join(alive, "rep_id") if alive is not None else members
+    ia = live.select("rep_id", F.col("doc_id").alias("doc_a"), intra_score.alias(score_col))
+    ib = live.select("rep_id", F.col("doc_id").alias("doc_b"))
     intra = (
-        ia.join(ib, "rid")
+        ia.join(ib, "rep_id")
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", intra_score.alias(score_col))
+        .select("doc_a", "doc_b", score_col)
     )
     return cross.unionByName(intra)
 
@@ -597,8 +596,8 @@ def dd3b_minhash_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     d = load_table(spark, sf_dir, "documents")
-    _, grp = exact_groups(d)
-    reps = d.join(grp.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi")
+    grp = representatives(exact_members(d))
+    reps = d.join(grp.select("doc_id"), "doc_id", "left_semi")
     docs = (
         reps.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
         .filter(F.size("toks") >= K_SHINGLE)
@@ -627,8 +626,8 @@ def dd3b_minhash_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(1.0 - F.col("dist"), 6).alias("jaccard_est"),
         )
     )
-    ma = grp.select(F.col("rep_id").alias("doc_a"), F.col("m").alias("m_a"))
-    mb = grp.select(F.col("rep_id").alias("doc_b"), F.col("m").alias("m_b"))
+    ma = grp.select(F.col("doc_id").alias("doc_a"), F.col("m").alias("m_a"))
+    mb = grp.select(F.col("doc_id").alias("doc_b"), F.col("m").alias("m_b"))
     cross = (
         rep_pairs.join(ma, "doc_a").join(mb, "doc_b")
         .select("doc_a", "doc_b", "jaccard_est",
@@ -638,9 +637,9 @@ def dd3b_minhash_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs with its own copies at Jaccard exactly 1
     selfp = (
         grp.filter(F.col("m") >= 2)
-        .join(docs.select(F.col("doc_id").alias("rep_id")), "rep_id", "left_semi")
+        .join(docs.select("doc_id"), "doc_id", "left_semi")
         .select(
-            F.col("rep_id").alias("doc_a"), F.col("rep_id").alias("doc_b"),
+            F.col("doc_id").alias("doc_a"), F.col("doc_id").alias("doc_b"),
             F.lit(1.0).alias("jaccard_est"),
             (F.col("m") * (F.col("m") - 1) / 2).cast("bigint").alias("n_pairs"),
         )
@@ -723,21 +722,15 @@ _SIMHASH_SQL = simhash_sql_from("documents")
 def dd4_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL-text guard (r15, r14 ADVICE): the uncollapsed plan drops
     # NULL-text docs (split(NULL) explodes to nothing → no fingerprint),
-    # and md5(NULL) would otherwise glue ALL null-text docs into one
-    # phantom exact group self-pairing at hamming 0 — so the member map
-    # only admits non-null texts. (The shingle family doesn't need this:
-    # its `alive` rule already excludes shingle-less reps from intra.)
+    # while the quotient groups ALL of them into one group that would
+    # self-pair at hamming 0 — so only non-null texts enter it
     d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    m = exact_member_map(d)
-    rep_d = d.join(
-        m.filter(F.col("doc_id") == F.col("rid")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
+    members = exact_members(d)
+    rep_d = d.join(representatives(members).select("doc_id"), "doc_id", "left_semi")
     rp = simhash_pairs_of(rep_d)
     # every non-null doc fingerprints (split() yields >= 1 token), so
     # intra membership is unconditional — alive=None
-    return expand_rep_pairs(m, rp, "hamming", F.lit(0).cast("int"), alive=None)
+    return expand_rep_pairs(members, rp, "hamming", F.lit(0).cast("int"))
 
 
 def simhash_pairs_of(d: DataFrame) -> DataFrame:
@@ -843,40 +836,31 @@ def simhash_pairs_of(d: DataFrame) -> DataFrame:
     tags=("dedup", "graph"),
 )
 def dd6_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    # df-cap over the FULL corpus (collapsing first would shift document
-    # frequencies and change which shingles survive the cap — gr3's
-    # rule), via the r14 weighted-df rep quotient: identical cap,
-    # shingle explode over distinct contents only
-    fp, grp = exact_groups(d)
-    rep_sh = pin(rep_capped_shingles(d, grp))
-    pairs = jaccard_pairs(rep_sh, tau=JACCARD_TAU)
-    labels = min_label_components(pairs).select(
+    return shingle_components(load_table(spark, sf_dir, "documents"), min_label_components)
+
+
+def shingle_components(d: DataFrame, components) -> DataFrame:
+    """(doc_id, cluster_id) near-dup components (Jaccard ≥ JACCARD_TAU
+    over the df-capped shingle index) of a (doc_id, text) relation,
+    computed on exact-dup representatives: the full-corpus-capped rep
+    index (:func:`rep_capped_shingles`) → :func:`jaccard_pairs` →
+    ``components`` (a (doc_a, doc_b) → (doc_id, cluster_id) fixpoint:
+    dd6/canon1's min-label propagation, gr4's star contraction) →
+    :func:`expand_collapsed_labels`. Reps whose capped shingle set is
+    non-empty are the eligible ones: identical copies of such a doc
+    pair with each other (Jaccard 1.0) in the full graph. Docs in no
+    component are absent (the caller's coalesce makes singletons)."""
+    members = exact_members(d)
+    rep_sh = pin(rep_capped_shingles(d, members))
+    labels = components(jaccard_pairs(rep_sh, tau=JACCARD_TAU)).select(
         F.col("doc_id").alias("rep_id"), F.col("cluster_id").alias("comp")
     )
-    # reps whose capped shingle set is non-empty: identical copies of
-    # such a doc pair with each other (Jaccard 1.0) in the full graph
     shingled = rep_sh.select(F.col("doc_id").alias("rep_id")).distinct()
-    return expand_collapsed_labels(fp, grp, labels, shingled)
-
-
-def exact_groups(d: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Collapse exact duplicates (raw md5 of text — members share the
-    literal text, hence identical shingles/prefixes/blocks) to their
-    min-doc_id representative. Returns (fp, grp):
-    fp = (doc_id, fp), grp = (fp, rep_id, m). Pair generation over
-    representatives is an exact quotient of the full pair graph; any
-    corpus-frequency cap (df-cap, block cap) must still be computed
-    over the FULL corpus before restricting to representatives."""
-    fp = d.select("doc_id", F.md5("text").alias("fp"))
-    grp = fp.groupBy("fp").agg(
-        F.min("doc_id").alias("rep_id"), F.count("*").alias("m")
-    )
-    return fp, grp
+    return expand_collapsed_labels(members, labels, shingled)
 
 
 def expand_collapsed_labels(
-    fp: DataFrame, grp: DataFrame, labels: DataFrame,
+    members: DataFrame, labels: DataFrame,
     eligible: DataFrame, out_col: str = "cluster_id",
 ) -> DataFrame:
     """Expand component labels computed on exact-dup REPRESENTATIVES
@@ -885,23 +869,23 @@ def expand_collapsed_labels(
     over all members; a group of m ≥ 2 eligible docs self-pairs in the
     full graph (its members are identical) even with no external edge.
 
-    fp: (doc_id, fp); grp: (fp, rep_id, m); labels: (rep_id, comp) from
-    min_label_components over rep pairs; eligible: (rep_id) reps that
+    members: :func:`exact_members`; labels: (rep_id, comp) from a
+    components fixpoint over rep pairs; eligible: (rep_id) reps that
     would pair with an identical copy of themselves (e.g. non-empty
-    capped shingle set / surviving block)."""
-    lab = (
-        grp.join(labels, "rep_id", "left")
+    capped shingle set / surviving block / non-zero vector). Members
+    of groups with neither a label nor eligibility are absent."""
+    return (
+        members.join(labels, "rep_id", "left")
         .join(eligible.select("rep_id", F.lit(True).alias("_elig")), "rep_id", "left")
         .filter(
             F.col("comp").isNotNull()
             | ((F.col("m") >= 2) & F.col("_elig").isNotNull())
         )
         .select(
-            "fp",
+            "doc_id",
             F.coalesce(F.col("comp"), F.col("rep_id").cast("bigint")).alias(out_col),
         )
     )
-    return fp.join(lab, "fp").select("doc_id", out_col)
 
 
 def min_label_components(pairs: DataFrame) -> DataFrame:
@@ -1234,32 +1218,14 @@ def dd9_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "pipeline"),
 )
 def canon1_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from .text import STOPWORDS, tokens
 
     d = load_table(spark, sf_dir, "documents")
-    # Collapse EXACT duplicates (raw md5 — members share the literal
-    # text, hence the identical shingle set) before any pair
-    # generation: near-dup pair mass is quadratic in duplicate
-    # multiplicity, and the x10 probe (10-way replicas) measured the
-    # uncollapsed form at 16x for x10 data. Each fingerprint group's
-    # representative is its min doc_id, so the component label over
-    # representatives IS the component min over all members, and
-    # expanding labels back through the fingerprint preserves dd6's
-    # full-corpus semantics exactly (the oracle still computes the
-    # closure over every document).
-    fp = d.select("doc_id", F.md5("text").alias("fp"))
-    rep = fp.groupBy("fp").agg(F.min("doc_id").alias("rep_id"))
-    rep_docs = d.join(
-        rep.select(F.col("rep_id").alias("doc_id")), "doc_id"
-    ).select("doc_id", "text")
-    pairs = jaccard_pairs(pin(shingle_table_of(rep_docs)), tau=JACCARD_TAU)
-    rep_labels = min_label_components(pairs)
-    rep_cluster = rep.join(
-        rep_labels, rep.rep_id == rep_labels.doc_id, "left"
-    ).select("fp", F.coalesce("cluster_id", "rep_id").alias("cluster_id"))
-    clusters = fp.join(rep_cluster, "fp").select("doc_id", "cluster_id")
+    # dd6's components over exact-dup representatives (near-dup pair
+    # mass is quadratic in duplicate multiplicity; the x10 probe
+    # measured the uncollapsed form at 16x), expanded to every member;
+    # docs in no component are singleton clusters
+    clusters = shingle_components(d, min_label_components)
     toks = tokens(F.col("text"))
     n = F.size(toks)
     stop_ratio = (
@@ -1269,7 +1235,11 @@ def canon1_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = (
         F.least(F.lit(1.0), n / F.lit(50.0)) * (F.lit(1.0) - stop_ratio) * uniq_ratio
     )
-    lab = d.select("doc_id", quality.alias("quality")).join(clusters, "doc_id")
+    lab = d.select("doc_id", quality.alias("quality")).join(
+        clusters, "doc_id", "left"
+    ).select(
+        "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id"), "quality"
+    )
     w = Window.partitionBy("cluster_id").orderBy(F.desc("quality"), F.asc("doc_id"))
     return lab.select(
         "doc_id",
@@ -1416,8 +1386,9 @@ def dd2b_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df-cap over the FULL corpus, index restricted to reps — via the
     # r14 weighted-df rep quotient (identical values, no full-corpus
     # shingle pass)
-    _, grp = exact_groups(d)
-    rsh = pin(rep_capped_shingles(d, grp))
+    members = exact_members(d)
+    grp = representatives(members)
+    rsh = pin(rep_capped_shingles(d, members))
     sizes = rsh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = rsh.alias("a"), rsh.alias("b")
     inter = (
@@ -1430,8 +1401,8 @@ def dd2b_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("ninter"))
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    ma = grp.select(F.col("rep_id").alias("doc_a"), F.col("m").alias("m_a"))
-    mb = grp.select(F.col("rep_id").alias("doc_b"), F.col("m").alias("m_b"))
+    ma = grp.select(F.col("doc_id").alias("doc_a"), F.col("m").alias("m_a"))
+    mb = grp.select(F.col("doc_id").alias("doc_b"), F.col("m").alias("m_b"))
     cont = F.col("ninter").cast("double") / F.col("na")
     crossp = (
         inter.join(sa, "doc_a")
@@ -1445,11 +1416,9 @@ def dd2b_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     selfp = (
         grp.filter(F.col("m") >= 2)
-        .join(
-            sizes.select(F.col("doc_id").alias("rep_id")), "rep_id", "left_semi"
-        )
+        .join(sizes.select("doc_id"), "doc_id", "left_semi")
         .select(
-            F.col("rep_id").alias("doc_a"), F.col("rep_id").alias("doc_b"),
+            F.col("doc_id").alias("doc_a"), F.col("doc_id").alias("doc_b"),
             F.lit(1.0).alias("containment"),
             (F.col("m") * (F.col("m") - 1)).cast("bigint").alias("n_pairs"),
         )
@@ -1589,7 +1558,10 @@ def prefix_filter_pairs_of(sh: DataFrame) -> DataFrame:
     tags=("dedup", "pipeline"),
 )
 def er2_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
+    # a NULL text has a NULL block key in the oracle and never matches,
+    # but concat_ws makes it '' here — and the quotient groups every
+    # NULL text into one group — so NULL texts stay out entirely
+    d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.split(F.col("text"), " ")
     p = d.select(
         "doc_id",
@@ -1603,8 +1575,8 @@ def er2_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") > ER_BLOCK_CAP)
         .select("blk")
     )
-    fp, grp = exact_groups(d)
-    reps = p.join(grp.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi")
+    members = exact_members(d)
+    reps = p.join(representatives(members).select("doc_id"), "doc_id", "left_semi")
     kept = pin(reps.join(F.broadcast(hot), "blk", "left_anti"))
     a, b = kept.alias("a"), kept.alias("b")
     pairs = (
@@ -1616,7 +1588,7 @@ def er2_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("rep_id"), F.col("cluster_id").alias("comp")
     )
     comp = expand_collapsed_labels(
-        fp, grp, labels, kept.select(F.col("doc_id").alias("rep_id")), out_col="entity_id"
+        members, labels, kept.select(F.col("doc_id").alias("rep_id")), out_col="entity_id"
     )
     w = Window.partitionBy("entity_id").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return (
@@ -1783,13 +1755,12 @@ def t13_dedup_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def deval1_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    _, grp = exact_groups(d)
-    grp = pin(grp)
-    reps = grp.select(F.col("rep_id").alias("doc_id"))
+    members = exact_members(d)
+    grp = representatives(members)
     # r14: weighted-df rep quotient — identical capped rep index, no
     # full-corpus shingle pass (was 16.2 s of 30.3 s at ×10)
-    rep_sh = pin(rep_capped_shingles(d, grp))
-    rep_d = d.join(reps, "doc_id", "left_semi")
+    rep_sh = pin(rep_capped_shingles(d, members))
+    rep_d = d.join(grp.select("doc_id"), "doc_id", "left_semi")
     truth = (
         pin(jaccard_pairs(rep_sh, tau=JACCARD_TAU).select("doc_a", "doc_b"))
     )
@@ -1798,8 +1769,8 @@ def deval1_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "simhash": simhash_pairs_of(rep_d).select("doc_a", "doc_b"),
         "prefix_filter": prefix_filter_pairs_of(rep_sh).select("doc_a", "doc_b"),
     }
-    wa = grp.select(F.col("rep_id").alias("doc_a"), F.col("m").alias("m_a"))
-    wb = grp.select(F.col("rep_id").alias("doc_b"), F.col("m").alias("m_b"))
+    wa = grp.select(F.col("doc_id").alias("doc_a"), F.col("m").alias("m_a"))
+    wb = grp.select(F.col("doc_id").alias("doc_b"), F.col("m").alias("m_b"))
 
     def wsum(pairs: DataFrame, alias: str) -> DataFrame:
         return (
@@ -1813,10 +1784,10 @@ def deval1_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     half = (F.col("m") * (F.col("m") - 1) / 2).cast("bigint")
-    shingled = rep_sh.select(F.col("doc_id").alias("rep_id")).distinct()
+    shingled = rep_sh.select("doc_id").distinct()
     self_sh = (
         grp.filter(F.col("m") >= 2)
-        .join(shingled, "rep_id", "left_semi")
+        .join(shingled, "doc_id", "left_semi")
         .agg(F.coalesce(F.sum(half), F.lit(0)).cast("bigint").alias("selfw"))
     )
     self_all = grp.filter(F.col("m") >= 2).agg(
@@ -2064,14 +2035,32 @@ ES_EXEMPT_CAP = 1000                # dc3: corpus rows kept per benchmark-
                                     # drop, bounded instead of unbounded)
 
 
+def anchor_index(toked: DataFrame, stride: int) -> DataFrame:
+    """(doc_id, pos, h) ES_ANCHOR-token anchors of a (doc_id, toks)
+    relation, one every ``stride`` positions from 0, each hashed to a
+    60-bit md5h60 int at explode time: ``stride=ES_ANCHOR`` is the
+    grid-aligned seed side of dd11/dc3's asymmetric index, ``stride=1``
+    the dense probe side (every position's A-gram)."""
+    A = ES_ANCHOR
+    return toked.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.floor((F.size("toks") - A) / stride).cast("int")),
+                lambda i: F.struct(
+                    (i * stride).alias("pos"),
+                    md5h60(F.concat_ws(" ", F.slice("toks", i * stride + 1, A))).alias("h"),
+                ),
+            )
+        ).alias("a"),
+    ).select("doc_id", F.col("a.pos").alias("pos"), F.col("a.h").alias("h"))
+
+
 def exact_substring_spans_of(d: DataFrame) -> DataFrame:
     """dd11's pipeline over an arbitrary (doc_id, text) relation —
     parameterized so the fixture test can plant passages at arbitrary
     alignments (the case dd8's fixed 64-token grid misses)."""
-    from ..functions import md5h60
-
-    _, grp = exact_groups(d)
-    reps = d.join(grp.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi")
+    reps = d.join(representatives(exact_members(d)).select("doc_id"), "doc_id", "left_semi")
     toked = pin(
         reps.select("doc_id", F.split(F.col("text"), " ").alias("toks")).filter(
             F.size("toks") >= ES_ANCHOR
@@ -2087,30 +2076,8 @@ def exact_substring_spans_of(d: DataFrame) -> DataFrame:
     # doc_b indexes EVERY position's A-gram (the classic asymmetric
     # seed-and-extend index: O(n/A) seeds probe an O(n) index, the
     # shuffle moves n/A + n rows instead of n^2 comparisons).
-    idx_aligned = toked.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.floor((F.size("toks") - A) / A).cast("int")),
-                lambda i: F.struct(
-                    (i * A).alias("pos"),
-                    md5h60(F.concat_ws(" ", F.slice("toks", i * A + 1, A))).alias("h"),
-                ),
-            )
-        ).alias("a"),
-    ).select("doc_id", F.col("a.pos").alias("pos"), F.col("a.h").alias("h"))
-    idx_all = toked.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), (F.size("toks") - A).cast("int")),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    md5h60(F.concat_ws(" ", F.slice("toks", i + 1, A))).alias("h"),
-                ),
-            )
-        ).alias("a"),
-    ).select("doc_id", F.col("a.pos").alias("pos"), F.col("a.h").alias("h"))
+    idx_aligned = anchor_index(toked, A)
+    idx_all = anchor_index(toked, 1)
     # boilerplate cap on the probe side's key (hot anchors appear in
     # many docs; the hot list is tiny by construction, like DF_CAP)
     hot = (
@@ -2517,8 +2484,6 @@ def span_spans_between(
     output — pipe3's excision distincts (doc_a, start_a, end) —
     would otherwise pay two back-to-back full-relation shuffles on
     the critical path for one deduplication's worth of semantics."""
-    from ..functions import md5h60
-
     A = ES_ANCHOR
     ctoked = pin(
         corpus.select("doc_id", F.split(F.col("text"), " ").alias("toks")).filter(
@@ -2538,30 +2503,8 @@ def span_spans_between(
     # stride), whose benchmark counterpart sits at arbitrary offset —
     # caught by the dense benchmark index. Detection at that length
     # is EXACT, not a sketch.
-    idx_c = ctoked.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.floor((F.size("toks") - A) / A).cast("int")),
-                lambda i: F.struct(
-                    (i * A).alias("pos"),
-                    md5h60(F.concat_ws(" ", F.slice("toks", i * A + 1, A))).alias("h"),
-                ),
-            )
-        ).alias("a"),
-    ).select("doc_id", F.col("a.pos").alias("pos"), F.col("a.h").alias("h"))
-    idx_b = btoked.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), (F.size("toks") - A).cast("int")),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    md5h60(F.concat_ws(" ", F.slice("toks", i + 1, A))).alias("h"),
-                ),
-            )
-        ).alias("a"),
-    ).select("doc_id", F.col("a.pos").alias("pos"), F.col("a.h").alias("h"))
+    idx_c = anchor_index(ctoked, A)
+    idx_b = anchor_index(btoked, 1)
     # boilerplate cap on the corpus side's anchor df, with a BENCHMARK
     # EXEMPTION (r8 advisor): dropping every df>cap anchor from BOTH
     # sides made the most widely replicated contamination self-hiding
@@ -2634,15 +2577,13 @@ def span_decontam_of(d: DataFrame) -> DataFrame:
     # collapse exact corpus duplicates first (identical hosts carry
     # identical contamination — detect once on the representative,
     # fan the verdict back out to every member at the end)
-    fp, grp = exact_groups(corpus)
-    reps = corpus.join(grp.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi")
+    members = exact_members(corpus)
+    reps = corpus.join(representatives(members).select("doc_id"), "doc_id", "left_semi")
     spans = span_spans_between(reps, bench)
     # fan the representative's spans back out to every exact-duplicate
     # member (identical text ⇒ identical span coordinates)
-    members = fp.join(
-        grp.select("fp", F.col("rep_id").alias("doc_a")), "fp"
-    ).select(F.col("doc_id").alias("member_id"), "doc_a")
-    return spans.join(members, "doc_a").select(
+    fan = members.select(F.col("doc_id").alias("member_id"), F.col("rep_id").alias("doc_a"))
+    return spans.join(fan, "doc_a").select(
         F.col("member_id").alias("doc_id"),
         F.col("doc_b").alias("bench_id"),
         F.col("start_a").alias("start_doc"),

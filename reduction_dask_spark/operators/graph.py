@@ -165,21 +165,22 @@ def triangle_counts_of(d: DataFrame, tau: float) -> DataFrame:
     """gr2's quotient core over an arbitrary (doc_id, text) relation —
     factored out so the parity test can pit it against a direct
     enumeration on synthetic dup-heavy corpora."""
-    from .dedup import _exact_dup_parts
+    from .dedup import _exact_dup_parts, representatives
 
-    m, gn, rp, alive = _exact_dup_parts(d, tau)
+    members, rp, alive = _exact_dup_parts(d, tau)
+    gn = representatives(members).select("rep_id", F.col("m").alias("gn"))
     e = pin(rp.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")))
 
     # per-edge corner contributions over the symmetric neighbor view
     sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    gu = gn.select(F.col("rid").alias("u"), F.col("gn").alias("mu"))
-    gv = gn.select(F.col("rid").alias("v"), F.col("gn").alias("mv"))
+    gu = gn.select(F.col("rep_id").alias("u"), F.col("gn").alias("mu"))
+    gv = gn.select(F.col("rep_id").alias("v"), F.col("gn").alias("mv"))
     edge_part = (
         sym.join(gu, "u")
         .join(gv, "v")
-        .groupBy(F.col("u").alias("rid"))
+        .groupBy(F.col("u").alias("rep_id"))
         .agg(
             F.sum(
                 (F.col("mu") - 1) * F.col("mv")
@@ -198,33 +199,33 @@ def triangle_counts_of(d: DataFrame, tau: float) -> DataFrame:
     tri = wedges.join(
         e3, (F.col("e3.a") == F.col("wa")) & (F.col("e3.b") == F.col("wc"))
     ).select("wa", "wb", "wc")
-    g_of = {c: gn.select(F.col("rid").alias(c), F.col("gn").alias(f"m_{c}")) for c in ("wa", "wb", "wc")}
+    g_of = {c: gn.select(F.col("rep_id").alias(c), F.col("gn").alias(f"m_{c}")) for c in ("wa", "wb", "wc")}
     tri_m = tri.join(g_of["wa"], "wa").join(g_of["wb"], "wb").join(g_of["wc"], "wc")
     tri_part = (
-        tri_m.select(F.col("wa").alias("rid"), (F.col("m_wb") * F.col("m_wc")).alias("c"))
-        .unionAll(tri_m.select(F.col("wb").alias("rid"), (F.col("m_wa") * F.col("m_wc")).alias("c")))
-        .unionAll(tri_m.select(F.col("wc").alias("rid"), (F.col("m_wa") * F.col("m_wb")).alias("c")))
-        .groupBy("rid")
+        tri_m.select(F.col("wa").alias("rep_id"), (F.col("m_wb") * F.col("m_wc")).alias("c"))
+        .unionAll(tri_m.select(F.col("wb").alias("rep_id"), (F.col("m_wa") * F.col("m_wc")).alias("c")))
+        .unionAll(tri_m.select(F.col("wc").alias("rep_id"), (F.col("m_wa") * F.col("m_wb")).alias("c")))
+        .groupBy("rep_id")
         .agg(F.sum("c").alias("c"))
     )
 
     # intra-clique triangles: every member of an alive 3+ group sits in
     # C(gn−1, 2) triangles formed by its own duplicates
     intra_part = (
-        gn.join(alive, "rid")
+        gn.join(alive, "rep_id")
         .filter(F.col("gn") >= 3)
-        .select("rid", F.expr("(gn - 1) * (gn - 2) DIV 2").alias("c"))
+        .select("rep_id", F.expr("(gn - 1) * (gn - 2) DIV 2").alias("c"))
     )
 
     total = (
         edge_part.unionByName(tri_part)
         .unionByName(intra_part)
-        .groupBy("rid")
+        .groupBy("rep_id")
         .agg(F.sum("c").alias("n_triangles"))
         .filter(F.col("n_triangles") > 0)
     )
     return (
-        m.join(total, "rid")
+        members.join(total, "rep_id")
         .select("doc_id", F.col("n_triangles").cast("bigint").alias("n_triangles"))
     )
 
@@ -327,18 +328,21 @@ def kcore_weighted(nodes: DataFrame, edges: DataFrame, k: int) -> DataFrame:
     tags=("graph", "dedup"),
 )
 def gr3_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import JACCARD_TAU, jaccard_pairs, rep_capped_shingles
+    from .dedup import (
+        JACCARD_TAU,
+        exact_members,
+        jaccard_pairs,
+        rep_capped_shingles,
+        representatives,
+    )
 
     d = load_table(spark, sf_dir, "documents")
     # full-corpus df-cap semantics preserved (collapsing first would
     # shift document frequencies and change which shingles survive the
     # cap) via the r14 weighted-df rep quotient: shingle explode runs
     # over distinct contents only, cap decision is full-corpus exact
-    fp = d.select("doc_id", F.md5("text").alias("fp"))
-    grp = fp.groupBy("fp").agg(
-        F.min("doc_id").alias("rep_id"), F.count("*").cast("bigint").alias("m")
-    )
-    rep_sh = pin(rep_capped_shingles(d, grp))
+    members = exact_members(d)
+    rep_sh = pin(rep_capped_shingles(d, members))
     pairs = jaccard_pairs(rep_sh, tau=JACCARD_TAU)
     und = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
@@ -346,16 +350,14 @@ def gr3_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nodes: reps with a non-empty capped shingle set (groups whose
     # shingles were all hot-capped away, or too short to shingle,
     # generate no pairs in the blown-up graph either)
-    nodes = grp.join(
-        rep_sh.select(F.col("doc_id").alias("rep_id")).distinct(), "rep_id"
-    ).select(F.col("rep_id").alias("id"), "m")
+    nodes = representatives(members).join(
+        rep_sh.select("doc_id").distinct(), "doc_id"
+    ).select(F.col("doc_id").alias("id"), "m")
     core = kcore_weighted(nodes, und, KCORE_K)
     # expand back to every member of surviving groups
-    return (
-        fp.join(grp, "fp")
-        .join(core.select(F.col("id").alias("rep_id"), "degw"), "rep_id")
-        .select("doc_id", F.col("degw").alias("deg"))
-    )
+    return members.join(
+        core.select(F.col("id").alias("rep_id"), "degw"), "rep_id"
+    ).select("doc_id", F.col("degw").alias("deg"))
 
 
 def _gr3_oracle() -> str:
@@ -507,24 +509,11 @@ def star_components(pairs: DataFrame) -> DataFrame:
     tags=("graph", "dedup"),
 )
 def gr4_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import (
-        JACCARD_TAU,
-        exact_groups,
-        expand_collapsed_labels,
-        jaccard_pairs,
-        rep_capped_shingles,
-    )
+    from .dedup import shingle_components
 
-    d = load_table(spark, sf_dir, "documents")
-    # r14 weighted-df rep quotient (see dedup.rep_capped_shingles)
-    fp, grp = exact_groups(d)
-    rep_sh = pin(rep_capped_shingles(d, grp))
-    pairs = jaccard_pairs(rep_sh, tau=JACCARD_TAU)
-    labels = star_components(pairs).select(
-        F.col("doc_id").alias("rep_id"), F.col("cluster_id").alias("comp")
-    )
-    shingled = rep_sh.select(F.col("doc_id").alias("rep_id")).distinct()
-    return expand_collapsed_labels(fp, grp, labels, shingled)
+    # dd6's exact-dup quotient and pair graph, star contraction instead
+    # of min-label propagation
+    return shingle_components(load_table(spark, sf_dir, "documents"), star_components)
 
 
 from ..registry import REGISTRY as _REG4  # noqa: E402

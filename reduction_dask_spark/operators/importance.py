@@ -23,13 +23,10 @@ same mean-|SHAP| table shape (A4), no shap package needed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from ..ml import (
     DIM,

@@ -30,6 +30,13 @@ from ..caching import pin
 from ..registry import query
 from ..session import local_frame
 from ..sources import load_table
+from .dedup import (
+    exact_members,
+    expand_collapsed_labels,
+    expand_rep_pairs,
+    min_label_components,
+    representatives,
+)
 
 TOP_K = 5
 QUERY_MOD = 50       # query sampling: vec_id % 50 == 0 ...
@@ -44,16 +51,21 @@ DIM = 64
 NEARDUP_TAU = 0.4
 
 
-def _fp_elems(col: str) -> Column:
-    """Array of per-element strings for an exact-value fingerprint,
-    with NULL elements made explicit ('NULL' sentinel) so that
-    concat_ws's null-skipping cannot merge vectors that differ only
-    in a NULL's position ([1.0,NULL,2.0] vs [1.0,2.0,NULL]). A cast
-    float never renders as 'NULL', so no collision with real values
-    is possible. Shared by dd5's and sem1's exact-dup quotients
-    (r12 ADVICE item)."""
-    return F.transform(
-        col, lambda x: F.coalesce(x.cast("string"), F.lit("NULL"))
+def _vector_members(emb: DataFrame) -> DataFrame:
+    """:func:`dedup.exact_members` of the embeddings table (doc_id =
+    vec_id), keyed on a portable exact-value fingerprint of the vector
+    — dd5's and sem1's quotient. NULL elements are made EXPLICIT
+    ('NULL' sentinel) because concat_ws SKIPS nulls: without it
+    [1.0,NULL,2.0] and [1.0,2.0,NULL] would share a fingerprint and
+    wrongly collapse, fabricating pairs the direct (oracle) plan never
+    emits. A cast float never renders as 'NULL', so no collision with
+    real values is possible (r12 ADVICE item)."""
+    elems = F.transform(
+        "embedding", lambda x: F.coalesce(x.cast("string"), F.lit("NULL"))
+    )
+    return exact_members(
+        emb.select(F.col("vec_id").alias("doc_id"), "embedding"),
+        key=F.md5(F.concat_ws(",", elems)),
     )
 
 
@@ -333,71 +345,39 @@ def ss3_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "similarity"),
 )
 def dd5_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..caching import pin
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # portable value fingerprint (sem1's) → member→representative map.
-    # NULL elements are made EXPLICIT (coalesce → 'NULL') because
-    # concat_ws SKIPS nulls: without it [1.0,NULL,2.0] and
-    # [1.0,2.0,NULL] would share a fingerprint and wrongly collapse,
-    # fabricating pairs the direct (oracle) plan never emits. A cast
-    # float never stringifies to 'NULL', so the sentinel cannot
-    # collide with a real value. (r12 ADVICE item.)
-    fp = F.md5(F.concat_ws(",", _fp_elems("embedding")))
-    m = pin(
-        emb.select("vec_id", fp.alias("gk"))
-        .withColumn("rid", F.min("vec_id").over(Window.partitionBy("gk")))
-        .select("vec_id", "rid")
-    )
-    rep_ids = m.filter(F.col("vec_id") == F.col("rid")).select("vec_id")
+    members = _vector_members(emb)
+    rep_ids = representatives(members).select(F.col("doc_id").alias("vec_id"))
     rv = (
         emb.join(rep_ids, "vec_id", "left_semi")
-        .select("vec_id", as_double(F.col("embedding")).alias("ev"))
+        .select(F.col("vec_id").alias("doc_id"), as_double(F.col("embedding")).alias("ev"))
     )
     rbuckets = lsh_buckets(spark, sf_dir).join(rep_ids, "vec_id", "left_semi")
-    a = rbuckets.select(F.col("vec_id").alias("rid_a"), "bucket")
-    b = rbuckets.select(F.col("vec_id").alias("rid_b"), "bucket")
+    a = rbuckets.select(F.col("vec_id").alias("doc_a"), "bucket")
+    b = rbuckets.select(F.col("vec_id").alias("doc_b"), "bucket")
     cand = (
-        a.join(b, "bucket").filter(F.col("rid_a") < F.col("rid_b"))
-        .select("rid_a", "rid_b")
+        a.join(b, "bucket").filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
     )
-    va = rv.select(F.col("vec_id").alias("rid_a"), F.col("ev").alias("ea"))
-    vb = rv.select(F.col("vec_id").alias("rid_b"), F.col("ev").alias("eb"))
+    va = rv.select(F.col("doc_id").alias("doc_a"), F.col("ev").alias("ea"))
+    vb = rv.select(F.col("doc_id").alias("doc_b"), F.col("ev").alias("eb"))
     cos = cosine(F.col("ea"), F.col("eb"))
     rp = (
-        cand.join(va, "rid_a")
-        .join(vb, "rid_b")
+        cand.join(va, "doc_a")
+        .join(vb, "doc_b")
         .filter(cos >= NEARDUP_TAU)
-        .select("rid_a", "rid_b", F.round(cos, 5).alias("cos"))
-    )
-    # expand cross-group representative pairs to member pairs
-    pa = m.select(F.col("rid").alias("rid_a"), F.col("vec_id").alias("ma"))
-    pb = m.select(F.col("rid").alias("rid_b"), F.col("vec_id").alias("mb"))
-    cross = (
-        rp.join(pa, "rid_a")
-        .join(pb, "rid_b")
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            "cos",
-        )
+        .select("doc_a", "doc_b", F.round(cos, 5).alias("cos"))
     )
     # intra-group pairs: every two copies of the same vector, carrying
     # the vector's self-cosine through the SAME ≥ τ filter (zero
     # vectors self-cos to NaN/NULL in both engines and drop out)
     selfcos = cosine(F.col("ev"), F.col("ev"))
-    grp_ok = rv.filter(selfcos >= NEARDUP_TAU).select(
-        F.col("vec_id").alias("rid"), F.round(selfcos, 5).alias("cos")
+    alive = rv.filter(selfcos >= NEARDUP_TAU).select(
+        F.col("doc_id").alias("rep_id"), F.round(selfcos, 5).alias("self_cos")
     )
-    ia = m.select("rid", F.col("vec_id").alias("id_a"))
-    ib = m.select("rid", F.col("vec_id").alias("id_b"))
-    intra = (
-        ia.join(ib, "rid")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(grp_ok, "rid")
-        .select("id_a", "id_b", "cos")
+    return expand_rep_pairs(members, rp, "cos", F.col("self_cos"), alive=alive).select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"), "cos"
     )
-    return cross.unionByName(intra)
 
 
 # ---------------------------------------------------------------- ss4
@@ -1592,19 +1572,10 @@ def _sem1_oracle() -> str:
     tags=("dedup", "similarity", "pipeline"),
 )
 def sem1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import expand_collapsed_labels, min_label_components
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # collapse bit-identical vectors (portable value fingerprint;
-    # NULL-explicit — see dd5's fingerprint comment)
-    fp = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.md5(F.concat_ws(",", _fp_elems("embedding"))).alias("fp"),
-    )
-    grp = fp.groupBy("fp").agg(
-        F.min("doc_id").alias("rep_id"), F.count("*").alias("m")
-    )
-    reps = grp.select(F.col("rep_id").alias("vec_id"))
+    # collapse bit-identical vectors (dd5's quotient)
+    members = _vector_members(emb)
+    reps = representatives(members).select(F.col("doc_id").alias("vec_id"))
     buckets = lsh_buckets(spark, sf_dir).join(reps, "vec_id", "left_semi")
     v = emb.join(reps, "vec_id", "left_semi").select(
         "vec_id", as_double(F.col("embedding")).alias("ev")
@@ -1626,7 +1597,7 @@ def sem1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     eligible = v.filter(
         F.aggregate("ev", F.lit(0.0), lambda acc, x: acc + x * x) > 0
     ).select(F.col("vec_id").alias("rep_id"))
-    expanded = expand_collapsed_labels(fp, grp, labels, eligible).select(
+    expanded = expand_collapsed_labels(members, labels, eligible).select(
         F.col("doc_id").alias("vec_id"), "cluster_id"
     )
     out = emb.select("vec_id").join(expanded, "vec_id", "left").select(

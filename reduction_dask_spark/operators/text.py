@@ -2372,19 +2372,21 @@ def dsir1_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "when holding out eval data from a crawled corpus (same "
         "motivation as dc1's benchmark decontamination, applied to "
         "the split boundary itself). Deterministic portable-hash "
-        "assignment, no RNG. Plan/scale: ONE shuffle on the text "
-        "hash (exact-dup groups are bounded; the window computes a "
-        "per-group min, i.e. a partial-aggregable shape), then a "
-        "stateless hash projection — corpus-linear, no driver state. "
+        "assignment, no RNG. Plan/scale: the group rep is the dedup "
+        "family's exact-duplicate member map (dedup.exact_members: "
+        "one shuffle on the text hash, a per-group min window), "
+        "joined back to lang on doc_id, then a stateless hash "
+        "projection — corpus-linear, no driver state. "
         "tests/test_curation_ops.py pins the no-straddle invariant "
         "and the ~80/20 group-level rate.",
     tags=("text", "pipeline"),
 )
 def lsplit1_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .dedup import exact_members
+
     d = load_table(spark, sf_dir, "documents")
-    grp = F.min("doc_id").over(Window.partitionBy(F.md5(F.col("text"))))
-    return d.select(
-        "doc_id", "lang", grp.alias("group_rep")
+    return exact_members(d).join(d.select("doc_id", "lang"), "doc_id").select(
+        "doc_id", "lang", F.col("rep_id").alias("group_rep")
     ).withColumn(
         "split",
         F.when(md5i(F.col("group_rep")) % 10 < 8, F.lit("train")).otherwise(

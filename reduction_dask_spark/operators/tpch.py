@@ -24,7 +24,7 @@ instead of divided doubles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..caching import pin
 from ..registry import query

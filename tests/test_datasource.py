@@ -10,7 +10,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from reduction_dask_spark.sources.jsonl_source import (
     JsonlReader,

@@ -3,7 +3,6 @@ inputs a 100 TB pipeline inevitably produces somewhere."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from reduction_dask_spark.operators.cv import kfold_era
@@ -157,7 +156,8 @@ def test_embedding_fingerprint_null_position_distinct(spark):
     concat_ws skips nulls, so without an explicit sentinel
     [1.0,NULL,2.0] and [1.0,2.0,NULL] would share a fingerprint and
     fabricate duplicate pairs the direct plan never emits."""
-    from reduction_dask_spark.operators.similarity import _fp_elems
+    from reduction_dask_spark.caching import release_pinned
+    from reduction_dask_spark.operators.similarity import _vector_members
 
     df = spark.createDataFrame(
         [
@@ -168,10 +168,8 @@ def test_embedding_fingerprint_null_position_distinct(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    fp = df.select(
-        "vec_id", F.md5(F.concat_ws(",", _fp_elems("embedding"))).alias("fp")
-    ).collect()
-    fps = {r["vec_id"]: r["fp"] for r in fp}
-    assert fps[1] == fps[3]          # identical vectors still collapse
-    assert fps[1] != fps[2]          # NULL position distinguishes
-    assert fps[1] != fps[4] and fps[2] != fps[4]
+    rep = {r["doc_id"]: r["rep_id"] for r in _vector_members(df).collect()}
+    release_pinned()
+    assert rep[1] == rep[3] == 1     # identical vectors still collapse
+    assert rep[2] == 2               # NULL position distinguishes
+    assert rep[4] == 4

@@ -5,7 +5,6 @@ pooled np.corrcoef)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from reduction_dask_spark.operators.metrics import (
     m1_spearman_by_era,

@@ -11,7 +11,6 @@ from reduction_dask_spark.ml import (
     fit_fold_models,
     fit_global_model,
     fold_suffstats,
-    ridge_solve,
     score_by_group,
     supervised_frame,
     with_prediction,

@@ -62,3 +62,37 @@ def test_every_package_definition_has_a_non_test_user():
         and node.name not in covered
     ]
     assert orphans == []
+
+
+def _unused_imports(path: Path):
+    """(line, name) of each name ``path`` imports but never loads.
+    ``from __future__`` imports and lines marked ``# noqa: F401`` are
+    deliberate and skipped."""
+    src = path.read_text()
+    lines = src.splitlines()
+    tree = ast.parse(src)
+    loaded = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        for alias in node.names:
+            name = alias.asname or alias.name.split(".")[0]
+            marked = any(
+                "noqa: F401" in lines[i - 1] for i in (node.lineno, alias.lineno)
+            )
+            if name != "*" and name not in loaded and not marked:
+                yield alias.lineno, name
+
+
+def test_package_has_no_unused_imports():
+    """Every import in the package is used. The re-export facades
+    (``__init__.py``, ``api.py``) import for their callers."""
+    unused = [
+        f"{path.relative_to(PACKAGE)}:{line}: {name}"
+        for path in _package_modules()
+        if path.name not in ("__init__.py", "api.py")
+        for line, name in _unused_imports(path)
+    ]
+    assert unused == []

@@ -322,23 +322,29 @@ def test_ts2_no_window_over_densified_rows(spark):
 
 
 def test_dd6_components_enter_as_one_checkpoint(spark):
-    """dd6: exact duplicates collapse on an md5 fingerprint shuffle, the
-    pinned capped shingle index is read through InMemoryTableScan, the
-    label-propagation rounds run at build time and enter the plan as
-    ONE checkpointed leaf, and a join on the fingerprint expands labels
-    back to every member."""
+    """dd6: exact duplicates collapse on ONE md5 fingerprint shuffle
+    (the pinned member map's window), the pinned capped shingle index
+    is read through InMemoryTableScan, the label-propagation rounds run
+    at build time and enter the plan as ONE checkpointed leaf, and a
+    join of the member map on rep_id expands labels back to every
+    member."""
     from reduction_dask_spark.operators.dedup import dd6_dup_clusters
 
     try:
         q = dd6_dup_clusters(spark, SF_SMALL)
         counts = shape(q)
         assert counts["Scan ExistingRDD"] == 1
-        # the pinned rep index once, and the full-corpus index it is
-        # cut from twice inside it
-        assert counts["InMemoryTableScan"] == 3
+        # the member map at the expansion and twice inside the rep
+        # index (its rep restriction and its df weights), the pinned
+        # rep index once, and the raw rep shingle explode it is cut
+        # from twice inside it
+        assert counts["InMemoryTableScan"] == 6
+        assert counts["Window"] == 1
         plan = simple_plan(q)
-        assert "Exchange hashpartitioning(fp#" in plan
-        assert re.search(r"BroadcastHashJoin \[fp#\d+\], \[fp#\d+\], Inner", plan)
+        assert len(set(re.findall(r"Exchange hashpartitioning\(fp#(\d+)", plan))) == 1
+        assert re.search(
+            r"Join \[rep_id#\d+L?\], \[rep_id#\d+L?\], LeftOuter", plan
+        )
     finally:
         release_pinned()
 

@@ -1,8 +1,9 @@
 """Exact-duplicate quotient ≡ direct computation (r12).
 
 The quotient rewrites (jaccard_pairs_collapsed behind dd2/dd7, the
-combinatorial triangle counts behind gr2) are EXECUTION quotients —
-their contract is bit-identical output to the uncollapsed plans. The
+combinatorial triangle counts behind gr2, and every other consumer of
+dedup.exact_members) are EXECUTION quotients — their contract is
+bit-identical output to the uncollapsed plans. The
 ×12 replica gates pin that on the shipped corpora; these tests pin it
 on an adversarial synthetic corpus that hits every branch at pytest
 speed: multi-way duplicate groups of several sizes (2/3/5), singleton
@@ -14,7 +15,10 @@ must NOT self-pair — the full-corpus-df subtlety), and ≤2-token docs
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+from tests.parity_util import assert_oracle_parity
 
 
 def _corpus(spark):
@@ -44,6 +48,55 @@ def _corpus(spark):
         rows.append((doc_id, hot_text))
         doc_id += 1
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+# every registered consumer of the md5(text) quotient that has a DuckDB
+# oracle: each must reproduce its uncollapsed oracle on _corpus
+QUOTIENT_CONSUMERS = (
+    "dd2_shingle_jaccard",
+    "dd3_minhash_lsh_dedup",
+    "dd4_simhash_dedup",
+    "dd6_dup_clusters",
+    "dd7_domain_dedup_stats",
+    "dd2b_containment_pairs",
+    "er2_golden_record",
+    "deval1_dedup_quality",
+    "dd11_exact_substring_spans",
+    "dd11b_substring_removal",
+    "dc3_span_decontam",
+    "gr2_triangle_count",
+    "gr3_kcore",
+    "gr4_star_components",
+    "canon1_canonical_selection",
+    "lsplit1_leakage_safe_split",
+)
+
+
+@pytest.fixture(scope="module")
+def quotient_dir(spark, tmp_path_factory):
+    """_corpus plus three NULL-text docs (the quotient puts every NULL
+    text in one group; each consumer must still match its oracle) as a
+    documents table, with the metadata columns the consumers read
+    (lang, source, n_chars) derived from doc_id/text."""
+    path = tmp_path_factory.mktemp("quotient")
+    d = _corpus(spark)
+    top = d.agg(F.max("doc_id")).collect()[0][0]
+    nulls = spark.createDataFrame(
+        [(top + 1 + i, None) for i in range(3)], "doc_id long, text string"
+    )
+    d.unionByName(nulls).select(
+        "doc_id",
+        "text",
+        F.when(F.col("doc_id") % 2 == 0, "en").otherwise("de").alias("lang"),
+        F.concat(F.lit("src"), (F.col("doc_id") % 3).cast("string")).alias("source"),
+        F.length("text").cast("long").alias("n_chars"),
+    ).coalesce(1).write.parquet(str(path / "documents.parquet"))
+    return path
+
+
+@pytest.mark.parametrize("name", QUOTIENT_CONSUMERS)
+def test_quotient_consumer_matches_oracle(spark, quotient_dir, name):
+    assert_oracle_parity(spark, quotient_dir, name)
 
 
 def _direct_pairs(d, tau):
@@ -78,23 +131,24 @@ def test_rep_capped_shingles_matches_full_restrict(spark):
     content)."""
     from reduction_dask_spark.caching import release_pinned
     from reduction_dask_spark.operators.dedup import (
-        exact_groups,
+        exact_members,
         rep_capped_shingles,
+        representatives,
         shingle_table_of,
     )
 
     d = _corpus(spark)
-    _, grp = exact_groups(d)
-    reps = grp.select(F.col("rep_id").alias("doc_id"))
+    members = exact_members(d)
+    grp = representatives(members)
     want = sorted(
-        map(tuple, shingle_table_of(d).join(reps, "doc_id", "left_semi").collect())
+        map(tuple, shingle_table_of(d).join(grp, "doc_id", "left_semi").collect())
     )
-    got = sorted(map(tuple, rep_capped_shingles(d, grp).collect()))
+    got = sorted(map(tuple, rep_capped_shingles(d, members).collect()))
     assert want  # non-degenerate
     assert got == want
     # the hot group's shingles must be capped away in BOTH plans
     hot_rep = (
-        grp.orderBy(F.desc("m")).limit(1).collect()[0]["rep_id"]
+        grp.orderBy(F.desc("m")).limit(1).collect()[0]["doc_id"]
     )
     assert all(r[0] != hot_rep for r in got)
     release_pinned()

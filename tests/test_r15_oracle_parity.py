@@ -28,9 +28,6 @@ the branches the shipped testdata never reaches:
 from __future__ import annotations
 
 import duckdb
-import pytest
-
-from pyspark.sql import functions as F
 
 from tests.parity_util import assert_oracle_parity
 

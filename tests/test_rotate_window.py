@@ -146,7 +146,6 @@ def test_verify_logs_all_pass_lines_and_crash_diagnostics(monkeypatch, capsys):
     EVERY per-name PASS/FAIL line (ROTATION_r14.log carried 1 of 12),
     and when compare.py crashes without verdict lines it must surface
     the raw stdout/stderr tails instead of exiting silently."""
-    import subprocess
 
     import tools.rotate_window as rw
 

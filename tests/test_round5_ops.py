@@ -17,7 +17,6 @@ from reduction_dask_spark.operators.dedup import (
     shingle_table,
 )
 from reduction_dask_spark.operators.relational import (
-    BF_WORDS,
     _bloom_word_expr,
     bf1_bloom_prune_join,
 )

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import pytest
 
-from .conftest import SF_SMALL
-
 
 def test_dc3_widely_quoted_contamination_not_self_hiding(spark):
     """r8 advisor medium item: a benchmark passage quoted in MORE than

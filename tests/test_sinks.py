@@ -68,7 +68,7 @@ def test_dedup_pipelines_agree(spark):
         dd2_shingle_jaccard,
         dd3_minhash_lsh_dedup,
         dd3b_minhash_lsh_ml,
-        exact_groups,
+        exact_members,
     )
 
     exact = {
@@ -81,11 +81,7 @@ def test_dedup_pipelines_agree(spark):
     assert lsh == exact
 
     d = load_table(spark, SF_SMALL, "documents")
-    fp, grp = exact_groups(d)
-    rep_of = {
-        r["doc_id"]: r["rep_id"]
-        for r in fp.join(grp, "fp").select("doc_id", "rep_id").collect()
-    }
+    rep_of = {r["doc_id"]: r["rep_id"] for r in exact_members(d).collect()}
     exact_rep = {tuple(sorted((rep_of[a], rep_of[b]))) for a, b in exact}
     ml_rows = dd3b_minhash_lsh_ml(spark, SF_SMALL).collect()
     ml = {(r["doc_a"], r["doc_b"]) for r in ml_rows}

@@ -136,7 +136,7 @@ def main() -> int:
             continue
         finally:
             # queries persist() intermediates for intra-plan reuse;
-            # drop them so caches don't accumulate across 139 queries
+            # drop them so caches don't accumulate across the whole registry
             from reduction_dask_spark.caching import release_pinned
             release_pinned()  # drop operator-pinned persists with the SQL caches
 
