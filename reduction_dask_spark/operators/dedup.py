@@ -1292,7 +1292,9 @@ ER_BLOCK_CAP = 50      # drop pathological blocks (hot-key guard)
     tags=("dedup", "text"),
 )
 def er1_blocked_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
+    # a NULL text has a NULL block key in the oracle and never joins;
+    # concat_ws would give it '' and pair it with empty texts
+    d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.split(F.col("text"), " ")
     p = d.select(
         "doc_id",

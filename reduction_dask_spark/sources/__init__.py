@@ -14,12 +14,14 @@ whose filters/projections Catalyst pushes into the parquet footers.
 from __future__ import annotations
 
 import functools
+import json
 import os
 import threading
 import weakref
 from collections import OrderedDict
 from urllib.parse import urlparse
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
@@ -71,15 +73,32 @@ def normalize_ts(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
     return df
 
 
+# Parquet summary files: Spark's file index keeps them although they
+# start with "_", and its schema inference reads one before any data file.
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+
+
+def _hidden(name: str) -> bool:
+    """Whether Spark's file index skips a file or directory of this
+    name (``HadoopFSUtils.shouldFilterOutPathName``): a leading ``.``,
+    a leading ``_`` outside a ``k=v`` partition directory, or an
+    in-flight ``._COPYING_`` copy. The summary files are never hidden."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return hidden and not name.startswith(_SUMMARY_FILES)
+
+
 def file_signature(path: str) -> tuple[tuple[str, int, int], ...] | None:
     """``(relative path, size, mtime_ns)`` of every file Spark's reader
     sees at a local ``path``, in path order: the file itself (relative
-    path ``""``) or every file under the directory. Spark's
-    hiddenFileFilter applies: a path component starting with ``_`` or
-    ``.`` is invisible to the reader (a crashed write's _temporary
-    parts must not count). A rewrite, an added or a removed part file
-    changes the signature. None for a URI (hdfs://, s3a://) or a path
-    that cannot be listed; callers then go to Spark unchanged."""
+    path ``""``) or every file under the directory that :func:`_hidden`
+    lets through (a crashed write's _temporary parts must not count).
+    A rewrite, an added or a removed part file changes the signature.
+    None for a URI (hdfs://, s3a://) or a path that cannot be listed;
+    callers then go to Spark unchanged."""
     if urlparse(path).scheme:
         return None
     try:
@@ -88,14 +107,86 @@ def file_signature(path: str) -> tuple[tuple[str, int, int], ...] | None:
             return (("", st.st_size, st.st_mtime_ns),)
         sig = []
         for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            dirs[:] = [d for d in dirs if not _hidden(d)]
             for f in files:
-                if not f.startswith(("_", ".")):
+                if not _hidden(f):
                     full = os.path.join(root, f)
                     st = os.stat(full)
                     sig.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
         return tuple(sorted(sig))
     except OSError:  # missing, unreadable, or a part removed mid-walk
+        return None
+
+
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark's parquet inference gives for ``path``, read on
+    the driver from one footer with no Spark job.
+
+    With ``mergeSchema`` off, inference (``ParquetUtils.inferSchema``)
+    reads a summary file if there is one, else the first data file in
+    path order, and trusts every part file to agree; it does so inside
+    a one-task job. This runs the same reader body here: Spark's footer
+    reader, its converter built from the same confs, and the
+    ``asNullable`` a file relation applies. The path is listed through
+    Hadoop's ``FileSystem``, so local paths and URIs follow one rule.
+
+    None wherever Spark would do more than read one data footer (schema
+    merging on, a summary file present, a subdirectory that means
+    partition discovery) or the driver-side read fails (a missing path,
+    no data file, an unreadable footer), so that the caller takes
+    Spark's own answer or error."""
+    jvm = spark._jvm
+    # one class lookup per name; attribute walks cost one failing
+    # lookup (a classpath scan) per package segment
+    cls = functools.partial(getattr, jvm)
+    state = spark._jsparkSession.sessionState()
+    conf = state.conf()
+    if conf.isParquetSchemaMergingEnabled():
+        return None
+    hadoop_conf = state.newHadoopConf()
+    try:
+        root = cls("org.apache.hadoop.fs.Path")(path)
+        fs = root.getFileSystem(hadoop_conf)
+        status = fs.getFileStatus(root)
+        if status.isDirectory():
+            data = []
+            for child in fs.listStatus(root):
+                name = child.getPath().getName()
+                if name.startswith(_SUMMARY_FILES):
+                    return None
+                if _hidden(name):
+                    continue
+                if child.isDirectory():
+                    return None
+                data.append((name, child))
+            if not data:
+                return None
+            status = min(data, key=lambda nc: nc[0])[1]
+        # ParquetFileFormat.mergeSchemasInParallel's converter: the
+        # session's confs, and the constructor's defaults where it
+        # passes none
+        conv = cls(_PARQUET + "ParquetToSparkSchemaConverter")
+        converter = conv(
+            conf.isParquetBinaryAsString(),
+            conf.isParquetINT96AsTimestamp(),
+            getattr(conv, "$lessinit$greater$default$3")(),
+            conf.parquetInferTimestampNTZEnabled(),
+            conf.legacyParquetNanosAsLong(),
+            getattr(conv, "$lessinit$greater$default$6")(),
+            getattr(conv, "$lessinit$greater$default$7")(),
+            conf.parquetReaderRespectUnknownTypeAnnotation(),
+        )
+        meta = cls(_PARQUET + "ParquetFooterReader").readFooter(
+            cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(status, hadoop_conf),
+            cls("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+        )
+        footer = cls("org.apache.parquet.hadoop.Footer")(status.getPath(), meta)
+        schema = cls(_PARQUET + "ParquetFileFormat").readSchemaFromFooter(footer, converter)
+        return StructType.fromJson(json.loads(schema.asNullable().json()))
+    except Py4JJavaError:
         return None
 
 
@@ -118,31 +209,33 @@ _schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _schemas_lock = threading.Lock()
 
 
-def _cached_schema(spark: SparkSession, path: str) -> StructType | None:
-    """The parquet schema at local ``path``, inferred by Spark (one
-    footer-reading job) on the first call per session for each file
-    signature and conf setting, then served from the session's cache.
-    None for a path :func:`file_signature` cannot sign."""
+def _cached_schema(spark: SparkSession, path: str) -> StructType:
+    """The parquet schema at ``path``: :func:`_footer_schema`'s, or
+    Spark's inference job where that defers. A local path is read on
+    the first call per session for each file signature and conf
+    setting, then served from the session's cache; a path
+    :func:`file_signature` cannot sign (a URI) is read on every call."""
     sig = file_signature(path)
-    if sig is None:
-        return None
-    key = (
+    key = None if sig is None else (
         os.path.abspath(path),
         sig,
         tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
     )
-    sc = spark.sparkContext
-    with _schemas_lock:
-        cache = _schemas.setdefault(sc, OrderedDict())
-        schema = cache.get(key)
-        if schema is not None:
-            cache.move_to_end(key)
-            return schema
-    schema = spark.read.parquet(path).schema
-    with _schemas_lock:
-        cache[key] = schema
-        if len(cache) > _SCHEMA_CACHE_ENTRIES:
-            cache.popitem(last=False)
+    if key is not None:
+        with _schemas_lock:
+            cache = _schemas.setdefault(spark.sparkContext, OrderedDict())
+            schema = cache.get(key)
+            if schema is not None:
+                cache.move_to_end(key)
+                return schema
+    schema = _footer_schema(spark, path)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    if key is not None:
+        with _schemas_lock:
+            cache[key] = schema
+            if len(cache) > _SCHEMA_CACHE_ENTRIES:
+                cache.popitem(last=False)
     return schema
 
 
@@ -150,29 +243,26 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     """The parquet schema of table ``name`` in ``sf_dir`` as Spark's
     reader infers it under the session's current confs.
 
-    Inference is a Spark job that reads a footer (``parquet at
-    <unknown>:0``). It runs once per session for each version of a
-    local table: the session keeps the schema keyed on the path, the
-    :func:`file_signature` and the confs inference reads, so a rewrite,
-    an added or removed part file, or a conf flip infers again. A URI
-    (hdfs://, s3a://) is never cached and infers on every call."""
-    path = f"{sf_dir}/{name}.parquet"
-    schema = _cached_schema(spark, path)
-    return spark.read.parquet(path).schema if schema is None else schema
+    The driver reads it from one parquet footer, with no Spark job;
+    only schema merging, a summary file or partition directories leave
+    it to Spark's inference job. A local table is read once per session
+    for each version: the session keeps the schema keyed on the path,
+    the :func:`file_signature` and the confs inference reads, so a
+    rewrite, an added or removed part file, or a conf flip reads again.
+    A URI (hdfs://, s3a://) is never cached and is read on every call."""
+    return _cached_schema(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table from ``sf_dir`` as a lazy DataFrame.
 
-    The schema comes from :func:`table_schema`'s session cache, so only
-    a session's first load of a table version runs an inference job.
-    Every call still builds a new relation (fresh attribute ids, Spark's
-    own file listing), so self-joins and plans are those of a plain
-    ``spark.read.parquet``."""
+    The schema comes from :func:`table_schema`, so a load runs no Spark
+    job unless that defers to Spark's inference. Every call still builds a new relation (fresh attribute ids,
+    Spark's own file listing), so self-joins and plans are those of a
+    plain ``spark.read.parquet``."""
     ensure_engine_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _cached_schema(spark, path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    reader = spark.read.schema(_cached_schema(spark, path))
     return normalize_ts(reader.parquet(path), _TS_COLS.get(name, ()))
 
 

@@ -58,10 +58,10 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table with proper timestamps.
 
     FileStreamSource needs an explicit schema; take the batch reader's
-    (:func:`sources.table_schema`: a footer-reading Spark job on the
-    session's first use of the table, cached after it) so the stream
-    tracks whichever physical timestamp flavor the testdata generation
-    used, then normalize exactly like the batch path.
+    (:func:`sources.table_schema`: read from one parquet footer on the
+    driver on the session's first use of the table, cached after it) so
+    the stream tracks whichever physical timestamp flavor the testdata
+    generation used, then normalize exactly like the batch path.
     """
     ensure_engine_confs(spark)
     file_schema = table_schema(spark, sf_dir, "events")

@@ -96,3 +96,66 @@ def test_package_has_no_unused_imports():
         for line, name in _unused_imports(path)
     ]
     assert unused == []
+
+
+# Footer readers, by the names code would call or look up: Spark's
+# (through py4j) and pyarrow's.
+FOOTER_READERS = {
+    "ParquetFooterReader",
+    "ParquetFileReader",
+    "readFooter",
+    "readSchemaFromFooter",
+    "ParquetFile",
+    "read_metadata",
+    "read_schema",
+}
+
+
+def _infers_parquet_schema(call: ast.Call) -> bool:
+    """A ``.parquet(...)`` call on a ``.read``/``.readStream`` chain
+    with no ``.schema(...)`` in it: a read that makes Spark infer."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr == "parquet"):
+        return False
+    node = call.func.value
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Call):
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "schema":
+                return False
+            node = node.func
+        elif node.attr in ("read", "readStream"):
+            return True
+        else:
+            node = node.value
+    return False
+
+
+def _schema_reads(tree: ast.AST):
+    """(line, what) of each parquet schema read in ``tree``: an
+    inferring ``.read.parquet(...)`` or a footer reader, named in code
+    or looked up by a string such as ``getattr(jvm, "pkg.Class")``."""
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call) and _infers_parquet_schema(n):
+            yield n.lineno, ".read.parquet("
+        name = (
+            n.id if isinstance(n, ast.Name)
+            else n.attr if isinstance(n, ast.Attribute)
+            else n.value.rsplit(".", 1)[-1] if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            else None
+        )
+        if name in FOOTER_READERS:
+            yield n.lineno, name
+
+
+def test_one_schema_path():
+    """Only ``sources`` reads a parquet schema: its footer read and
+    the inference it defers to. Every other module takes schemas from
+    ``sources.table_schema``/``load_table`` or passes its own."""
+    sources = PACKAGE / "sources" / "__init__.py"
+    assert list(_schema_reads(ast.parse(sources.read_text())))
+    reads = [
+        f"{path.relative_to(PACKAGE)}:{line}: {what}"
+        for path in _package_modules()
+        if path != sources
+        for line, what in _schema_reads(ast.parse(path.read_text()))
+    ]
+    assert reads == []

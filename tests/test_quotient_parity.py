@@ -99,6 +99,12 @@ def test_quotient_consumer_matches_oracle(spark, quotient_dir, name):
     assert_oracle_parity(spark, quotient_dir, name)
 
 
+def test_er1_null_texts_match_oracle(spark, quotient_dir):
+    """er1 reads the raw corpus, not the quotient, but the same NULL
+    texts reach its blocking: they must never pair, as in DuckDB."""
+    assert_oracle_parity(spark, quotient_dir, "er1_blocked_fuzzy_match")
+
+
 def _direct_pairs(d, tau):
     from reduction_dask_spark.operators.dedup import (
         jaccard_pairs,
