@@ -6,17 +6,22 @@ suite fast — tools/compare.py covers sf0.01 pre-commit).
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 
 from reduction_dask_spark.caching import release_pinned
-from tools.compare import compare
+from tools.compare import compare, rows_digest
 
 import __spark_entry__ as entrymod
 
-from .conftest import SF_SMALL
+from .conftest import REPO, SF_SMALL
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
+# {name: {sf: md5 of the canonical rows}} of the pinned rows-only queries
+ROWS_DIGEST = json.loads((REPO / "ROWS_DIGEST.json").read_text())
 
 
 @pytest.fixture
@@ -46,13 +51,22 @@ def test_entry_smoke(spark):
 
 
 def test_all_queries_run(spark):
-    """Rows-only queries (no oracle) must at least execute."""
+    """Rows-only queries (no oracle) must at least execute, and those
+    pinned in ROWS_DIGEST.json must return the pinned rows."""
+    sf = Path(SF_SMALL).name
+    moved = {}
     for name, fn in QUERIES.items():
         if name in ORACLES:
             continue
         try:
             df = fn(spark, SF_SMALL)
-            assert df.count() >= 0, name
+            if name in ROWS_DIGEST:
+                got = rows_digest(df.toPandas())
+                if got != ROWS_DIGEST[name][sf]:
+                    moved[name] = got
+            else:
+                assert df.count() >= 0, name
         finally:
             release_pinned()
             spark.catalog.clearCache()
+    assert moved == {}

@@ -11,6 +11,7 @@ Usage: python tools/compare.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 from pathlib import Path
@@ -57,6 +58,13 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
             df[c] = df[c].map(_cell)
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
+
+
+def rows_digest(df: pd.DataFrame) -> str:
+    """md5 of a result's canonical rows (:func:`canon`: columns and
+    rows sorted, dtypes normalized): the pin of a rows-only query's
+    output in ROWS_DIGEST.json."""
+    return hashlib.md5(canon(df).to_csv(index=False).encode()).hexdigest()
 
 
 def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
