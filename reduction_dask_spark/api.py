@@ -13,7 +13,7 @@ lazy DAG and broadcast variables replace explicit data placement
 |--------------------------------------------------|------|
 | metrics.spearman_rank(y_true, y_pred, era) :5    | spearman_rank(df) |
 | metrics.quartic_error(y_true, y_pred) :25        | quartic_error(df) |
-| metrics.fit_predict(...) :34                     | fit_predict(df, fold, lam) |
+| metrics.fit_predict(...) :34                     | fit_predict(df, lam) (ml.py) |
 | utils.kfold_era(era, k) :11                      | kfold_era(df, "era", k) (cv.py) |
 | utils.LHS_RandomizedSearch(grid, n) :89          | lhs_param_table (cv.py) |
 | utils.payout(scores) :51                         | payout(df, col) |
@@ -37,13 +37,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .functions import clip
-from .ml import (
-    coef_frame,
-    fit_fold_models,
-    fold_suffstats,
-    score_by_group,
-    with_prediction,
-)
+from .ml import fit_predict  # noqa: F401  (re-export)
 from .operators.cv import kfold_era, lhs_param_table  # noqa: F401  (re-export)
 from .operators.metrics import spearman_by_era
 from .operators.tuning import hyperband, kfold_cv_ridge, lhs_ridge_search  # noqa: F401
@@ -70,16 +64,6 @@ def quartic_error(scored: DataFrame, y_true: str = "y_true", y_pred: str = "pred
 def payout(df: DataFrame, score_col: str) -> DataFrame:
     """utils.payout (utils.py:51-55)."""
     return df.withColumn("payout", clip((F.col(score_col)) / 0.2, -1.0, 1.0))
-
-
-def fit_predict(folded: DataFrame, lam: float = 1.0) -> DataFrame:
-    """metrics.fit_predict per fold (metrics.py:34-42): returns the
-    per-fold (spearman, quartic) score table; models fit in one pass."""
-    spark = folded.sparkSession
-    stats = fold_suffstats(folded)
-    models = fit_fold_models(stats, lam)
-    scored = with_prediction(folded, coef_frame(spark, models))
-    return score_by_group(scored, ["fold"])
 
 
 # ------------------------------------------------------------- tuning

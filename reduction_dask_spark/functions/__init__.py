@@ -22,6 +22,7 @@ Float aggregates whose summation order is engine-dependent are rounded
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
+from pyspark.sql.window import Window
 
 KNUTH = 2654435761  # Knuth's multiplicative hash constant (2^32 * phi)
 
@@ -120,6 +121,20 @@ def corr_safe(x: Column | str, y: Column | str) -> Column:
     cx = F.col(x) if isinstance(x, str) else x
     cy = F.col(y) if isinstance(y, str) else y
     return F.try_divide(F.covar_samp(cx, cy), F.stddev_samp(cx) * F.stddev_samp(cy))
+
+
+def pct_rank_first(partition: list[str], value: str, tiebreak: str) -> Column:
+    """W1: pandas ``rank(pct=True, method="first")`` within each
+    ``partition`` group — the one era-rank rule of every era-Spearman
+    score (m1, m1b, w1 and the CV scores of ml.score_by_group).
+
+    method="first" = ties broken by original position; Spark equivalent
+    is row_number over (value, stable-key) divided by the group size
+    (metrics.py:19 — SURVEY.md §4 "Anticipated custom pieces" #2).
+    """
+    w = Window.partitionBy(*partition).orderBy(F.asc(value), F.asc(tiebreak))
+    cnt = Window.partitionBy(*partition)
+    return F.row_number().over(w).cast("double") / F.count("*").over(cnt).cast("double")
 
 
 # ---------- portable inverse normal CDF (probit) ----------

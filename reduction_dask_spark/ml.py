@@ -30,10 +30,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions import corr_safe
+from .functions import corr_safe, pct_rank_first
 from .session import local_frame
 from .sources import load_table
 
@@ -42,6 +41,7 @@ DIM = 64  # embeddings feature width
 
 N_INFORMATIVE = 8  # features 0..7 carry the planted signal
 ERA_DOMAIN = tuple(range(20))  # era = vec_id % 20 ⇒ domain known statically
+K_FOLDS = 5
 
 
 def planted_weight(d: int) -> float:
@@ -208,13 +208,17 @@ def ridge_solve(xtx: np.ndarray, xty: np.ndarray, lam: float) -> np.ndarray:
     return np.linalg.solve(xtx + pen, xty)
 
 
+def _totals(stats: dict[int, tuple[np.ndarray, np.ndarray, float]]) -> tuple[np.ndarray, np.ndarray]:
+    """(Σ XtX, Σ Xty) over every fold's statistics."""
+    return sum(s[0] for s in stats.values()), sum(s[1] for s in stats.values())
+
+
 def fit_fold_models(
     stats: dict[int, tuple[np.ndarray, np.ndarray, float]], lam: float
 ) -> dict[int, np.ndarray]:
     """Leave-one-fold-out coefficients from per-fold statistics:
     train_i = Σ_j stats_j − stats_i (no second data pass)."""
-    xtx_all = sum(s[0] for s in stats.values())
-    xty_all = sum(s[1] for s in stats.values())
+    xtx_all, xty_all = _totals(stats)
     return {
         g: ridge_solve(xtx_all - s[0], xty_all - s[1], lam) for g, s in stats.items()
     }
@@ -223,9 +227,7 @@ def fit_fold_models(
 def fit_global_model(
     stats: dict[int, tuple[np.ndarray, np.ndarray, float]], lam: float
 ) -> np.ndarray:
-    xtx_all = sum(s[0] for s in stats.values())
-    xty_all = sum(s[1] for s in stats.values())
-    return ridge_solve(xtx_all, xty_all, lam)
+    return ridge_solve(*_totals(stats), lam)
 
 
 # ----------------------------------------- nonlinear kernel: GBT stumps
@@ -468,25 +470,49 @@ def with_gbt_prediction(df: DataFrame, stumps: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------- predict
 
-def coef_frame(spark: SparkSession, models: dict[int, np.ndarray], key: str = "fold") -> DataFrame:
-    """Small (key, intercept, weights array) frame for broadcast join."""
-    rows = [(int(g), float(c[0]), [float(w) for w in c[1:]]) for g, c in models.items()]
-    return local_frame(spark, rows, f"{key} int, intercept double, weights array<double>")
+def cv_frame(spark: SparkSession, sf_dir: str, k: int = K_FOLDS) -> DataFrame:
+    """The supervised frame with its era-aware ``fold`` column: the one
+    CV frame of the tuning and importance queries. The era domain is
+    static (era = vec_id % 20), so the fold map is driver metadata and
+    building the frame runs no job."""
+    # imported on call: importing operators.cv registers its queries,
+    # which would move them ahead of the registry's load order
+    from .operators.cv import kfold_era
+
+    return kfold_era(supervised_frame(spark, sf_dir), "era", k, eras=list(ERA_DOMAIN))
 
 
-def dot_expr(features: Column, weights: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(features, weights, lambda x, w: x * w), F.lit(0.0), lambda a, x: a + x
+def coef_frame(spark: SparkSession, models: dict[tuple, np.ndarray], keys: list[str]) -> DataFrame:
+    """Small (*keys, intercept, weights array) frame for broadcast join.
+    ``models`` maps a key tuple to its coefficients (intercept first);
+    ``keys`` holds the DDL of the key columns, e.g. ``["fold int"]``."""
+    rows = [(*key, float(c[0]), [float(w) for w in c[1:]]) for key, c in models.items()]
+    return local_frame(spark, rows, ", ".join([*keys, "intercept double", "weights array<double>"]))
+
+
+def with_prediction(df: DataFrame, coefs: DataFrame) -> DataFrame:
+    """Join the coefficient rows (broadcast) on the key columns ``df``
+    carries and add ``pred`` = intercept + features·weights; a key
+    ``df`` lacks (a λ grid's param) scores every row once per value.
+    Scoring stays entirely JVM-side."""
+    on = [c for c in coefs.columns if c in df.columns]
+    dot = F.aggregate(
+        F.zip_with(F.col("features"), F.col("weights"), lambda x, w: x * w),
+        F.lit(0.0),
+        lambda a, x: a + x,
     )
+    out = df.join(F.broadcast(coefs), on)
+    return out.withColumn("pred", F.col("intercept") + dot).drop("intercept", "weights")
 
 
-def with_prediction(df: DataFrame, coefs: DataFrame, key: str = "fold") -> Column:
-    """Join fold coefficients (broadcast) and add `pred` — scoring stays
-    entirely JVM-side."""
-    out = df.join(F.broadcast(coefs), key)
-    return out.withColumn(
-        "pred", F.col("intercept") + dot_expr(F.col("features"), F.col("weights"))
-    ).drop("intercept", "weights")
+def fit_predict(folded: DataFrame, lam: float = 1.0) -> DataFrame:
+    """metrics.fit_predict per fold (metrics.py:34-42): the per-fold
+    (spearman, quartic) table of leave-one-fold-out ridge models over a
+    frame carrying (vec_id, era, fold, features, y). One stats pass +
+    one scoring pass."""
+    models = fit_fold_models(fold_suffstats(folded), lam)
+    coefs = coef_frame(folded.sparkSession, {(g,): c for g, c in models.items()}, ["fold int"])
+    return score_by_group(with_prediction(folded, coefs), ["fold"])  # fold = held-out fold
 
 
 # ------------------------------------------------------------- scoring
@@ -496,12 +522,7 @@ def score_by_group(
 ) -> DataFrame:
     """Per-group (M1 era-Spearman, M2 quartic) from (y, pred) rows —
     the reference's fit_predict result pair (metrics.py:34-42)."""
-    w = Window.partitionBy(*group, era).orderBy(F.asc("pred"), F.asc(key))
-    cnt = Window.partitionBy(*group, era)
-    ranked = scored.withColumn(
-        "pred_rank",
-        F.row_number().over(w).cast("double") / F.count("*").over(cnt).cast("double"),
-    )
+    ranked = scored.withColumn("pred_rank", pct_rank_first([*group, era], "pred", key))
     return ranked.groupBy(*group).agg(
         F.round(corr_safe("y", "pred_rank"), 6).alias("spearman"),
         F.round(F.avg(F.pow(F.col("y") - F.col("pred"), 4)), 6).alias("quartic"),

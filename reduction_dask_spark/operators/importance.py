@@ -5,15 +5,21 @@ the reference's driver materializes F×k shuffled copies of every
 validation fold (feature_selection_numerai.py:124-134 — its biggest
 scalability sin). Here:
 
-1. fold models come from the one-pass sufficient-statistics fit (ml.py);
-2. shuffled-column scoring happens LAZILY inside applyInPandas per
-   (fold, era) group — each group permutes each feature column once
-   with a seed derived from (fold, era, feature), predicts with the
-   broadcast coefficient vector, and emits (feature, fold, row, y,
-   pred) rows. No driver copies, no whole-fold materialization; memory
-   is one (era-group × features) pandas frame per task;
-3. importance = mean over folds of (base − shuf)/(1 − shuf)
-   (feature_selection_numerai.py:54-55), scored with the M1 metric.
+1. fold models come from the one-pass sufficient-statistics ridge fit
+   (x1, x1b) or the histogram-boosted stump ensembles (x1c), ml.py;
+2. shuffled-column scoring happens LAZILY in ONE applyInPandas mapper
+   per (fold, era) group (:func:`_mda_mapper`) — each group permutes
+   each feature column once with a seed derived from (fold, era,
+   feature) and fills a (features+1) × rows prediction matrix from the
+   fold model's kernel. No driver copies, no whole-fold
+   materialization; memory is one (era-group × features) block per
+   task;
+3. the group emits either its prediction rows (x1, x1c), which Spark
+   ranks per era and correlates per (feature, fold) with the M1
+   metric, or its six pooled-correlation sums per feature (x1b), which
+   only cross the shuffle as O(features × folds × eras) rows;
+4. importance = mean over folds of (base − shuf)/(1 − shuf)
+   (feature_selection_numerai.py:54-55).
 
 X4's SHAP is TreeExplainer in the reference
 (feature_selection_numerai.py:271-288); with the linear kernel the
@@ -23,6 +29,8 @@ same mean-|SHAP| table shape (A4), no shap package needed.
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import numpy as np
 import pandas as pd
 
@@ -30,21 +38,21 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..ml import (
     DIM,
-    ERA_DOMAIN,
+    K_FOLDS,
     coef_frame,
+    cv_frame,
     fit_fold_models,
+    fit_gbt_fold_models,
     fit_global_model,
     fold_suffstats,
+    predict_stumps,
     score_by_group,
-    supervised_frame,
     with_prediction,
 )
 from ..caching import barrier
 from ..registry import query
 from ..session import local_frame
-from .cv import kfold_era
 
-K_FOLDS = 5
 LAM = 1.0
 SEED = 42
 
@@ -57,41 +65,108 @@ def _permutation(seed: int, fold: int, era: int, f: int, n: int) -> np.ndarray:
     return rng.permutation(n)
 
 
-def _mda_block(feats: np.ndarray, preds: np.ndarray, fold: int, era: int,
-               vec_id: np.ndarray, y: np.ndarray) -> pd.DataFrame:
-    """Assemble the (d+1)·n MDA rows as ONE DataFrame from a stacked
-    prediction block (r16, guide §4.2: the former one-DataFrame-per-
-    feature + concat built 65 frames per group — pure Python/pandas
-    overhead; the values and their downstream grouping are order-
-    insensitive and unchanged)."""
+def _linear_predictions(coef: np.ndarray, X: np.ndarray):
+    """Ridge kernel: (base, shuffled). Only feature f moves, so
+    shuffled(f, perm) = base + w_f·(x_f[perm] − x_f)."""
+    base = coef[0] + X @ coef[1:]
+
+    def shuffled(f: int, perm: np.ndarray) -> np.ndarray:
+        return base + coef[1 + f] * (X[perm, f] - X[:, f])
+
+    return base, shuffled
+
+
+def _gbt_predictions(stumps: list, X: np.ndarray):
+    """Stump-ensemble kernel: (base, shuffled). Permuting feature f only
+    changes the stumps that SPLIT on f, so shuffled(f, perm) =
+    base − c_f(x_f) + c_f(x_f[perm]) — exact, and ~T/|stumps on f|
+    cheaper than re-running the whole ensemble per feature."""
+    by_f = defaultdict(list)
+    for st in stumps:
+        by_f[st[0]].append(st)
+    base = predict_stumps(stumps, X)
+
+    def col_pred(stumps_f: list, col: np.ndarray) -> np.ndarray:
+        out = np.zeros(len(col))
+        for _, thr, vl, vr in stumps_f:
+            out += np.where(col <= thr, vl, vr)
+        return out
+
+    def shuffled(f: int, perm: np.ndarray) -> np.ndarray:
+        if not by_f.get(f):
+            return base
+        return base - col_pred(by_f[f], X[:, f]) + col_pred(by_f[f], X[perm, f])
+
+    return base, shuffled
+
+
+MDA_ROWS = "feature int, fold int, era int, vec_id long, y double, pred double"
+
+
+def _mda_rows(preds: np.ndarray, fold: int, era: int, vec_id: np.ndarray,
+              y: np.ndarray) -> pd.DataFrame:
+    """x1/x1c output: the (d+1)·n (feature, fold, era, vec_id, y, pred)
+    rows of one group as ONE DataFrame, feature −1 the base. The
+    ranking and the pooled correlation run in Spark (score_by_group)."""
     n = len(y)
     return pd.DataFrame({
-        "feature": np.repeat(feats, n),
+        "feature": np.repeat(np.arange(-1, len(preds) - 1), n),
         "fold": fold,
         "era": era,
-        "vec_id": np.tile(vec_id, len(feats)),
-        "y": np.tile(y, len(feats)),
+        "vec_id": np.tile(vec_id, len(preds)),
+        "y": np.tile(y, len(preds)),
         "pred": preds.ravel(),
     })
 
 
-def _mda_mapper(models: dict[int, np.ndarray], seed: int):
+MDA_SUFFSTATS = (
+    "feature int, fold int, era int, n long, sy double, sy2 double, "
+    "sr double, sr2 double, syr double"
+)
+
+
+def _mda_suffstats(preds: np.ndarray, fold: int, era: int, vec_id: np.ndarray,
+                   y: np.ndarray) -> pd.DataFrame:
+    """x1b output: one row of pooled-correlation sufficient statistics
+    per feature — (n, Σy, Σy², Σr, Σr², Σyr) with r the era-local pct
+    rank of the prediction (W1 semantics: order by (pred, vec_id),
+    rank/n). The shuffle shrinks from O(features × rows) prediction
+    rows to O(features × folds × eras) stat rows — at the reference's
+    310 features × 500k rows a ~2,500× reduction in shuffled bytes."""
+    n = len(y)
+    rows = []
+    for f, pred in enumerate(preds, start=-1):
+        order = np.lexsort((vec_id, pred))  # (pred, vec_id) asc
+        r = np.empty(n)
+        r[order] = np.arange(1, n + 1)
+        r = r / n
+        rows.append((f, fold, era, n,
+                     float(y.sum()), float((y * y).sum()),
+                     float(r.sum()), float((r * r).sum()), float((y * r).sum())))
+    return pd.DataFrame(
+        rows, columns=["feature", "fold", "era", "n", "sy", "sy2", "sr", "sr2", "syr"]
+    )
+
+
+def _mda_mapper(predict, models: dict, emit):
+    """The one per-(fold, era) MDA loop: the fold model's base and
+    shuffled predictions (``predict``, a kernel above) fill the
+    (d+1, n) prediction matrix, row 0 the base and row 1+f feature f
+    under its one :func:`_permutation`; ``emit`` turns the matrix into
+    the group's output rows. Memory is one era group × features."""
+
     def fn(key, pdf):
         fold, era = int(key[0]), int(key[1])
-        coef = np.asarray(models[fold])
         X = np.stack(pdf["features"].to_numpy()).astype(np.float64)
         y = pdf["y"].to_numpy(dtype=np.float64)
         vec_id = pdf["vec_id"].to_numpy()
-        base = coef[0] + X @ coef[1:]
+        base, shuffled = predict(models[fold], X)
         n, d = X.shape
-        feats = np.arange(-1, d)
         preds = np.empty((d + 1, n))
         preds[0] = base
         for f in range(d):
-            perm = _permutation(seed, fold, era, f, n)
-            # only feature f moves: pred_shuf = base + w_f·(x_f[perm] − x_f)
-            preds[1 + f] = base + coef[1 + f] * (X[perm, f] - X[:, f])
-        return _mda_block(feats, preds, fold, era, vec_id, y)
+            preds[1 + f] = shuffled(f, _permutation(SEED, fold, era, f, n))
+        return emit(preds, fold, era, vec_id, y)
 
     return fn
 
@@ -116,18 +191,40 @@ def mda_table(per: DataFrame) -> DataFrame:
     )
 
 
-def mda_importance(
-    spark: SparkSession, sf_dir: str, k: int = K_FOLDS, lam: float = LAM, seed: int = SEED
-) -> DataFrame:
-    """X1: (feature, importance) table, sorted descending."""
-    df = kfold_era(supervised_frame(spark, sf_dir), "era", k=k, eras=list(ERA_DOMAIN))
-    stats = fold_suffstats(df)
-    models = {g: np.asarray(c) for g, c in fit_fold_models(stats, lam).items()}
-    preds = df.groupBy("fold", "era").applyInPandas(
-        _mda_mapper(models, seed),
-        schema="feature int, fold int, era int, vec_id long, y double, pred double",
+def mda_importance(spark: SparkSession, sf_dir: str, gbt: bool = False,
+                   pooled: bool = False) -> DataFrame:
+    """X1/X1b/X1c: (feature, importance) table, sorted descending.
+
+    Fold models are the ridge fit of one suffstats pass, or with
+    ``gbt`` the stump ensembles of ml.fit_gbt_fold_models. Every
+    (fold, era) group runs :func:`_mda_mapper`. By default the groups
+    emit prediction rows, which score_by_group ranks and correlates
+    per (feature, fold); ``pooled`` has them emit x1b's per-era
+    sufficient statistics, whose pooled correlation is identical."""
+    df = cv_frame(spark, sf_dir)
+    if gbt:
+        # barriered (r11): the boosting fit fires GBT_ROUNDS+2 separate
+        # actions over this relation — with a lazy pin each carries the
+        # full kfold/supervised-frame tree per plan (caching.barrier)
+        df = barrier(df)
+        models, predict = fit_gbt_fold_models(df, k=K_FOLDS), _gbt_predictions
+    else:
+        models = fit_fold_models(fold_suffstats(df), LAM)
+        predict = _linear_predictions
+    emit, schema = (_mda_suffstats, MDA_SUFFSTATS) if pooled else (_mda_rows, MDA_ROWS)
+    out = df.groupBy("fold", "era").applyInPandas(_mda_mapper(predict, models, emit), schema=schema)
+    if not pooled:
+        return mda_table(score_by_group(out, ["feature", "fold"]))
+    agg = out.groupBy("feature", "fold").agg(
+        *[F.sum(c).alias(c) for c in ("n", "sy", "sy2", "sr", "sr2", "syr")]
     )
-    return mda_table(score_by_group(preds, ["feature", "fold"]))
+    num = F.col("n") * F.col("syr") - F.col("sy") * F.col("sr")
+    den = F.sqrt(
+        (F.col("n") * F.col("sy2") - F.col("sy") * F.col("sy"))
+        * (F.col("n") * F.col("sr2") - F.col("sr") * F.col("sr"))
+    )
+    # round to 6 like score_by_group does, so x1/x1b parity is exact
+    return mda_table(agg.select("feature", "fold", F.round(F.try_divide(num, den), 6).alias("spearman")))
 
 
 @query(
@@ -141,65 +238,6 @@ def mda_importance(
 )
 def x1_mda_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mda_importance(spark, sf_dir)
-
-
-def _mda_gbt_mapper(models: dict[int, list], seed: int):
-    """Per-(fold, era) MDA rows for the nonlinear stump ensemble.
-
-    Permuting feature f only changes the stumps that SPLIT on f, so the
-    shuffled prediction is base − contrib_f(x_f) + contrib_f(x_f[perm])
-    — exact, and ~T/|stumps on f| cheaper than re-running the whole
-    ensemble per feature."""
-    from collections import defaultdict
-
-    from ..ml import predict_stumps
-
-    def col_pred(stumps_f: list, col: np.ndarray) -> np.ndarray:
-        out = np.zeros(len(col))
-        for _, thr, vl, vr in stumps_f:
-            out += np.where(col <= thr, vl, vr)
-        return out
-
-    def fn(key, pdf):
-        fold, era = int(key[0]), int(key[1])
-        stumps = models[fold]
-        by_f = defaultdict(list)
-        for s in stumps:
-            by_f[s[0]].append(s)
-        X = np.stack(pdf["features"].to_numpy()).astype(np.float64)
-        y = pdf["y"].to_numpy(dtype=np.float64)
-        vec_id = pdf["vec_id"].to_numpy()
-        base = predict_stumps(stumps, X)
-        n, d = X.shape
-        feats = np.arange(-1, d)
-        preds = np.empty((d + 1, n))
-        preds[0] = base
-        for f in range(d):
-            perm = _permutation(seed, fold, era, f, n)
-            if by_f.get(f):
-                preds[1 + f] = base - col_pred(by_f[f], X[:, f]) + col_pred(by_f[f], X[perm, f])
-            else:
-                preds[1 + f] = base
-        return _mda_block(feats, preds, fold, era, vec_id, y)
-
-    return fn
-
-
-def mda_importance_gbt(
-    spark: SparkSession, sf_dir: str, k: int = K_FOLDS, seed: int = SEED
-) -> DataFrame:
-    from ..ml import fit_gbt_fold_models
-
-    # barriered (r11): the boosting fit fires GBT_ROUNDS+2 separate
-    # actions over this relation — with a lazy pin each carries the
-    # full kfold/supervised-frame tree per plan (caching.barrier)
-    df = barrier(kfold_era(supervised_frame(spark, sf_dir), "era", k=k, eras=list(ERA_DOMAIN)))
-    models = fit_gbt_fold_models(df, k=k)
-    preds = df.groupBy("fold", "era").applyInPandas(
-        _mda_gbt_mapper(models, seed),
-        schema="feature int, fold int, era int, vec_id long, y double, pred double",
-    )
-    return mda_table(score_by_group(preds, ["feature", "fold"]))
 
 
 @query(
@@ -218,7 +256,7 @@ def mda_importance_gbt(
     tags=("importance", "ml", "bench"),
 )
 def x1c_mda_importance_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mda_importance_gbt(spark, sf_dir)
+    return mda_importance(spark, sf_dir, gbt=True)
 
 
 # ---------------------------------------------------------------- X4
@@ -228,7 +266,7 @@ def linear_shap_scores(
 ) -> DataFrame:
     """X4: mean |SHAP| per feature on a pinned head sample. For the
     linear kernel, SHAP_j(x) = w_j·(x_j − μ_j) exactly."""
-    df = kfold_era(supervised_frame(spark, sf_dir), "era", k=K_FOLDS, eras=list(ERA_DOMAIN))
+    df = cv_frame(spark, sf_dir)
     coef = fit_global_model(fold_suffstats(df), lam)
     # head sample via orderBy+limit → TakeOrderedAndProject (partial
     # per-partition top-k), not a single-partition global row_number
@@ -282,11 +320,7 @@ def tree_shap_scores(
     the T boosting-round fit passes dominate. Features no stump splits
     on have SHAP exactly 0 and are reported at 0 via the stump-feature
     domain."""
-    from ..ml import fit_gbt_fold_models
-
-    df = barrier(kfold_era(
-        supervised_frame(spark, sf_dir), "era", k=k, eras=list(ERA_DOMAIN)
-    ))
+    df = barrier(cv_frame(spark, sf_dir, k))
     models = fit_gbt_fold_models(df, k=k)
     sample = df.orderBy("vec_id").limit(n_rows)
     melted = sample.select(
@@ -366,8 +400,10 @@ def forward_selection(
 
     The projection happens on the SUFFICIENT STATISTICS, not the data:
     top-n selection just slices rows/cols of XtX/Xty, so the whole
-    sweep costs one stats pass + one scoring pass per n (scoring uses
-    zero-padded coefficients over the full feature array).
+    sweep costs one stats pass + one scoring pass, which scores every
+    row under each size's zero-padded coefficients over the full
+    feature array (coef table keyed by (n_features, fold), as t1 keys
+    its λ grid).
 
     ``rank_fn`` chooses the importance ranking (the reference's
     shap-rank branch, :291-376): default linear SHAP; x2b passes
@@ -375,29 +411,28 @@ def forward_selection(
     tree-SHAP of the GBT stump ensemble."""
     rank_pdf = (rank_fn or linear_shap_scores)(spark, sf_dir).toPandas()
     order = rank_pdf["feature"].to_list()
-    # barriered (r11): one scoring collect per size plus the stats
-    # pass all read this relation (caching.barrier)
-    df = barrier(kfold_era(supervised_frame(spark, sf_dir), "era", k=K_FOLDS, eras=list(ERA_DOMAIN)))
+    # barriered (r11): the stats pass and the scoring collect both
+    # read this relation (caching.barrier)
+    df = barrier(cv_frame(spark, sf_dir))
     stats = fold_suffstats(df)
-    results = []
+    models = {}
     for n in sizes:
-        keep = sorted(order[:n])
-        idx = np.array([0] + [1 + f for f in keep])
+        idx = np.array([0] + [1 + f for f in sorted(order[:n])])
         sub_stats = {
             g: (xtx[np.ix_(idx, idx)], xty[idx], cnt) for g, (xtx, xty, cnt) in stats.items()
         }
-        models = fit_fold_models(sub_stats, lam)
-        full = {}
-        for g, c in models.items():
+        for g, c in fit_fold_models(sub_stats, lam).items():
             w = np.zeros(DIM + 1)
             w[idx] = c
-            full[g] = w
-        coefs = coef_frame(spark, full)
-        scored = with_prediction(df, coefs)
-        per = score_by_group(scored, ["fold"]).agg(
+            models[(int(n), g)] = w
+    coefs = coef_frame(spark, models, ["n_features int", "fold int"])
+    per = score_by_group(with_prediction(df, coefs), ["n_features", "fold"])
+    results = sorted(
+        (r["n_features"], r["s"], r["q"])
+        for r in per.groupBy("n_features").agg(
             F.round(F.avg("spearman"), 6).alias("s"), F.round(F.avg("quartic"), 6).alias("q")
-        ).collect()[0]
-        results.append((int(n), per["s"], per["q"]))
+        ).collect()
+    )
     return local_frame(spark, results, "n_features int, spearman_mean double, quartic_mean double")
 
 
@@ -471,79 +506,6 @@ def x3_projection_by_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return melted.join(F.broadcast(topn.select("fid")), "fid").select("vec_id", "fid", "val")
 
 
-# ---------------------------------------------------------- X1b (scale)
-
-def _mda_suffstats_mapper(models: dict[int, np.ndarray], seed: int):
-    """Like _mda_mapper but scores INSIDE the UDF: each (fold, era)
-    group emits one row of pooled-correlation sufficient statistics
-    per feature — (n, Σy, Σy², Σr, Σr², Σyr) with r the era-local
-    pct rank of the prediction (W1 semantics: order by (pred, vec_id),
-    rank/n). The shuffle shrinks from O(features × rows) prediction
-    rows (the x1 plan) to O(features × folds × eras) stat rows — at
-    the reference's 310 features × 500k rows that is a ~2,500×
-    reduction in shuffled bytes, and group memory stays O(rows_in_era)
-    regardless of feature count (no per-feature frame concat)."""
-
-    def fn(key, pdf):
-        fold, era = int(key[0]), int(key[1])
-        coef = np.asarray(models[fold])
-        X = np.stack(pdf["features"].to_numpy()).astype(np.float64)
-        y = pdf["y"].to_numpy(dtype=np.float64)
-        vec_id = pdf["vec_id"].to_numpy()
-        n = len(y)
-        base = coef[0] + X @ coef[1:]
-
-        def rank_pct(pred: np.ndarray) -> np.ndarray:
-            order = np.lexsort((vec_id, pred))  # (pred, vec_id) asc
-            r = np.empty(n)
-            r[order] = np.arange(1, n + 1)
-            return r / n
-
-        rows = []
-        for f in range(-1, X.shape[1]):
-            if f < 0:
-                pred = base
-            else:
-                perm = _permutation(seed, fold, era, f, n)
-                pred = base + coef[1 + f] * (X[perm, f] - X[:, f])
-            r = rank_pct(pred)
-            rows.append((f, fold, era, n,
-                         float(y.sum()), float((y * y).sum()),
-                         float(r.sum()), float((r * r).sum()), float((y * r).sum())))
-        return pd.DataFrame(
-            rows, columns=["feature", "fold", "era", "n", "sy", "sy2", "sr", "sr2", "syr"]
-        )
-
-    return fn
-
-
-def mda_importance_suffstats(
-    spark: SparkSession, sf_dir: str, k: int = K_FOLDS, lam: float = LAM, seed: int = SEED
-) -> DataFrame:
-    """X1 at scale: identical permutation seeds and rank semantics to
-    mda_importance, but the pooled era-rank correlation is assembled
-    from per-(feature, fold, era) sufficient statistics."""
-    df = kfold_era(supervised_frame(spark, sf_dir), "era", k=k, eras=list(ERA_DOMAIN))
-    stats = fold_suffstats(df)
-    models = {g: np.asarray(c) for g, c in fit_fold_models(stats, lam).items()}
-    part = df.groupBy("fold", "era").applyInPandas(
-        _mda_suffstats_mapper(models, seed),
-        schema="feature int, fold int, era int, n long, sy double, sy2 double, "
-               "sr double, sr2 double, syr double",
-    )
-    agg = part.groupBy("feature", "fold").agg(
-        *[F.sum(c).alias(c) for c in ("n", "sy", "sy2", "sr", "sr2", "syr")]
-    )
-    num = F.col("n") * F.col("syr") - F.col("sy") * F.col("sr")
-    den = F.sqrt(
-        (F.col("n") * F.col("sy2") - F.col("sy") * F.col("sy"))
-        * (F.col("n") * F.col("sr2") - F.col("sr") * F.col("sr"))
-    )
-    # round to 6 like score_by_group does, so x1/x1b parity is exact
-    per = agg.select("feature", "fold", F.round(F.try_divide(num, den), 6).alias("spearman"))
-    return mda_table(per)
-
-
 @query(
     "x1b_mda_suffstats",
     oracle=None,
@@ -556,4 +518,4 @@ def mda_importance_suffstats(
     tags=("importance", "ml"),
 )
 def x1b_mda_suffstats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mda_importance_suffstats(spark, sf_dir)
+    return mda_importance(spark, sf_dir, pooled=True)

@@ -1,4 +1,5 @@
-"""Metric operators (SURVEY.md §2.10) + the W1 window they build on.
+"""Metric operators (SURVEY.md §2.10) on the W1 era rank
+(functions.pct_rank_first).
 
 Flagship: ``m1_spearman_by_era`` — the reference's scoring function
 ``spearman_rank`` (/root/reference/metrics.py:5-22): per-era percentile
@@ -12,10 +13,18 @@ single all-reduce style aggregate for corr. No driver materialization.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ..functions import ERA_EVENTS_SQL, PRED_EVENTS_SQL, clip, corr_safe, era_events, pred_events
+from ..functions import (
+    ERA_EVENTS_SQL,
+    PRED_EVENTS_SQL,
+    clip,
+    corr_safe,
+    era_events,
+    pct_rank_first,
+    pred_events,
+)
 from ..registry import query
 from ..sources import load_table
 
@@ -37,18 +46,6 @@ def scored_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pct_rank_first(df: DataFrame, group: str, value: str, tiebreak: str) -> Column:
-    """W1: pandas ``rank(pct=True, method="first")`` within ``group``.
-
-    method="first" = ties broken by original position; Spark equivalent
-    is row_number over (value, stable-key) divided by the group size
-    (metrics.py:19 — SURVEY.md §4 "Anticipated custom pieces" #2).
-    """
-    w = Window.partitionBy(group).orderBy(F.asc(value), F.asc(tiebreak))
-    cnt = Window.partitionBy(group)
-    return F.row_number().over(w).cast("double") / F.count("*").over(cnt).cast("double")
-
-
 W1_SQL = f"""
     SELECT era, y_true, event_id,
            CAST(row_number() OVER (PARTITION BY era ORDER BY pred, event_id) AS DOUBLE)
@@ -67,7 +64,7 @@ W1_SQL = f"""
 def w1_pct_rank_by_era(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = scored_events(spark, sf_dir)
     return df.select(
-        "event_id", "era", pct_rank_first(df, "era", "pred", "event_id").alias("pred_rank")
+        "event_id", "era", pct_rank_first(["era"], "pred", "event_id").alias("pred_rank")
     )
 
 
@@ -76,7 +73,7 @@ def spearman_by_era(scored: DataFrame, y_true: str = "y_true", pred: str = "pred
     """M1 as a reusable library transform over any scored frame."""
     ranked = scored.select(
         F.col(y_true).alias("y_true"),
-        pct_rank_first(scored, era, pred, key).alias("pred_rank"),
+        pct_rank_first([era], pred, key).alias("pred_rank"),
     )
     return ranked.agg(F.round(corr_safe("y_true", "pred_rank"), 6).alias("spearman_era_corr"))
 

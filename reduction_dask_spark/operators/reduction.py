@@ -29,12 +29,14 @@ from ..ml import (
     DIM,
     ERA_DOMAIN,
     arrow_matrix,
+    coef_frame,
     fit_fold_models,
     score_by_group,
     split_suffstats,
     suffstat_vector,
     sum_partials,
     supervised_frame,
+    with_prediction,
 )
 from ..registry import query
 from ..session import local_frame
@@ -752,21 +754,15 @@ def reduction_sweep_batched(
     for (i, fold), flat in sums.items():
         stats[i][fold] = split_suffstats(flat, ncs[i] + 1)
 
-    coef_rows = []
-    for i, _, _ in live:
-        for fold, c in fit_fold_models(stats[i], SWEEP_LAM).items():
-            coef_rows.append(
-                (i, int(fold), float(c[0]), [float(w) for w in c[1:]])
-            )
-    coefs = local_frame(
-        spark,
-        coef_rows, "cfg int, fold int, intercept double, weights array<double>"
-    )
+    models = {
+        (i, int(fold)): c
+        for i, _, _ in live
+        for fold, c in fit_fold_models(stats[i], SWEEP_LAM).items()
+    }
+    coefs = coef_frame(spark, models, ["cfg int", "fold int"])
 
     # ---- 4. one scoring job over the long view of the barrier leaf
     from functools import reduce as _reduce
-
-    from ..ml import dot_expr
 
     long = _reduce(
         DataFrame.unionByName,
@@ -778,9 +774,7 @@ def reduction_sweep_batched(
             for i, _, _ in live
         ],
     )
-    scored = long.join(F.broadcast(coefs), ["cfg", "fold"]).withColumn(
-        "pred", F.col("intercept") + dot_expr(F.col("features"), F.col("weights"))
-    )
+    scored = with_prediction(long, coefs)
     cv = {
         int(r["cfg"]): (r["s"], r["q"])
         for r in score_by_group(scored, ["cfg", "fold"])

@@ -16,32 +16,25 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import phash
 from ..ml import (
-    ERA_DOMAIN,
+    K_FOLDS,
     coef_frame,
+    cv_frame,
     fit_fold_models,
+    fit_predict,
     fold_suffstats,
     score_by_group,
-    supervised_frame,
     with_prediction,
 )
 from ..caching import barrier
 from ..registry import query
 from ..session import local_frame
-from .cv import kfold_era
-
-K_FOLDS = 5
 
 
 def kfold_cv_ridge(spark: SparkSession, sf_dir: str, lam: float = 1.0, k: int = K_FOLDS) -> DataFrame:
     """T2 kfold_dask (tuners.py:100-146): k-fold era-aware CV of one
     model; returns per-fold (spearman, quartic). One stats pass + one
     scoring pass."""
-    df = kfold_era(supervised_frame(spark, sf_dir), "era", k=k, eras=list(ERA_DOMAIN))
-    stats = fold_suffstats(df)
-    models = fit_fold_models(stats, lam)
-    coefs = coef_frame(spark, models)
-    test_scored = with_prediction(df, coefs)  # fold col = test fold of that row
-    return score_by_group(test_scored, ["fold"])
+    return fit_predict(cv_frame(spark, sf_dir, k), lam)
 
 
 @query(
@@ -73,7 +66,7 @@ def kfold_cv_gbt(spark: SparkSession, sf_dir: str, k: int = K_FOLDS) -> DataFram
 
     # barriered (r11): the boosting fit fires GBT_ROUNDS+2 actions
     # over this relation (caching.barrier — plan-size rationale)
-    df = barrier(kfold_era(supervised_frame(spark, sf_dir), "era", k=k, eras=list(ERA_DOMAIN)))
+    df = barrier(cv_frame(spark, sf_dir, k))
     models = fit_gbt_fold_models(df, k=k)
     stumps = stump_frame(spark, models)
     scored = with_gbt_prediction(df, stumps)  # fold col = held-out fold
@@ -98,6 +91,18 @@ def t2b_kfold_cv_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
 LAMBDA_GRID = [0.01, 0.1, 1.0, 10.0, 100.0]
 
 
+def grid_coefs(spark: SparkSession, stats: dict, configs) -> DataFrame:
+    """The (param_id, lam, fold) coefficient table of a λ grid: every
+    (param_id, λ) config's leave-one-fold-out ridge models, solved from
+    one set of fold statistics."""
+    models = {
+        (pid, float(lam), fold): coef
+        for pid, lam in configs
+        for fold, coef in fit_fold_models(stats, lam).items()
+    }
+    return coef_frame(spark, models, ["param_id int", "lam double", "fold int"])
+
+
 def lhs_ridge_search(spark: SparkSession, sf_dir: str, lambdas=None, k: int = K_FOLDS) -> DataFrame:
     """T1 tune_kfold_dask (tuners.py:12-97): params × folds CV sweep.
 
@@ -106,26 +111,9 @@ def lhs_ridge_search(spark: SparkSession, sf_dir: str, lambdas=None, k: int = K_
     row is scored under its fold's coefficients for every param
     (broadcast coef table keyed by (param_id, fold))."""
     lambdas = lambdas or LAMBDA_GRID
-    df = kfold_era(supervised_frame(spark, sf_dir), "era", k=k, eras=list(ERA_DOMAIN))
+    df = cv_frame(spark, sf_dir, k)
     stats = fold_suffstats(df)
-    rows = []
-    for pid, lam in enumerate(lambdas):
-        for fold, coef in fit_fold_models(stats, lam).items():
-            rows.append((pid, float(lam), fold, float(coef[0]), [float(w) for w in coef[1:]]))
-    coefs = local_frame(
-        spark,
-        rows, "param_id int, lam double, fold int, intercept double, weights array<double>"
-    )
-    scored = df.join(F.broadcast(coefs), "fold")
-    scored = scored.withColumn(
-        "pred",
-        F.col("intercept")
-        + F.aggregate(
-            F.zip_with("features", "weights", lambda x, w: x * w),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ),
-    )
+    scored = with_prediction(df, grid_coefs(spark, stats, enumerate(lambdas)))
     per = score_by_group(scored, ["param_id", "lam", "fold"])
     return (
         per.groupBy("param_id", "lam")
@@ -164,11 +152,10 @@ def hyperband(
     Returns the rung trace (bracket, rung, ratio_pct, lam, spearman,
     kept)."""
     s_max = int(math.log(max_ratio, eta))
-    base = supervised_frame(spark, sf_dir)
     # barriered (r11): every rung fires two actions (suffstats pass +
     # score collect) over this relation — with a lazy plan each
     # carries the full kfold/supervised-frame tree (caching.barrier)
-    df_all = barrier(kfold_era(base, "era", k=k))
+    df_all = barrier(cv_frame(spark, sf_dir, k))
     stats_cache: dict[int, dict] = {}
     trace = []
     for s in range(s_max, -1, -1):
@@ -179,30 +166,11 @@ def hyperband(
         ]
         for i in range(s + 1):
             ratio_pct = int(100 / eta ** (s - i))  # grows each rung
-            if ratio_pct not in stats_cache:
-                sub = df_all.filter(phash("vec_id", 100) < ratio_pct)
-                stats_cache[ratio_pct] = fold_suffstats(sub)
-            stats = stats_cache[ratio_pct]
-            rows = []
-            for cid, lam in configs:
-                for fold, coef in fit_fold_models(stats, lam).items():
-                    rows.append((cid, float(lam), fold, float(coef[0]), [float(w) for w in coef[1:]]))
-            coefs = local_frame(
-                spark,
-                rows, "param_id int, lam double, fold int, intercept double, weights array<double>"
-            )
             sub = df_all.filter(phash("vec_id", 100) < ratio_pct)
-            sj = sub.join(F.broadcast(coefs), "fold")
-            sj = sj.withColumn(
-                "pred",
-                F.col("intercept")
-                + F.aggregate(
-                    F.zip_with("features", "weights", lambda x, w: x * w),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                ),
-            )
-            per = score_by_group(sj, ["param_id", "lam"])
+            if ratio_pct not in stats_cache:
+                stats_cache[ratio_pct] = fold_suffstats(sub)
+            coefs = grid_coefs(spark, stats_cache[ratio_pct], configs)
+            per = score_by_group(with_prediction(sub, coefs), ["param_id", "lam"])
             result = {r["param_id"]: (r["spearman"], r["lam"]) for r in per.collect()}
             ranked = sorted(configs, key=lambda c: (-(result.get(c[0], (-1e8,))[0] or -1e8), c[0]))
             keep = max(1, int(len(configs) / eta)) if i < s else len(ranked)

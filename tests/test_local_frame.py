@@ -107,10 +107,9 @@ def test_x1c_broadcast_sides_have_no_python_rdd(spark):
     """x1c broadcasts its driver-built fold map inside the barrier job;
     the final plan's only RDD leaf is that barrier (a checkpoint, not
     a Python RDD)."""
-    from reduction_dask_spark.ml import ERA_DOMAIN, supervised_frame
-    from reduction_dask_spark.operators.cv import kfold_era
-    from reduction_dask_spark.operators.importance import K_FOLDS, x1c_mda_importance_gbt
+    from reduction_dask_spark.ml import cv_frame
+    from reduction_dask_spark.operators.importance import x1c_mda_importance_gbt
 
-    head = kfold_era(supervised_frame(spark, SF_SMALL), "era", k=K_FOLDS, eras=list(ERA_DOMAIN))
+    head = cv_frame(spark, SF_SMALL)
     assert set(broadcast_leaves(head)) == {"LocalTableScan"}
     assert python_rdd_scans(x1c_mda_importance_gbt(spark, SF_SMALL)) == 0

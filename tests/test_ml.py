@@ -59,7 +59,8 @@ def test_prediction_expression_matches_numpy(spark):
     df, pdf, X1, y = _folded_pdf(spark)
     stats = fold_suffstats(df)
     models = fit_fold_models(stats, LAM)
-    scored = with_prediction(df, coef_frame(spark, models)).select("vec_id", "fold", "pred").toPandas()
+    coefs = coef_frame(spark, {(g,): c for g, c in models.items()}, ["fold int"])
+    scored = with_prediction(df, coefs).select("vec_id", "fold", "pred").toPandas()
     merged = scored.set_index("vec_id").loc[pdf["vec_id"]]
     for fold in models:
         m = (pdf["fold"] == fold).to_numpy()
@@ -209,15 +210,12 @@ def test_mda_suffstats_matches_rowwise(spark):
     """x1b (in-UDF sufficient-statistics scoring) must reproduce x1's
     (row-emitting) importance table: same seeds, same rank semantics,
     corr assembled from sums instead of Spark's covar/stddev."""
-    from reduction_dask_spark.operators.importance import (
-        mda_importance,
-        mda_importance_suffstats,
-    )
+    from reduction_dask_spark.operators.importance import mda_importance
 
     a = {r["feature"]: r["importance"] for r in mda_importance(spark, SF_SMALL).collect()}
     b = {
         r["feature"]: r["importance"]
-        for r in mda_importance_suffstats(spark, SF_SMALL).collect()
+        for r in mda_importance(spark, SF_SMALL, pooled=True).collect()
     }
     assert set(a) == set(b)
     for f in a:
@@ -296,9 +294,9 @@ def test_gbt_cv_has_signal(spark):
 
 def test_gbt_mda_recovers_planted_features(spark):
     from reduction_dask_spark.ml import N_INFORMATIVE
-    from reduction_dask_spark.operators.importance import mda_importance_gbt
+    from reduction_dask_spark.operators.importance import mda_importance
 
-    imp = mda_importance_gbt(spark, SF_SMALL).toPandas()
+    imp = mda_importance(spark, SF_SMALL, gbt=True).toPandas()
     assert len(imp) == DIM
     nonzero = imp[imp["importance"].abs() > 1e-9]
     # every feature the stump ensemble credits is a planted one, and the
@@ -1083,7 +1081,8 @@ def _sweep_loop(spark, configs):
             )
             folded = kfold_era(reduced, "era", k=SWEEP_FOLDS, eras=list(ERA_DOMAIN))
             models = fit_fold_models(fold_suffstats(folded, dim=nc), SWEEP_LAM)
-            scored = with_prediction(folded, coef_frame(spark, models))
+            coefs = coef_frame(spark, {(g,): c for g, c in models.items()}, ["fold int"])
+            scored = with_prediction(folded, coefs)
             row = (
                 score_by_group(scored, ["fold"])
                 .agg(F.round(F.avg("spearman"), 6).alias("s"), F.round(F.avg("quartic"), 6).alias("q"))

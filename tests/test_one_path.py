@@ -159,3 +159,64 @@ def test_one_schema_path():
         for line, what in _schema_reads(ast.parse(path.read_text()))
     ]
     assert reads == []
+
+
+def _strings(nodes: list[ast.AST]) -> set[str]:
+    """Every string constant under ``nodes``."""
+    return {
+        n.value
+        for node in nodes
+        for n in ast.walk(node)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    }
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _scoring_paths(tree: ast.AST):
+    """(line, what) of each piece of fold-model scoring in ``tree``: a
+    coefficient table's ``intercept``/``weights`` DDL, a prediction's
+    ``zip_with`` over ``weights``, a window ordered by ``pred`` and the
+    CV frame ``kfold_era(supervised_frame(...))``."""
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if re.search(r"\b(intercept\s+double|weights\s+array)", n.value):
+                yield n.lineno, "coefficient table"
+        if not isinstance(n, ast.Call):
+            continue
+        name = _callee(n)
+        if name == "zip_with" and "weights" in _strings(n.args):
+            yield n.lineno, "prediction"
+        elif name == "orderBy" and "pred" in _strings(n.args):
+            yield n.lineno, "window ordered by pred"
+        elif (
+            name == "kfold_era"
+            and n.args
+            and isinstance(n.args[0], ast.Call)
+            and _callee(n.args[0]) == "supervised_frame"
+        ):
+            yield n.lineno, "CV frame"
+
+
+def test_one_scoring_path():
+    """Only ``ml.py`` builds a CV frame, a coefficient table or a
+    prediction; the era rank is ``functions.pct_rank_first``, so no
+    module orders a window by ``pred`` itself. Every tuning, importance
+    and reduction query scores through ``ml.cv_frame``,
+    ``coef_frame``/``with_prediction`` and ``score_by_group``."""
+    ml = PACKAGE / "ml.py"
+    assert {what for _, what in _scoring_paths(ast.parse(ml.read_text()))} == {
+        "coefficient table",
+        "prediction",
+        "CV frame",
+    }
+    copies = [
+        f"{path.relative_to(PACKAGE)}:{line}: {what}"
+        for path in _package_modules()
+        if path != ml
+        for line, what in _scoring_paths(ast.parse(path.read_text()))
+    ]
+    assert copies == []

@@ -114,13 +114,9 @@ def test_efficiency_property():
 def test_x4b_matches_numpy_and_recovers_planted(spark):
     """The Spark query equals a pure-numpy reimplementation over the
     same sample/models, and its top features are planted ones."""
-    from reduction_dask_spark.ml import fit_gbt_fold_models, supervised_frame
-    from reduction_dask_spark.operators.cv import kfold_era
-    from reduction_dask_spark.operators.importance import ERA_DOMAIN, K_FOLDS
+    from reduction_dask_spark.ml import K_FOLDS, cv_frame, fit_gbt_fold_models
 
-    df = kfold_era(
-        supervised_frame(spark, SF_SMALL), "era", k=K_FOLDS, eras=list(ERA_DOMAIN)
-    ).persist()
+    df = cv_frame(spark, SF_SMALL).persist()
     models = fit_gbt_fold_models(df, k=K_FOLDS)
     sample = df.orderBy("vec_id").limit(1000).select("vec_id", "fold", "features").toPandas()
     X = np.stack(sample["features"].to_numpy()).astype(float)
